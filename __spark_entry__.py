@@ -24,9 +24,9 @@ def entry(spark: SparkSession) -> DataFrame:
     from engine.pipeline import fixtures, index, tiler
 
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF0001)))
-    # shuffle-lean encoder (byte-identical to encode_point_tiles;
-    # tests/test_tiler_compact.py asserts it)
-    return tiler.encode_point_tiles_compact(index.with_unit(geo), 0, 4)
+    # the point-tile encoder; only (packed key, feature_id, lang) ride its
+    # shuffle (tests/test_tiler_compact.py checks its bytes)
+    return tiler.encode_point_tiles(index.with_tiles(index.with_unit(geo), 0, 4))
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:

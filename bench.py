@@ -168,22 +168,15 @@ def _pyramid_scan_geotag(spark, sf_dir):
 
 
 def _pyramid_shuffled_sorted(spark, sf_dir):
-    """Stages 1-2: scan + x15 zoom explode + the tile shuffle + sort, with
-    the exact projection the compact encoder shuffles — everything except
-    the Python encode stage."""
-    from pyspark.sql import functions as F
-
+    """Stages 1-2: scan + x15 zoom explode + the tile shuffle + sort +
+    post-sort projection, built by the encoder's own key builder (same
+    packed key, same AQE-sized exchange) — everything except the Python
+    encode stage."""
     from engine.pipeline import fixtures, index, tiler
 
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, sf_dir)))
-    uv = index.with_unit(geo)
-    zoomed = uv.withColumn("z", F.explode(F.sequence(F.lit(0), F.lit(14))))
-    xe, ye = tiler._tile_xy_exprs()
-    cols = ["z", "u", "v", "feature_id", "lang"]
-    # same exchange width as the full pyramid so this stays a true prefix
-    n_parts = tiler.encode_shuffle_partitions(spark)
-    parted = zoomed.select(*cols).repartition(n_parts, F.col("z"), xe, ye)
-    return parted.sortWithinPartitions(F.col("z"), xe, ye, F.col("feature_id"))
+    zoomed = index.with_tiles(index.with_unit(geo), 0, 14)
+    return tiler._keyed_rows(zoomed, 14, (("lang", "string"),))
 
 
 _CODE_PATHS = ("engine", "bench.py", "__spark_entry__.py")
@@ -310,9 +303,9 @@ def run_once(case_filter=None) -> dict:
 
 
 def _mvt_pyramid(spark, sf_dir, z_min, z_max):
-    """Shuffle-lean default (tiler.encode_point_tiles_compact): only
-    (z,u,v,fid,lang) ride the tile shuffle, derived columns reconstruct
-    post-shuffle; bytes identical (tests/test_tiler_compact.py)."""
+    """The point-tile encoder (tiler.encode_point_tiles_compact): only
+    (packed key, fid, lang) ride the tile shuffle, derived columns
+    reconstruct post-shuffle (tests/test_tiler_compact.py)."""
     from engine.pipeline import fixtures, index, tiler
 
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, sf_dir)))

@@ -41,7 +41,8 @@ def main(argv: list[str] | None = None) -> None:
         indexed = tiler.cap_features_per_tile(indexed, args.cap)
 
     run_id = manifest.run_tile_stage(
-        spark, indexed, args.out, run_id=args.run_id, resume=not args.no_resume
+        spark, indexed, args.out, run_id=args.run_id, resume=not args.no_resume,
+        z_max=args.z_max,
     )
     manifest.metrics_summary(spark, args.out).orderBy("run_id").show(truncate=False)
     print(f"run_id={run_id}")

@@ -1,6 +1,6 @@
 """Vectorized merge of salted point-layer partials (SURVEY B14 stage 2).
 
-The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_tiles_salted)
+The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_partials)
 runs fastpoints.encode_point_features_sorted per (tile, salt) group and
 ships the PARTIAL ARRAYS — framed feature bytes, feature ids, per-feature
 framed/geometry lengths, local dictionary codes, and the local value

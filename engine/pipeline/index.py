@@ -154,7 +154,8 @@ def with_hilbert_key(
         fy = f"(CASE WHEN {rx} = 1 THEN {s - 1} - _hy ELSE _hy END)"
         df = df.withColumns(
             {
-                out: F.expr(f"{out} + {s * s} * ((3 * {rx}) ^ {ry})"),
+                # bigint literal: 3 * s^2 overflows int past order 15
+                out: F.expr(f"{out} + {s * s}L * ((3 * {rx}) ^ {ry})"),
                 "_hx": F.expr(f"CASE WHEN {ry} = 0 THEN {fy} ELSE _hx END"),
                 "_hy": F.expr(f"CASE WHEN {ry} = 0 THEN {fx} ELSE _hy END"),
             }

@@ -1185,7 +1185,9 @@ def knn_join_partitioned(
     # 500k: c=4 19.1 vs c=6 23.5 — so the optimum tracks ~sqrt(1/n),
     # anchored at the 50k point (6 deg), capped at 6 so the 10k
     # calibration point keeps its measured 2*cell_deg width, and floored
-    # by the old max(2*cell_deg, 4) for center tables past ~450k.
+    # by the old max(2*cell_deg, 4): sqrt(1.8e6/n) drops below 4 past
+    # n = 112,500 centers, where cell_deg is already at its 2-degree
+    # floor, so 2*cell_deg = 4 there too.
     term_c = max(
         2.0 * cell_deg,
         4.0,

@@ -18,9 +18,9 @@ Design (all DataFrame-level, no driver-side loops):
 At 100 TB the manifest stays tiny relative to the data (one row per tile,
 ~100s of MB for the full z0-z14 pyramid), so the anti-join broadcasts and
 adds no meaningful shuffle; the skipped tiles prune at the source because
-the semi/anti join keys are the same (z, x, y) the tile stage range-partitions
-on. The reference has no persistence at all (SURVEY §2.C sinks row); this is
-engine-side scale infrastructure.
+the semi/anti join keys are the same (z, x, y) tiles the encode stage
+partitions on. The reference has no persistence at all (SURVEY §2.C sinks
+row); this is engine-side scale infrastructure.
 """
 
 from __future__ import annotations

@@ -336,7 +336,7 @@ FROM geotagged GROUP BY 1, 2"""
 # The binary protobuf sink itself has no SQL twin, but its auditable
 # PROJECTION does: the point tiler emits exactly one feature per page per
 # tile, so (z,x,y,n_features) equals the DuckDB per-tile page count — the
-# full encode still runs inside mapInPandas (column pruning can drop the
+# full encode still runs inside mapInArrow (column pruning can drop the
 # mvt column only AFTER the UDF has produced the bytes), so the oracle
 # genuinely audits the encoder's grouping + feature emission. Byte-level
 # correctness is covered by tests/test_fastpoints.py, tests/test_polytiler.py
@@ -382,7 +382,7 @@ def q_mvt_combined(spark, sf_dir):
     partial merge keeps the hot tile distributed. Auditable projection:
     per-tile total features + layer count."""
     geo = index.with_feature_id(_geotagged(spark, sf_dir))
-    pts = tiler.encode_point_partials_compact(index.with_unit(geo), 0, 3)
+    pts = tiler.encode_point_partials(index.with_tiles(index.with_unit(geo), 0, 3), 3)
     polys = polytiler.encode_polygon_tiles(spark, sf_dir, 0, 3)
     parts = pts.unionByName(
         tiler.tiles_as_partial_rows(polys.select("z", "x", "y", "mvt", "n_features"))
@@ -417,7 +417,7 @@ def q_mvt_roundtrip_coords(spark, sf_dir):
     closed-form pipeline math, so the wire bytes are verified value-exact,
     not just count-exact."""
     geo = index.with_feature_id(_geotagged(spark, sf_dir))
-    tiles = tiler.encode_point_tiles_compact(index.with_unit(geo), 0, 2)
+    tiles = tiler.encode_point_tiles(index.with_tiles(index.with_unit(geo), 0, 2))
     return tiler.decode_point_features(tiles)
 
 

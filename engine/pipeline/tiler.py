@@ -1,40 +1,49 @@
 """Per-tile MVT encode stage (SURVEY B12-B15) + skew handling (B14).
 
-Pipeline shape (SURVEY §3.4): indexed features are optionally capped per
-tile (deterministic top-K by feature_id — the scale guard for mega-tiles:
-z0 contains EVERY feature, so an uncapped group would OOM one executor at
-100 TB), then ``repartitionByRange(z,x,y)`` + ``sortWithinPartitions`` so
-each tile's features are CONTIGUOUS, then ``mapInPandas`` encodes MANY
-tiles per Arrow batch (group boundaries detected vectorized, incomplete
-tail groups carried into the next batch). This avoids
-``groupBy().applyInPandas``'s per-group overhead, which dominates when the
-pyramid has tens of thousands of small tiles (measured 2.6x faster at
-sf0.01, and the win grows with tile count).
+Pipeline shape (SURVEY §3.4): zoom-exploded point rows (z, u, v,
+feature_id, tags...) — the rows ``index.with_tiles`` yields — are
+optionally capped per tile (deterministic top-K by feature_id — the scale
+guard for mega-tiles: z0 contains EVERY feature, so an uncapped group would
+OOM one executor at 100 TB). One key builder turns each row into its
+shuffle key: a packed int64 of (z, u-grid, v-grid) bit fields when that
+fits, the (z, u, v) columns otherwise, with an optional salt as the top
+field. The rows are repartitioned on the tile (hash, or range over a
+Hilbert key for output locality) and sorted so each tile's features are
+CONTIGUOUS; a JVM projection rebuilds (gid, qx, qy) after the shuffle, and
+one ``mapInArrow`` worker encodes MANY tiles per Arrow batch (group
+boundaries detected vectorized, incomplete tail groups carried into the
+next batch). This avoids ``groupBy().applyInPandas``'s per-group overhead,
+which dominates when the pyramid has tens of thousands of small tiles.
 
-Byte determinism: features sorted by (z,x,y,feature_id) by the partitioner,
+Byte determinism: features sorted by (tile, feature_id) before the encode,
 layers sorted by name inside the codec — output bytes are invariant under
-partitioning, salting, and executor count (SURVEY §7.4 item 1).
+key packing, partitioning, salting, and executor count (SURVEY §7.4 item 1).
 """
 
 from __future__ import annotations
 
 from collections.abc import Iterator
 
-import os
-
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from engine.mvtcodec import fastpoints, pbwire
-from engine.mvtcodec.geomstream import quantize
+
+from . import index
 
 EXTENT = 4096
+MAX_ZOOM = 25  # gid packs x and y into 26-bit fields
 
 TILE_SCHEMA = (
     "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long, mvt_sha256 string"
 )
 ENCODE_SCHEMA = "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long"
+PARTIAL_SCHEMA = (
+    "z int, x bigint, y bigint, n_features long, fids binary, block binary, "
+    "feat_len binary, glen binary, vcode binary, dict_blob binary, "
+    "dict_lens binary, mvt binary"
+)
 
 
 def cap_features_per_tile(
@@ -74,40 +83,6 @@ def _group_bounds(pdf: pd.DataFrame, cols: tuple[str, ...] = GROUP_COLS) -> np.n
     return np.flatnonzero(change)
 
 
-def _encode_batch(
-    pdf: pd.DataFrame,
-    layer_name: str,
-    tag_cols,
-    extent: int,
-    group_cols: tuple[str, ...] = GROUP_COLS,
-) -> pd.DataFrame:
-    starts = _group_bounds(pdf, group_cols)
-    counts = np.diff(np.append(starts, len(pdf)))
-    tags = {
-        col: (vt, pdf[col].to_numpy(dtype=object if vt == "string" else None))
-        for col, vt in tag_cols
-    }
-    blobs = fastpoints.encode_point_tiles_sorted(
-        counts,
-        pdf["feature_id"].to_numpy(dtype=np.int64),
-        quantize(pdf["px"].to_numpy()),
-        quantize(pdf["py"].to_numpy()),
-        tags,
-        layer_name,
-        extent,
-    )
-    return pd.DataFrame(
-        {
-            "z": pd.array(pdf["z"].to_numpy()[starts], dtype="int32"),
-            "x": pdf["x"].to_numpy()[starts],
-            "y": pdf["y"].to_numpy()[starts],
-            "mvt": blobs,
-            "n_features": counts,
-            "n_bytes": [len(b) for b in blobs],
-        }
-    )
-
-
 def _gid_bounds(gid: np.ndarray) -> np.ndarray:
     """Start offsets of each gid run in a pre-sorted int64 array."""
     change = np.empty(len(gid), dtype=bool)
@@ -116,22 +91,10 @@ def _gid_bounds(gid: np.ndarray) -> np.ndarray:
     return np.flatnonzero(change)
 
 
-def _encode_group_arrow(cols, layer_name, tag_cols, extent):
-    """Arrow-native tile encode for one-or-more COMPLETE gid groups.
-
-    ``cols``: numpy int64 arrays for gid/qx/qy/feature_id, pyarrow arrays
-    for tag columns. No pandas frame, no per-row Python objects anywhere:
-    string tags dictionary-encode in Arrow C++ (codes + a tiny unique
-    list), and the output binary column is built straight from the
-    encoder's flat buffer + offsets (encode_point_tiles_sorted_raw) — the
-    pandas path allocated one Python str per row and one bytes object per
-    tile, which dominated the encode stage's worker-side allocation churn
-    on fault-limited hosts."""
-    import pyarrow as pa
-
-    gid = cols["gid"]
-    starts = _gid_bounds(gid)
-    counts = np.diff(np.append(starts, len(gid)))
+def _arrow_tags(cols, tag_cols) -> dict:
+    """Tag columns in fastpoints' layout: string tags dictionary-encode in
+    Arrow C++ (int64 codes + a tiny unique list), so no per-row Python
+    object is ever built; numeric tags pass through as numpy."""
     tags = {}
     for c, vt in tag_cols:
         arr = cols[c]
@@ -139,10 +102,9 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
             tags[c] = (vt, arr)
         elif vt == "string":
             if arr.null_count:
-                # pre-r6 pandas factorize encoded nulls as a real dictionary
-                # entry; dictionary_encode() leaves null INDICES, which the
-                # int64 cast below would turn into garbage codes — fail
-                # loudly instead of corrupting tag bytes (ADVICE r6)
+                # dictionary_encode() leaves null INDICES, which the int64
+                # cast below would turn into garbage codes — fail loudly
+                # instead of corrupting tag bytes
                 raise ValueError(
                     "null string tag values are not supported by the Arrow "
                     "encode path; fill or drop nulls upstream"
@@ -152,19 +114,47 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
             tags[c] = (vt, (codes, d.dictionary.to_pylist()))
         else:
             tags[c] = (vt, arr.to_numpy(zero_copy_only=False))
+    return tags
+
+
+def _gid_tile_arrays(g: np.ndarray) -> list:
+    """(z, x, y) Arrow columns unpacked from group-start gids; any salt
+    bits above z are dropped."""
+    import pyarrow as pa
+
+    mask = (1 << 26) - 1
+    return [
+        pa.array(((g >> 52) & 31).astype(np.int32), type=pa.int32()),
+        pa.array((g >> 26) & mask, type=pa.int64()),
+        pa.array(g & mask, type=pa.int64()),
+    ]
+
+
+def _encode_group_arrow(cols, layer_name, tag_cols, extent):
+    """Arrow-native tile encode for one-or-more COMPLETE gid groups.
+
+    ``cols``: numpy int64 arrays for gid/qx/qy/feature_id, pyarrow arrays
+    for tag columns. No pandas frame, no per-row Python objects anywhere:
+    the output binary column is built straight from the encoder's flat
+    buffer + offsets (encode_point_tiles_sorted_raw)."""
+    import pyarrow as pa
+
+    gid = cols["gid"]
+    starts = _gid_bounds(gid)
+    counts = np.diff(np.append(starts, len(gid)))
     buf, tstarts, ttotal = fastpoints.encode_point_tiles_sorted_raw(
         counts,
         cols["feature_id"],
         cols["qx"],
         cols["qy"],
-        tags,
+        _arrow_tags(cols, tag_cols),
         layer_name,
         extent,
     )
     n_tiles = len(tstarts)
     if len(buf) >= (1 << 31):
         # pa.binary() offsets are int32; a mega-group past 2 GiB would wrap
-        # silently on the int64->int32 assignment (ADVICE r6)
+        # silently on the int64->int32 assignment
         raise ValueError(
             "encoded tile group exceeds 2 GiB of tile bytes; split the "
             "group (salted partial encode) before the Arrow batch build"
@@ -175,18 +165,63 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     mvt = pa.Array.from_buffers(
         pa.binary(), n_tiles, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
     )
-    g = gid[starts]
-    mask = (1 << 26) - 1
     return pa.RecordBatch.from_arrays(
         [
-            pa.array((g >> 52).astype(np.int32), type=pa.int32()),
-            pa.array((g >> 26) & mask, type=pa.int64()),
-            pa.array(g & mask, type=pa.int64()),
+            *_gid_tile_arrays(gid[starts]),
             mvt,
             pa.array(counts, type=pa.int64()),
             pa.array(ttotal.astype(np.int64), type=pa.int64()),
         ],
         names=["z", "x", "y", "mvt", "n_features", "n_bytes"],
+    )
+
+
+def _encode_partials_group_arrow(cols, tag_cols):
+    """Arrow-native partial encode for one-or-more COMPLETE (salt-packed)
+    gid groups — the partial-row twin of _encode_group_arrow:
+    PARTIAL_SCHEMA RecordBatch out (per-group byte columns; the group count
+    is tens of rows at z0-3, so the per-group Python loop is not a hot
+    path)."""
+    import pyarrow as pa
+
+    gid = cols["gid"]
+    starts = _gid_bounds(gid)
+    counts = np.diff(np.append(starts, len(gid)))
+    fids = cols["feature_id"]
+    fb = fastpoints.encode_point_features_sorted(
+        counts, fids, cols["qx"], cols["qy"], _arrow_tags(cols, tag_cols)
+    )
+    feat_len = fb["feat_len"]
+    b_off = np.concatenate([[0], np.cumsum(feat_len)])
+    block = fb["block"].tobytes()
+    vblob = fb["vblob"].tobytes()
+    e_bounds = fb["e_bounds"]
+    entry_lens = fb["entry_lens"]
+    ends = np.append(starts[1:], len(gid))
+    fids64 = np.asarray(fids, dtype=np.int64)
+    out = {k: [] for k in (
+        "fids", "block", "feat_len", "glen", "vcode", "dict_blob", "dict_lens"
+    )}
+    for i, (s, e) in enumerate(zip(starts, ends)):
+        out["fids"].append(fids64[s:e].tobytes())
+        out["block"].append(block[b_off[s] : b_off[e]])
+        out["feat_len"].append(feat_len[s:e].astype(np.int32).tobytes())
+        out["glen"].append(fb["glen"][s:e].astype(np.int32).tobytes())
+        out["vcode"].append(fb["vcode"][s:e].astype(np.int32).tobytes())
+        out["dict_blob"].append(
+            vblob[fb["vstart"][i] : fb["vstart"][i] + fb["vlen"][i]]
+        )
+        out["dict_lens"].append(
+            entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
+        )
+    return pa.RecordBatch.from_arrays(
+        [
+            *_gid_tile_arrays(gid[starts]),
+            pa.array(counts, type=pa.int64()),
+            *[pa.array(out[k], type=pa.binary()) for k in out],
+            pa.nulls(len(starts), pa.binary()),
+        ],
+        names=["z", "x", "y", "n_features", *out, "mvt"],
     )
 
 
@@ -294,184 +329,23 @@ def carry_group_iter(
         yield flush()
 
 
-def encode_point_tiles(
-    df: DataFrame,
-    layer_name: str = "pages",
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-    partition_mode: str = "hash",
-) -> DataFrame:
-    """(z,x,y,feature_id,px,py,tags...) -> one MVT tile row per (z,x,y).
-
-    partition_mode: "hash" (default) co-locates each tile with one shuffle
-    pass; "range" (repartitionByRange on z,x,y) additionally orders tiles
-    across partitions; "hilbert" (SURVEY §4.3 output-locality mode) range-
-    partitions on (z, Hilbert key of x,y) so consecutively written tiles
-    are spatial NEIGHBORS — the write-locality order object stores and tile
-    servers want. Both non-hash modes cost a range-sampling pass that
-    re-evaluates the upstream lineage — worth it when the input is a
-    materialized table (the resumable job), not when the lineage is an
-    expensive expression pipeline. Tile BYTES are identical in every mode
-    (per-tile feature order is fixed by the sort; only cross-tile output
-    order changes) — asserted in tests/test_manifest_resume.py.
-    """
-    tag_cols = tuple(tag_cols)
-    HILBERT_ORDER = 15  # supports z <= 14: x << (15 - z) stays under 2^15
-
-    def encode_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        return carry_group_iter(
-            batches, lambda pdf: _encode_batch(pdf, layer_name, tag_cols, extent)
-        )
-
-    cols = ["z", "x", "y", "feature_id", "px", "py"] + [c for c, _ in tag_cols]
-    selected = df.select(*cols)
-    if partition_mode == "hilbert":
-        from . import index as indexmod
-
-        keyed = selected.withColumns(
-            {
-                "_gx": F.expr(f"shiftleft(x, {HILBERT_ORDER} - z)"),
-                "_gy": F.expr(f"shiftleft(y, {HILBERT_ORDER} - z)"),
-            }
-        )
-        keyed = indexmod.with_hilbert_key(keyed, HILBERT_ORDER, "_gx", "_gy").drop(
-            "_gx", "_gy"
-        )
-        parted = keyed.repartitionByRange("z", "hkey")
-        prepared = parted.sortWithinPartitions("z", "hkey", "x", "y", "feature_id")
-    elif partition_mode == "range":
-        parted = selected.repartitionByRange("z", "x", "y")  # B13: output locality
-        prepared = parted.sortWithinPartitions("z", "x", "y", "feature_id")
-    else:
-        parted = selected.repartition("z", "x", "y")
-        prepared = parted.sortWithinPartitions("z", "x", "y", "feature_id")
-    encoded = prepared.mapInPandas(encode_iter, ENCODE_SCHEMA)
-    # tile digest JVM-side (codegen'd sha2 over the binary column) — keeps
-    # the Python stage free of per-tile hashlib calls
-    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
-
-
-def encode_shuffle_partitions(spark) -> int:
-    """Width of the tile-encode final exchange: max(4 x total cores, 32),
-    overridable via SPARK_GRAFT_ENCODE_PARTS. On a cluster
-    defaultParallelism is the executor-core total, so the encode stage gets
-    ~4 waves of smaller tasks — enough to overlap shuffle reads with Python
-    encode and rebalance stragglers without per-task overhead dominating."""
-    n = int(os.environ.get("SPARK_GRAFT_ENCODE_PARTS", "0"))
-    if n:
-        return n
-    return max(4 * spark.sparkContext.defaultParallelism, 32)
-
-
-def encode_point_tiles_compact(
-    df: DataFrame,
-    z_min: int = 0,
-    z_max: int = 14,
-    layer_name: str = "pages",
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-) -> DataFrame:
-    """Shuffle-lean pyramid encode: ``df`` carries (u, v, feature_id,
-    tags...) and only (z, u, v, feature_id, tags) ride the tile shuffle —
-    the derived (x, y, px, py) columns (40%% of the shuffled bytes in the
-    standard path) are reconstructed AFTER the shuffle in the encode batch
-    with the same IEEE double expressions, so the output is BYTE-IDENTICAL
-    to encode_point_tiles (asserted in tests/test_tiler_compact.py). The
-    partition/sort keys are computed as expressions, never materialized.
-    At 9M rows x 15 zooms per sf0.1 this cuts the dominant shuffle by ~30%;
-    at 100 TB that shuffle is the pipeline's bottleneck, so the saving
-    scales 1:1.
-    """
-    if not 0 <= z_min <= z_max <= 25:
-        raise ValueError("gid packing supports zoom levels 0..25")
-    tag_cols = tuple(tag_cols)
-    zoomed = df.withColumn("z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max))))
-    # Final-exchange width: more, smaller encode tasks let the Python encode
-    # stage overlap shuffle reads and keep each task's Arrow/numpy working
-    # set inside an already-faulted arena (same rationale as the 16k batch
-    # cap in session.py). Measured on the z0-14 pyramid at sf0.1: 4x cores
-    # beats 2x cores at EVERY level (8 cores: 10.3s vs 15.9s; 32 cores:
-    # 10.5s vs 16.8s same-session), and over-widening regresses (96 parts
-    # at 8 cores: 17.5s). Bytes are partitioning-invariant
-    # (carry_group_iter completes tile groups).
-    n_parts = encode_shuffle_partitions(df.sparkSession)
-    sel, part_sort, project = _compact_shuffle_exprs(z_max, extent, tag_cols)
-    if sel is not None:
-        # r7 packed-key shuffle (guide §2.3, narrower types): (z, u, v) —
-        # 8+8+8 UnsafeRow bytes — collapse into ONE int64 `packed` =
-        # z . floor(u*2^(z_max+12)) . floor(v*2^(z_max+12)) bit fields,
-        # cutting the pyramid's dominant exchange ~30%/row. Exact: u * 2^B
-        # is an exact double (power-of-two scale), floor(u*2^B) >> (B-z)
-        # == floor(u*2^z) and (uq >> (B-12-z)) - (x << 12) == the old
-        # cast(u*scale - x*4096 as long) for every u in [0, 1] (the
-        # pipeline's with_unit domain; clamps keep the u=1.0 edge
-        # byte-identical too). Fits while 5 + 2*(z_max+13) <= 64, i.e.
-        # z_max <= 16 (and extent 4096); larger zooms take the unpacked
-        # path below. Byte-identity vs encode_point_tiles is asserted in
-        # tests/test_tiler_compact.py at both z ranges.
-        parted = zoomed.selectExpr(*sel).repartition(n_parts, *part_sort[:3])
-        prepared = parted.sortWithinPartitions(*part_sort)
-        projected = prepared.selectExpr(*project)
-    else:
-        cols = ["z", "u", "v", "feature_id"] + [c for c, _ in tag_cols]
-        xe, ye = _tile_xy_exprs()
-        parted = zoomed.select(*cols).repartition(n_parts, F.col("z"), xe, ye)
-        prepared = parted.sortWithinPartitions(
-            F.col("z"), xe, ye, F.col("feature_id")
-        )
-        # Post-shuffle, post-sort JVM projection (same stage, whole-stage
-        # codegen): the derived columns reconstruct from (z, u, v) with the
-        # same IEEE double math the Python stage used to do per batch.
-        # Exactness: scale = 2^z * 4096 = 2^(z+12) and x * 4096 are EXACT
-        # doubles, so qx/qy round identically to numpy's
-        # u * scale - x * 4096.0; cast(double as long/int) truncates toward
-        # zero exactly like mvtcodec.geomstream.quantize (non-ANSI Spark
-        # cast == Go's int32() cast, reference marshal.go:190,196). gid
-        # packs (z, x, y) into one int64 (26-bit x/y fields, lexicographic
-        # == numeric order).
-        scale_e = "(cast(shiftleft(1, z) as double) * 4096.0D)"
-        qx_e = f"cast(u * {scale_e} - cast(_x as double) * 4096.0D as long)"
-        qy_e = f"cast(v * {scale_e} - cast(_y as double) * 4096.0D as long)"
-        projected = (
-            prepared.withColumn("_x", xe)
-            .withColumn("_y", ye)
-            .selectExpr(
-                "shiftleft(cast(z as bigint), 52) + shiftleft(_x, 26) + _y as gid",
-                f"{qx_e} as qx",
-                f"{qy_e} as qy",
-                "feature_id",
-                *[c for c, _ in tag_cols],
-            )
-        )
-
-    tag_names = frozenset(c for c, _ in tag_cols)
-
-    def encode_iter(batches):
-        return carry_group_iter_arrow(
-            batches,
-            lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
-            tag_names,
-        )
-
-    encoded = projected.mapInArrow(encode_iter, ENCODE_SCHEMA)
-    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
-
-
 def _packed_exprs(z_max: int, extent: int, with_salt: bool):
-    """SQL expression strings for the packed one-int64 shuffle key (r7,
-    guide §2.3): bit fields [salt(6) .] z(5) . uq(B+1) . vq(B+1) with
+    """SQL expression strings for the packed one-int64 shuffle key
+    (guide §2.3): bit fields [salt(6) .] z(5) . uq(B+1) . vq(B+1) with
     B = z_max + 12, uq = clamp(floor(u * 2^B), 0, 2^B). Returns None when
-    the fields do not fit an int64 (z_max > 16 unsalted / > 10 salted) or
-    extent != 4096; callers fall back to the unpacked (z, u, v) shuffle.
+    the fields do not fit an int64 (5 [+ 6] + 2 * (z_max + 13) > 64, i.e.
+    z_max > 16 unsalted / > 13 salted) or extent != 4096; the key builder
+    then falls back to the unpacked (z, u, v) key.
 
     Exactness (why the derived columns are bit-identical to the unpacked
-    path for u, v in [0, 1], the with_unit domain): u * 2^B is exact
+    key for u, v in [0, 1], the with_unit domain): u * 2^B is exact
     (power-of-two scaling of a double), floor(u*2^B) >> (B-z) ==
     floor(u*2^z) (nested-floor identity with integer divisor), and
-    qx = floor(u*2^(z+12)) - x*4096 == the old cast(u*scale - x*4096.0 as
-    long) because that double subtraction is exact (the difference's
-    significant bits fit a double) and the value is >= 0 so trunc == floor.
-    The clamps reproduce the unpacked path's least/greatest at u = 1.0."""
+    qx = floor(u*2^(z+12)) - x*4096 == cast(u*scale - x*4096.0 as long)
+    because that double subtraction is exact (the difference's significant
+    bits fit a double) and the value is >= 0 so trunc == floor. The clamps
+    reproduce the unpacked key's least/greatest at u = 1.0. Valid only for
+    rows with z <= z_max: the caller guards that (_keyed_rows)."""
     B = z_max + 12
     if extent != EXTENT or 5 + (6 if with_salt else 0) + 2 * (B + 1) > 64:
         return None
@@ -507,72 +381,162 @@ def _packed_exprs(z_max: int, extent: int, with_salt: bool):
     gid = f"shiftleft(cast({z_i} as bigint), 52) + shiftleft({x}, 26) + {y}"
     if with_salt:
         gid = f"shiftleft(shiftright(packed, {zshift + 5}), 57) + {gid}"
-    return {"packed": packed, "z": z_i, "x": x, "y": y, "qx": qx, "qy": qy,
+    return {"select": [f"{packed} as packed", "feature_id"],
+            "packed": packed, "z": z_i, "x": x, "y": y, "qx": qx, "qy": qy,
             "gid": gid, "salt": f"shiftright(packed, {zshift + 5})"}
 
 
-def _compact_shuffle_exprs(z_max: int, extent: int, tag_cols):
-    """Assembled (select, partition+sort, post-shuffle projection) pieces
-    for encode_point_tiles_compact's packed shuffle; (None, None, None)
-    when packing does not apply."""
-    e = _packed_exprs(z_max, extent, with_salt=False)
-    if e is None:
-        return None, None, None
+def _unpacked_exprs(with_salt: bool) -> dict:
+    """The (z, u, v [, _salt]) key, with the same roles as _packed_exprs.
+    x/y are with_tiles' own expressions; qx/qy truncate with_tiles' px/py
+    (scale = 2^(z+12) and x * 4096 are exact doubles, and cast(double as
+    long) truncates toward zero like Go's int32() cast, reference
+    marshal.go:190,196)."""
+    x = index.tile_expr("u", "z", shift_op=False)
+    y = index.tile_expr("v", "z", shift_op=False)
+    scale = "(cast(shiftleft(1, z) as double) * 4096.0D)"
+    gid = f"shiftleft(cast(z as bigint), 52) + shiftleft({x}, 26) + {y}"
+    if with_salt:
+        gid = f"shiftleft(_salt, 57) + {gid}"
+    return {
+        "select": ["z", "u", "v", "feature_id"] + (["_salt"] if with_salt else []),
+        "z": "z", "x": x, "y": y, "salt": "_salt", "gid": gid,
+        "qx": f"cast(u * {scale} - cast({x} as double) * 4096.0D as long)",
+        "qy": f"cast(v * {scale} - cast({y} as double) * 4096.0D as long)",
+    }
+
+
+def _keyed_rows(
+    df: DataFrame,
+    z_max: int,
+    tag_cols: tuple[tuple[str, str], ...],
+    extent: int = EXTENT,
+    partition_mode: str = "hash",
+    salt=None,
+) -> DataFrame:
+    """The encode's shuffle + sort: zoom-exploded (z, u, v, feature_id,
+    tags) rows -> (gid, qx, qy, feature_id, tags) with each tile (and salt)
+    contiguous and sorted by feature_id — everything before the Python
+    stage.
+
+    Only the key + feature_id + tags ride the shuffle; the partition/sort
+    keys are expressions over it, and (gid, qx, qy) are rebuilt after the
+    sort in the same codegen'd stage. The exchange is un-numbered, so AQE
+    sizes it from the shuffled bytes: each Python task costs a fixed ~50 ms
+    (local[4]), which a fixed max(4 x cores, 32) width paid dozens of times
+    over on small encodes. Rows with z outside [0, z_max] fail the job
+    (raise_error) rather than spill into a neighbouring bit field.
+
+    partition_mode: "hash" co-locates each tile with one shuffle pass;
+    "hilbert" (SURVEY §4.3 output-locality mode) range-partitions on
+    (z, Hilbert key of x, y) so consecutively written tiles are spatial
+    NEIGHBORS — the write-locality order object stores and tile servers
+    want. It costs a range-sampling pass that re-evaluates the upstream
+    lineage — worth it when the input is a materialized table (the
+    resumable job). Tile BYTES are identical in both modes
+    (tests/test_manifest_resume.py)."""
+    if not 0 <= z_max <= MAX_ZOOM:
+        raise ValueError(f"gid packing supports z_max 0..{MAX_ZOOM}")
+    if partition_mode not in ("hash", "hilbert"):
+        raise ValueError(f"partition_mode must be hash or hilbert, not {partition_mode!r}")
+    salted = salt is not None
+    e = _packed_exprs(z_max, extent, salted) or _unpacked_exprs(salted)
     tags = [c for c, _ in tag_cols]
-    sel = [f"{e['packed']} as packed", "feature_id", *tags]
-    part_sort = [
-        F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]), F.col("feature_id")
-    ]
-    project = [
-        f"{e['gid']} as gid",
-        f"{e['qx']} as qx",
-        f"{e['qy']} as qy",
-        "feature_id",
-        *tags,
-    ]
-    return sel, part_sort, project
-
-
-def _tile_xy_exprs():
-    """x/y tile expressions over (z, u, v) — used as partition/sort keys
-    without materializing the columns into the shuffle."""
-    xe = F.expr(
-        "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
-        "cast(floor(u * shiftleft(1, z)) as bigint)))"
+    src = df.withColumn(
+        "z",
+        F.expr(
+            f"CASE WHEN z BETWEEN 0 AND {z_max} THEN z ELSE raise_error(concat("
+            f"'zoom ', cast(z as string), ' is outside the tile key range "
+            f"0..{z_max}; raise z_max')) END"
+        ),
     )
-    ye = F.expr(
-        "least(cast(shiftleft(1, z) as bigint) - 1, greatest(cast(0 as bigint), "
-        "cast(floor(v * shiftleft(1, z)) as bigint)))"
+    if salted:
+        src = src.withColumn("_salt", salt)
+    keyed = src.selectExpr(*e["select"], *tags)
+    z, x, y = F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"])
+    salt_key = [F.expr(e["salt"])] if salted else []
+    if partition_mode == "hilbert":
+        # order-z_max curve over the tile corners scaled to the z_max grid:
+        # each aligned sub-square is one contiguous curve run, so tiles of
+        # every zoom keep the curve's neighbour order
+        keyed = index.with_hilbert_key(
+            keyed.withColumns(
+                {
+                    "_gx": F.expr(f"shiftleft({e['x']}, {z_max} - {e['z']})"),
+                    "_gy": F.expr(f"shiftleft({e['y']}, {z_max} - {e['z']})"),
+                }
+            ),
+            z_max, "_gx", "_gy",
+        ).drop("_gx", "_gy")
+        parted = keyed.repartitionByRange(z, F.col("hkey"))
+        tile_order = [z, F.col("hkey")]
+    else:
+        parted = keyed.repartition(z, x, y, *salt_key)
+        tile_order = [z, x, y]
+    prepared = parted.sortWithinPartitions(
+        *tile_order, *salt_key, F.col("feature_id")
     )
-    return xe, ye
-
-
-def _augment_uv(pdf: pd.DataFrame, extent: int) -> pd.DataFrame:
-    """Reconstruct (x, y, px, py) from (z, u, v) AFTER the shuffle with the
-    same IEEE double expressions the standard path shuffles materialized."""
-    z = pdf["z"].to_numpy()
-    u = pdf["u"].to_numpy()
-    v = pdf["v"].to_numpy()
-    n = np.ldexp(1.0, z.astype(np.int64))  # 2^z exact
-    x = np.minimum(n - 1, np.maximum(0.0, np.floor(u * n))).astype(np.int64)
-    y = np.minimum(n - 1, np.maximum(0.0, np.floor(v * n))).astype(np.int64)
-    scale = n * float(extent)
-    return pdf.assign(
-        x=x, y=y,
-        px=u * scale - x * float(extent),
-        py=v * scale - y * float(extent),
+    return prepared.selectExpr(
+        f"{e['gid']} as gid", f"{e['qx']} as qx", f"{e['qy']} as qy",
+        "feature_id", *tags,
     )
 
 
-PARTIAL_SCHEMA = (
-    "z int, x bigint, y bigint, n_features long, fids binary, block binary, "
-    "feat_len binary, glen binary, vcode binary, dict_blob binary, "
-    "dict_lens binary, mvt binary"
-)
+def _encode_keyed(rows: DataFrame, encode_fn, tag_cols, schema: str) -> DataFrame:
+    """The one mapInArrow worker: complete gid groups of ``rows`` (from
+    _keyed_rows) through ``encode_fn``."""
+    tag_names = frozenset(c for c, _ in tag_cols)
+    return rows.mapInArrow(
+        lambda batches: carry_group_iter_arrow(batches, encode_fn, tag_names),
+        schema,
+    )
+
+
+def encode_point_tiles(
+    df: DataFrame,
+    z_max: int = 16,
+    layer_name: str = "pages",
+    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
+    extent: int = EXTENT,
+    partition_mode: str = "hash",
+) -> DataFrame:
+    """(z, u, v, feature_id, tags...) -> one MVT tile row per (z,x,y).
+
+    ``df`` holds zoom-exploded rows with z <= z_max (index.with_tiles'
+    output; its x, y, px, py are pruned, not shuffled). z_max <= 16 takes
+    the packed int64 key, larger z_max the unpacked one — same bytes. See
+    _keyed_rows for the shuffle and partition_mode."""
+    tag_cols = tuple(tag_cols)
+    rows = _keyed_rows(df, z_max, tag_cols, extent, partition_mode)
+    encoded = _encode_keyed(
+        rows,
+        lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
+        tag_cols,
+        ENCODE_SCHEMA,
+    )
+    # tile digest JVM-side (codegen'd sha2 over the binary column) — keeps
+    # the Python stage free of per-tile hashlib calls
+    return encoded.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+
+
+def encode_point_tiles_compact(
+    df: DataFrame,
+    z_min: int = 0,
+    z_max: int = 14,
+    layer_name: str = "pages",
+    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
+    extent: int = EXTENT,
+) -> DataFrame:
+    """z_min..z_max pyramid of (u, v, feature_id, tags...) points:
+    with_tiles' zoom explode, then encode_point_tiles keyed at z_max."""
+    return encode_point_tiles(
+        index.with_tiles(df, z_min, z_max), z_max, layer_name, tag_cols, extent
+    )
 
 
 def encode_point_partials(
     df: DataFrame,
+    z_max: int = 13,
     n_salt: int = 8,
     tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
     extent: int = EXTENT,
@@ -583,177 +547,18 @@ def encode_point_partials(
     (framed feature bytes + ids/lengths/dict codes, engine.mvtcodec.
     fastpoints.encode_point_features_sorted) in PARTIAL_SCHEMA rows (the
     ``mvt`` column stays null; pre-encoded tiles conformed by
-    tiles_as_partial_rows ride the same schema into one shared merge)."""
+    tiles_as_partial_rows ride the same schema into one shared merge,
+    merge_partial_tiles). Same rows and key builder as encode_point_tiles,
+    with the salt as the key's top field (packed through z_max 13)."""
+    if not 1 <= n_salt <= 64:
+        raise ValueError("the salt key field supports n_salt 1..64")
     tag_cols = tuple(tag_cols)
-    gcols = ("z", "x", "y", "_salt")
-    cols = ["z", "x", "y", "feature_id", "px", "py"] + [c for c, _ in tag_cols]
-    encode_partial_batch = _make_partial_encoder(tag_cols)
-    salted = df.select(*cols).withColumn("_salt", _zoom_salt_expr(n_salt))
-    parted = salted.repartition("z", "x", "y", "_salt").sortWithinPartitions(
-        "z", "x", "y", "_salt", "feature_id"
-    )
-    return parted.mapInPandas(
-        lambda b: carry_group_iter(b, encode_partial_batch, gcols),
+    rows = _keyed_rows(df, z_max, tag_cols, extent, salt=_zoom_salt_expr(n_salt))
+    return _encode_keyed(
+        rows,
+        lambda cols: _encode_partials_group_arrow(cols, tag_cols),
+        tag_cols,
         PARTIAL_SCHEMA,
-    )
-
-
-def encode_point_partials_compact(
-    df: DataFrame,
-    z_min: int = 0,
-    z_max: int = 14,
-    n_salt: int = 8,
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-) -> DataFrame:
-    """Shuffle-lean stage 1: like encode_point_partials but ``df`` carries
-    (u, v, feature_id, tags) and only those ride the salted tile shuffle —
-    the derived columns reconstruct POST-shuffle in JVM codegen and the
-    workers run the same pandas-free Arrow path as the compact tile
-    encoder: (gid, qx, qy, fid, tags) in, with the salt packed into gid's
-    top bits (grouping is equality-based, so any contiguous total order
-    works; within-group sort by feature_id is what fixes the bytes)."""
-    if not 0 <= z_min <= z_max <= 25 or not 1 <= n_salt <= 64:
-        raise ValueError("gid packing supports z 0..25, n_salt 1..64")
-    tag_cols = tuple(tag_cols)
-    zoomed = df.withColumn(
-        "z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max)))
-    ).withColumn("_salt", _zoom_salt_expr(n_salt))
-    tags = [c for c, _ in tag_cols]
-    e = _packed_exprs(z_max, extent, with_salt=True)
-    if e is not None:
-        # r7 packed-key salted shuffle — same one-int64 collapse (and the
-        # same exactness argument) as encode_point_tiles_compact, with the
-        # salt in the top bit field; see _packed_exprs.
-        parted = zoomed.selectExpr(
-            f"{e['packed']} as packed", "feature_id", *tags
-        ).repartition(
-            F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]), F.expr(e["salt"])
-        )
-        prepared = parted.sortWithinPartitions(
-            F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"]),
-            F.expr(e["salt"]), F.col("feature_id"),
-        )
-        projected = prepared.selectExpr(
-            f"{e['gid']} as gid",
-            f"{e['qx']} as qx",
-            f"{e['qy']} as qy",
-            "feature_id",
-            *tags,
-        )
-    else:
-        cols = ["z", "u", "v", "feature_id", "_salt"] + tags
-        xe, ye = _tile_xy_exprs()
-        parted = zoomed.select(*cols).repartition(
-            F.col("z"), xe, ye, F.col("_salt")
-        )
-        prepared = parted.sortWithinPartitions(
-            F.col("z"), xe, ye, F.col("_salt"), F.col("feature_id")
-        )
-        scale_e = "(cast(shiftleft(1, z) as double) * 4096.0D)"
-        qx_e = f"cast(u * {scale_e} - cast(_x as double) * 4096.0D as long)"
-        qy_e = f"cast(v * {scale_e} - cast(_y as double) * 4096.0D as long)"
-        projected = (
-            prepared.withColumn("_x", xe)
-            .withColumn("_y", ye)
-            .selectExpr(
-                "shiftleft(_salt, 57) + shiftleft(cast(z as bigint), 52)"
-                " + shiftleft(_x, 26) + _y as gid",
-                f"{qx_e} as qx",
-                f"{qy_e} as qy",
-                "feature_id",
-                *tags,
-            )
-        )
-    tag_names = frozenset(c for c, _ in tag_cols)
-
-    def encode_iter(batches):
-        return carry_group_iter_arrow(
-            batches,
-            lambda c: _encode_partials_group_arrow(c, tag_cols),
-            tag_names,
-        )
-
-    return projected.mapInArrow(encode_iter, PARTIAL_SCHEMA)
-
-
-def _encode_partials_group_arrow(cols, tag_cols):
-    """Arrow-native partial encode for one-or-more COMPLETE (salt-packed)
-    gid groups — the partial-row twin of _encode_group_arrow: numpy ints
-    in, tag strings dictionary-encoded in Arrow C++, PARTIAL_SCHEMA
-    RecordBatch out (per-group byte columns; the group count is tens of
-    rows at z0-3, so the per-group Python loop is not a hot path)."""
-    import pyarrow as pa
-
-    gid = cols["gid"]
-    starts = _gid_bounds(gid)
-    counts = np.diff(np.append(starts, len(gid)))
-    tags = {}
-    for c, vt in tag_cols:
-        arr = cols[c]
-        if isinstance(arr, np.ndarray):
-            tags[c] = (vt, arr)
-        elif vt == "string":
-            if arr.null_count:
-                # pre-r6 pandas factorize encoded nulls as a real dictionary
-                # entry; dictionary_encode() leaves null INDICES, which the
-                # int64 cast below would turn into garbage codes — fail
-                # loudly instead of corrupting tag bytes (ADVICE r6)
-                raise ValueError(
-                    "null string tag values are not supported by the Arrow "
-                    "encode path; fill or drop nulls upstream"
-                )
-            d = arr.dictionary_encode()
-            codes = d.indices.to_numpy(zero_copy_only=False).astype(np.int64)
-            tags[c] = (vt, (codes, d.dictionary.to_pylist()))
-        else:
-            tags[c] = (vt, arr.to_numpy(zero_copy_only=False))
-    fids = cols["feature_id"]
-    fb = fastpoints.encode_point_features_sorted(
-        counts, fids, cols["qx"], cols["qy"], tags
-    )
-    feat_len = fb["feat_len"]
-    b_off = np.concatenate([[0], np.cumsum(feat_len)])
-    block = fb["block"].tobytes()
-    vblob = fb["vblob"].tobytes()
-    e_bounds = fb["e_bounds"]
-    entry_lens = fb["entry_lens"]
-    ends = np.append(starts[1:], len(gid))
-    g = gid[starts]
-    mask26 = (1 << 26) - 1
-    fids64 = np.asarray(fids, dtype=np.int64)
-    out = {k: [] for k in (
-        "fids", "block", "feat_len", "glen", "vcode", "dict_blob", "dict_lens"
-    )}
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        out["fids"].append(fids64[s:e].tobytes())
-        out["block"].append(block[b_off[s] : b_off[e]])
-        out["feat_len"].append(feat_len[s:e].astype(np.int32).tobytes())
-        out["glen"].append(fb["glen"][s:e].astype(np.int32).tobytes())
-        out["vcode"].append(fb["vcode"][s:e].astype(np.int32).tobytes())
-        out["dict_blob"].append(
-            vblob[fb["vstart"][i] : fb["vstart"][i] + fb["vlen"][i]]
-        )
-        out["dict_lens"].append(
-            entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
-        )
-    n = len(starts)
-    return pa.RecordBatch.from_arrays(
-        [
-            pa.array(((g >> 52) & 31).astype(np.int32), type=pa.int32()),
-            pa.array((g >> 26) & mask26, type=pa.int64()),
-            pa.array(g & mask26, type=pa.int64()),
-            pa.array(counts, type=pa.int64()),
-            *[pa.array(out[k], type=pa.binary()) for k in (
-                "fids", "block", "feat_len", "glen", "vcode",
-                "dict_blob", "dict_lens",
-            )],
-            pa.nulls(n, pa.binary()),
-        ],
-        names=[
-            "z", "x", "y", "n_features", "fids", "block", "feat_len",
-            "glen", "vcode", "dict_blob", "dict_lens", "mvt",
-        ],
     )
 
 
@@ -767,65 +572,6 @@ def _zoom_salt_expr(n_salt: int):
         F.xxhash64("feature_id"),
         F.greatest(F.lit(1), F.expr(f"shiftright({n_salt}, z)")),
     )
-
-
-def _make_partial_encoder(tag_cols: tuple[tuple[str, str], ...]):
-    gcols = ("z", "x", "y", "_salt")
-
-    def encode_partial_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        starts = _group_bounds(pdf, gcols)
-        counts = np.diff(np.append(starts, len(pdf)))
-        tags = {
-            col: (vt, pdf[col].to_numpy(dtype=object if vt == "string" else None))
-            for col, vt in tag_cols
-        }
-        fids = pdf["feature_id"].to_numpy(dtype=np.int64)
-        fb = fastpoints.encode_point_features_sorted(
-            counts, fids, quantize(pdf["px"].to_numpy()),
-            quantize(pdf["py"].to_numpy()), tags,
-        )
-        feat_len = fb["feat_len"]
-        b_off = np.concatenate([[0], np.cumsum(feat_len)])
-        block = fb["block"].tobytes()
-        vblob = fb["vblob"].tobytes()
-        e_bounds = fb["e_bounds"]
-        entry_lens = fb["entry_lens"]
-        ends = np.append(starts[1:], len(pdf))
-        out = {k: [] for k in (
-            "z", "x", "y", "n_features", "fids", "block", "feat_len",
-            "glen", "vcode", "dict_blob", "dict_lens",
-        )}
-        for i, (s, e) in enumerate(zip(starts, ends)):
-            out["z"].append(int(pdf["z"].iloc[s]))
-            out["x"].append(int(pdf["x"].iloc[s]))
-            out["y"].append(int(pdf["y"].iloc[s]))
-            out["n_features"].append(int(e - s))
-            out["fids"].append(fids[s:e].tobytes())
-            out["block"].append(block[b_off[s] : b_off[e]])
-            out["feat_len"].append(feat_len[s:e].astype(np.int32).tobytes())
-            out["glen"].append(fb["glen"][s:e].astype(np.int32).tobytes())
-            out["vcode"].append(fb["vcode"][s:e].astype(np.int32).tobytes())
-            out["dict_blob"].append(
-                vblob[fb["vstart"][i] : fb["vstart"][i] + fb["vlen"][i]]
-            )
-            out["dict_lens"].append(
-                entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
-            )
-        return pd.DataFrame(
-            {
-                "z": pd.array(out["z"], dtype="int32"),
-                "x": pd.array(out["x"], dtype="int64"),
-                "y": pd.array(out["y"], dtype="int64"),
-                "n_features": pd.array(out["n_features"], dtype="int64"),
-                **{k: out[k] for k in (
-                    "fids", "block", "feat_len", "glen", "vcode",
-                    "dict_blob", "dict_lens",
-                )},
-                "mvt": [None] * len(out["z"]),
-            }
-        )
-
-    return encode_partial_batch
 
 
 def tiles_as_partial_rows(tiles: DataFrame) -> DataFrame:
@@ -946,20 +692,6 @@ def merge_partial_tiles(
         )
     )
     return merged.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
-
-
-def encode_point_tiles_salted(
-    df: DataFrame,
-    n_salt: int = 8,
-    layer_name: str = "pages",
-    tag_cols: tuple[tuple[str, str], ...] = (("lang", "string"),),
-    extent: int = EXTENT,
-) -> DataFrame:
-    """B14 mega-tile path: encode_point_partials -> merge_partial_tiles.
-    Output is BYTE-IDENTICAL to the unsalted encoder
-    (tests/test_tilemerge.py asserts it)."""
-    stage1 = encode_point_partials(df, n_salt, tag_cols, extent)
-    return merge_partial_tiles(stage1, layer_name, tag_cols, extent)
 
 
 def decode_layer_counts(tiles: DataFrame) -> DataFrame:

@@ -148,6 +148,23 @@ def test_resume_noop_when_complete(spark, tmp_path):
     assert (m["run_id"] == "first").all()  # second run appended nothing
 
 
+def test_null_string_tag_fails_without_commit(spark, tmp_path):
+    """A null string tag must fail the tile stage loudly (never encode as a
+    made-up tag value) and leave no committed manifest row."""
+    import os
+
+    indexed = _indexed(spark)
+    fid = indexed.agg(F.min("feature_id")).first()[0]
+    one_null = F.when(F.col("feature_id") == fid, F.lit(None).cast("string"))
+    indexed = indexed.withColumn("lang", one_null.otherwise(F.col("lang")))
+    assert indexed.filter(F.col("lang").isNull()).count() == Z_MAX + 1
+    out = str(tmp_path / "nulls")
+    with pytest.raises(Exception, match="null string tag"):
+        manifest.run_tile_stage(spark, indexed, out, run_id="nulls")
+    assert not os.path.exists(f"{out}/manifest")
+    assert manifest.completed_tiles(spark, f"{out}/manifest") is None
+
+
 def test_metrics_summary(spark, tmp_path):
     indexed = _indexed(spark)
     out = str(tmp_path / "metrics")

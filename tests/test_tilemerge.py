@@ -57,27 +57,29 @@ def test_split_tile_layers_roundtrip():
 
 
 def test_salted_encode_byte_identical(spark):
-    """encode_point_tiles_salted (partial per (tile, salt) -> merge) must
-    reproduce the unsalted encoder's bytes exactly, for any n_salt."""
+    """encode_point_partials (partial per (tile, salt)) -> merge_partial_tiles
+    must reproduce the unsalted encoder's bytes exactly, for any n_salt."""
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
     df = index.with_tiles(index.with_unit(geo), 0, 3)
     plain = tiler.encode_point_tiles(df).toPandas()
     want = {(r.z, r.x, r.y): r.mvt_sha256 for r in plain.itertuples()}
     for n_salt in (1, 4):
-        salted = tiler.encode_point_tiles_salted(df, n_salt=n_salt).toPandas()
+        stage1 = tiler.encode_point_partials(df, n_salt=n_salt)
+        salted = tiler.merge_partial_tiles(stage1).toPandas()
         got = {(r.z, r.x, r.y): r.mvt_sha256 for r in salted.itertuples()}
         assert got == want, f"n_salt={n_salt}"
         assert (salted["n_layers"] == 1).all()
 
 
 def test_salted_compact_encode_byte_identical(spark):
-    """The shuffle-lean salted stage (encode_point_partials_compact ->
-    merge_partial_tiles) must also reproduce the unsalted encoder's bytes."""
+    """The salted stage keyed at the data's own top zoom (z_max=3, the
+    narrowest packed key, as mvt_combined_tiles encodes) must also
+    reproduce the unsalted encoder's bytes."""
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, SF_DIR)))
     df = index.with_tiles(index.with_unit(geo), 0, 3)
     plain = tiler.encode_point_tiles(df).toPandas()
     want = {(r.z, r.x, r.y): r.mvt_sha256 for r in plain.itertuples()}
-    stage1 = tiler.encode_point_partials_compact(index.with_unit(geo), 0, 3)
+    stage1 = tiler.encode_point_partials(df, 3)
     salted = tiler.merge_partial_tiles(stage1).toPandas()
     got = {(r.z, r.x, r.y): r.mvt_sha256 for r in salted.itertuples()}
     assert got == want

@@ -61,7 +61,7 @@ def test_capped_encode_bytes_invariant(spark):
     tiles_b = (
         tiler.encode_point_tiles(
             tiler.cap_features_per_tile(_indexed(spark), CAP, n_salt=32),
-            partition_mode="range",
+            partition_mode="hilbert",
         )
         .select("z", "x", "y", "mvt_sha256")
         .toPandas()
