@@ -4,8 +4,10 @@ The salted encoder's stage 1 (engine.pipeline.tiler.encode_point_partials)
 runs fastpoints.encode_point_features_sorted per (tile, salt) group and
 ships the PARTIAL ARRAYS — framed feature bytes, feature ids, per-feature
 framed/geometry lengths, local dictionary codes, and the local value
-table — instead of assembled tiles. This merge re-frames a tile's partials
-into the canonical single-pass layer with whole-array passes only:
+table — instead of assembled tiles. engine.pipeline.tiler.merge_partial_tiles
+(the only tile merge) hands each tile's partials to merge_point_partials,
+which re-frames them into the canonical single-pass layer with whole-array
+passes only:
 
 - canonical feature order = argsort over the concatenated feature ids;
 - the merged first-seen value dictionary comes from factorizing the
@@ -18,11 +20,11 @@ into the canonical single-pass layer with whole-array passes only:
   the id varint, the re-coded tag block, and the message-length varint are
   re-emitted.
 
-Output is BYTE-IDENTICAL to the unsalted single-pass encoder
-(tests/test_tilemerge.py asserts it). Per-feature Python: none — the round-2
-merge decoded and re-encoded every feature through the generic per-feature
-path on the single merge task, exactly the skew the salting existed to
-remove.
+Output is BYTE-IDENTICAL to the unsalted single-pass encoder and to
+tile.encode_layer over the features sorted by id (tests/test_tilemerge.py
+asserts both, the second as a property over random partitions of random
+features). No per-feature Python, so a hot tile's merge stays cheap on the
+single merge task the salting spreads its encode away from.
 """
 
 from __future__ import annotations

@@ -1,9 +1,11 @@
 """Vectorized point-layer MVT encoder — the per-tile hot path.
 
-Encodes an entire layer of Point features in O(passes) numpy operations
-(no per-feature Python loop): geometry words, varints, feature message
-framing and layer assembly are all computed as flat arrays and stitched
-with a vectorized ragged scatter-copy.
+Encodes MANY single-layer Point tiles in O(passes) numpy operations (no
+per-feature or per-tile Python loop): geometry words, varints, feature
+message framing (encode_point_features_sorted) and layer assembly
+(encode_point_tiles_sorted_raw) are all computed as flat arrays and
+stitched with a vectorized ragged scatter-copy. encode_point_tile is the
+same path with one tile group.
 
 Byte-compatible with engine.mvtcodec.tile.encode_layer for point features
 (property asserted in tests/test_fastpoints.py): same wire layout
@@ -18,7 +20,7 @@ import pandas as pd
 
 from . import pbwire
 from .commands import MOVE_TO, make_command
-from .tile import VERSION, encode_value
+from .tile import VERSION, encode_layer, encode_value
 from .zigzag import make_parameter
 
 
@@ -90,121 +92,6 @@ def _global_tag_codes(
     return col_codes.ravel(), uniques
 
 
-def encode_point_layer(
-    name: str,
-    extent: int,
-    fids: np.ndarray | None,
-    px: np.ndarray,
-    py: np.ndarray,
-    tag_columns: dict[str, tuple[str, np.ndarray]] | None = None,
-) -> bytes:
-    """Encode one layer of n Point features.
-
-    fids: int64 (unique, caller-sorted) or None for id-less features.
-    px/py: int64 quantized tile coords.
-    tag_columns: {key: (vtype, values array)} — every feature gets one tag
-    per column, dictionary-encoded first-seen (feature-major order).
-    """
-    n = len(px)
-    px = np.asarray(px, dtype=np.int64)
-    py = np.asarray(py, dtype=np.int64)
-    tag_columns = tag_columns or {}
-
-    # --- geometry: words (n,3) -> flat varint blob + per-feature byte lens
-    words = np.empty((n, 3), dtype=np.uint64)
-    words[:, 0] = int(make_command(MOVE_TO, 1))
-    words[:, 1] = make_parameter(px)
-    words[:, 2] = make_parameter(py)
-    flat = words.reshape(-1)
-    geom_blob = np.frombuffer(pbwire.varint_array(flat), dtype=np.uint8)
-    wlens = pbwire.varint_array_lengths(flat).reshape(n, 3)
-    glen = wlens.sum(axis=1)  # <= 15 bytes -> 1-byte length varint always
-    geom_starts = np.cumsum(glen) - glen
-
-    # --- tag dictionaries (first-seen, feature-major across columns)
-    keys = list(tag_columns.keys())
-    tag_idx = None
-    values_list: list[tuple] = []
-    if keys:
-        interleaved, uniques = _global_tag_codes(keys, tag_columns, n)
-        # re-rank global ids to first-seen order in the feature-major stream
-        first_idx = np.full(len(uniques), np.iinfo(np.int64).max, dtype=np.int64)
-        np.minimum.at(first_idx, interleaved, np.arange(interleaved.size))
-        order = np.argsort(first_idx, kind="stable")
-        rank = np.empty(len(order), dtype=np.int64)
-        rank[order] = np.arange(len(order))
-        codes = rank[interleaved]
-        values_list = [uniques[int(g)] for g in order]
-        t = len(keys)
-        tag_idx = np.empty((n, 2 * t), dtype=np.uint64)
-        tag_idx[:, 0::2] = np.arange(t, dtype=np.uint64)[None, :]
-        tag_idx[:, 1::2] = codes.reshape(n, t).astype(np.uint64)
-
-    # --- per-feature message byte length
-    # type field: 0x18 0x01 (2 bytes); geom: 0x22 + 1-byte len + glen
-    msg_len = glen + 4
-    if fids is not None:
-        fids = np.asarray(fids, dtype=np.int64)
-        id_lens = pbwire.varint_array_lengths(fids.astype(np.uint64))
-        id_blob = np.frombuffer(
-            pbwire.varint_array(fids.astype(np.uint64)), dtype=np.uint8
-        )
-        id_starts = np.cumsum(id_lens) - id_lens
-        msg_len = msg_len + 1 + id_lens
-    if tag_idx is not None:
-        tflat = tag_idx.reshape(-1)
-        tag_blob = np.frombuffer(pbwire.varint_array(tflat), dtype=np.uint8)
-        tlens_w = pbwire.varint_array_lengths(tflat).reshape(n, -1)
-        tlen = tlens_w.sum(axis=1)
-        tag_starts = np.cumsum(tlen) - tlen
-        tlen_hdr = pbwire.varint_array_lengths(tlen.astype(np.uint64))
-        msg_len = msg_len + 1 + tlen_hdr + tlen
-
-    # --- feature framing inside the layer: 0x12 + varint(msg_len) + msg
-    hdr_len = pbwire.varint_array_lengths(msg_len.astype(np.uint64))
-    feat_total = msg_len + 1 + hdr_len
-    feat_starts = np.cumsum(feat_total) - feat_total
-    out = np.empty(int(feat_total.sum()), dtype=np.uint8)  # fully covered below
-
-    # frame header: 0x12 then msg_len varint
-    out[feat_starts] = 0x12
-    hdr_blob = np.frombuffer(
-        pbwire.varint_array(msg_len.astype(np.uint64)), dtype=np.uint8
-    )
-    hdr_starts = np.cumsum(hdr_len) - hdr_len
-    _ragged_copy(out, feat_starts + 1, hdr_blob, hdr_starts, hdr_len)
-    cursor = feat_starts + 1 + hdr_len
-
-    if fids is not None:
-        out[cursor] = 0x08  # field 1, varint
-        _ragged_copy(out, cursor + 1, id_blob, id_starts, id_lens)
-        cursor = cursor + 1 + id_lens
-    if tag_idx is not None:
-        out[cursor] = 0x12  # field 2, LEN
-        thdr_blob = np.frombuffer(
-            pbwire.varint_array(tlen.astype(np.uint64)), dtype=np.uint8
-        )
-        thdr_starts = np.cumsum(tlen_hdr) - tlen_hdr
-        _ragged_copy(out, cursor + 1, thdr_blob, thdr_starts, tlen_hdr)
-        _ragged_copy(out, cursor + 1 + tlen_hdr, tag_blob, tag_starts, tlen)
-        cursor = cursor + 1 + tlen_hdr + tlen
-    # type: field 3 varint, POINT=1
-    out[cursor] = 0x18
-    out[cursor + 1] = 0x01
-    # geometry: field 4 LEN, 1-byte length
-    out[cursor + 2] = 0x22
-    out[cursor + 3] = glen.astype(np.uint8)
-    _ragged_copy(out, cursor + 4, geom_blob, geom_starts, glen)
-
-    # --- layer assembly (cheap, scalar parts)
-    parts = [pbwire.len_delimited(1, name.encode("utf-8")), out.tobytes()]
-    parts.extend(pbwire.len_delimited(3, k.encode("utf-8")) for k in keys)
-    parts.extend(pbwire.len_delimited(4, encode_value(vt, v)) for (vt, v) in values_list)
-    parts.append(pbwire.tag(5, pbwire.WT_VARINT) + pbwire.varint(int(extent)))
-    parts.append(pbwire.tag(15, pbwire.WT_VARINT) + pbwire.varint(VERSION))
-    return b"".join(parts)
-
-
 def encode_point_tile(
     name: str,
     extent: int,
@@ -213,9 +100,17 @@ def encode_point_tile(
     py,
     tag_columns=None,
 ) -> bytes:
-    """Single-layer point tile: Tile.layers framing around the layer."""
-    layer = encode_point_layer(name, extent, fids, px, py, tag_columns)
-    return pbwire.len_delimited(3, layer)
+    """Single-layer point tile for one tile's rows (fids unique and sorted,
+    or None for id-less features): the batched encoder with one group.
+    Zero features encode as the reference empty layer (no keys, no values)."""
+    n = len(px)
+    if n == 0:
+        return pbwire.len_delimited(
+            3, encode_layer(name, {"extent": extent, "features": []})
+        )
+    return encode_point_tiles_sorted(
+        np.array([n]), fids, px, py, tag_columns, name, extent
+    )[0]
 
 
 def encode_point_features_sorted(
@@ -323,7 +218,7 @@ def encode_point_features_sorted(
         vlen = np.zeros(n_tiles, dtype=np.int64)
         vstart = np.zeros(n_tiles, dtype=np.int64)
 
-    # --- per-row feature framing (batch-wide, same math as encode_point_layer)
+    # --- per-row feature framing (batch-wide)
     msg_len = glen + 4
     if fids is not None:
         fids = np.asarray(fids, dtype=np.int64)
@@ -398,9 +293,10 @@ def encode_point_tiles_sorted(
 
     Rows are pre-sorted by tile then feature_id; ``counts[i]`` is the number
     of rows of tile i. Returns one bytes object per tile, byte-identical to
-    encode_point_tile on each tile's slice (asserted in tests): the per-tile
-    first-seen tag dictionary is reproduced batch-wide via a grouped
-    first-occurrence ranking instead of per-tile factorize.
+    the generic tile.encode_layer on each tile's slice (asserted in
+    tests/test_fastpoints.py): the per-tile first-seen tag dictionary is
+    reproduced batch-wide via a grouped first-occurrence ranking instead of
+    per-tile factorize.
     """
     buf, tile_starts, tile_total = encode_point_tiles_sorted_raw(
         counts, fids, px, py, tag_columns, layer_name, extent

@@ -13,8 +13,14 @@ PIP = even-odd ray casting, decomposed as:
      (partial aggregation is map-side: Catalyst plans partial_sum before
      the shuffle, so the z0-style skew never concentrates).
 
-kNN = broadcast centers cross join + two-level deterministic top-k
-(ties broken by poly_id; SURVEY B9).
+kNN = exact top-k in (dist2, poly_id) order (SURVEY B9) from one 3x3
+cell-neighbor level whose in-ball top-k is provable, plus an exact pass
+for the pages it cannot prove:
+  - knn_join broadcasts per-cell candidate arrays and sends the residue
+    to the map-only numpy kernel (knn_join_numpy);
+  - knn_join_partitioned shuffle-joins on (cell, salt) and sends the
+    residue to the cell-bound terminal (_knn_cell_bound_terminal);
+  - knn_join_auto picks one of the two by center count.
 """
 
 from __future__ import annotations
@@ -559,33 +565,12 @@ def _topk(paired: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _topk_two_phase(paired: DataFrame, k: int, n_chunks: int = 32) -> DataFrame:
-    """Top-k over a pairing whose per-url group may be huge (e.g. the
-    residue x full-center-table exact join): phase 1 takes a local top-k
-    within (url, center-hash chunk) — bounding any single window task to
-    ~|centers|/n_chunks rows — phase 2 merges the n_chunks*k survivors per
-    url. Identical output to _topk (row_number over the same total order)."""
-    d = _with_dist2(paired).withColumn(
-        "_chunk", F.pmod(F.xxhash64("poly_id"), F.lit(n_chunks))
-    )
-    w1 = Window.partitionBy("url", "_chunk").orderBy("dist2", "poly_id")
-    local = (
-        d.withColumn("_r1", F.row_number().over(w1))
-        .filter(F.col("_r1") <= k)
-        .drop("_r1", "_chunk")
-    )
-    w2 = Window.partitionBy("url").orderBy("dist2", "poly_id")
-    return local.withColumn("rank", F.row_number().over(w2)).filter(
-        F.col("rank") <= k
-    )
-
-
 def _attach_persists(out: DataFrame, frames) -> DataFrame:
     """Tag a cascade output with the intermediates it persisted so the
     caller can free them (free_persisted) once its terminal action has
     materialized the result. The persists are load-bearing WITHIN one
-    action (each level's `good` feeds both the union output and the next
-    level's anti-join, and Spark does not dedup common subplans), but
+    action (the cell level's split feeds both the resolved union branch
+    and the residue, and Spark does not dedup common subplans), but
     their lifetime is the QUERY — in a long-lived session repeated kNN
     calls would otherwise accumulate block-manager storage."""
     out._graft_persists = list(frames)
@@ -656,7 +641,6 @@ def knn_join(
     centers: DataFrame,
     k: int = 3,
     cell_deg: float | None = None,
-    level_mults: tuple[float, ...] = (1.0,),
     n_centers: int | None = None,
 ) -> DataFrame:
     """Exact kNN, scale path (B9): cell-neighbor candidate expansion.
@@ -684,56 +668,47 @@ def knn_join(
         if n_centers is None:
             n_centers = centers.count()  # dimension side: tiny, driver-known
         cell_deg = min(KNN_CELL_DEG, max(2.0, (129900.0 / max(n_centers, 1)) ** 0.5))
-    pages = geotagged.select("url", "lat", "lon")
-    frames = []
-    resolved = []
-    remaining = pages
-    for w in (m * cell_deg for m in level_mults):
-        if w >= 120.0:
-            break
-        cell = f"cast(floor(%s / {w}) as bigint)"
-        pages_c = remaining.withColumn("cx", F.expr(cell % "lon")).withColumn(
-            "cy", F.expr(cell % "lat")
+    w = cell_deg
+    cell = f"cast(floor(%s / {w}) as bigint)"
+    pages_c = (
+        geotagged.select("url", "lat", "lon")
+        .withColumn("cx", F.expr(cell % "lon"))
+        .withColumn("cy", F.expr(cell % "lat"))
+    )
+    cell_arr = (
+        centers.withColumn("di", F.explode(F.sequence(F.lit(-1), F.lit(1))))
+        .withColumn("dj", F.explode(F.sequence(F.lit(-1), F.lit(1))))
+        .selectExpr(
+            "poly_id",
+            "clon",
+            "clat",
+            f"{cell % 'clon'} + di as cx",
+            f"{cell % 'clat'} + dj as cy",
         )
-        cell_arr = (
-            centers.withColumn("di", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-            .withColumn("dj", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-            .selectExpr(
-                "poly_id",
-                "clon",
-                "clat",
-                f"{cell % 'clon'} + di as cx",
-                f"{cell % 'clat'} + dj as cy",
-            )
-            .groupBy("cx", "cy")
-            .agg(
-                F.collect_list(F.struct("poly_id", "clon", "clat")).alias(
-                    "_cands"
-                )
-            )
+        .groupBy("cx", "cy")
+        .agg(
+            F.collect_list(F.struct("poly_id", "clon", "clat")).alias("_cands")
         )
-        # collect_list order is nondeterministic, but every consumer sorts
-        # (array_sort by (dist2, poly_id) — a total order, poly_id unique),
-        # so the output is order-invariant. LEFT join: a page over an empty
-        # cell keeps a null array -> _cnt 0 -> residue.
-        split = (
-            pages_c.join(F.broadcast(cell_arr), ["cx", "cy"], "left")
-            .select("url", "lat", "lon", _knn_topk_col(k, repr(w * w)))
-            # referenced twice (good + remaining); <= k structs/page. The
-            # caller frees via free_persisted after its terminal action.
-            # The verify gate reads size() off the PERSISTED array, so the
-            # HOF chain runs once per page during materialization.
-            .persist()
-        )
-        frames.append(split)
-        resolved.append(_explode_topk(split.filter(F.size("_topk") >= k)))
-        remaining = split.filter(
-            F.coalesce(F.size("_topk"), F.lit(0)) < k
-        ).select("url", "lat", "lon")
-    out = knn_join_numpy(remaining, centers, k)
-    for good in resolved:
-        out = out.unionByName(good)
-    return _attach_persists(out, frames)
+    )
+    # collect_list order is nondeterministic, but every consumer sorts
+    # (array_sort by (dist2, poly_id) — a total order, poly_id unique),
+    # so the output is order-invariant. LEFT join: a page over an empty
+    # cell keeps a null array -> _cnt 0 -> residue.
+    split = (
+        pages_c.join(F.broadcast(cell_arr), ["cx", "cy"], "left")
+        .select("url", "lat", "lon", _knn_topk_col(k, repr(w * w)))
+        # referenced twice (good + remaining); <= k structs/page. The
+        # caller frees via free_persisted after its terminal action.
+        # The verify gate reads size() off the PERSISTED array, so the
+        # HOF chain runs once per page during materialization.
+        .persist()
+    )
+    good = _explode_topk(split.filter(F.size("_topk") >= k))
+    remaining = split.filter(
+        F.coalesce(F.size("_topk"), F.lit(0)) < k
+    ).select("url", "lat", "lon")
+    out = knn_join_numpy(remaining, centers, k).unionByName(good)
+    return _attach_persists(out, [split])
 
 
 def knn_oracle_sql(with_ctes: str, k: int = 3) -> str:
@@ -828,27 +803,6 @@ def knn_join_numpy(
     )
 
 
-def _ring_offsets(w: float, c: float) -> list[tuple[int, int]]:
-    """Fine-cell (dx, dy) offsets a center must replicate into so that
-    every center within distance ``w`` of ANY point of a page's cell is
-    joined: offset cell g is kept iff its min distance to the page cell f
-    is <= w (adjacent cells touch, so the per-axis gap is
-    max(|d| - 1, 0) * c). As c shrinks the kept set approaches the pi*w^2
-    ball; the excluded corners are exactly where a coarse 3x3 neighborhood
-    (a (3w)^2 block) wastes candidate pairs."""
-    import math
-
-    r = int(math.ceil(w / c)) + 1
-    out = []
-    for dx in range(-r, r + 1):
-        ax = max(abs(dx) - 1, 0) * c
-        for dy in range(-r, r + 1):
-            ay = max(abs(dy) - 1, 0) * c
-            if ax * ax + ay * ay <= w * w:
-                out.append((dx, dy))
-    return out
-
-
 def _knn_cell_bound_terminal(
     remaining: DataFrame,
     centers: DataFrame,
@@ -883,7 +837,8 @@ def _knn_cell_bound_terminal(
     to the worst page's radius: measured 594M pairs vs ~60M adaptive on the
     50k-center bench geometry). One shuffle-hash join keyed on the page
     cell + salt; the per-url top-k windows reuse its partitioning, so the
-    candidate pairs never cross the wire (same argument as run_level).
+    candidate pairs never cross the wire (same argument as the cell level
+    of knn_join_partitioned).
     Always resolves every page (no residue, no driver-side loop): when the
     center table has < k rows, R2 is +inf and all centers rank.
     """
@@ -1000,7 +955,7 @@ def _knn_cell_bound_terminal(
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
     )
     # NOTE (r7): the broadcast knn_join moved to per-cell candidate ARRAYS,
-    # but this terminal (and the partitioned levels) keeps the window form:
+    # but this terminal (and the partitioned cell level) keeps the window form:
     # the pairs are already co-partitioned by the shuffle-hash join, so the
     # top-k is a codegen'd LOCAL sort with no exchange, and replacing it
     # with interpreted array kernels measured ~25% SLOWER at the 50k-center
@@ -1025,7 +980,6 @@ def knn_join_partitioned(
     centers: DataFrame,
     k: int = 3,
     cell_deg: float | None = None,
-    level_mults: tuple[float, ...] = (1.0,),
     n_salt: int = 4,
     n_centers: int | None = None,
 ) -> DataFrame:
@@ -1047,12 +1001,9 @@ def knn_join_partitioned(
       proves the child partitioning satisfies them, so the pairs are
       sorted in place, never exchanged;
     - provability pre-filter: only centers within w can appear in a
-      provable top-k, so dist2 <= w^2 drops the rest before the sort;
-    - optional coarse levels (level_mults entries > 1) use ring-pruned
-      fine cells (c = w/8) covering the ~pi*w^2 ball instead of the
-      (3w)^2 block.
+      provable top-k, so dist2 <= w^2 drops the rest before the sort.
 
-    Everything the fine level(s) cannot prove goes to the cell-bound
+    Everything the cell level cannot prove goes to the cell-bound
     terminal (_knn_cell_bound_terminal): per-page-cell ADAPTIVE radii from
     cell-to-cell distance bounds, so the terminal's candidate volume is
     the sum of per-cell balls sized by the actual k-th-neighbor distance —
@@ -1065,113 +1016,81 @@ def knn_join_partitioned(
         n_centers = centers.count()  # table-stats surrogate (see pip_join_auto)
     if cell_deg is None:
         cell_deg = min(KNN_CELL_DEG, max(2.0, (129900.0 / max(n_centers, 1)) ** 0.5))
-    pages = geotagged.select("url", "lat", "lon")
-    frames = []
-    resolved = []
-    remaining = pages
-
-    def run_level(remaining, w):
-        # At coarse widths the grid goes FINER than the proof radius: with
-        # c == w the 3x3 neighborhood examines a (3w)^2 block while
-        # provability only needs the w-ball (pi*w^2) — at the terminal
-        # (out-of-band / polar) widths that is ~2-3x more candidate pairs
-        # than necessary, and pair production is the cascade's dominant
-        # cost. Fine cells (c = w/8) + ring-pruned offsets join only the
-        # cells whose min distance to the page's cell is <= w; the
-        # center-side explode grows to |offsets| rows per center, but that
-        # stays in the millions where the pair production it avoids is in
-        # the billions. Fine cells also spread hot coarse cells, so the
-        # salt replication is redundant there.
-        if w >= 4.0 * cell_deg:
-            c = max(cell_deg, w / 8.0)
-            offsets = _ring_offsets(w, c)
-            salt = 1
-        else:
-            c = w
-            offsets = [(di, dj) for di in (-1, 0, 1) for dj in (-1, 0, 1)]
-            salt = n_salt
-        cell = f"cast(floor(%s / {c}) as bigint)"
-        pages_c = (
-            remaining.withColumn("cx", F.expr(cell % "lon"))
-            .withColumn("cy", F.expr(cell % "lat"))
-            .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(salt)))
-        )
-        off = F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-                    for di, dj in offsets
-                ]
-            )
-        )
-        neigh = (
-            centers.withColumn("o", off)
-            .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(salt - 1))))
-            .selectExpr(
-                "poly_id",
-                "clon",
-                "clat",
-                "_salt as nsalt",
-                f"{cell % 'clon'} + o.di as ncx",
-                f"{cell % 'clat'} + o.dj as ncy",
-            )
-        )
-        # LEFT OUTER join with the w-ball predicate INSIDE the join
-        # condition — same restructure as knn_join: every page emerges
-        # with its in-ball candidates or one null row, so pass/fail
-        # routing is a filter on the window output instead of a url-keyed
-        # anti-join re-shuffling the whole page table per level. The
-        # shuffle_hash hint pins the join whose output partitioning is
-        # HashPartitioning(cx, cy, _salt): the windows below reuse it, so
-        # the candidate pairs (the cascade's dominant data volume) never
-        # cross the wire — the top-k is a within-partition sort. (A
-        # broadcast of the page side would leave the stream partitioned
-        # by the center scan instead, forcing that exchange.) In-ball in
-        # the join condition is also the provability pre-filter: only
-        # centers within w can appear in a provable top-k.
-        dist2_e = (
-            "((lon - clon) * (lon - clon) + (lat - clat) * (lat - clat))"
-        )
-        cond = F.expr(
-            f"cx = ncx AND cy = ncy AND _salt = nsalt AND {dist2_e} <= {w * w!r}"
-        )
-        cand = pages_c.join(neigh.hint("shuffle_hash"), cond, "left")
-        cand = cand.withColumn("dist2", F.expr(dist2_e))  # null <=> no match
-        # a url carries exactly ONE (cx, cy, _salt) key; windowing by the
-        # join keys + url lets Catalyst prove the join's partitioning
-        # satisfies the clustered distribution -> no extra exchange.
-        wk = Window.partitionBy("cx", "cy", "_salt", "url").orderBy(
-            "dist2", "poly_id"
-        )
-        wu = Window.partitionBy("cx", "cy", "_salt", "url")
-        split = (
-            cand.withColumn("rank", F.row_number().over(wk))
-            .withColumn("_cnt", F.count("poly_id").over(wu))
-            .filter(F.col("rank") <= k)
-            .select("url", "lat", "lon", "poly_id", "dist2", "rank", "_cnt")
-            .persist()
-        )
-        frames.append(split)
-        resolved.append(
-            split.filter(F.col("_cnt") >= k).select(
-                "url", "poly_id", "dist2", "rank"
-            )
-        )
-        return split.filter(
-            (F.col("_cnt") < k) & (F.col("rank") == 1)
-        ).select("url", "lat", "lon")
-
     w = cell_deg
-    for m in level_mults:
-        w = m * cell_deg
-        if w >= 120.0:
-            break
-        remaining = run_level(remaining, w)
+    cell = f"cast(floor(%s / {w}) as bigint)"
+    pages_c = (
+        geotagged.select("url", "lat", "lon")
+        .withColumn("cx", F.expr(cell % "lon"))
+        .withColumn("cy", F.expr(cell % "lat"))
+        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)))
+    )
+    off = F.explode(
+        F.array(
+            *[
+                F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
+                for di in (-1, 0, 1)
+                for dj in (-1, 0, 1)
+            ]
+        )
+    )
+    neigh = (
+        centers.withColumn("o", off)
+        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        .selectExpr(
+            "poly_id",
+            "clon",
+            "clat",
+            "_salt as nsalt",
+            f"{cell % 'clon'} + o.di as ncx",
+            f"{cell % 'clat'} + o.dj as ncy",
+        )
+    )
+    # LEFT OUTER join with the w-ball predicate INSIDE the join
+    # condition — same restructure as knn_join: every page emerges
+    # with its in-ball candidates or one null row, so pass/fail
+    # routing is a filter on the window output instead of a url-keyed
+    # anti-join re-shuffling the whole page table. The
+    # shuffle_hash hint pins the join whose output partitioning is
+    # HashPartitioning(cx, cy, _salt): the windows below reuse it, so
+    # the candidate pairs (the cascade's dominant data volume) never
+    # cross the wire — the top-k is a within-partition sort. (A
+    # broadcast of the page side would leave the stream partitioned
+    # by the center scan instead, forcing that exchange.) In-ball in
+    # the join condition is also the provability pre-filter: only
+    # centers within w can appear in a provable top-k.
+    dist2_e = (
+        "((lon - clon) * (lon - clon) + (lat - clat) * (lat - clat))"
+    )
+    cond = F.expr(
+        f"cx = ncx AND cy = ncy AND _salt = nsalt AND {dist2_e} <= {w * w!r}"
+    )
+    cand = pages_c.join(neigh.hint("shuffle_hash"), cond, "left")
+    cand = cand.withColumn("dist2", F.expr(dist2_e))  # null <=> no match
+    # a url carries exactly ONE (cx, cy, _salt) key; windowing by the
+    # join keys + url lets Catalyst prove the join's partitioning
+    # satisfies the clustered distribution -> no extra exchange.
+    wk = Window.partitionBy("cx", "cy", "_salt", "url").orderBy(
+        "dist2", "poly_id"
+    )
+    wu = Window.partitionBy("cx", "cy", "_salt", "url")
+    split = (
+        cand.withColumn("rank", F.row_number().over(wk))
+        .withColumn("_cnt", F.count("poly_id").over(wu))
+        .filter(F.col("rank") <= k)
+        .select("url", "lat", "lon", "poly_id", "dist2", "rank", "_cnt")
+        .persist()
+    )
+    good = split.filter(F.col("_cnt") >= k).select(
+        "url", "poly_id", "dist2", "rank"
+    )
+    remaining = split.filter(
+        (F.col("_cnt") < k) & (F.col("rank") == 1)
+    ).select("url", "lat", "lon")
 
     # terminal: the cell-bound exact join resolves every unresolved page in
     # one pass with per-cell adaptive radii — no residue count, no widening
     # loop, no cartesian fallback, and the plan stays fully lazy. The bound
-    # grid is coarser than the fine level (its pcells x ccells bound table
+    # grid is coarser than the cell level (its pcells x ccells bound table
     # must stay metadata-sized even for plane-covering page sets).
     #
     # r7 width calibration (guide §1/§2): the residue is the SPARSE page
@@ -1194,9 +1113,7 @@ def knn_join_partitioned(
         min(6.0, (1_800_000.0 / max(n_centers, 1)) ** 0.5),
     )
     out = _knn_cell_bound_terminal(remaining, centers, k, term_c, n_salt)
-    for good in resolved:
-        out = out.unionByName(good)
-    return _attach_persists(out, frames)
+    return _attach_persists(out.unionByName(good), [split])
 
 
 def knn_join_auto(

@@ -14,7 +14,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from . import fixtures, index, joins, multipart, polyoracle, polytiler, tilemerge, tiler
+from . import fixtures, index, joins, multipart, polyoracle, polytiler, tiler
 
 
 def _geotagged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -256,8 +256,9 @@ def q_knn_numpy(spark, sf_dir):
 
 
 def q_knn_partitioned(spark, sf_dir):
-    """B9 scale path: shuffle-both-sides kNN cascade + cross-join residue
-    (no broadcast, no driver collect). Same oracle as knn_3."""
+    """B9 scale path: shuffle-both-sides kNN cell level + cell-bound
+    terminal for the residue (no broadcast, no driver collect). Same
+    oracle as knn_3."""
     return joins.knn_join_partitioned(
         _geotagged(spark, sf_dir), fixtures.polygon_centers_df(spark, sf_dir), k=3
     )
@@ -375,7 +376,7 @@ def q_mvt_verify_sql(sf_dir):
 def q_mvt_combined(spark, sf_dir):
     """B14 layer-merge: the point layer and the polygon/outline layers are
     encoded as INDEPENDENT streams, then merged into ONE multi-layer tile
-    per (z,x,y) by wire-level layer splicing (engine.pipeline.tilemerge) —
+    per (z,x,y) by tiler.merge_partial_tiles (wire-level layer splicing) —
     the partial-encode -> final-merge path MVT's concatenable layer framing
     allows. The point stream uses the SALTED encoder (the z0-z3 mega-tiles
     hold every page; unsalted, z0 lands on one task), whose vectorized

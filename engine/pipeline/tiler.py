@@ -28,9 +28,9 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.mvtcodec import fastpoints, pbwire
+from engine.mvtcodec import fastmerge, fastpoints, pbwire
 
-from . import index
+from . import index, tilemerge
 
 EXTENT = 4096
 MAX_ZOOM = 25  # gid packs x and y into 26-bit fields
@@ -602,10 +602,6 @@ def merge_partial_tiles(
     messages and wire-splice in (same-name collisions fall back to the
     generic re-framer). Layers sort by name; bytes equal a single-pass
     multi-layer encode."""
-    from engine.mvtcodec import fastmerge
-
-    from . import tilemerge
-
     tag_cols = tuple(tag_cols)
     t = len(tag_cols)
     keys_blob = b"".join(

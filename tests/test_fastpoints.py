@@ -44,12 +44,12 @@ def test_fastpoints_matches_generic(with_ids, with_tags):
         if with_tags
         else {}
     )
-    fast = fastpoints.encode_point_layer("pages", 4096, fids, px, py, tag_columns)
+    fast = fastpoints.encode_point_tile("pages", 4096, fids, px, py, tag_columns)
     slow = _generic_layer("pages", 4096, fids, px, py, tag_columns)
-    assert fast == slow
+    assert fast == pbwire.len_delimited(3, slow)
 
     # and it decodes cleanly with all invariants intact
-    tile = mc.decode_tile(pbwire.len_delimited(3, fast))
+    tile = mc.decode_tile(fast)
     layer = tile["pages"]
     assert layer["version"] == 2 and layer["extent"] == 4096
     assert len(layer["features"]) == n
@@ -61,9 +61,17 @@ def test_fastpoints_matches_generic(with_ids, with_tags):
 
 
 def test_fastpoints_empty_layer():
-    fast = fastpoints.encode_point_layer("empty", 4096, None, np.array([]), np.array([]))
-    slow = _generic_layer("empty", 4096, None, np.array([]), np.array([]), {})
-    assert fast == slow
+    empty = np.array([], dtype=np.int64)
+    tagged = {
+        "lang": ("string", np.array([], dtype=object)),
+        "rank": ("int", empty),
+    }
+    for fids, tag_columns in ((None, {}), (empty, tagged)):
+        fast = fastpoints.encode_point_tile(
+            "empty", 4096, fids, empty, empty, tag_columns
+        )
+        slow = _generic_layer("empty", 4096, fids, empty, empty, tag_columns)
+        assert fast == pbwire.len_delimited(3, slow)
 
 
 def test_fastpoints_throughput_sanity():
@@ -77,9 +85,9 @@ def test_fastpoints_throughput_sanity():
     fids = np.arange(n, dtype=np.int64)
     langs = rng.choice(["en", "de", "fr", "es", "pt", "zh"], n).astype(object)
     args = ("pages", 4096, fids, px, py, {"lang": ("string", langs)})
-    fastpoints.encode_point_layer(*args)  # warm numpy/pandas code paths
+    fastpoints.encode_point_tile(*args)  # warm numpy/pandas code paths
     t0 = time.perf_counter()
-    data = fastpoints.encode_point_layer(*args)
+    data = fastpoints.encode_point_tile(*args)
     dt = time.perf_counter() - t0
     assert len(data) > n * 5
     assert dt < 1.0, f"fast path too slow: {dt:.2f}s for {n} features"

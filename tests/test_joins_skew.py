@@ -163,19 +163,6 @@ def test_knn_partitioned_far_cluster_exact(spark):
     assert _rows(got) == want
 
 
-def test_knn_partitioned_coarse_levels_exact(spark):
-    """The optional ring-pruned coarse levels (level_mults > 1) still
-    compose with the cell-bound terminal to an exact result."""
-    pages, centers = _polar_cluster(spark, n_pages=200)
-    want = _rows(joins.knn_bruteforce(pages, centers, k=3))
-    got = _rows(
-        joins.knn_join_partitioned(
-            pages, centers, k=3, cell_deg=2.0, level_mults=(1.0, 4.0, 16.0)
-        )
-    )
-    assert got == want
-
-
 def test_knn_partitioned_k_exceeds_centers(spark):
     """k larger than the center table: the terminal's R2 becomes +inf and
     every center ranks — same contract as brute force."""
@@ -190,18 +177,6 @@ def test_knn_partitioned_k_exceeds_centers(spark):
     want = _rows(joins.knn_bruteforce(pages, centers, k=5))
     got = _rows(joins.knn_join_partitioned(pages, centers, k=5, cell_deg=2.0))
     assert got == want
-
-
-def test_topk_two_phase_equals_topk(spark):
-    pages, centers = _polar_cluster(spark, n_pages=100)
-    paired = pages.crossJoin(centers)
-    a = _rows(joins._topk(paired, 3).select("url", "poly_id", "dist2", "rank"))
-    b = _rows(
-        joins._topk_two_phase(paired, 3, n_chunks=5).select(
-            "url", "poly_id", "dist2", "rank"
-        )
-    )
-    assert a == b and len(a) == 300
 
 
 def _cached_rdd_ids(spark):

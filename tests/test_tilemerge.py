@@ -1,11 +1,14 @@
-"""B14 partial-encode + layer-merge: wire-level layer splicing, same-name
-feature re-framing, and salted == unsalted byte identity."""
+"""The tile merge (tiler.merge_partial_tiles) and its layer helpers:
+wire-level layer splicing, same-name re-framing through tilemerge's
+generic re-framer, fastmerge's partial re-framing as a property against
+the reference encoder, and salted == unsalted byte identity."""
 
 from __future__ import annotations
 
 import numpy as np
+from hypothesis import given, settings, strategies as st
 
-from engine.mvtcodec import geomstream, tile as tilemod
+from engine.mvtcodec import fastmerge, fastpoints, geomstream, tile as tilemod
 from engine.pipeline import fixtures, index, tilemerge, tiler
 
 from .conftest import SF_DIR
@@ -20,18 +23,29 @@ def _feat(fid, xy, tag):
     }
 
 
-def test_merge_distinct_layers_equals_single_encode():
+def _merged_tile(spark, blobs):
+    """Pre-encoded tiles for ONE (z,x,y) through the tile merge."""
+    rows = [(0, 0, 0, bytearray(b), 1) for b in blobs]
+    tiles = spark.createDataFrame(
+        rows, "z int, x bigint, y bigint, mvt binary, n_features long"
+    )
+    out = tiler.merge_partial_tiles(tiler.tiles_as_partial_rows(tiles)).collect()
+    assert len(out) == 1
+    return bytes(out[0].mvt)
+
+
+def test_merge_distinct_layers_equals_single_encode(spark):
     la = {"extent": 4096, "features": [_feat(1, (3, 4), "a")]}
     lb = {"extent": 4096, "features": [_feat(2, (5, 6), "b")]}
     lc = {"extent": 4096, "features": [_feat(3, (7, 8), "c")]}
     partial1 = tilemod.encode_tile({"pages": la, "zeta": lc})
     partial2 = tilemod.encode_tile({"outlines": lb})
-    merged = tilemerge.merge_tile_blobs([partial1, partial2])
+    merged = _merged_tile(spark, [partial1, partial2])
     want = tilemod.encode_tile({"pages": la, "outlines": lb, "zeta": lc})
     assert merged == want  # byte-identical, layers re-sorted by name
 
 
-def test_merge_same_layer_refames_features():
+def test_merge_same_layer_refames_features(spark):
     feats = [_feat(i, (i, i + 1), f"t{i % 3}") for i in range(10)]
     want = tilemod.encode_tile({"pages": {"extent": 4096, "features": feats}})
     p1 = tilemod.encode_tile(
@@ -40,11 +54,11 @@ def test_merge_same_layer_refames_features():
     p2 = tilemod.encode_tile(
         {"pages": {"extent": 4096, "features": [feats[i] for i in (1, 2, 4, 6, 7, 8)]}}
     )
-    assert tilemerge.merge_tile_blobs([p1, p2]) == want
-    assert tilemerge.merge_tile_blobs([p2, p1]) == want  # order-invariant
+    assert _merged_tile(spark, [p1, p2]) == want
+    assert _merged_tile(spark, [p2, p1]) == want  # order-invariant
 
 
-def test_split_tile_layers_roundtrip():
+def test_split_tile_layers_roundtrip(spark):
     data = tilemod.encode_tile(
         {
             "aa": {"extent": 4096, "features": [_feat(1, (0, 0), "x")]},
@@ -53,7 +67,7 @@ def test_split_tile_layers_roundtrip():
     )
     parts = tilemerge.split_tile_layers(data)
     assert [n for n, _ in parts] == ["aa", "bb"]
-    assert tilemerge.merge_tile_blobs([data]) == data
+    assert _merged_tile(spark, [data]) == data
 
 
 def test_salted_encode_byte_identical(spark):
@@ -115,41 +129,7 @@ def test_combined_tiles_decode(spark):
     assert (pdf["n_layers"] >= 2).any()  # some tile carries both streams
 
 
-def test_same_name_merge_uses_fastmerge_path(monkeypatch):
-    """Engine-canonical same-name partials must merge through the
-    whole-array re-framer — the per-feature decode/re-encode fallback
-    (_merge_layer) must not run."""
-    feats = [_feat(i, (i, i + 1), f"t{i % 3}") for i in range(10)]
-    want = tilemod.encode_tile({"pages": {"extent": 4096, "features": feats}})
-    p1 = tilemod.encode_tile(
-        {"pages": {"extent": 4096, "features": [feats[i] for i in (0, 3, 5, 9)]}}
-    )
-    p2 = tilemod.encode_tile(
-        {"pages": {"extent": 4096, "features": [feats[i] for i in (1, 2, 4, 6, 7, 8)]}}
-    )
-
-    def boom(name, msgs):
-        raise AssertionError("per-feature fallback reached for canonical input")
-
-    monkeypatch.setattr(tilemerge, "_merge_layer", boom)
-    assert tilemerge.merge_tile_blobs([p1, p2]) == want
-
-
-def test_same_name_merge_fast_equals_legacy():
-    feats = [_feat(i, (2 * i, i), f"v{i % 4}") for i in range(25)]
-    p1 = tilemod.encode_tile(
-        {"l": {"extent": 4096, "features": feats[::2]}}
-    )
-    p2 = tilemod.encode_tile(
-        {"l": {"extent": 4096, "features": feats[1::2]}}
-    )
-    msgs = [m for _, m in tilemerge.split_tile_layers(p1) + tilemerge.split_tile_layers(p2)]
-    fast = tilemerge._merge_layer_fast("l", msgs)
-    assert fast is not None
-    assert fast == tilemerge._merge_layer("l", msgs)
-
-
-def test_idless_features_fall_back_to_legacy():
+def test_idless_features_fall_back_to_legacy(spark):
     """Features without ids are outside fastmerge's canon — the generic
     decode/re-encode merge must still handle them."""
     fa = {
@@ -161,8 +141,96 @@ def test_idless_features_fall_back_to_legacy():
     fb = dict(fa, tags=[("k", ("string", "b"))])
     p1 = tilemod.encode_tile({"l": {"extent": 4096, "features": [fa]}})
     p2 = tilemod.encode_tile({"l": {"extent": 4096, "features": [fb]}})
-    msgs = [m for _, m in tilemerge.split_tile_layers(p1) + tilemerge.split_tile_layers(p2)]
-    assert tilemerge._layer_to_partial(msgs[0]) is None
-    merged = tilemerge.merge_tile_blobs([p1, p2])
+    merged = _merged_tile(spark, [p1, p2])
     layers = tilemod.decode_tile(merged)
     assert len(layers["l"]["features"]) == 2
+
+
+# tag columns the property test draws from: one column per value type, with
+# the string "1", the int 1 and the double 1.0 all in play so the merged
+# dictionary must keep equal-looking values of different types apart
+_TAG_VALUES = {
+    "s": ("string", st.sampled_from(["1", "a", "", "é", "en"])),
+    "i": ("int", st.sampled_from([1, 0, -1, 2**40]) | st.integers(-5, 5)),
+    "d": ("double", st.sampled_from([1.0, 0.5, -2.25, 1e300])),
+}
+_DTYPES = {"string": object, "int": np.int64, "double": np.float64}
+
+
+@st.composite
+def _point_partials(draw):
+    """Random point features with unique ids, split into 1-4 non-empty
+    partials (each sorted by id, as the partial encode emits them) in
+    random order."""
+    keys = draw(st.permutations(list(_TAG_VALUES)))[: draw(st.integers(0, 3))]
+    fids = draw(st.lists(st.integers(0, 2**62), min_size=1, max_size=40, unique=True))
+    coord = st.integers(-64, 4160)
+    feats = [
+        {
+            "id": fid,
+            "xy": (draw(coord), draw(coord)),
+            "tags": [(k, (_TAG_VALUES[k][0], draw(_TAG_VALUES[k][1]))) for k in keys],
+        }
+        for fid in fids
+    ]
+    n_parts = draw(st.integers(1, 4))
+    owner = [draw(st.integers(0, n_parts - 1)) for _ in feats]
+    parts = [
+        sorted((f for f, o in zip(feats, owner) if o == p), key=lambda f: f["id"])
+        for p in range(n_parts)
+    ]
+    parts = draw(st.permutations([p for p in parts if p]))
+    return keys, feats, parts
+
+
+def _encode_partial(keys, feats):
+    """One partial as merge_partial_tiles hands it to fastmerge."""
+    fids = np.array([f["id"] for f in feats], dtype=np.int64)
+    xy = np.array([f["xy"] for f in feats], dtype=np.int64)
+    tag_columns = {}
+    for k in keys:
+        vtype = _TAG_VALUES[k][0]
+        values = [dict(f["tags"])[k][1] for f in feats]
+        tag_columns[k] = (vtype, np.array(values, dtype=_DTYPES[vtype]))
+    fb = fastpoints.encode_point_features_sorted(
+        np.array([len(feats)]), fids, xy[:, 0], xy[:, 1], tag_columns
+    )
+    partial = {
+        "fids": fids,
+        "block": fb["block"],
+        "feat_len": fb["feat_len"],
+        "glen": fb["glen"],
+        "vcode": fb["vcode"],
+        "dict_blob": fb["vblob"],
+        "dict_lens": fb["entry_lens"],
+    }
+    return partial, fb["keys_blob"]
+
+
+@settings(max_examples=300, deadline=None)
+@given(_point_partials())
+def test_merge_point_partials_equals_reference_encode(case):
+    """Any split of a tile's features into partials, merged in any order,
+    is byte-identical to the reference encoder over the features sorted
+    by id."""
+    keys, feats, parts = case
+    encoded = [_encode_partial(keys, p) for p in parts]
+    merged = fastmerge.merge_point_partials(
+        [p for p, _ in encoded], "pages", encoded[0][1], 4096
+    )
+    want = tilemod.encode_layer(
+        "pages",
+        {
+            "extent": 4096,
+            "features": [
+                {
+                    "id": f["id"],
+                    "geom_type": geomstream.GEOM_POINT,
+                    "geometry": geomstream.encode_point(f["xy"]),
+                    "tags": f["tags"],
+                }
+                for f in sorted(feats, key=lambda f: f["id"])
+            ],
+        },
+    )
+    assert merged == want
