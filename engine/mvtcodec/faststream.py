@@ -197,28 +197,3 @@ def encode_tagged_layers(
         )
     return layers
 
-
-def encode_tag1_layers(
-    layer_name: str,
-    extent: int,
-    tile_ids: np.ndarray,
-    fids: np.ndarray,
-    geom_type: int,
-    words: np.ndarray,
-    woff: np.ndarray,
-    tag_key: str,
-    tag_values,
-) -> dict[int, bytes]:
-    """Single string-tag convenience wrapper over encode_tagged_layers
-    (kept for the polygon/outline tilers; duplicate values per tile are
-    handled by the general first-seen dictionary)."""
-    return encode_tagged_layers(
-        layer_name,
-        extent,
-        tile_ids,
-        fids,
-        geom_type,
-        words,
-        woff,
-        {tag_key: ("string", np.asarray(tag_values, dtype=object))},
-    )

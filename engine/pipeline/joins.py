@@ -317,16 +317,16 @@ def broadcast_center_limit(spark) -> int:
 # a polygon with this many edges concentrates its candidates x edges join
 # rows on one reducer; past it the edge join salts that polygon selectively
 EDGE_SALT_EDGES_PER_POLY = 10_000
+# replicas of the dimension side in the salted (partitioned) joins: a hot
+# key spreads over N_SALT reducers at N_SALT x that side's shuffle bytes
+N_SALT = 4
 
 
 def pip_join_partitioned(
     geotagged: DataFrame,
     edges: DataFrame,
     grid_deg: float | None = None,
-    n_salt: int = 4,
-    salt_edges: bool | None = None,
     max_edges_per_poly: int | None = None,
-    edge_salt_threshold: int = EDGE_SALT_EDGES_PER_POLY,
 ) -> DataFrame:
     """PIP join, shuffle-both-sides path: for polygon tables too large to
     broadcast (a country-scale OSM table: 10^7 polygons x 10^2 vertices).
@@ -334,23 +334,23 @@ def pip_join_partitioned(
     Same decomposition as pip_join — grid-cell candidate equi-join, bbox
     filter, edge join, crossing-parity aggregate — but the joins are
     SHUFFLE hash joins: the polygon side is pre-exploded to its grid cells
-    and SALTED (replicated n_salt ways), pages pick one salt by url hash,
+    and SALTED (replicated N_SALT ways), pages pick one salt by url hash,
     so a hot cell (urban polygon cluster under a page-dense area) spreads
-    over n_salt reducers instead of one. Salting replicates the polygon
-    side's shuffle bytes x n_salt, so the factor stays small; AQE
+    over N_SALT reducers instead of one. Salting replicates the polygon
+    side's shuffle bytes x N_SALT, so the factor stays small; AQE
     skew-join is the backstop for residual imbalance.
 
     The candidates-x-edges join on poly_id is skew-guarded too: a
     MEGA-polygon (10^4+ edges — a country polygon in OSM — under a
     page-dense area) would concentrate candidates x edges rows on one
-    reducer. ``salt_edges=None`` (default) auto-detects from the per-poly
-    edge-count maximum (one tiny dimension-side aggregate; pass
-    ``max_edges_per_poly`` from table stats to skip it); when on, ONLY
-    polygons at/above ``edge_salt_threshold`` edges are replicated n_salt
-    ways (selective salting — total edge shuffle bytes grow by n_salt x
-    the skewed share, not n_salt x everything), everything else joins on
-    salt 0. Salting only changes routing — output is identical to
-    pip_join, same oracle.
+    reducer. Unless ``max_edges_per_poly`` (from table stats) is below
+    EDGE_SALT_EDGES_PER_POLY, the plan salts selectively: a lazy per-poly
+    edge count, broadcast as a skew table, replicates ONLY polygons at or
+    above the threshold N_SALT ways (total edge shuffle bytes grow by
+    N_SALT x the skewed share, not N_SALT x everything) and routes every
+    other edge to salt 0 — an empty skew table routes them all there. No
+    job runs at DataFrame-construction time. Salting only changes routing
+    — output is identical to pip_join, same oracle.
     """
     bbox = poly_bbox(edges)
     w = grid_deg or PIP_GRID_DEG
@@ -360,12 +360,12 @@ def pip_join_partitioned(
     ).selectExpr(
         "poly_id", "bx0", "bx1", "by0", "by1", "gx",
         f"explode(sequence(cast(floor(by0 / {w}) as bigint), cast(floor(by1 / {w}) as bigint))) as gy",
-    ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+    ).withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
     pages_c = geotagged.selectExpr(
         "url", "lat", "lon",
         f"cast(floor(lon / {w}) as bigint) as gx",
         f"cast(floor(lat / {w}) as bigint) as gy",
-    ).withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)))
+    ).withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
     # The shuffle-hash hint PINS the declared plan: the pages side of this
     # engine derives from a tiny pre-explode source (Iceberg stats see KBs),
     # so Catalyst's size estimate would otherwise BROADCAST the fact side —
@@ -383,26 +383,6 @@ def pip_join_partitioned(
         )
         .select("url", "lat", "lon", "poly_id", "_salt")
     )
-    skew_ids = None
-    if salt_edges is None:
-        if max_edges_per_poly is not None:
-            salt_edges = max_edges_per_poly >= edge_salt_threshold
-        else:
-            # No stats passed: ONE eager aggregate job at DataFrame-
-            # construction time (callers wanting full laziness pass
-            # max_edges_per_poly from table stats). Collecting the skewed
-            # ids directly — bounded by n_edges/threshold polygons, each
-            # holding >= threshold edges — gives both the detection verdict
-            # and the skew list, so the per-poly aggregate runs exactly once.
-            skew_ids = [
-                r["poly_id"]
-                for r in edges.groupBy("poly_id")
-                .agg(F.count("*").alias("_ne"))
-                .filter(F.col("_ne") >= edge_salt_threshold)
-                .select("poly_id")
-                .collect()
-            ]
-            salt_edges = bool(skew_ids)
     # NOTE (r7): the broadcast pip_join moved to the per-polygon edge-ARRAY
     # parity kernel, but this partitioned path deliberately keeps the
     # row-based edge join + (url, poly_id) parity aggregate: grouping a
@@ -411,23 +391,15 @@ def pip_join_partitioned(
     # threshold) whose GC churn made the 50k/1m bench cases bimodal
     # (measured 7s warm vs 23-34s under heap pressure), while the row plan
     # below exchanges the same bytes once and aggregates in UnsafeRow land.
-    if salt_edges:
+    if max_edges_per_poly is None or max_edges_per_poly >= EDGE_SALT_EDGES_PER_POLY:
         # selective salting: the skewed-poly list is tiny by construction
         # (mega-polygons), so it broadcasts to tag both join sides
-        if skew_ids is not None:
-            from pyspark.sql.types import StructType
-
-            skewed = edges.sparkSession.createDataFrame(
-                [(p,) for p in skew_ids],
-                StructType([edges.schema["poly_id"]]),
-            ).select("poly_id", F.lit(True).alias("_skew"))
-        else:
-            skewed = (
-                edges.groupBy("poly_id")
-                .agg(F.count("*").alias("_ne"))
-                .filter(F.col("_ne") >= edge_salt_threshold)
-                .select("poly_id", F.lit(True).alias("_skew"))
-            )
+        skewed = (
+            edges.groupBy("poly_id")
+            .agg(F.count("*").alias("_ne"))
+            .filter(F.col("_ne") >= EDGE_SALT_EDGES_PER_POLY)
+            .select("poly_id", F.lit(True).alias("_skew"))
+        )
         edges_s = (
             edges.join(F.broadcast(skewed), "poly_id", "left")
             .withColumn(
@@ -435,7 +407,7 @@ def pip_join_partitioned(
                 F.explode(
                     F.when(
                         F.col("_skew").isNotNull(),
-                        F.sequence(F.lit(0), F.lit(n_salt - 1)),
+                        F.sequence(F.lit(0), F.lit(N_SALT - 1)),
                     ).otherwise(F.array(F.lit(0)))
                 ),
             )
@@ -484,9 +456,9 @@ def pip_join_auto(
     scale they come from table metadata (Iceberg snapshot stats + a
     partition-level max); a count() on the dimension table is the fallback
     (one cheap metadata-ish job, never on the fact side). When
-    ``max_edges_per_poly`` is omitted on the partitioned path, salt
-    auto-detection additionally runs one eager per-poly aggregate at
-    construction time (see pip_join_partitioned). The candidate
+    ``max_edges_per_poly`` is omitted on the partitioned path, the plan
+    salts through a lazy per-poly skew table (see pip_join_partitioned);
+    no detection job runs at construction time. The candidate
     grid width derives from n_edges (pip_grid_deg) so the per-cell fanout
     stays bounded in exactly the large-dimension regime the partitioned
     plan targets."""
@@ -808,7 +780,6 @@ def _knn_cell_bound_terminal(
     centers: DataFrame,
     k: int,
     c: float,
-    n_salt: int = 4,
 ) -> DataFrame:
     """Exact kNN for the cascade's unresolved pages via per-cell distance
     bounds — the classic grid-kNN pruning argument, fully relational:
@@ -952,7 +923,7 @@ def _knn_cell_bound_terminal(
         )
         .filter(F.col("pmind2") <= F.col("r2pt"))
         .select("cx", "cy", "poly_id", "clon", "clat", F.col("r2pt").alias("r2"))
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
     )
     # NOTE (r7): the broadcast knn_join moved to per-cell candidate ARRAYS,
     # but this terminal (and the partitioned cell level) keeps the window form:
@@ -962,7 +933,7 @@ def _knn_cell_bound_terminal(
     # bench point (ABBA-isolated 12.4s vs 9.6s) - the HOF interpreter costs
     # more than the in-partition sort it removes when nothing crosses the
     # wire either way.
-    pag_s = pag.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)))
+    pag_s = pag.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
     cand = _with_dist2(pag_s.join(tight.hint("shuffle_hash"), ["cx", "cy", "_salt"]))
     # any candidate beyond sqrt(r2pt) is provably outside the top-k (>= k
     # candidates sit within r2pt), so drop it before the sort
@@ -980,7 +951,6 @@ def knn_join_partitioned(
     centers: DataFrame,
     k: int = 3,
     cell_deg: float | None = None,
-    n_salt: int = 4,
     n_centers: int | None = None,
 ) -> DataFrame:
     """Exact kNN, shuffle-both-sides path: for center tables too large to
@@ -990,8 +960,8 @@ def knn_join_partitioned(
 
     Same provably-exact cell-neighbor fast path as knn_join, but the
     candidate join is a SHUFFLE hash join on (cell, salt): centers explode
-    into their 3x3 neighborhood AND n_salt salt replicas, pages pick one
-    salt by url hash — a hot cell spreads over n_salt reducers. Properties
+    into their 3x3 neighborhood AND N_SALT salt replicas, pages pick one
+    salt by url hash — a hot cell spreads over N_SALT reducers. Properties
     that keep the candidate-pair volume (the dominant cost) bounded and
     OFF the wire:
 
@@ -1022,7 +992,7 @@ def knn_join_partitioned(
         geotagged.select("url", "lat", "lon")
         .withColumn("cx", F.expr(cell % "lon"))
         .withColumn("cy", F.expr(cell % "lat"))
-        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(n_salt)))
+        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
     )
     off = F.explode(
         F.array(
@@ -1035,7 +1005,7 @@ def knn_join_partitioned(
     )
     neigh = (
         centers.withColumn("o", off)
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salt - 1))))
+        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
         .selectExpr(
             "poly_id",
             "clon",
@@ -1112,7 +1082,7 @@ def knn_join_partitioned(
         4.0,
         min(6.0, (1_800_000.0 / max(n_centers, 1)) ** 0.5),
     )
-    out = _knn_cell_bound_terminal(remaining, centers, k, term_c, n_salt)
+    out = _knn_cell_bound_terminal(remaining, centers, k, term_c)
     return _attach_persists(out.unionByName(good), [split])
 
 

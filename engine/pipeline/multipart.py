@@ -5,9 +5,10 @@ The codec's multipoint (absolute-coord quirk, reference marshal.go:57-68)
 and multipolygon (marshal.go:161-171) paths are byte-vector-tested but were
 never exercised by a driver-checked tile; these operators emit them through
 the same Spark shape as the other tilers — JVM-side tile assign + quantize,
-ONE shuffle on (z,x,y), per-tile Arrow-batched encode — then decode with the
-engine's own reader into an order-free stats projection a DuckDB oracle
-reproduces closed-form.
+ONE shuffle on (z,x,y), the tiler's one tile-group worker
+(tiler.carry_group_iter over the packed tile gid) with a batched command
+encode and faststream framing — then decode with the engine's own reader
+into an order-free stats projection a DuckDB oracle reproduces closed-form.
 
 Grouping: pages collapse to one MultiPoint feature per (tile, feature_id %
 N_POINT_GROUPS); polygons to one MultiPolygon feature per (tile, poly_id %
@@ -16,24 +17,30 @@ at low zooms.
 
 Scale: the point side rides the identical single-shuffle plan as the point
 tiler (the multipoint grouping adds no extra exchange); the polygon side is
-the small-dimension rowwise path (bbox-explode + per-tile clip), bounded by
-the polygon table size like the polygon tiler.
+the polygon tiler's flat vertex stream and batched ring clip
+(polytiler._polygon_ring_words), bounded by the polygon table size like the
+polygon tiler.
 """
 
 from __future__ import annotations
-
-import hashlib
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from engine.mvtcodec import geomstream, tile as tilemod
-from engine.spatial import clip as clipmod
+from engine.mvtcodec import faststream, geomstream, tile as tilemod
+from engine.mvtcodec.commands import MOVE_TO, make_command
+from engine.mvtcodec.zigzag import make_parameter
 
 from . import fixtures, index
-from .polytiler import BUFFER, _orient, _rings_to_pixels, polygons_table, with_covered_tiles
-from .tiler import EXTENT, TILE_SCHEMA
+from .polytiler import (
+    _layer_tiles,
+    _polygon_ring_words,
+    _vertex_rings,
+    polygon_vertices,
+    polygons_table,
+)
+from .tiler import ENCODE_SCHEMA, EXTENT, _encode_sorted_tiles
 
 N_POINT_GROUPS = 16
 N_POLY_GROUPS = 8
@@ -41,52 +48,40 @@ N_POLY_GROUPS = 8
 _PIXEL_SCALE = "(cast(shiftleft(1, z) as double) * 4096)"
 
 
-def _empty_tiles() -> pd.DataFrame:
-    return pd.DataFrame(
-        {
-            "z": pd.array([], dtype="int32"),
-            "x": pd.array([], dtype="int64"),
-            "y": pd.array([], dtype="int64"),
-            "mvt": pd.array([], dtype=object),
-            "n_features": pd.array([], dtype="int64"),
-            "n_bytes": pd.array([], dtype="int64"),
-            "mvt_sha256": pd.array([], dtype=object),
-        }
+def _feature_layer(name, gid, g, starts, geom_type, words, woff):
+    """Frame one layer whose features start at rows ``starts`` (one per
+    (tile, g) run; feature id g, no tags; feature i is
+    words[woff[i]:woff[i+1]]) into the tile batch."""
+    layers = faststream.encode_tagged_layers(
+        name, EXTENT, gid[starts], g[starts], geom_type, words, woff
     )
+    return _layer_tiles([(gid[starts], layers)])
 
 
-def _tile_rows(z: int, x: int, y: int, layers: dict) -> pd.DataFrame:
-    data = tilemod.encode_tile(layers)
-    n = sum(len(v["features"]) for v in layers.values())
-    return pd.DataFrame(
-        {
-            "z": pd.array([z], dtype="int32"),
-            "x": [x],
-            "y": [y],
-            "mvt": [data],
-            "n_features": [n],
-            "n_bytes": [len(data)],
-            "mvt_sha256": [hashlib.sha256(data).hexdigest()],
-        }
+def _run_starts(gid, g) -> np.ndarray:
+    """First row of each (gid, g) run in a sorted batch."""
+    change = np.ones(len(gid), dtype=bool)
+    change[1:] = (gid[1:] != gid[:-1]) | (g[1:] != g[:-1])
+    return np.flatnonzero(change)
+
+
+def _encode_mpoint_batch(cols):
+    """(gid, g, qx, qy) rows sorted by (tile, g, qx, qy) -> one MultiPoint
+    feature per (tile, g): MoveTo(n), then n ABSOLUTE zigzag pairs (the
+    reference marshal.go:57-68 quirk, geomstream.encode_multipoint)."""
+    gid, g = cols["gid"], cols["g"]
+    starts = _run_starts(gid, g)
+    n = np.diff(np.append(starts, len(gid)))
+    woff = np.zeros(len(starts) + 1, dtype=np.int64)
+    np.cumsum(1 + 2 * n, out=woff[1:])
+    words = np.empty(woff[-1], dtype=np.uint32)
+    words[woff[:-1]] = make_command(MOVE_TO, n)
+    pairs = np.ones(len(words), dtype=bool)
+    pairs[woff[:-1]] = False
+    words[pairs] = make_parameter(np.stack([cols["qx"], cols["qy"]], axis=1)).ravel()
+    return _feature_layer(
+        "mpoints", gid, g, starts, geomstream.GEOM_POINT, words, woff
     )
-
-
-def _encode_mpoint_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-    z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-    feats = []
-    for g, grp in pdf.sort_values(["g", "qx", "qy"]).groupby("g", sort=True):
-        xy = grp[["qx", "qy"]].to_numpy(dtype=np.int64)
-        feats.append(
-            {
-                "id": int(g),
-                "geom_type": geomstream.GEOM_POINT,
-                "geometry": geomstream.encode_multipoint(xy),
-                "tags": [],
-            }
-        )
-    if not feats:
-        return _empty_tiles()
-    return _tile_rows(z, x, y, {"mpoints": {"extent": EXTENT, "features": feats}})
 
 
 def encode_multipoint_tiles(
@@ -95,7 +90,8 @@ def encode_multipoint_tiles(
     """One MultiPoint feature per (tile, feature_id % N_POINT_GROUPS) over
     the geotagged pages. Quantization happens JVM-side with the exact
     expressions the point-tiler oracle already pins (q_mvt_roundtrip_coords)
-    so the codec round-trip is the only new surface under test."""
+    so the codec round-trip is the only new surface under test. z_max past
+    tiler.MAX_ZOOM raises ValueError."""
     geo = index.with_feature_id(fixtures.geotag_df(fixtures.pages_df(spark, sf_dir)))
     df = index.with_unit(geo)
     df = df.withColumn("z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max))))
@@ -111,41 +107,25 @@ def encode_multipoint_tiles(
         f"cast(u * {_PIXEL_SCALE} - x * 4096 as bigint) as qx",
         f"cast(v * {_PIXEL_SCALE} - y * 4096 as bigint) as qy",
     )
-    return pts.groupBy("z", "x", "y").applyInPandas(_encode_mpoint_tile, TILE_SCHEMA)
+    return _encode_sorted_tiles(
+        pts, z_max, ("g", "qx", "qy"), ("g", "qx", "qy"), _encode_mpoint_batch,
+        (), ENCODE_SCHEMA,
+    )
 
 
-def _encode_mpoly_tile(pdf: pd.DataFrame) -> pd.DataFrame:
-    z, x, y = int(pdf["z"].iloc[0]), int(pdf["x"].iloc[0]), int(pdf["y"].iloc[0])
-    lo, hi = -float(BUFFER), float(EXTENT + BUFFER)
-    groups: dict[int, list] = {}
-    for row in pdf.sort_values("poly_id").itertuples():
-        pix = _rings_to_pixels(row.rings, z, x, y)
-        rings_q: list[np.ndarray] = []
-        for i, ring in enumerate(pix):
-            clipped = clipmod.clip_ring(ring, lo, lo, hi, hi)
-            if i == 0 and len(clipped) < 3:
-                rings_q = []
-                break
-            oriented = _orient(clipped, clockwise=(i == 0)) if len(clipped) >= 3 else None
-            if i == 0 and oriented is None:
-                rings_q = []
-                break
-            if oriented is not None:
-                rings_q.append(np.vstack([oriented, oriented[:1]]))
-        if rings_q:
-            groups.setdefault(int(row.poly_id) % N_POLY_GROUPS, []).append(rings_q)
-    feats = [
-        {
-            "id": g,
-            "geom_type": geomstream.GEOM_POLYGON,
-            "geometry": geomstream.encode_multipolygon(groups[g]),
-            "tags": [],
-        }
-        for g in sorted(groups)
-    ]
-    if not feats:
-        return _empty_tiles()
-    return _tile_rows(z, x, y, {"mpolys": {"extent": EXTENT, "features": feats}})
+def _encode_mpoly_batch(cols):
+    """Vertex rows sorted by (tile, g, poly_id, ring_idx, vtx_idx) -> one
+    MultiPolygon feature per (tile, g): the concatenated Polygon encodings
+    of the group's surviving polygons (reference marshal.go:161-171)."""
+    pts, rid, r_starts, r_poly, r_ext = _vertex_rings(cols)
+    words, woff, s_ring = _polygon_ring_words(pts, rid, r_poly, r_ext)
+    rows = r_starts[s_ring]  # first row of each surviving ring
+    gid, g = cols["gid"][rows], cols["g"][rows]
+    starts = _run_starts(gid, g)
+    return _feature_layer(
+        "mpolys", gid, g, starts, geomstream.GEOM_POLYGON, words,
+        woff[np.append(starts, len(rows))],
+    )
 
 
 def encode_multipolygon_tiles(
@@ -153,9 +133,16 @@ def encode_multipolygon_tiles(
 ) -> DataFrame:
     """One MultiPolygon feature per (tile, poly_id % N_POLY_GROUPS): each
     group's surviving Sutherland-Hodgman-clipped polygons concatenate into
-    a single multi-part feature (reference marshal.go:161-171)."""
-    covered = with_covered_tiles(polygons_table(spark, sf_dir), z_min, z_max)
-    return covered.groupBy("z", "x", "y").applyInPandas(_encode_mpoly_tile, TILE_SCHEMA)
+    a single multi-part feature (reference marshal.go:161-171). z_max past
+    tiler.MAX_ZOOM raises ValueError."""
+    verts = polygon_vertices(polygons_table(spark, sf_dir), z_min, z_max).withColumn(
+        "g", F.pmod("poly_id", F.lit(N_POLY_GROUPS))
+    )
+    return _encode_sorted_tiles(
+        verts, z_max, ("g", "poly_id", "ring_idx", "vtx_idx"),
+        ("g", "poly_id", "ring_idx", "lon", "lat"), _encode_mpoly_batch, (),
+        ENCODE_SCHEMA,
+    )
 
 
 STATS_COLS = (

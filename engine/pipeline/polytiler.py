@@ -5,14 +5,17 @@ Extends the point tiler (tiler.py) to the reference's full geometry menu
 every tile its bbox covers (JVM-side explode over the x/y ranges — no UDF),
 its rings explode to a FLAT vertex stream (one fixed-width row per vertex —
 the Arrow-friendly layout), and one shuffle co-locates each tile's vertices.
-A sorted mapInPandas then runs the whole geometry pipeline BATCHED in numpy
-(engine.spatial.clipbatch): Sutherland–Hodgman ring clip and Liang–Barsky
-outline clip across every ring of every tile in an Arrow batch at once,
-quantization by int32 truncation (reference marshal.go:190), winding fix
-(exterior CW / holes CCW in y-down tile space so the reference decoder's
-TurningAngle classification reconstructs them — SURVEY §7.4 item 2), and a
-ragged scatter command-stream encode. Only per-tile protobuf framing stays
-in a Python loop (bounded by tile count, not vertex count).
+The sorted stream then goes through the tiler's one tile-group worker
+(tiler.carry_group_iter over mapInArrow, keyed by the packed tile gid), which
+runs the whole geometry pipeline BATCHED in numpy (engine.spatial.clipbatch):
+Sutherland–Hodgman ring clip and Liang–Barsky outline clip across every ring
+of every tile in an Arrow batch at once, quantization by int32 truncation
+(reference marshal.go:190), winding fix (exterior CW / holes CCW in y-down
+tile space so the reference decoder's TurningAngle classification
+reconstructs them — SURVEY §7.4 item 2), and a ragged scatter
+command-stream encode (_polygon_ring_words, shared with the MultiPolygon
+tiler). Only per-tile protobuf framing stays in a Python loop (bounded by
+tile count, not vertex count); the tile digest is computed JVM-side.
 
 ``encode_polygon_tiles_rowwise`` keeps the original per-row applyInPandas
 encoder as the semantics reference; tests/test_polytiler.py asserts the
@@ -39,7 +42,14 @@ from engine.spatial import clip as clipmod, clipbatch
 from engine.spatial.mercator import lnglat_to_unit
 
 from . import fixtures
-from .tiler import EXTENT, TILE_SCHEMA, carry_group_iter
+from .tiler import (
+    ENCODE_SCHEMA,
+    EXTENT,
+    TILE_SCHEMA,
+    _arrow_tags,
+    _encode_sorted_tiles,
+    _tile_batch,
+)
 
 BUFFER = 128  # tile-pixel clip buffer around the 0..EXTENT square
 
@@ -253,66 +263,92 @@ def _run_ids(*cols) -> np.ndarray:
     return np.cumsum(change) - 1
 
 
-def _encode_poly_vertex_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Flat vertex frame (complete tiles, sorted by z,x,y,poly_id,ring_idx,
-    vtx_idx) -> one MVT tile row per (z,x,y). All geometry math batched."""
-    lo, hi = -float(BUFFER), float(EXTENT + BUFFER)
-    z = pdf["z"].to_numpy()
-    x = pdf["x"].to_numpy()
-    y = pdf["y"].to_numpy()
-    pid = pdf["poly_id"].to_numpy()
-    ridx = pdf["ring_idx"].to_numpy()
-    u, v = lnglat_to_unit(pdf["lon"].to_numpy(), pdf["lat"].to_numpy())
-    scale = np.ldexp(np.float64(EXTENT), z.astype(np.int64))  # 4096 * 2^z
-    pts = np.stack(
-        [u * scale - x * float(EXTENT), v * scale - y * float(EXTENT)], axis=1
-    )
-
-    rid = _run_ids(z, x, y, pid, ridx)
+def _vertex_rings(cols):
+    """Ring layout of a vertex batch (complete tiles, rows sorted by tile,
+    then poly_id, ring_idx, vtx_idx): float tile-pixel coords (y-down) per
+    vertex, ring ordinal per vertex, each ring's first row, and the
+    polygon ordinal and exterior flag per ring."""
+    gid, pid, ridx = cols["gid"], cols["poly_id"], cols["ring_idx"]
+    z = (gid >> 52) & 31
+    x = ((gid >> 26) & ((1 << 26) - 1)).astype(np.float64)
+    y = (gid & ((1 << 26) - 1)).astype(np.float64)
+    u, v = lnglat_to_unit(cols["lon"], cols["lat"])
+    scale = np.ldexp(np.float64(EXTENT), z)  # 4096 * 2^z
+    pts = np.stack([u * scale - x * float(EXTENT), v * scale - y * float(EXTENT)], axis=1)
+    rid = _run_ids(gid, pid, ridx)
     r_starts = clipbatch.ring_starts(rid)
-    n_rings = len(r_starts)
-    r_tile = _run_ids(z, x, y)[r_starts]  # tile ordinal per ring
-    r_poly = _run_ids(z, x, y, pid)[r_starts]  # feature ordinal per ring
-    r_ext = ridx[r_starts] == 0
-    r_row = r_starts  # a representative input row per ring
+    return pts, rid, r_starts, _run_ids(gid, pid)[r_starts], ridx[r_starts] == 0
 
-    # ---- polygons layer: batched Sutherland-Hodgman + winding fix
+
+def _polygon_ring_words(pts, rid, r_poly, r_ext):
+    """Polygon-layer geometry of a vertex batch, batched: Sutherland-Hodgman
+    clip to the buffered tile, quantize, drop rings under 3 vertices or of
+    zero area, drop every ring of a polygon whose exterior was dropped, fix
+    the winding (exterior CW / holes CCW in y-down tile space) and encode
+    each ring's command words. Returns (words, woff, s_ring): surviving
+    ring i (original ring ordinal s_ring[i]) is words[woff[i]:woff[i+1]];
+    the caller decides which rings make up one feature."""
+    lo, hi = -float(BUFFER), float(EXTENT + BUFFER)
     cpts, crid = clipbatch.clip_rings(pts, rid, lo, lo, hi, hi)
     q = geomstream.quantize(cpts)
-    poly_feats = np.zeros(0, dtype=np.int64)
-    poly_words = np.empty(0, dtype=np.uint32)
-    poly_woff = np.zeros(1, dtype=np.int64)
-    poly_feat_rings = np.zeros(0, dtype=np.int64)
-    if len(q):
-        c_starts, areas2 = clipbatch.ring_areas2(q, crid)
-        c_sizes = np.append(c_starts[1:], len(q)) - c_starts
-        c_ring = crid[c_starts]  # original ring ordinal per clipped ring
-        valid = (c_sizes >= 3) & (areas2 != 0)
-        # a polygon feature survives iff its exterior ring is valid
-        poly_alive = np.zeros(int(r_poly.max()) + 1 if n_rings else 0, dtype=bool)
-        ext_rings = r_ext[c_ring]
-        poly_alive[r_poly[c_ring[valid & ext_rings]]] = True
-        surv = valid & poly_alive[r_poly[c_ring]]
-        if surv.any():
-            # orientation fix: y-up area>0 == y-down CW; exterior wants CW
-            rev = np.where(ext_rings, areas2 < 0, areas2 > 0)
-            vmask = np.repeat(surv, c_sizes)
-            q2 = clipbatch.reverse_rings(q, crid, rev)[vmask]
-            srid = crid[vmask]
-            poly_words, poly_woff = clipbatch.encode_rings_words(q2, srid, close=True)
-            s_ring = srid[clipbatch.ring_starts(srid)]
-            s_poly = r_poly[s_ring]
-            feat_start = clipbatch.ring_starts(s_poly)
-            poly_feats = s_ring[feat_start]  # representative ring per feature
-            poly_feat_rings = np.append(feat_start, len(s_poly))
+    none = (np.empty(0, dtype=np.uint32), np.zeros(1, dtype=np.int64),
+            np.zeros(0, dtype=np.int64))
+    if not len(q):
+        return none
+    c_starts, areas2 = clipbatch.ring_areas2(q, crid)
+    c_sizes = np.append(c_starts[1:], len(q)) - c_starts
+    c_ring = crid[c_starts]  # original ring ordinal per clipped ring
+    valid = (c_sizes >= 3) & (areas2 != 0)
+    # a polygon survives iff its exterior ring is valid
+    poly_alive = np.zeros(int(r_poly.max()) + 1, dtype=bool)
+    ext_rings = r_ext[c_ring]
+    poly_alive[r_poly[c_ring[valid & ext_rings]]] = True
+    surv = valid & poly_alive[r_poly[c_ring]]
+    if not surv.any():
+        return none
+    # orientation fix: y-up area>0 == y-down CW; exterior wants CW
+    rev = np.where(ext_rings, areas2 < 0, areas2 > 0)
+    vmask = np.repeat(surv, c_sizes)
+    q2 = clipbatch.reverse_rings(q, crid, rev)[vmask]
+    srid = crid[vmask]
+    words, woff = clipbatch.encode_rings_words(q2, srid, close=True)
+    return words, woff, srid[clipbatch.ring_starts(srid)]
+
+
+def _layer_tiles(layers):
+    """One tile row per tile that any layer reaches. ``layers`` lists
+    (tile gid per feature, {tile gid: Layer message}) in layer-name order;
+    a tile's layers are framed in that order."""
+    import pyarrow as pa
+
+    g, n = np.unique(np.concatenate([t for t, _ in layers]), return_counts=True)
+    mvt = [
+        b"".join(pbwire.len_delimited(3, msgs[t]) for _, msgs in layers if t in msgs)
+        for t in g.tolist()
+    ]
+    return _tile_batch(g, pa.array(mvt, type=pa.binary()), n, [len(d) for d in mvt])
+
+
+def _encode_poly_vertex_batch(cols):
+    """Flat vertex columns (complete tiles, sorted by tile, poly_id,
+    ring_idx, vtx_idx) -> one MVT tile row per tile. All geometry math
+    batched."""
+    lo, hi = -float(BUFFER), float(EXTENT + BUFFER)
+    gid, pid = cols["gid"], cols["poly_id"]
+    pts, rid, r_starts, r_poly, r_ext = _vertex_rings(cols)
+
+    # ---- polygons layer: one feature per polygon with a surviving ring
+    poly_words, poly_woff, s_ring = _polygon_ring_words(pts, rid, r_poly, r_ext)
+    feat_start = np.flatnonzero(np.diff(r_poly[s_ring], prepend=-1))
+    poly_rows = r_starts[s_ring[feat_start]]  # a representative row per feature
+    poly_woff = poly_woff[np.append(feat_start, len(s_ring))]
 
     # ---- outlines layer: batched Liang-Barsky + part chaining
     seg_q = pts[clipbatch.next_index(rid, r_starts)]
     visible, a, b = clipbatch.clip_segments(pts, seg_q, lo, lo, hi, hi)
-    line_feats = np.zeros(0, dtype=np.int64)
+    line_rows = np.zeros(0, dtype=np.int64)
     line_words = np.empty(0, dtype=np.uint32)
     line_woff = np.zeros(1, dtype=np.int64)
-    line_feat_parts = np.zeros(1, dtype=np.int64)
     if visible.any():
         part_id, new_part = clipbatch.chain_parts(visible, rid, a, b)
         av, bv = a[visible], b[visible]
@@ -341,69 +377,25 @@ def _encode_poly_vertex_batch(pdf: pd.DataFrame) -> pd.DataFrame:
             sp_ring = p_ring[p_ok]
             sp_poly = r_poly[sp_ring]
             feat_start = clipbatch.ring_starts(sp_poly)
-            line_feats = sp_ring[feat_start]
-            line_feat_parts = np.append(feat_start, len(sp_poly))
+            line_rows = r_starts[sp_ring[feat_start]]
+            line_woff = line_woff[np.append(feat_start, len(sp_poly))]
 
     # ---- batched protobuf framing (engine.mvtcodec.faststream): every
     # varint in the output comes from whole-array passes; only the final
     # per-tile byte join is a Python loop (bounded by tile count)
-    names = pdf["name"].to_numpy()
-    poly_layers: dict[int, bytes] = {}
-    line_layers: dict[int, bytes] = {}
-    n_poly: dict[int, int] = {}
-    n_line: dict[int, int] = {}
-    if len(poly_feats):
-        rows = r_row[poly_feats]
-        poly_layers = faststream.encode_tag1_layers(
-            "polygons", EXTENT, r_tile[poly_feats], pid[rows],
-            geomstream.GEOM_POLYGON, poly_words, poly_woff[poly_feat_rings],
-            "name", list(names[rows]),
+    name = _arrow_tags(cols, (("name", "string"),))["name"][1]  # (codes, values)
+
+    def layer(layer_name, rows, geom_type, words, woff):
+        return gid[rows], faststream.encode_tagged_layers(
+            layer_name, EXTENT, gid[rows], pid[rows], geom_type, words, woff,
+            {"name": ("string", (name[0][rows], name[1]))},
         )
-        t, c = np.unique(r_tile[poly_feats], return_counts=True)
-        n_poly = dict(zip(t.tolist(), c.tolist()))
-    if len(line_feats):
-        rows = r_row[line_feats]
-        line_layers = faststream.encode_tag1_layers(
-            "outlines", EXTENT, r_tile[line_feats], pid[rows],
-            geomstream.GEOM_LINESTRING, line_words, line_woff[line_feat_parts],
-            "name", list(names[rows]),
-        )
-        t, c = np.unique(r_tile[line_feats], return_counts=True)
-        n_line = dict(zip(t.tolist(), c.tolist()))
-    tile_first_row = {}
-    for arr in (poly_feats, line_feats):
-        for ring in arr:
-            tile_first_row.setdefault(int(r_tile[ring]), int(r_row[ring]))
-    out = {k: [] for k in ("z", "x", "y", "mvt", "n_features", "n_bytes", "mvt_sha256")}
-    for tile_ord in sorted(tile_first_row):
-        parts = []
-        # layer names sorted: "outlines" < "polygons"
-        if tile_ord in line_layers:
-            parts.append(pbwire.len_delimited(3, line_layers[tile_ord]))
-        if tile_ord in poly_layers:
-            parts.append(pbwire.len_delimited(3, poly_layers[tile_ord]))
-        data = b"".join(parts)
-        row = tile_first_row[tile_ord]
-        out["z"].append(int(z[row]))
-        out["x"].append(int(x[row]))
-        out["y"].append(int(y[row]))
-        out["mvt"].append(data)
-        out["n_features"].append(n_poly.get(tile_ord, 0) + n_line.get(tile_ord, 0))
-        out["n_bytes"].append(len(data))
-        out["mvt_sha256"].append(hashlib.sha256(data).hexdigest())
-    if not out["z"]:
-        return _EMPTY_TILES.copy()
-    return pd.DataFrame(
-        {
-            "z": pd.array(out["z"], dtype="int32"),
-            "x": pd.array(out["x"], dtype="int64"),
-            "y": pd.array(out["y"], dtype="int64"),
-            "mvt": out["mvt"],
-            "n_features": pd.array(out["n_features"], dtype="int64"),
-            "n_bytes": pd.array(out["n_bytes"], dtype="int64"),
-            "mvt_sha256": out["mvt_sha256"],
-        }
-    )
+
+    # layer names sorted: "outlines" < "polygons"
+    return _layer_tiles([
+        layer("outlines", line_rows, geomstream.GEOM_LINESTRING, line_words, line_woff),
+        layer("polygons", poly_rows, geomstream.GEOM_POLYGON, poly_words, poly_woff),
+    ])
 
 
 def polygon_vertices(polys: DataFrame, z_min: int, z_max: int) -> DataFrame:
@@ -428,14 +420,14 @@ def encode_polygon_tiles(
     spark: SparkSession, sf_dir: str, z_min: int = 0, z_max: int = 6
 ) -> DataFrame:
     """Full polygon/outline tile pyramid: parquet polygon scan -> flat
-    vertex explode -> ONE shuffle on (z,x,y) -> sorted batched encode."""
+    vertex explode -> ONE shuffle on (z,x,y) -> the tile-group worker
+    (tiler.carry_group_iter) over the sorted vertex stream. z_max past
+    tiler.MAX_ZOOM raises ValueError."""
     verts = polygon_vertices(polygons_table(spark, sf_dir), z_min, z_max)
-    parted = verts.repartition("z", "x", "y").sortWithinPartitions(
-        "z", "x", "y", "poly_id", "ring_idx", "vtx_idx"
-    )
-    return parted.mapInPandas(
-        lambda batches: carry_group_iter(batches, _encode_poly_vertex_batch),
-        TILE_SCHEMA,
+    return _encode_sorted_tiles(
+        verts, z_max, ("poly_id", "ring_idx", "vtx_idx"),
+        ("poly_id", "name", "ring_idx", "lon", "lat"),
+        _encode_poly_vertex_batch, ("name",), ENCODE_SCHEMA,
     )
 
 

@@ -9,11 +9,16 @@ shuffle key: a packed int64 of (z, u-grid, v-grid) bit fields when that
 fits, the (z, u, v) columns otherwise, with an optional salt as the top
 field. The rows are repartitioned on the tile (hash, or range over a
 Hilbert key for output locality) and sorted so each tile's features are
-CONTIGUOUS; a JVM projection rebuilds (gid, qx, qy) after the shuffle, and
-one ``mapInArrow`` worker encodes MANY tiles per Arrow batch (group
-boundaries detected vectorized, incomplete tail groups carried into the
-next batch). This avoids ``groupBy().applyInPandas``'s per-group overhead,
-which dominates when the pyramid has tens of thousands of small tiles.
+CONTIGUOUS; a JVM projection rebuilds (gid, qx, qy) after the shuffle.
+
+Every tiler (points, partials, the partial merge, polygons, multi-part)
+then runs ONE ``mapInArrow`` worker over rows sorted by tile with the packed
+key gid = z<<52 | x<<26 | y computed after the sort: carry_group_iter
+detects group boundaries vectorized and carries incomplete tail groups into
+the next batch, so each encode call gets MANY complete tiles and returns an
+Arrow batch (_tile_batch); the digest mvt_sha256 is computed JVM-side. This
+avoids ``groupBy().applyInPandas``'s per-group overhead, which dominates
+when the pyramid has tens of thousands of small tiles.
 
 Byte determinism: features sorted by (tile, feature_id) before the encode,
 layers sorted by name inside the codec — output bytes are invariant under
@@ -21,8 +26,6 @@ key packing, partitioning, salting, and executor count (SURVEY §7.4 item 1).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import numpy as np
 import pandas as pd
@@ -66,21 +69,6 @@ def cap_features_per_tile(
         .filter(F.col("_rn") <= k)
         .drop("_rn")
     )
-
-
-GROUP_COLS = ("z", "x", "y")
-
-
-def _group_bounds(pdf: pd.DataFrame, cols: tuple[str, ...] = GROUP_COLS) -> np.ndarray:
-    """Start offsets of each group run in a pre-sorted frame."""
-    first = pdf[cols[0]].to_numpy()
-    change = np.empty(len(first), dtype=bool)
-    change[0] = True
-    change[1:] = np.diff(first) != 0
-    for c in cols[1:]:
-        v = pdf[c].to_numpy()
-        change[1:] |= np.diff(v) != 0
-    return np.flatnonzero(change)
 
 
 def _gid_bounds(gid: np.ndarray) -> np.ndarray:
@@ -130,6 +118,24 @@ def _gid_tile_arrays(g: np.ndarray) -> list:
     ]
 
 
+def _tile_batch(g: np.ndarray, mvt, n_features, n_bytes, **extra):
+    """The tile workers' output batch (ENCODE_SCHEMA, then ``extra``
+    columns): (z, x, y) unpacked from the tiles' gids ``g``, the ``mvt``
+    binary array, and per-tile feature and byte counts."""
+    import pyarrow as pa
+
+    return pa.RecordBatch.from_arrays(
+        [
+            *_gid_tile_arrays(g),
+            mvt,
+            pa.array(n_features, type=pa.int64()),
+            pa.array(n_bytes, type=pa.int64()),
+            *extra.values(),
+        ],
+        names=["z", "x", "y", "mvt", "n_features", "n_bytes", *extra],
+    )
+
+
 def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     """Arrow-native tile encode for one-or-more COMPLETE gid groups.
 
@@ -165,15 +171,7 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     mvt = pa.Array.from_buffers(
         pa.binary(), n_tiles, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
     )
-    return pa.RecordBatch.from_arrays(
-        [
-            *_gid_tile_arrays(gid[starts]),
-            mvt,
-            pa.array(counts, type=pa.int64()),
-            pa.array(ttotal.astype(np.int64), type=pa.int64()),
-        ],
-        names=["z", "x", "y", "mvt", "n_features", "n_bytes"],
-    )
+    return _tile_batch(gid[starts], mvt, counts, ttotal)
 
 
 def _encode_partials_group_arrow(cols, tag_cols):
@@ -225,17 +223,25 @@ def _encode_partials_group_arrow(cols, tag_cols):
     )
 
 
-def carry_group_iter_arrow(batches, encode_fn, tag_names: frozenset):
-    """carry_group_iter for mapInArrow: same complete-group contract and
-    O(1) mega-group concat, but operating on numpy/pyarrow columns —
-    pandas never enters the worker."""
+def carry_group_iter(batches, encode_fn, arrow_cols: frozenset):
+    """Drive ``encode_fn`` over COMPLETE gid groups, given a stream of
+    Arrow batches pre-sorted so each gid's rows are contiguous.
+
+    Columns named in ``arrow_cols`` (string/binary columns) stay pyarrow
+    arrays, every other column becomes a numpy array — pandas never enters
+    the worker. ``encode_fn`` receives a dict of columns holding one or
+    more complete groups. The (possibly incomplete) trailing group is
+    carried as a LIST of chunks and concatenated exactly once when the
+    group completes — a mega-tile spanning many Arrow batches (z0 holds
+    every feature) is copied O(1) times, not O(batches) (quadratic carry
+    re-concat measured 5-40x slower on the z0-z14 pyramid at sf0.1)."""
     import pyarrow as pa
 
     def to_cols(rb):
         return {
             name: (
                 rb.column(i)
-                if name in tag_names
+                if name in arrow_cols
                 else rb.column(i).to_numpy()
             )
             for i, name in enumerate(rb.schema.names)
@@ -282,51 +288,6 @@ def carry_group_iter_arrow(batches, encode_fn, tag_names: frozenset):
         pend.append(slice_cols(cols, tail, len(gid)))
     if pend:
         yield encode_fn(concat_cols(pend))
-
-
-def carry_group_iter(
-    batches: Iterator[pd.DataFrame], encode_fn, cols: tuple[str, ...] = GROUP_COLS
-) -> Iterator[pd.DataFrame]:
-    """Drive ``encode_fn`` over frames whose key groups are COMPLETE,
-    given a stream of Arrow batches pre-sorted by ``cols``.
-
-    The (possibly incomplete) trailing group is carried as a LIST of
-    chunks and concatenated exactly once when the group completes — a
-    mega-tile spanning many Arrow batches (z0 holds every feature) is
-    copied O(1) times, not O(batches) (quadratic carry re-concat measured
-    5-40x slower on the z0-z14 pyramid at sf0.1). ``encode_fn`` receives a
-    frame holding one or more complete groups.
-    """
-    chunks: list[pd.DataFrame] = []
-
-    def flush():
-        group = chunks[0] if len(chunks) == 1 else pd.concat(chunks, ignore_index=True)
-        chunks.clear()
-        return encode_fn(group)
-
-    for pdf in batches:
-        if not len(pdf):
-            continue
-        starts = _group_bounds(pdf, cols)
-        tail = int(starts[-1])
-        body_start = 0
-        if chunks:
-            prev = chunks[-1].iloc[-1]
-            first = pdf.iloc[0]
-            same = all(prev[c] == first[c] for c in cols)
-            if same and len(starts) == 1:
-                chunks.append(pdf)  # batch is one group: keep carrying
-                continue
-            if same:
-                body_start = int(starts[1])
-                chunks.append(pdf.iloc[:body_start])
-            yield flush()
-        body = pdf.iloc[body_start:tail]
-        if len(body):
-            yield encode_fn(body)
-        chunks.append(pdf.iloc[tail:])
-    if chunks:
-        yield flush()
 
 
 def _packed_exprs(z_max: int, extent: int, with_salt: bool):
@@ -434,22 +395,14 @@ def _keyed_rows(
     want. It costs a range-sampling pass that re-evaluates the upstream
     lineage — worth it when the input is a materialized table (the
     resumable job). Tile BYTES are identical in both modes
-    (tests/test_manifest_resume.py)."""
-    if not 0 <= z_max <= MAX_ZOOM:
-        raise ValueError(f"gid packing supports z_max 0..{MAX_ZOOM}")
+    (tests/test_manifest_resume.py). z_max past MAX_ZOOM raises
+    ValueError (_z_in_range)."""
     if partition_mode not in ("hash", "hilbert"):
         raise ValueError(f"partition_mode must be hash or hilbert, not {partition_mode!r}")
+    src = _z_in_range(df, z_max)
     salted = salt is not None
     e = _packed_exprs(z_max, extent, salted) or _unpacked_exprs(salted)
     tags = [c for c, _ in tag_cols]
-    src = df.withColumn(
-        "z",
-        F.expr(
-            f"CASE WHEN z BETWEEN 0 AND {z_max} THEN z ELSE raise_error(concat("
-            f"'zoom ', cast(z as string), ' is outside the tile key range "
-            f"0..{z_max}; raise z_max')) END"
-        ),
-    )
     if salted:
         src = src.withColumn("_salt", salt)
     keyed = src.selectExpr(*e["select"], *tags)
@@ -482,12 +435,52 @@ def _keyed_rows(
     )
 
 
-def _encode_keyed(rows: DataFrame, encode_fn, tag_cols, schema: str) -> DataFrame:
+def _z_in_range(df: DataFrame, z_max: int) -> DataFrame:
+    """``df`` with its z column guarded for the packed tile key: z_max past
+    MAX_ZOOM raises ValueError here, and a row with z outside [0, z_max]
+    fails the job (raise_error) rather than spill into a neighbouring bit
+    field."""
+    if not 0 <= z_max <= MAX_ZOOM:
+        raise ValueError(f"gid packing supports z_max 0..{MAX_ZOOM}")
+    return df.withColumn(
+        "z",
+        F.expr(
+            f"CASE WHEN z BETWEEN 0 AND {z_max} THEN z ELSE raise_error(concat("
+            f"'zoom ', cast(z as string), ' is outside the tile key range "
+            f"0..{z_max}; raise z_max')) END"
+        ),
+    )
+
+
+def _encode_sorted_tiles(
+    df: DataFrame, z_max: int, order, cols, encode_fn, arrow_cols, schema: str
+) -> DataFrame:
+    """Every tiler not keyed by _keyed_rows: (z, x, y, ...) rows, one
+    exchange on (z, x, y), each tile sorted by ``order``; the packed gid is
+    computed in the projection after the sort (it rides no shuffle), then
+    (gid, *cols) go through the one worker (_encode_keyed) and the digest
+    is computed JVM-side."""
+    gid = (
+        "shiftleft(cast(z as bigint), 52) + shiftleft(cast(x as bigint), 26)"
+        " + cast(y as bigint)"
+    )
+    rows = (
+        _z_in_range(df, z_max)
+        .repartition("z", "x", "y")
+        .sortWithinPartitions("z", "x", "y", *order)
+        .selectExpr(f"{gid} as gid", *cols)
+    )
+    tiles = _encode_keyed(rows, encode_fn, arrow_cols, schema)
+    return tiles.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
+
+
+def _encode_keyed(rows: DataFrame, encode_fn, arrow_cols, schema: str) -> DataFrame:
     """The one mapInArrow worker: complete gid groups of ``rows`` (from
-    _keyed_rows) through ``encode_fn``."""
-    tag_names = frozenset(c for c, _ in tag_cols)
+    _keyed_rows or _encode_sorted_tiles) through ``encode_fn``; the columns
+    named in ``arrow_cols`` reach it as Arrow arrays."""
+    arrow_cols = frozenset(arrow_cols)
     return rows.mapInArrow(
-        lambda batches: carry_group_iter_arrow(batches, encode_fn, tag_names),
+        lambda batches: carry_group_iter(batches, encode_fn, arrow_cols),
         schema,
     )
 
@@ -511,7 +504,7 @@ def encode_point_tiles(
     encoded = _encode_keyed(
         rows,
         lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
-        tag_cols,
+        [c for c, _ in tag_cols],
         ENCODE_SCHEMA,
     )
     # tile digest JVM-side (codegen'd sha2 over the binary column) — keeps
@@ -557,7 +550,7 @@ def encode_point_partials(
     return _encode_keyed(
         rows,
         lambda cols: _encode_partials_group_arrow(cols, tag_cols),
-        tag_cols,
+        [c for c, _ in tag_cols],
         PARTIAL_SCHEMA,
     )
 
@@ -607,43 +600,41 @@ def merge_partial_tiles(
     keys_blob = b"".join(
         pbwire.len_delimited(3, c.encode("utf-8")) for c, _ in tag_cols
     )
+    blob_cols = ("fids", "block", "feat_len", "glen", "vcode", "dict_blob",
+                 "dict_lens", "mvt")
 
-    def merge_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-        starts = list(_group_bounds(pdf)) + [len(pdf)]
-        out = {k: [] for k in (
-            "z", "x", "y", "mvt", "n_features", "n_bytes", "n_layers"
-        )}
-        for s, e in zip(starts[:-1], starts[1:]):
+    def partial(row: dict, nf: int) -> dict:
+        """One partial's arrays as fastmerge takes them."""
+        as64 = lambda c: np.frombuffer(row[c], dtype=np.int32).astype(np.int64)
+        return {
+            "fids": np.frombuffer(row["fids"], dtype=np.int64),
+            "block": np.frombuffer(row["block"], dtype=np.uint8),
+            "feat_len": as64("feat_len"),
+            "glen": as64("glen"),
+            "vcode": as64("vcode").reshape(nf, t),
+            "dict_blob": np.frombuffer(row["dict_blob"], dtype=np.uint8),
+            "dict_lens": as64("dict_lens"),
+        }
+
+    def merge_batch(cols: dict):
+        import pyarrow as pa
+
+        gid = cols["gid"]
+        starts = _gid_bounds(gid)
+        ends = np.append(starts[1:], len(gid))
+        blobs = {c: cols[c].to_pylist() for c in blob_cols}
+        nfs = cols["n_features"]
+        mvt, n_layers = [], []
+        for s, e in zip(starts, ends):
             partials = []
             spliced: dict[str, list[bytes]] = {}
             for i in range(s, e):
-                if pdf["mvt"].iloc[i] is not None:
-                    for nm, msg in tilemerge.split_tile_layers(
-                        bytes(pdf["mvt"].iloc[i])
-                    ):
+                if blobs["mvt"][i] is not None:
+                    for nm, msg in tilemerge.split_tile_layers(blobs["mvt"][i]):
                         spliced.setdefault(nm, []).append(msg)
                     continue
-                nf = int(pdf["n_features"].iloc[i])
                 partials.append(
-                    {
-                        "fids": np.frombuffer(pdf["fids"].iloc[i], dtype=np.int64),
-                        "block": np.frombuffer(pdf["block"].iloc[i], dtype=np.uint8),
-                        "feat_len": np.frombuffer(
-                            pdf["feat_len"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                        "glen": np.frombuffer(
-                            pdf["glen"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                        "vcode": np.frombuffer(
-                            pdf["vcode"].iloc[i], dtype=np.int32
-                        ).astype(np.int64).reshape(nf, t),
-                        "dict_blob": np.frombuffer(
-                            pdf["dict_blob"].iloc[i], dtype=np.uint8
-                        ),
-                        "dict_lens": np.frombuffer(
-                            pdf["dict_lens"].iloc[i], dtype=np.int32
-                        ).astype(np.int64),
-                    }
+                    partial({c: blobs[c][i] for c in blob_cols}, int(nfs[i]))
                 )
             layers: dict[str, bytes] = {}
             if partials:
@@ -656,38 +647,22 @@ def merge_partial_tiles(
                     layers[nm] = tilemerge._merge_layer(nm, msgs)
                 else:
                     layers[nm] = msgs[0]
-            data = b"".join(
+            mvt.append(b"".join(
                 pbwire.len_delimited(3, layers[nm]) for nm in sorted(layers)
-            )
-            out["z"].append(int(pdf["z"].iloc[s]))
-            out["x"].append(int(pdf["x"].iloc[s]))
-            out["y"].append(int(pdf["y"].iloc[s]))
-            out["mvt"].append(data)
-            out["n_features"].append(int(pdf["n_features"].iloc[s:e].sum()))
-            out["n_bytes"].append(len(data))
-            out["n_layers"].append(len(layers))
-        return pd.DataFrame(
-            {
-                "z": pd.array(out["z"], dtype="int32"),
-                "x": pd.array(out["x"], dtype="int64"),
-                "y": pd.array(out["y"], dtype="int64"),
-                "mvt": out["mvt"],
-                "n_features": pd.array(out["n_features"], dtype="int64"),
-                "n_bytes": pd.array(out["n_bytes"], dtype="int64"),
-                "n_layers": pd.array(out["n_layers"], dtype="int32"),
-            }
+            ))
+            n_layers.append(len(layers))
+        return _tile_batch(
+            gid[starts],
+            pa.array(mvt, type=pa.binary()),
+            np.add.reduceat(nfs, starts),
+            [len(d) for d in mvt],
+            n_layers=pa.array(n_layers, type=pa.int32()),
         )
 
-    merged = (
-        parts.repartition("z", "x", "y")
-        .sortWithinPartitions("z", "x", "y")
-        .mapInPandas(
-            lambda b: carry_group_iter(b, merge_batch),
-            "z int, x bigint, y bigint, mvt binary, n_features long, "
-            "n_bytes long, n_layers int",
-        )
+    return _encode_sorted_tiles(
+        parts, MAX_ZOOM, (), ("n_features", *blob_cols), merge_batch, blob_cols,
+        ENCODE_SCHEMA + ", n_layers int",
     )
-    return merged.withColumn("mvt_sha256", F.sha2(F.col("mvt"), 256))
 
 
 def decode_layer_counts(tiles: DataFrame) -> DataFrame:

@@ -44,38 +44,33 @@ def _mega_edges(spark, n_mega: int = 240):
     )
 
 
-def test_pip_edge_salt_auto_matches_unsalted(spark):
+def test_pip_edge_salt_auto_matches_unsalted(spark, monkeypatch):
     geo = fixtures.geotag_df(fixtures.pages_df(spark, "/root/testdata/sf0.001"))
     edges = _mega_edges(spark).persist()
     want = _rows(joins.pip_join(geo, edges))
     assert len(want) > 0
-    # auto-detect trips the threshold (mega-poly has 240 edges)
-    got_auto = _rows(
-        joins.pip_join_partitioned(edges=edges, geotagged=geo, edge_salt_threshold=100)
-    )
-    assert got_auto == want
-    # forced-on selective salting also matches
-    got_forced = _rows(
-        joins.pip_join_partitioned(
-            geo, edges, salt_edges=True, edge_salt_threshold=100
-        )
-    )
-    assert got_forced == want
-    # forced-off (legacy single-reducer routing) still matches
-    got_off = _rows(joins.pip_join_partitioned(geo, edges, salt_edges=False))
+    # default threshold with the stat below it: unsalted single-reducer routing
+    got_off = _rows(joins.pip_join_partitioned(geo, edges, max_edges_per_poly=240))
     assert got_off == want
+    # the threshold is read when the function runs: at 100 the mega-poly
+    # (240 edges) is salted, both without the stat (auto) and with it
+    monkeypatch.setattr(joins, "EDGE_SALT_EDGES_PER_POLY", 100)
+    got_auto = _rows(joins.pip_join_partitioned(edges=edges, geotagged=geo))
+    assert got_auto == want
+    got_salted = _rows(
+        joins.pip_join_partitioned(geo, edges, max_edges_per_poly=240)
+    )
+    assert got_salted == want
     edges.unpersist()
 
 
 def test_pip_edge_salt_auto_detects(spark):
-    """Auto mode computes the per-poly max itself when no stat is passed;
-    normal fixture polys (<= 8 edges) stay unsalted, the mega fixture
-    trips it — both produce identical results (asserted above); here we
-    check the detection boundary itself."""
+    """Without a stat the plan salts through the lazy skew table; normal
+    fixture polys (<= 8 edges) fall under the threshold, so the table is
+    empty and every edge routes to salt 0 — same rows as pip_join."""
     stats = fixtures.polygon_table_stats(8)
     assert stats["max_edges_per_poly"] <= 16
     assert stats["n_edges"] > 0
-    # detection job path (salt_edges=None, no stat): runs and stays correct
     geo = fixtures.geotag_df(fixtures.pages_df(spark, "/root/testdata/sf0.001"))
     edges = fixtures.polygon_edges_df(spark, "/root/testdata/sf0.001")
     assert _rows(joins.pip_join_partitioned(geo, edges)) == _rows(
