@@ -7,7 +7,8 @@ Deployment (north rule):
 
 Resumable: re-running with the same --out skips every tile already marked
 done in the checkpoint manifest (engine.pipeline.manifest), so a killed job
-continues per-tile. --no-resume forces a fresh run id over everything.
+continues per-tile (a retry under the same --run-id first deletes what the
+killed attempt left). --no-resume re-encodes every tile.
 """
 
 from __future__ import annotations
@@ -26,7 +27,7 @@ def main(argv: list[str] | None = None) -> None:
                    help="max features per tile (mega-tile guard, B14)")
     p.add_argument("--no-resume", action="store_true")
     p.add_argument("--master", default=None, help="override master URL (local runs)")
-    p.add_argument("--run-id", default=None)
+    p.add_argument("--run-id", default=None, help="letters, digits, _ and -")
     args = p.parse_args(argv)
 
     from pyspark.sql import functions as F

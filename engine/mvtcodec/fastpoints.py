@@ -18,6 +18,8 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
+from engine.spatial.clipbatch import run_starts
+
 from . import pbwire
 from .commands import MOVE_TO, make_command
 from .tile import VERSION, encode_layer, encode_value
@@ -48,6 +50,52 @@ def _ragged_copy(dst, dst_starts, src, src_starts, lengths):
     src_idx = np.repeat(src_starts, lengths)
     src_idx += pos
     dst[dst_idx] = src[src_idx]
+
+
+def _tile_dictionaries(tile_of_row, n_tiles, keys, tag_columns, n):
+    """Per-tile first-seen tag dictionaries, batch-wide, for n features
+    whose tile ordinals ``tile_of_row`` are grouped. Returns (tag_idx
+    uint64[n, 2t] interleaved (key, value code) pairs, vcode int64[n, t],
+    vblob, vstart, vlen, entry_lens, e_counts int64[n_tiles] entries per
+    tile) in encode_point_features_sorted's layout."""
+    t = len(keys)
+    codes, uniques = _global_tag_codes(keys, tag_columns, n)
+    K = len(uniques) + 1
+    pair = np.repeat(tile_of_row, t) * K + codes
+    uniq_pairs, first_idx = np.unique(pair, return_index=True)
+    ug = uniq_pairs // K
+    perm = np.lexsort((first_idx, ug))  # tile-major, first-seen order
+    sorted_ug = ug[perm]
+    grp_starts = run_starts(sorted_ug)
+    grp_sizes = np.diff(np.append(grp_starts, len(perm)))
+    local_pos = np.empty(len(uniq_pairs), dtype=np.int64)
+    local_pos[perm] = np.arange(len(perm)) - np.repeat(grp_starts, grp_sizes)
+    vcode = local_pos[np.searchsorted(uniq_pairs, pair)].reshape(n, t)
+    tag_idx = np.empty((n, 2 * t), dtype=np.uint64)
+    tag_idx[:, 0::2] = np.arange(t, dtype=np.uint64)[None, :]
+    tag_idx[:, 1::2] = vcode.astype(np.uint64)
+    # per-tile dictionary value bytes (first-seen order): gather cached
+    # per-unique-value encodings with one vectorized ragged copy
+    cache = [pbwire.len_delimited(4, encode_value(vt, v)) for (vt, v) in uniques]
+    cache_lens = np.fromiter((len(c) for c in cache), dtype=np.int64, count=len(cache))
+    cache_starts = np.cumsum(cache_lens) - cache_lens
+    cache_buf = np.frombuffer(b"".join(cache), dtype=np.uint8)
+    codes_in_order = (uniq_pairs % K)[perm]
+    entry_lens = cache_lens[codes_in_order]
+    entry_starts = np.cumsum(entry_lens) - entry_lens
+    vblob = np.empty(int(entry_lens.sum()), dtype=np.uint8)
+    _ragged_copy(vblob, entry_starts, cache_buf, cache_starts[codes_in_order], entry_lens)
+    # per-tile (vstart, vlen) into vblob and entry counts; grp_starts
+    # indexes codes_in_order
+    tiles_with_dict = sorted_ug[grp_starts]
+    vlen = np.zeros(n_tiles, dtype=np.int64)
+    vstart = np.zeros(n_tiles, dtype=np.int64)
+    e_counts = np.zeros(n_tiles, dtype=np.int64)
+    if len(grp_starts):
+        vlen[tiles_with_dict] = np.add.reduceat(entry_lens, grp_starts)
+    vstart[tiles_with_dict] = entry_starts[grp_starts]
+    e_counts[tiles_with_dict] = grp_sizes
+    return tag_idx, vcode, vblob, vstart, vlen, entry_lens, e_counts
 
 
 def _global_tag_codes(
@@ -164,54 +212,9 @@ def encode_point_features_sorted(
     entry_lens = np.zeros(0, dtype=np.int64)
     e_bounds = np.zeros(n_tiles + 1, dtype=np.int64)
     if t:
-        codes, uniques = _global_tag_codes(keys, tag_columns, n)
-        K = len(uniques) + 1
-        g_el = np.repeat(tile_of_row, t)
-        pair = g_el * K + codes
-        uniq_pairs, first_idx = np.unique(pair, return_index=True)
-        ug = uniq_pairs // K
-        ucode = uniq_pairs % K
-        perm = np.lexsort((first_idx, ug))  # group-major, first-seen order
-        sorted_ug = ug[perm]
-        # cumcount within group
-        grp_change = np.empty(len(perm), dtype=bool)
-        if len(perm):
-            grp_change[0] = True
-            grp_change[1:] = np.diff(sorted_ug) != 0
-        grp_starts = np.flatnonzero(grp_change)
-        local_sorted = np.arange(len(perm)) - np.repeat(
-            grp_starts, np.diff(np.append(grp_starts, len(perm)))
+        tag_idx, vcode, vblob, vstart, vlen, entry_lens, e_counts = (
+            _tile_dictionaries(tile_of_row, n_tiles, keys, tag_columns, n)
         )
-        local_pos = np.empty(len(uniq_pairs), dtype=np.int64)
-        local_pos[perm] = local_sorted
-        vcode = local_pos[np.searchsorted(uniq_pairs, pair)].reshape(n, t)
-        tag_idx = np.empty((n, 2 * t), dtype=np.uint64)
-        tag_idx[:, 0::2] = np.arange(t, dtype=np.uint64)[None, :]
-        tag_idx[:, 1::2] = vcode.astype(np.uint64)
-        # per-tile dictionary value bytes (first-seen order): gather cached
-        # per-unique-value encodings with one vectorized ragged copy
-        cache = [
-            pbwire.len_delimited(4, encode_value(vt, v)) for (vt, v) in uniques
-        ]
-        cache_lens = np.fromiter((len(c) for c in cache), dtype=np.int64, count=len(cache))
-        cache_starts = np.cumsum(cache_lens) - cache_lens
-        cache_buf = np.frombuffer(b"".join(cache), dtype=np.uint8)
-        codes_in_order = ucode[perm]
-        entry_lens = cache_lens[codes_in_order]
-        entry_starts = np.cumsum(entry_lens) - entry_lens
-        vblob = np.empty(int(entry_lens.sum()), dtype=np.uint8)
-        _ragged_copy(vblob, entry_starts, cache_buf, cache_starts[codes_in_order], entry_lens)
-        # per-tile (vstart, vlen) into vblob; grp_starts indexes codes_in_order
-        tiles_with_dict = sorted_ug[grp_starts]
-        vlen = np.zeros(n_tiles, dtype=np.int64)
-        vstart = np.zeros(n_tiles, dtype=np.int64)
-        grp_bytes = np.add.reduceat(entry_lens, grp_starts) if len(grp_starts) else np.zeros(0, np.int64)
-        vlen[tiles_with_dict] = grp_bytes
-        vstart[tiles_with_dict] = entry_starts[grp_starts]
-        # entry index bounds per tile (counts > 0 and t > 0 -> every tile
-        # has a dictionary, so grp_starts covers every tile in order)
-        e_counts = np.zeros(n_tiles, dtype=np.int64)
-        e_counts[tiles_with_dict] = np.diff(np.append(grp_starts, len(perm)))
         np.cumsum(e_counts, out=e_bounds[1:])
     else:
         vblob = np.zeros(0, dtype=np.uint8)

@@ -26,9 +26,11 @@ from __future__ import annotations
 
 import numpy as np
 
+from engine.spatial.clipbatch import run_starts
+
 from . import pbwire
-from .fastpoints import _global_tag_codes, _ragged_copy
-from .tile import VERSION, encode_value
+from .fastpoints import _ragged_copy, _tile_dictionaries
+from .tile import VERSION
 
 
 def _scatter_bytes(dst: np.ndarray, dst_pos: np.ndarray, blob: bytes, lens: np.ndarray):
@@ -64,9 +66,7 @@ def encode_tagged_layers(
     tag_columns = tag_columns or {}
     keys = list(tag_columns.keys())
     t = len(keys)
-    t_starts = np.flatnonzero(
-        np.concatenate([[True], tile_ids[1:] != tile_ids[:-1]])
-    )
+    t_starts = run_starts(tile_ids)
     t_bounds = np.append(t_starts, F)
     t_sizes = np.diff(t_bounds)
     n_tiles = len(t_starts)
@@ -80,58 +80,21 @@ def encode_tagged_layers(
     g_len = bcum[np.asarray(woff[1:], dtype=np.int64)] - g_start
 
     # ---- per-tile first-seen tag dictionaries, batch-wide (same grouped
-    # first-occurrence ranking as fastpoints.encode_point_tiles_sorted)
+    # first-occurrence ranking as fastpoints.encode_point_tiles_sorted:
+    # fastpoints._tile_dictionaries)
     tag_blob = b""
     tag_lens = np.zeros(F, dtype=np.int64)
-    tags_payload_len = np.zeros(F, dtype=np.int64)
     vblob = np.zeros(0, dtype=np.uint8)
     vlen = np.zeros(n_tiles, dtype=np.int64)
     vstart = np.zeros(n_tiles, dtype=np.int64)
     keys_blob = b"".join(pbwire.len_delimited(3, k.encode("utf-8")) for k in keys)
     if t:
-        codes, uniques = _global_tag_codes(keys, tag_columns, F)
-        K = len(uniques) + 1
-        pair = np.repeat(tile_ord, t) * K + codes
-        uniq_pairs, first_idx = np.unique(pair, return_index=True)
-        ug = uniq_pairs // K
-        ucode = uniq_pairs % K
-        perm = np.lexsort((first_idx, ug))  # tile-major, first-seen order
-        sorted_ug = ug[perm]
-        grp_change = np.empty(len(perm), dtype=bool)
-        grp_change[0] = True
-        grp_change[1:] = np.diff(sorted_ug) != 0
-        grp_starts = np.flatnonzero(grp_change)
-        local_sorted = np.arange(len(perm)) - np.repeat(
-            grp_starts, np.diff(np.append(grp_starts, len(perm)))
+        tag_idx, _, vblob, vstart, vlen, _, _ = _tile_dictionaries(
+            tile_ord, n_tiles, keys, tag_columns, F
         )
-        local_pos = np.empty(len(uniq_pairs), dtype=np.int64)
-        local_pos[perm] = local_sorted
-        vcode = local_pos[np.searchsorted(uniq_pairs, pair)].reshape(F, t)
-        tag_idx = np.empty((F, 2 * t), dtype=np.uint64)
-        tag_idx[:, 0::2] = np.arange(t, dtype=np.uint64)[None, :]
-        tag_idx[:, 1::2] = vcode.astype(np.uint64)
         tflat = tag_idx.reshape(-1)
         tag_blob = pbwire.varint_array(tflat)
         tag_lens = pbwire.varint_array_lengths(tflat).reshape(F, -1).sum(axis=1)
-        tags_payload_len = tag_lens
-        # per-tile dictionary value bytes (first-seen order)
-        cache = [pbwire.len_delimited(4, encode_value(vt, v)) for (vt, v) in uniques]
-        cache_lens = np.fromiter(
-            (len(c) for c in cache), dtype=np.int64, count=len(cache)
-        )
-        cache_starts = np.cumsum(cache_lens) - cache_lens
-        cache_buf = np.frombuffer(b"".join(cache), dtype=np.uint8)
-        codes_in_order = ucode[perm]
-        entry_lens = cache_lens[codes_in_order]
-        entry_starts = np.cumsum(entry_lens) - entry_lens
-        vblob = np.empty(int(entry_lens.sum()), dtype=np.uint8)
-        _ragged_copy(
-            vblob, entry_starts, cache_buf, cache_starts[codes_in_order], entry_lens
-        )
-        tiles_with_dict = sorted_ug[grp_starts]
-        grp_bytes = np.add.reduceat(entry_lens, grp_starts)
-        vlen[tiles_with_dict] = grp_bytes
-        vstart[tiles_with_dict] = entry_starts[grp_starts]
 
     # ---- per-feature varint pieces
     fid_blob = pbwire.varint_array(fids)
@@ -142,8 +105,8 @@ def encode_tagged_layers(
     # field sizes: id(1+fid) tags(1+hdr+payload) type(2) geometry(1+glen+g)
     msg_len = (1 + fid_len) + 2 + (1 + glen_len + g_len)
     if t:
-        tp_hdr = pbwire.varint_array_lengths(tags_payload_len)
-        msg_len = msg_len + 1 + tp_hdr + tags_payload_len
+        tp_hdr = pbwire.varint_array_lengths(tag_lens)
+        msg_len = msg_len + 1 + tp_hdr + tag_lens
     mlen_blob = pbwire.varint_array(msg_len)
     mlen_len = pbwire.varint_array_lengths(msg_len)
     framed_len = 1 + mlen_len + msg_len  # tag(2,LEN) + varint(len) + msg
@@ -162,7 +125,7 @@ def encode_tagged_layers(
     if t:
         out[pos] = 0x12  # tag(2, LEN): packed tags
         _scatter_bytes(
-            out, pos + 1, pbwire.varint_array(tags_payload_len), tp_hdr
+            out, pos + 1, pbwire.varint_array(tag_lens), tp_hdr
         )
         pos = pos + 1 + tp_hdr
         _scatter_bytes(out, pos, tag_blob, tag_lens)

@@ -29,6 +29,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
+from engine.spatial.clipbatch import run_starts
+
 CROSSING_COND = (
     "((y1 > lat) != (y2 > lat)) AND (lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1))"
 )
@@ -209,9 +211,7 @@ def pip_join_numpy(
             code = (gx + (1 << 20)) * (1 << 21) + (gy + (1 << 20))
             order = np.argsort(code, kind="stable")
             sc = code[order]
-            cell_starts = np.flatnonzero(
-                np.concatenate([[True], sc[1:] != sc[:-1]])
-            )
+            cell_starts = run_starts(sc)
             cell_ends = np.append(cell_starts[1:], len(sc))
             pair_page, pair_poly = [], []
             for s, e in zip(cell_starts, cell_ends):
@@ -236,9 +236,7 @@ def pip_join_numpy(
                 polys_c = np.concatenate(pair_poly)
                 po = np.argsort(polys_c, kind="stable")
                 pages_c, polys_c = pages_c[po], polys_c[po]
-                p_starts = np.flatnonzero(
-                    np.concatenate([[True], polys_c[1:] != polys_c[:-1]])
-                )
+                p_starts = run_starts(polys_c)
                 p_ends = np.append(p_starts[1:], len(polys_c))
                 for s, e in zip(p_starts, p_ends):
                     slot = int(polys_c[s])

@@ -3,12 +3,21 @@
 North-rule contract: "every partition emits lineage + row-count/byte metrics
 into a checkpoint manifest so the job resumes per-tile after failure".
 
-Design (all DataFrame-level, no driver-side loops):
-- The tile encoder already emits per-tile (rows, bytes, sha256). This module
-  adds per-partition lineage (``spark_partition_id``), an input signature
-  (order-independent xor-fold of the tile's feature ids — cheap provenance:
-  a resume re-encoding the same inputs reproduces the same signature), and
-  appends one manifest row per tile to an append-only parquet table.
+Design (one encode pass: no cache, no second scan of the source):
+- The point encoder's worker emits per tile (rows, bytes) and the input
+  signature ``input_sig``, the order-independent xor-fold of
+  xxhash64(feature_id) over the sorted feature run it already holds (cheap
+  provenance: a resume re-encoding the same inputs reproduces it).
+- publish_tiles writes the tiles ONCE with their lineage (run_id,
+  ``spark_partition_id``, input_sig) beside the mvt bytes; the manifest rows
+  are a projection of exactly the files that write produced, read back with
+  an explicit schema that prunes mvt. Their append is the single commit point.
+- Tile store: flat parquet files ``tiles/<run_id>.part-*``, renamed in from
+  ``tiles/_staging/<run_id>`` (hidden from readers) after deleting the files
+  an uncommitted attempt of the same run_id left, so a torn write plus a
+  same-run_id retry stores each tile once; a committed attempt's files stay.
+  (``run_id=<id>/`` directories would make Spark's partition discovery hide
+  files at the store's root.)
 - Resume = ``left_anti`` join of the feature stream against the completed
   manifest on (z, x, y): only tiles with no ``done`` manifest row are
   re-encoded. Because the encode path is byte-deterministic (tiler docstring),
@@ -25,6 +34,7 @@ row); this is engine-side scale infrastructure.
 
 from __future__ import annotations
 
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -34,44 +44,31 @@ MANIFEST_SCHEMA = (
     "rows bigint, bytes bigint, mvt_sha256 string, input_sig bigint, "
     "status string, ts timestamp"
 )
+# the stored tile columns the manifest projects (mvt pruned)
+_STORED_LINEAGE = (
+    "run_id string, partition_id int, z int, x bigint, y bigint, "
+    "n_features bigint, n_bytes bigint, mvt_sha256 string, input_sig bigint"
+)
 
 
-def input_signature(indexed: DataFrame) -> DataFrame:
-    """Order-independent lineage signature per tile: xor-fold of feature ids.
-
-    xor is commutative/associative -> invariant under partitioning and
-    executor count, and computable map-side (partial agg) with no sort.
-    """
-    return indexed.groupBy("z", "x", "y").agg(
-        F.expr("bit_xor(xxhash64(feature_id))").alias("input_sig")
-    )
+def _fs(spark: SparkSession, path: str):
+    """(Hadoop FileSystem, Path) for ``path``, as Spark's writers see it."""
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark._jsc.hadoopConfiguration()), p
 
 
-def tiles_to_manifest(
-    tiles: DataFrame, run_id: str, stage: str = "encode_tiles"
-) -> DataFrame:
-    """One manifest row per emitted tile, with the emitting partition id."""
-    return tiles.select(
-        F.lit(run_id).alias("run_id"),
-        F.lit(stage).alias("stage"),
-        F.spark_partition_id().alias("partition_id"),
-        "z",
-        "x",
-        "y",
-        F.col("n_features").alias("rows"),
-        F.col("n_bytes").alias("bytes"),
-        "mvt_sha256",
-        "input_sig",
-        F.lit("done").alias("status"),
-        F.current_timestamp().alias("ts"),
-    )
+def _read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
+    """The manifest, read with MANIFEST_SCHEMA (no inference job); None
+    only if the path does not exist — an unreadable manifest fails the job
+    rather than resume from nothing."""
+    fs, p = _fs(spark, manifest_path)
+    return spark.read.schema(MANIFEST_SCHEMA).parquet(manifest_path) if fs.exists(p) else None
 
 
 def completed_tiles(spark: SparkSession, manifest_path: str) -> DataFrame | None:
     """Distinct (z,x,y) already marked done; None if no manifest exists yet."""
-    try:
-        m = spark.read.parquet(manifest_path)
-    except Exception:
+    m = _read_manifest(spark, manifest_path)
+    if m is None:
         return None
     return m.filter(F.col("status") == "done").select("z", "x", "y").distinct()
 
@@ -89,6 +86,57 @@ def pending_features(indexed: DataFrame, done: DataFrame | None) -> DataFrame:
     return indexed.join(done, ["z", "x", "y"], "left_anti")
 
 
+def publish_tiles(
+    spark: SparkSession, tiles: DataFrame, tiles_dir: str, manifest_dir: str,
+    run_id: str, manifest_mode: str = "append",
+) -> None:
+    """Write ``tiles`` (tiler.encode_point_tiles rows) once into the tile
+    store ``tiles_dir`` as run ``run_id``, then commit their manifest rows.
+
+    The store's ``<run_id>.part-*`` files that no commit names (a torn
+    attempt's) are deleted, so a retry stores each tile once. ``manifest_mode``
+    "append": ``manifest_dir`` accumulates runs, and the files of an earlier
+    committed attempt of ``run_id`` stay (a resumed rerun adds only pending
+    tiles). "overwrite": ``manifest_dir`` belongs to this run alone (one
+    streaming micro-batch), and a replay replaces the run."""
+    if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9_-]*", run_id):
+        raise ValueError(f"run_id {run_id!r} must match [A-Za-z0-9][A-Za-z0-9_-]*")
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs, store = _fs(spark, tiles_dir)
+    prefix = f"{run_id}.part-"
+    listed = fs.listStatus(store) if fs.exists(store) else []
+    stale = [st.getPath() for st in listed if st.getPath().getName().startswith(prefix)]
+    m = _read_manifest(spark, manifest_dir) if stale and manifest_mode == "append" else None
+    if m is not None:  # an attempt's files are committed whole or not at all
+        mine = m.filter(F.col("run_id") == run_id).select("z", "x", "y")
+        torn = spark.read.schema("z int, x bigint, y bigint").parquet(
+            *[p.toString() for p in stale]
+        ).select("z", "x", "y", "_metadata.file_name").join(mine, ["z", "x", "y"], "left_anti")
+        names = {r.file_name for r in torn.select("file_name").distinct().collect()}
+        stale = [p for p in stale if p.getName() in names]
+    staging = Path(store, f"_staging/{run_id}")
+    tiles.withColumns(
+        {"partition_id": F.spark_partition_id(), "run_id": F.lit(run_id)}
+    ).write.mode("overwrite").parquet(staging.toString())
+    for p in stale:
+        fs.delete(p, False)
+    written = []
+    for st in fs.listStatus(staging):
+        name = st.getPath().getName()
+        if name.startswith("part-"):
+            dst = Path(store, f"{run_id}.{name}")
+            if not fs.rename(st.getPath(), dst):
+                raise OSError(f"could not move {st.getPath()} to {dst}")
+            written.append(dst.toString())
+    fs.delete(staging, True)
+    # the commit point: only tiles named here are visible to readers
+    spark.read.schema(_STORED_LINEAGE).parquet(*written).selectExpr(
+        "run_id", "'encode_tiles' as stage", "partition_id", "z", "x", "y",
+        "n_features as rows", "n_bytes as bytes", "mvt_sha256", "input_sig",
+        "'done' as status", "current_timestamp() as ts",
+    ).write.mode(manifest_mode).parquet(manifest_dir)
+
+
 def run_tile_stage(
     spark: SparkSession,
     indexed: DataFrame,
@@ -97,42 +145,25 @@ def run_tile_stage(
     resume: bool = True,
     **encode_kwargs,
 ) -> str:
-    """Encode all not-yet-done tiles; append tiles + manifest parquet.
+    """Encode all not-yet-done tiles in one pass and publish them with
+    their manifest rows; returns the run_id. Layout: ``{out_dir}/tiles``
+    (the store: encode_point_tiles rows + run_id, partition_id) and
+    ``{out_dir}/manifest`` (MANIFEST_SCHEMA, append-only).
 
-    Layout: ``{out_dir}/tiles`` (run_id,z,x,y,mvt,...) and
-    ``{out_dir}/manifest`` (MANIFEST_SCHEMA), both append-only. Returns the
-    run_id.
-
-    Commit protocol: tile rows are keyed by run_id and the MANIFEST append
-    is the single commit point — a crash between the two writes leaves
-    orphaned tile rows with no 'done' manifest row, which ``read_tiles``
-    filters out (semi join on (run_id,z,x,y)) and the next resume simply
-    re-encodes. Byte determinism makes the retried bytes identical, and the
-    manifest join makes the duplicates invisible, so crash + resume reads
-    byte-identical to a clean run (tests/test_manifest_resume.py).
+    Commit protocol: the manifest append is the single commit point — a
+    crash before it leaves tile files with no 'done' manifest row, which
+    ``read_tiles`` filters out (semi join on (run_id, z, x, y)); the next
+    resume re-encodes them, and a retry under the same run_id replaces
+    them. Byte determinism makes the retried bytes identical, so crash +
+    resume reads byte-identical to a clean run (tests/test_manifest_resume.py).
     """
     from . import tiler
 
     run_id = run_id or uuid.uuid4().hex[:12]
     manifest_path = f"{out_dir}/manifest"
     done = completed_tiles(spark, manifest_path) if resume else None
-    todo = pending_features(indexed, done)
-
-    sigs = input_signature(todo)
-    tiles = tiler.encode_point_tiles(todo, **encode_kwargs)
-    # one row per tile on both sides; joining on the tile key keeps the
-    # lineage column co-partitioned with the encode output
-    tiles = tiles.join(sigs, ["z", "x", "y"])
-
-    tiles.persist()
-    try:
-        tiles.drop("input_sig").withColumn("run_id", F.lit(run_id)).write.mode(
-            "append"
-        ).parquet(f"{out_dir}/tiles")
-        # the commit point: only tiles named here are visible to readers
-        tiles_to_manifest(tiles, run_id).write.mode("append").parquet(manifest_path)
-    finally:
-        tiles.unpersist()
+    tiles = tiler.encode_point_tiles(pending_features(indexed, done), **encode_kwargs)
+    publish_tiles(spark, tiles, f"{out_dir}/tiles", manifest_path, run_id)
     return run_id
 
 

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from engine.mvtcodec import faststream, geomstream, tile as tilemod
 from engine.mvtcodec.commands import MOVE_TO, make_command
 from engine.mvtcodec.zigzag import make_parameter
+from engine.spatial.clipbatch import run_starts
 
 from . import fixtures, index
 from .polytiler import (
@@ -58,19 +59,12 @@ def _feature_layer(name, gid, g, starts, geom_type, words, woff):
     return _layer_tiles([(gid[starts], layers)])
 
 
-def _run_starts(gid, g) -> np.ndarray:
-    """First row of each (gid, g) run in a sorted batch."""
-    change = np.ones(len(gid), dtype=bool)
-    change[1:] = (gid[1:] != gid[:-1]) | (g[1:] != g[:-1])
-    return np.flatnonzero(change)
-
-
 def _encode_mpoint_batch(cols):
     """(gid, g, qx, qy) rows sorted by (tile, g, qx, qy) -> one MultiPoint
     feature per (tile, g): MoveTo(n), then n ABSOLUTE zigzag pairs (the
     reference marshal.go:57-68 quirk, geomstream.encode_multipoint)."""
     gid, g = cols["gid"], cols["g"]
-    starts = _run_starts(gid, g)
+    starts = run_starts(gid, g)
     n = np.diff(np.append(starts, len(gid)))
     woff = np.zeros(len(starts) + 1, dtype=np.int64)
     np.cumsum(1 + 2 * n, out=woff[1:])
@@ -121,7 +115,7 @@ def _encode_mpoly_batch(cols):
     words, woff, s_ring = _polygon_ring_words(pts, rid, r_poly, r_ext)
     rows = r_starts[s_ring]  # first row of each surviving ring
     gid, g = cols["gid"][rows], cols["g"][rows]
-    starts = _run_starts(gid, g)
+    starts = run_starts(gid, g)
     return _feature_layer(
         "mpolys", gid, g, starts, geomstream.GEOM_POLYGON, words,
         woff[np.append(starts, len(rows))],

@@ -48,6 +48,7 @@ from .tiler import (
     TILE_SCHEMA,
     _arrow_tags,
     _encode_sorted_tiles,
+    _gid_fields,
     _tile_batch,
 )
 
@@ -253,14 +254,12 @@ def encode_polygon_tiles_rowwise(
 # --------------------------------------------------- vectorized stream ----
 
 
-def _run_ids(*cols) -> np.ndarray:
-    """Ordinal run ids over a sorted composite key (0..n_runs-1)."""
-    n = len(cols[0])
-    change = np.zeros(n, dtype=bool)
-    change[0] = True
-    for c in cols:
-        change[1:] |= c[1:] != c[:-1]
-    return np.cumsum(change) - 1
+def _ordinals(starts: np.ndarray, n: int) -> np.ndarray:
+    """Run ordinal (0..len(starts)-1) of each of n rows, given the runs'
+    first rows (clipbatch.run_starts)."""
+    first = np.zeros(n, dtype=np.int64)
+    first[starts] = 1
+    return np.cumsum(first) - 1
 
 
 def _vertex_rings(cols):
@@ -269,15 +268,14 @@ def _vertex_rings(cols):
     vertex, ring ordinal per vertex, each ring's first row, and the
     polygon ordinal and exterior flag per ring."""
     gid, pid, ridx = cols["gid"], cols["poly_id"], cols["ring_idx"]
-    z = (gid >> 52) & 31
-    x = ((gid >> 26) & ((1 << 26) - 1)).astype(np.float64)
-    y = (gid & ((1 << 26) - 1)).astype(np.float64)
+    z, x, y = _gid_fields(gid)
     u, v = lnglat_to_unit(cols["lon"], cols["lat"])
     scale = np.ldexp(np.float64(EXTENT), z)  # 4096 * 2^z
     pts = np.stack([u * scale - x * float(EXTENT), v * scale - y * float(EXTENT)], axis=1)
-    rid = _run_ids(gid, pid, ridx)
-    r_starts = clipbatch.ring_starts(rid)
-    return pts, rid, r_starts, _run_ids(gid, pid)[r_starts], ridx[r_starts] == 0
+    r_starts = clipbatch.run_starts(gid, pid, ridx)
+    rid = _ordinals(r_starts, len(gid))
+    r_poly = _ordinals(clipbatch.run_starts(gid[r_starts], pid[r_starts]), len(r_starts))
+    return pts, rid, r_starts, r_poly, ridx[r_starts] == 0
 
 
 def _polygon_ring_words(pts, rid, r_poly, r_ext):
@@ -312,7 +310,7 @@ def _polygon_ring_words(pts, rid, r_poly, r_ext):
     q2 = clipbatch.reverse_rings(q, crid, rev)[vmask]
     srid = crid[vmask]
     words, woff = clipbatch.encode_rings_words(q2, srid, close=True)
-    return words, woff, srid[clipbatch.ring_starts(srid)]
+    return words, woff, srid[clipbatch.run_starts(srid)]
 
 
 def _layer_tiles(layers):
@@ -339,7 +337,7 @@ def _encode_poly_vertex_batch(cols):
 
     # ---- polygons layer: one feature per polygon with a surviving ring
     poly_words, poly_woff, s_ring = _polygon_ring_words(pts, rid, r_poly, r_ext)
-    feat_start = np.flatnonzero(np.diff(r_poly[s_ring], prepend=-1))
+    feat_start = clipbatch.run_starts(r_poly[s_ring])
     poly_rows = r_starts[s_ring[feat_start]]  # a representative row per feature
     poly_woff = poly_woff[np.append(feat_start, len(s_ring))]
 
@@ -364,7 +362,7 @@ def _encode_poly_vertex_batch(cols):
         keep = np.ones(len(pq), dtype=bool)
         keep[1:] = ((pq[1:] != pq[:-1]).any(axis=1)) | (ppid[1:] != ppid[:-1])
         pq, ppid = pq[keep], ppid[keep]
-        p_starts = clipbatch.ring_starts(ppid)
+        p_starts = clipbatch.run_starts(ppid)
         p_sizes = np.append(p_starts[1:], len(pq)) - p_starts
         p_ring = rid[np.flatnonzero(visible)[new_part]]  # ring per part
         p_ok = p_sizes >= 2
@@ -376,7 +374,7 @@ def _encode_poly_vertex_batch(cols):
             )
             sp_ring = p_ring[p_ok]
             sp_poly = r_poly[sp_ring]
-            feat_start = clipbatch.ring_starts(sp_poly)
+            feat_start = clipbatch.run_starts(sp_poly)
             line_rows = r_starts[sp_ring[feat_start]]
             line_woff = line_woff[np.append(feat_start, len(sp_poly))]
 

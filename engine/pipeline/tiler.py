@@ -32,6 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
 from engine.mvtcodec import fastmerge, fastpoints, pbwire
+from engine.spatial.clipbatch import run_starts
 
 from . import index, tilemerge
 
@@ -42,6 +43,7 @@ TILE_SCHEMA = (
     "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long, mvt_sha256 string"
 )
 ENCODE_SCHEMA = "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long"
+POINT_SCHEMA = ENCODE_SCHEMA + ", input_sig long"
 PARTIAL_SCHEMA = (
     "z int, x bigint, y bigint, n_features long, fids binary, block binary, "
     "feat_len binary, glen binary, vcode binary, dict_blob binary, "
@@ -71,12 +73,26 @@ def cap_features_per_tile(
     )
 
 
-def _gid_bounds(gid: np.ndarray) -> np.ndarray:
-    """Start offsets of each gid run in a pre-sorted int64 array."""
-    change = np.empty(len(gid), dtype=bool)
-    change[0] = True
-    np.not_equal(gid[1:], gid[:-1], out=change[1:])
-    return np.flatnonzero(change)
+_XXH64_PRIMES = tuple(np.uint64(p) for p in (
+    0x9E3779B185EBCA87, 0xC2B2AE3D27D4EB4F, 0x165667B19E3779F9,
+    0x85EBCA77C2B2AE63, 0x27D4EB2F165667C5 + 42 + 8,  # p5 + Spark's seed + 8
+))
+
+
+def xxhash64(v: np.ndarray) -> np.ndarray:
+    """Spark's ``xxhash64`` of int64 values (XXH64.hashLong, seed 42) in
+    numpy, bit for bit; uint64 arithmetic wraps like the JVM's."""
+    p1, p2, p3, p4, seeded = _XXH64_PRIMES
+    u = np.uint64
+    h = np.asarray(v, dtype=np.int64).view(u) * p2
+    h = ((h << u(31)) | (h >> u(33))) * p1
+    h ^= seeded
+    h = ((h << u(27)) | (h >> u(37))) * p1 + p4
+    for shift, prime in ((33, p2), (29, p3)):
+        h ^= h >> u(shift)
+        h *= prime
+    h ^= h >> u(32)
+    return h.view(np.int64)
 
 
 def _arrow_tags(cols, tag_cols) -> dict:
@@ -105,17 +121,19 @@ def _arrow_tags(cols, tag_cols) -> dict:
     return tags
 
 
+def _gid_fields(g: np.ndarray):
+    """(z, x, y) int64 arrays unpacked from packed tile gids
+    (z<<52 | x<<26 | y); any salt bits above z are dropped."""
+    mask = (1 << 26) - 1
+    return (g >> 52) & 31, (g >> 26) & mask, g & mask
+
+
 def _gid_tile_arrays(g: np.ndarray) -> list:
-    """(z, x, y) Arrow columns unpacked from group-start gids; any salt
-    bits above z are dropped."""
+    """(z, x, y) Arrow columns (int32, int64, int64) of group-start gids."""
     import pyarrow as pa
 
-    mask = (1 << 26) - 1
-    return [
-        pa.array(((g >> 52) & 31).astype(np.int32), type=pa.int32()),
-        pa.array((g >> 26) & mask, type=pa.int64()),
-        pa.array(g & mask, type=pa.int64()),
-    ]
+    z, x, y = _gid_fields(g)
+    return [pa.array(z.astype(np.int32)), pa.array(x), pa.array(y)]
 
 
 def _tile_batch(g: np.ndarray, mvt, n_features, n_bytes, **extra):
@@ -142,20 +160,17 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     ``cols``: numpy int64 arrays for gid/qx/qy/feature_id, pyarrow arrays
     for tag columns. No pandas frame, no per-row Python objects anywhere:
     the output binary column is built straight from the encoder's flat
-    buffer + offsets (encode_point_tiles_sorted_raw)."""
+    buffer + offsets (encode_point_tiles_sorted_raw). Each tile's lineage
+    signature ``input_sig`` (xor of xxhash64 over its feature ids) folds
+    from the same sorted run."""
     import pyarrow as pa
 
     gid = cols["gid"]
-    starts = _gid_bounds(gid)
+    starts = run_starts(gid)
     counts = np.diff(np.append(starts, len(gid)))
     buf, tstarts, ttotal = fastpoints.encode_point_tiles_sorted_raw(
-        counts,
-        cols["feature_id"],
-        cols["qx"],
-        cols["qy"],
-        _arrow_tags(cols, tag_cols),
-        layer_name,
-        extent,
+        counts, cols["feature_id"], cols["qx"], cols["qy"],
+        _arrow_tags(cols, tag_cols), layer_name, extent,
     )
     n_tiles = len(tstarts)
     if len(buf) >= (1 << 31):
@@ -165,13 +180,14 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
             "encoded tile group exceeds 2 GiB of tile bytes; split the "
             "group (salted partial encode) before the Arrow batch build"
         )
-    offsets = np.empty(n_tiles + 1, dtype=np.int32)
-    offsets[:-1] = tstarts
-    offsets[-1] = len(buf)
+    offsets = np.append(tstarts, len(buf)).astype(np.int32)
     mvt = pa.Array.from_buffers(
         pa.binary(), n_tiles, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
     )
-    return _tile_batch(gid[starts], mvt, counts, ttotal)
+    sig = np.bitwise_xor.reduceat(xxhash64(cols["feature_id"]), starts)
+    return _tile_batch(
+        gid[starts], mvt, counts, ttotal, input_sig=pa.array(sig, type=pa.int64())
+    )
 
 
 def _encode_partials_group_arrow(cols, tag_cols):
@@ -183,7 +199,7 @@ def _encode_partials_group_arrow(cols, tag_cols):
     import pyarrow as pa
 
     gid = cols["gid"]
-    starts = _gid_bounds(gid)
+    starts = run_starts(gid)
     counts = np.diff(np.append(starts, len(gid)))
     fids = cols["feature_id"]
     fb = fastpoints.encode_point_features_sorted(
@@ -271,7 +287,7 @@ def carry_group_iter(batches, encode_fn, arrow_cols: frozenset):
             continue
         cols = to_cols(rb)
         gid = cols["gid"]
-        starts = _gid_bounds(gid)
+        starts = run_starts(gid)
         tail = int(starts[-1])
         body_start = 0
         if pend:
@@ -493,7 +509,10 @@ def encode_point_tiles(
     extent: int = EXTENT,
     partition_mode: str = "hash",
 ) -> DataFrame:
-    """(z, u, v, feature_id, tags...) -> one MVT tile row per (z,x,y).
+    """(z, u, v, feature_id, tags...) -> one MVT tile row per (z,x,y):
+    POINT_SCHEMA plus the JVM-side ``mvt_sha256``. ``input_sig`` is the
+    tile's lineage signature, bit_xor(xxhash64(feature_id)) over its
+    features — what the checkpoint manifest records.
 
     ``df`` holds zoom-exploded rows with z <= z_max (index.with_tiles'
     output; its x, y, px, py are pruned, not shuffled). z_max <= 16 takes
@@ -505,7 +524,7 @@ def encode_point_tiles(
         rows,
         lambda cols: _encode_group_arrow(cols, layer_name, tag_cols, extent),
         [c for c, _ in tag_cols],
-        ENCODE_SCHEMA,
+        POINT_SCHEMA,
     )
     # tile digest JVM-side (codegen'd sha2 over the binary column) — keeps
     # the Python stage free of per-tile hashlib calls
@@ -620,7 +639,7 @@ def merge_partial_tiles(
         import pyarrow as pa
 
         gid = cols["gid"]
-        starts = _gid_bounds(gid)
+        starts = run_starts(gid)
         ends = np.append(starts[1:], len(gid))
         blobs = {c: cols[c].to_pylist() for c in blob_cols}
         nfs = cols["n_features"]

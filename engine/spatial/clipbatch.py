@@ -18,11 +18,13 @@ from engine.mvtcodec.commands import CLOSE_PATH, LINE_TO, MOVE_TO, make_command
 from engine.mvtcodec.zigzag import make_parameter
 
 
-def ring_starts(ring_id: np.ndarray) -> np.ndarray:
-    """Start offsets of each ring run in an ascending ring-id array."""
-    change = np.empty(len(ring_id), dtype=bool)
-    change[0] = True
-    np.not_equal(ring_id[1:], ring_id[:-1], out=change[1:])
+def run_starts(*keys: np.ndarray) -> np.ndarray:
+    """First row of each run of equal composite keys in rows sorted by
+    ``keys`` (a tile id, a ring id, or (tile, group) columns)."""
+    change = np.zeros(len(keys[0]), dtype=bool)
+    change[:1] = True
+    for k in keys:
+        change[1:] |= k[1:] != k[:-1]
     return np.flatnonzero(change)
 
 
@@ -30,7 +32,7 @@ def next_index(ring_id: np.ndarray, starts: np.ndarray | None = None) -> np.ndar
     """Index of each vertex's ring-cyclic successor."""
     n = len(ring_id)
     if starts is None:
-        starts = ring_starts(ring_id)
+        starts = run_starts(ring_id)
     idx = np.arange(1, n + 1, dtype=np.int64)
     ends = np.append(starts[1:], n) - 1
     idx[ends] = starts
@@ -47,7 +49,7 @@ def _dedupe(pts: np.ndarray, ring_id: np.ndarray):
     keep[1:] = ((pts[1:] != pts[:-1]).any(axis=1)) | (ring_id[1:] != ring_id[:-1])
     pts, ring_id = pts[keep], ring_id[keep]
     while len(pts):  # trailing==first repeats are rare; loop converges fast
-        starts = ring_starts(ring_id)
+        starts = run_starts(ring_id)
         bounds = np.append(starts[1:], len(pts))
         ends = bounds - 1
         sizes = bounds - starts
@@ -103,7 +105,7 @@ def clip_rings(
 def ring_areas2(q: np.ndarray, ring_id: np.ndarray):
     """Per-ring 2x signed shoelace area (y-up CCW positive), exact int64
     over quantized coords — the batched twin of geomstream.signed_area."""
-    starts = ring_starts(ring_id)
+    starts = run_starts(ring_id)
     nxt = next_index(ring_id, starts)
     cross = q[:, 0] * q[nxt, 1] - q[nxt, 0] * q[:, 1]
     return starts, np.add.reduceat(cross, starts)
@@ -112,7 +114,7 @@ def ring_areas2(q: np.ndarray, ring_id: np.ndarray):
 def reverse_rings(pts: np.ndarray, ring_id: np.ndarray, rev_per_ring: np.ndarray):
     """Reverse vertex order of the flagged rings (orientation fix) via one
     global gather — no per-ring Python."""
-    starts = ring_starts(ring_id)
+    starts = run_starts(ring_id)
     bounds = np.append(starts[1:], len(pts))
     sizes = bounds - starts
     idx = np.arange(len(pts), dtype=np.int64)
@@ -190,7 +192,7 @@ def encode_rings_words(q: np.ndarray, ring_id: np.ndarray, close: bool):
     words[woff[i]:woff[i+1]], and consecutive rings concatenate legally into
     Polygon / MultiLineString streams.
     """
-    starts = ring_starts(ring_id)
+    starts = run_starts(ring_id)
     bounds = np.append(starts[1:], len(q))
     sizes = bounds - starts
     extra = 3 if close else 2

@@ -9,11 +9,12 @@ so the streaming variants follow the standard shapes:
   bounded by the watermark; late pages beyond it are dropped by Spark.
 - stream_encode_tiles: foreachBatch over the same stream — each micro-batch
   runs the BATCH tile encoder (byte-deterministic within the batch) and
-  publishes tiles + manifest into per-batch partition directories with
-  mode=overwrite, so Spark's batch REPLAY after a failure rewrites the same
-  batch_id idempotently (byte-identical) instead of duplicating rows; the
-  layout is the batch job's, so manifest.read_tiles / metrics_summary work
-  unchanged on streaming output.
+  publishes tiles + manifest through the batch job's manifest.publish_tiles
+  into per-batch partition directories, the manifest with mode=overwrite,
+  so Spark's batch REPLAY after a failure replaces the same batch_id
+  (byte-identical) instead of duplicating rows; the layout is the batch
+  job's, so manifest.read_tiles / metrics_summary work unchanged on
+  streaming output.
 - sessionize_pages: applyInPandasWithState custom stateful operator —
   per-site sessions split on a 30-minute event-time gap (same rule as the
   batch twin queries.q_event_sessions), with a monotonically increasing
@@ -31,7 +32,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from engine.pipeline import fixtures, index, tiler
+from engine.pipeline import fixtures, index, manifest, tiler
 
 PAGES_SCHEMA = (
     "url string, warc_ts timestamp, html binary, text string, lang string"
@@ -75,11 +76,11 @@ def stream_encode_tiles(
     per-batch MVT tiles and publishes tiles + manifest parquet.
 
     Idempotency: a failed/replayed micro-batch re-runs with the SAME
-    batch_id; writing into ``batch_id=<n>`` partition directories with
-    mode=overwrite makes the replay replace its own previous (partial)
-    output — byte-identical thanks to the deterministic encoder — instead
-    of blind-append duplicating it. The manifest rows use
-    run_id='batch-<n>', so the batch job's readers work unchanged."""
+    batch_id; publishing run 'batch-<n>' into ``batch_id=<n>`` partition
+    directories (manifest.publish_tiles, manifest mode=overwrite) makes the
+    replay replace its own previous (partial) output — byte-identical
+    thanks to the deterministic encoder — instead of blind-append
+    duplicating it. The batch job's readers work unchanged."""
     def encode_batch(batch_df: DataFrame, batch_id: int) -> None:
         encode_pages_batch(batch_df, batch_id, out_dir, z_min, z_max)
 
@@ -94,25 +95,15 @@ def encode_pages_batch(
 ) -> None:
     """One micro-batch's encode + publish (module-level so tests can replay
     a batch_id directly and assert idempotency)."""
-    from engine.pipeline import manifest as manifest_mod
-
     if batch_df.isEmpty():
         return
     geo = index.with_feature_id(fixtures.geotag_df(batch_df))
     idx = index.with_tiles(index.with_unit(geo), z_min, z_max)
-    run_id = f"batch-{batch_id:06d}"
-    sigs = manifest_mod.input_signature(idx)
-    tiles = tiler.encode_point_tiles(idx).join(sigs, ["z", "x", "y"])
-    tiles.persist()
-    try:
-        tiles.drop("input_sig").withColumn("run_id", F.lit(run_id)).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/tiles/batch_id={batch_id}")
-        manifest_mod.tiles_to_manifest(tiles, run_id).write.mode(
-            "overwrite"
-        ).parquet(f"{out_dir}/manifest/batch_id={batch_id}")
-    finally:
-        tiles.unpersist()
+    manifest.publish_tiles(
+        batch_df.sparkSession, tiler.encode_point_tiles(idx),
+        f"{out_dir}/tiles/batch_id={batch_id}", f"{out_dir}/manifest/batch_id={batch_id}",
+        f"batch-{batch_id:06d}", manifest_mode="overwrite",
+    )
 
 
 SESSION_SCHEMA = (

@@ -10,9 +10,10 @@ from __future__ import annotations
 
 import pandas as pd
 import pytest
+from hypothesis import given, settings, strategies as st
 from pyspark.sql import functions as F
 
-from engine.pipeline import fixtures, index, manifest
+from engine.pipeline import fixtures, index, manifest, tiler
 
 from .conftest import SF_DIR
 
@@ -163,6 +164,128 @@ def test_null_string_tag_fails_without_commit(spark, tmp_path):
         manifest.run_tile_stage(spark, indexed, out, run_id="nulls")
     assert not os.path.exists(f"{out}/manifest")
     assert manifest.completed_tiles(spark, f"{out}/manifest") is None
+
+
+def test_same_run_id_retry_after_torn_write_stores_each_tile_once(spark, tmp_path):
+    """A crash after the tile write but before the manifest commit, then a
+    retry under the SAME run_id (tile_pyramid.py --run-id): the retry
+    replaces the torn attempt's files, so the committed view holds one row
+    per manifest row instead of two."""
+    import shutil
+
+    indexed = _indexed(spark)
+    out = str(tmp_path / "torn")
+    manifest.run_tile_stage(spark, indexed, out, run_id="r")
+    want = _tiles(spark, out)
+    shutil.rmtree(f"{out}/manifest")  # the torn write: no commit happened
+
+    manifest.run_tile_stage(spark, indexed, out, run_id="r")
+    m = spark.read.parquet(f"{out}/manifest")
+    assert m.count() == len(want)
+    assert manifest.read_tiles(spark, out).count() == len(want)
+    assert spark.read.parquet(f"{out}/tiles").count() == len(want)
+    pd.testing.assert_frame_equal(_tiles(spark, out), want)
+
+
+def test_committed_run_id_rerun_adds_only_pending_tiles(spark, tmp_path):
+    """Re-running a committed run_id under resume keeps its committed tiles
+    and adds the pending ones; the files of a torn attempt of that run_id
+    (no manifest row names their tiles) are deleted first, so every tile is
+    stored once."""
+    import glob
+    import os
+
+    indexed = _indexed(spark)
+    full_dir = str(tmp_path / "full")
+    manifest.run_tile_stage(spark, indexed, full_dir, run_id="clean")
+    want = _tiles(spark, full_dir)
+
+    out = str(tmp_path / "again")
+    evens = indexed.filter(F.pmod(F.xxhash64("z", "x", "y"), F.lit(2)) == 0)
+    odds = indexed.filter(F.pmod(F.xxhash64("z", "x", "y"), F.lit(2)) == 1)
+    manifest.run_tile_stage(spark, evens, out, run_id="r")
+    first = _tiles(spark, out)
+    manifest.run_tile_stage(spark, evens, out, run_id="r")  # nothing pending
+    pd.testing.assert_frame_equal(_tiles(spark, out), first)
+    assert spark.read.parquet(f"{out}/tiles").count() == len(first)
+    assert spark.read.parquet(f"{out}/manifest").count() == len(first)
+
+    # a torn attempt of "r" over the odd tiles: its files reach the store
+    # under the run's prefix, its manifest rows never do
+    torn = str(tmp_path / "torn")
+    tiler.encode_point_tiles(odds).withColumns(
+        {"partition_id": F.spark_partition_id(), "run_id": F.lit("r")}
+    ).write.parquet(torn)
+    for f in glob.glob(f"{torn}/part-*"):
+        os.rename(f, f"{out}/tiles/r.{os.path.basename(f)}")
+
+    manifest.run_tile_stage(spark, indexed, out, run_id="r")
+    pd.testing.assert_frame_equal(_tiles(spark, out), want)
+    assert spark.read.parquet(f"{out}/tiles").count() == len(want)
+    m = spark.read.parquet(f"{out}/manifest").toPandas()
+    assert len(m) == len(want) and (m["run_id"] == "r").all()
+
+    # run ids prefix the store's file names: one that would hide its files
+    # from readers or reach outside the store is refused before any write
+    for bad in ("_r", ".r", "../r", "r.part-1"):
+        with pytest.raises(ValueError, match="run_id"):
+            manifest.run_tile_stage(spark, indexed, out, run_id=bad)
+    pd.testing.assert_frame_equal(_tiles(spark, out), want)
+
+
+def test_unreadable_manifest_fails_loudly(spark, tmp_path):
+    """A manifest directory that exists but is not parquet must fail the
+    resume, never read as "no manifest" and silently re-encode everything."""
+    out = tmp_path / "corrupt"
+    (out / "manifest").mkdir(parents=True)
+    (out / "manifest" / "part-00000.parquet").write_bytes(b"not parquet at all")
+    done = manifest.completed_tiles(spark, str(out / "manifest"))
+    assert done is not None
+    with pytest.raises(Exception, match="(?i)parquet"):
+        done.count()
+    with pytest.raises(Exception, match="(?i)parquet"):
+        manifest.run_tile_stage(spark, _indexed(spark), str(out), run_id="r")
+    assert not (out / "tiles").exists()
+
+
+def test_manifest_input_sig_equals_spark_bit_xor(spark, tmp_path):
+    """The worker-side signature equals the SQL definition it replaces:
+    bit_xor(xxhash64(feature_id)) grouped by tile."""
+    indexed = _indexed(spark)
+    out = str(tmp_path / "sig")
+    manifest.run_tile_stage(spark, indexed, out, run_id="sig")
+    oracle = (
+        indexed.groupBy("z", "x", "y")
+        .agg(F.expr("bit_xor(xxhash64(feature_id))").alias("input_sig"))
+        .toPandas()
+        .sort_values(["z", "x", "y"])
+        .reset_index(drop=True)
+    )
+    got = (
+        spark.read.parquet(f"{out}/manifest")
+        .select("z", "x", "y", "input_sig")
+        .toPandas()
+        .sort_values(["z", "x", "y"])
+        .reset_index(drop=True)
+    )
+    assert len(got) > 10
+    pd.testing.assert_frame_equal(got, oracle, check_dtype=False)
+
+
+@settings(max_examples=25, deadline=None)
+@given(st.lists(st.integers(-(2**63), 2**63 - 1), min_size=1, max_size=200))
+def test_numpy_xxhash64_equals_spark(spark, values):
+    import numpy as np
+
+    values = values + [-(2**63), 2**63 - 1, 0, -1]
+    want = [
+        r[0]
+        for r in spark.createDataFrame([(v,) for v in values], "v bigint")
+        .selectExpr("xxhash64(v)")
+        .collect()
+    ]
+    got = tiler.xxhash64(np.array(values, dtype=np.int64))
+    assert got.tolist() == want
 
 
 def test_metrics_summary(spark, tmp_path):
