@@ -64,6 +64,8 @@ def varint_array(values: np.ndarray) -> bytes:
         return b""
     if v.size < 64:
         return b"".join(map(varint, v.tolist()))
+    if v.max() < 128:  # every varint is its one byte
+        return v.astype(np.uint8).tobytes()
     lens = np.ones(v.shape, dtype=np.int64)
     for k in range(1, 10):
         lens += (v >= np.uint64(1 << (7 * k))).astype(np.int64)

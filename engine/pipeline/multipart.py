@@ -7,7 +7,8 @@ never exercised by a driver-checked tile; these operators emit them through
 the same Spark shape as the other tilers — JVM-side tile assign + quantize,
 ONE shuffle on (z,x,y), the tiler's one tile-group worker
 (tiler.carry_group_iter over the packed tile gid) with a batched command
-encode and faststream framing — then decode with the engine's own reader
+encode framed by faststream.encode_tagged_layers (the one layer framer) —
+then decode with the engine's own reader
 into an order-free stats projection a DuckDB oracle reproduces closed-form.
 
 Grouping: pages collapse to one MultiPoint feature per (tile, feature_id %

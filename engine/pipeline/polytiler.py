@@ -378,9 +378,10 @@ def _encode_poly_vertex_batch(cols):
             line_rows = r_starts[sp_ring[feat_start]]
             line_woff = line_woff[np.append(feat_start, len(sp_poly))]
 
-    # ---- batched protobuf framing (engine.mvtcodec.faststream): every
-    # varint in the output comes from whole-array passes; only the final
-    # per-tile byte join is a Python loop (bounded by tile count)
+    # ---- batched protobuf framing (faststream.encode_tagged_layers, the
+    # one layer framer): every varint and every layer comes from
+    # whole-array passes; only _layer_tiles' join of a tile's two layers
+    # is a Python loop (bounded by tile count)
     name = _arrow_tags(cols, (("name", "string"),))["name"][1]  # (codes, values)
 
     def layer(layer_name, rows, geom_type, words, woff):

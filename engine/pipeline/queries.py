@@ -200,9 +200,13 @@ def q_pip_join_numpy(spark, sf_dir):
 def q_pip_partitioned(spark, sf_dir):
     """B8 scale path: shuffle-both-sides PIP (salted cell equi-join, no
     broadcast) — the plan for polygon tables beyond broadcast size. Same
-    oracle as pip_join (salting changes routing, not results)."""
+    oracle as pip_join (salting changes routing, not results). Fed the
+    fixture's max_edges_per_poly stat like q_pip_auto: without it the plan
+    salts blind (empty skew table), which measured ~12% slower at sf0.1."""
+    stats = fixtures.polygon_table_stats(fixtures.poly_count_for(sf_dir))
     return joins.pip_join_partitioned(
-        _geotagged(spark, sf_dir), fixtures.polygon_edges_df(spark, sf_dir)
+        _geotagged(spark, sf_dir), fixtures.polygon_edges_df(spark, sf_dir),
+        max_edges_per_poly=stats["max_edges_per_poly"],
     )
 
 
@@ -340,8 +344,9 @@ FROM geotagged GROUP BY 1, 2"""
 # full encode still runs inside mapInArrow (column pruning can drop the
 # mvt column only AFTER the UDF has produced the bytes), so the oracle
 # genuinely audits the encoder's grouping + feature emission. Byte-level
-# correctness is covered by tests/test_fastpoints.py, tests/test_polytiler.py
-# and tests/test_manifest_resume.py.
+# correctness is covered by tests/test_fastpoints.py, tests/test_faststream.py,
+# tests/test_polytiler.py, tests/test_tilemerge.py and
+# tests/test_manifest_resume.py.
 
 def q_mvt_tiles(spark, sf_dir):
     """B12-B15 flagship: z0-z4 point-tile pyramid, MVT-encoded; auditable

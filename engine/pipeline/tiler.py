@@ -18,7 +18,11 @@ detects group boundaries vectorized and carries incomplete tail groups into
 the next batch, so each encode call gets MANY complete tiles and returns an
 Arrow batch (_tile_batch); the digest mvt_sha256 is computed JVM-side. This
 avoids ``groupBy().applyInPandas``'s per-group overhead, which dominates
-when the pyramid has tens of thousands of small tiles.
+when the pyramid has tens of thousands of small tiles. Every worker frames
+its layers through the one batched framer, engine.mvtcodec.faststream.
+frame_layers: point tiles via fastpoints, the salted merge once per Arrow
+batch (_merge_partials_batch), polygons and multi-part via
+faststream.encode_tagged_layers.
 
 Byte determinism: features sorted by (tile, feature_id) before the encode,
 layers sorted by name inside the codec — output bytes are invariant under
@@ -31,7 +35,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.mvtcodec import fastmerge, fastpoints, pbwire
+from engine.mvtcodec import fastpoints, faststream, pbwire
+from engine.mvtcodec.geomstream import GEOM_POINT
 from engine.spatial.clipbatch import run_starts
 
 from . import index, tilemerge
@@ -45,10 +50,10 @@ TILE_SCHEMA = (
 ENCODE_SCHEMA = "z int, x bigint, y bigint, mvt binary, n_features long, n_bytes long"
 POINT_SCHEMA = ENCODE_SCHEMA + ", input_sig long"
 PARTIAL_SCHEMA = (
-    "z int, x bigint, y bigint, n_features long, fids binary, block binary, "
-    "feat_len binary, glen binary, vcode binary, dict_blob binary, "
-    "dict_lens binary, mvt binary"
+    "z int, x bigint, y bigint, n_features long, fids binary, geom binary, "
+    "glen binary, vcode binary, dict_blob binary, dict_lens binary, mvt binary"
 )
+PARTIAL_BLOBS = ("fids", "geom", "glen", "vcode", "dict_blob", "dict_lens", "mvt")
 
 
 def cap_features_per_tile(
@@ -154,6 +159,34 @@ def _tile_batch(g: np.ndarray, mvt, n_features, n_bytes, **extra):
     )
 
 
+def _binary_array(values: np.ndarray, offsets: np.ndarray):
+    """Arrow binary column over ``values`` (uint8) with row i spanning
+    values[offsets[i]:offsets[i+1]] — no per-row Python object."""
+    import pyarrow as pa
+
+    if offsets[-1] >= (1 << 31):
+        # pa.binary() offsets are int32; a mega-group past 2 GiB would wrap
+        # silently on the int64->int32 assignment
+        raise ValueError(
+            "encoded tile group exceeds 2 GiB of tile bytes; split the "
+            "group (salted partial encode) before the Arrow batch build"
+        )
+    return pa.Array.from_buffers(
+        pa.binary(), len(offsets) - 1,
+        [None, pa.py_buffer(np.asarray(offsets, dtype=np.int32)), pa.py_buffer(values)],
+    )
+
+
+def _binary_values(arr) -> tuple[np.ndarray, np.ndarray]:
+    """(values, lengths) of an Arrow binary column read from its buffers:
+    the rows' bytes back to back, and each row's byte length."""
+    _, offs, data = arr.buffers()
+    off = np.frombuffer(offs, dtype=np.int32)[arr.offset : arr.offset + len(arr) + 1]
+    if data is None:
+        return np.zeros(0, np.uint8), np.diff(off).astype(np.int64)
+    return np.frombuffer(data, np.uint8)[off[0] : off[-1]], np.diff(off).astype(np.int64)
+
+
 def _encode_group_arrow(cols, layer_name, tag_cols, extent):
     """Arrow-native tile encode for one-or-more COMPLETE gid groups.
 
@@ -172,18 +205,7 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
         counts, cols["feature_id"], cols["qx"], cols["qy"],
         _arrow_tags(cols, tag_cols), layer_name, extent,
     )
-    n_tiles = len(tstarts)
-    if len(buf) >= (1 << 31):
-        # pa.binary() offsets are int32; a mega-group past 2 GiB would wrap
-        # silently on the int64->int32 assignment
-        raise ValueError(
-            "encoded tile group exceeds 2 GiB of tile bytes; split the "
-            "group (salted partial encode) before the Arrow batch build"
-        )
-    offsets = np.append(tstarts, len(buf)).astype(np.int32)
-    mvt = pa.Array.from_buffers(
-        pa.binary(), n_tiles, [None, pa.py_buffer(offsets), pa.py_buffer(buf)]
-    )
+    mvt = _binary_array(buf, np.append(tstarts, len(buf)))
     sig = np.bitwise_xor.reduceat(xxhash64(cols["feature_id"]), starts)
     return _tile_batch(
         gid[starts], mvt, counts, ttotal, input_sig=pa.array(sig, type=pa.int64())
@@ -192,50 +214,42 @@ def _encode_group_arrow(cols, layer_name, tag_cols, extent):
 
 def _encode_partials_group_arrow(cols, tag_cols):
     """Arrow-native partial encode for one-or-more COMPLETE (salt-packed)
-    gid groups — the partial-row twin of _encode_group_arrow:
-    PARTIAL_SCHEMA RecordBatch out (per-group byte columns; the group count
-    is tens of rows at z0-3, so the per-group Python loop is not a hot
-    path)."""
+    gid groups: one PARTIAL_SCHEMA row per group holding its feature ids,
+    geometry payloads (fastpoints.point_geometry) and their byte lengths,
+    per-group first-seen value codes and the dictionary's encoded value
+    fields. Every column is a view of one batch-wide array."""
     import pyarrow as pa
 
     gid = cols["gid"]
+    n = len(gid)
     starts = run_starts(gid)
-    counts = np.diff(np.append(starts, len(gid)))
-    fids = cols["feature_id"]
-    fb = fastpoints.encode_point_features_sorted(
-        counts, fids, cols["qx"], cols["qy"], _arrow_tags(cols, tag_cols)
+    counts = np.diff(np.append(starts, n))
+    bounds = np.append(starts, n)
+    keys = [c for c, _ in tag_cols]
+    codes, vmsgs = faststream._global_tag_codes(keys, _arrow_tags(cols, tag_cols), n)
+    vcode, vblob, entry_lens, e_bounds = faststream._tile_dictionaries(
+        np.repeat(np.arange(len(starts)), counts), len(starts), codes, vmsgs
     )
-    feat_len = fb["feat_len"]
-    b_off = np.concatenate([[0], np.cumsum(feat_len)])
-    block = fb["block"].tobytes()
-    vblob = fb["vblob"].tobytes()
-    e_bounds = fb["e_bounds"]
-    entry_lens = fb["entry_lens"]
-    ends = np.append(starts[1:], len(gid))
-    fids64 = np.asarray(fids, dtype=np.int64)
-    out = {k: [] for k in (
-        "fids", "block", "feat_len", "glen", "vcode", "dict_blob", "dict_lens"
-    )}
-    for i, (s, e) in enumerate(zip(starts, ends)):
-        out["fids"].append(fids64[s:e].tobytes())
-        out["block"].append(block[b_off[s] : b_off[e]])
-        out["feat_len"].append(feat_len[s:e].astype(np.int32).tobytes())
-        out["glen"].append(fb["glen"][s:e].astype(np.int32).tobytes())
-        out["vcode"].append(fb["vcode"][s:e].astype(np.int32).tobytes())
-        out["dict_blob"].append(
-            vblob[fb["vstart"][i] : fb["vstart"][i] + fb["vlen"][i]]
-        )
-        out["dict_lens"].append(
-            entry_lens[e_bounds[i] : e_bounds[i + 1]].astype(np.int32).tobytes()
-        )
+    geom, glen = fastpoints.point_geometry(cols["qx"], cols["qy"])
+    as_bytes = lambda a, dtype: np.ascontiguousarray(a, dtype=dtype).view(np.uint8)
+    pcols = {
+        "fids": _binary_array(as_bytes(cols["feature_id"], np.int64), bounds * 8),
+        "geom": _binary_array(geom, np.concatenate([[0], np.cumsum(glen)])[bounds]),
+        "glen": _binary_array(as_bytes(glen, np.int32), bounds * 4),
+        "vcode": _binary_array(as_bytes(vcode, np.int32), bounds * 4 * len(keys)),
+        "dict_blob": _binary_array(
+            vblob, np.concatenate([[0], np.cumsum(entry_lens)])[e_bounds]
+        ),
+        "dict_lens": _binary_array(as_bytes(entry_lens, np.int32), e_bounds * 4),
+    }
     return pa.RecordBatch.from_arrays(
         [
             *_gid_tile_arrays(gid[starts]),
             pa.array(counts, type=pa.int64()),
-            *[pa.array(out[k], type=pa.binary()) for k in out],
+            *pcols.values(),
             pa.nulls(len(starts), pa.binary()),
         ],
-        names=["z", "x", "y", "n_features", *out, "mvt"],
+        names=["z", "x", "y", "n_features", *pcols, "mvt"],
     )
 
 
@@ -554,10 +568,10 @@ def encode_point_partials(
     extent: int = EXTENT,
 ) -> DataFrame:
     """B14 stage 1: vectorized feature encode per (tile, salt) group — the
-    geometry + varint heavy lifting for a hot tile (z0 holds every feature)
-    spreads over n_salt tasks instead of one — shipping PARTIAL ARRAYS
-    (framed feature bytes + ids/lengths/dict codes, engine.mvtcodec.
-    fastpoints.encode_point_features_sorted) in PARTIAL_SCHEMA rows (the
+    geometry varints and tag dictionaries of a hot tile (z0 holds every
+    feature) spread over n_salt tasks instead of one — shipping PARTIAL
+    ARRAYS (feature ids, geometry payloads + lengths, local value codes and
+    value fields: _encode_partials_group_arrow) in PARTIAL_SCHEMA rows (the
     ``mvt`` column stays null; pre-encoded tiles conformed by
     tiles_as_partial_rows ride the same schema into one shared merge,
     merge_partial_tiles). Same rows and key builder as encode_point_tiles,
@@ -576,9 +590,8 @@ def encode_point_partials(
 
 def _zoom_salt_expr(n_salt: int):
     """Zoom-adaptive salt: the tile population halves 4x per zoom, so the
-    salt fan-out halves per zoom too (z0: n_salt ways, ... deep zooms: 1).
-    Single-partial tiles skip the merge re-framing entirely (fastmerge
-    fast path) — only genuinely hot tiles pay the two-stage cost. Salting
+    salt fan-out halves per zoom too (z0: n_salt ways, ... deep zooms: 1),
+    so only genuinely hot tiles are split over several partials. Salting
     is routing only; bytes are invariant (tests/test_tilemerge.py)."""
     return F.pmod(
         F.xxhash64("feature_id"),
@@ -590,14 +603,94 @@ def tiles_as_partial_rows(tiles: DataFrame) -> DataFrame:
     """Conform pre-encoded tile rows (z, x, y, mvt, n_features) to
     PARTIAL_SCHEMA so another stream's finished tiles ride the SAME merge
     shuffle as the point partials (wire-spliced at the merge task)."""
-    null_b = "cast(null as binary)"
     return tiles.selectExpr(
         "z", "x", "y", "n_features",
-        *[f"{null_b} as {c}" for c in (
-            "fids", "block", "feat_len", "glen", "vcode", "dict_blob",
-            "dict_lens",
-        )],
+        *[f"cast(null as binary) as {c}" for c in PARTIAL_BLOBS[:-1]],
         "mvt",
+    )
+
+
+def _merge_partials_batch(cols, layer_name, tag_cols, extent):
+    """Merge PARTIAL_SCHEMA rows of one-or-more COMPLETE gid groups into
+    one tile row per gid (ENCODE_SCHEMA + n_layers).
+
+    The batch's point partials are read from the Arrow buffers and
+    concatenated, their features ordered by (tile, feature id), their
+    value fields factorized by bytes into global codes (the encoders emit
+    canonical value encodings, so byte equality is value equality), and
+    framed by ONE faststream.frame_layers call. Rows carrying a finished
+    ``mvt`` split into layers (tilemerge.split_tile_layers) and are spliced
+    in per tile; a layer name that more than one input carries goes
+    through the generic re-framer (tilemerge._merge_layer)."""
+    import pyarrow as pa
+
+    gid, nfs = cols["gid"], cols["n_features"]
+    starts = run_starts(gid)
+    part = cols["mvt"].is_null().to_numpy(zero_copy_only=False)
+    sub = {c: cols[c].filter(pa.array(part)) for c in PARTIAL_BLOBS}
+    keys = [c for c, _ in tag_cols]
+    fids = _binary_values(sub["fids"])[0].view(np.int64)
+    geom = _binary_values(sub["geom"])[0]
+    glen = _binary_values(sub["glen"])[0].view(np.int32).astype(np.int64)
+    vcode = _binary_values(sub["vcode"])[0].view(np.int32)
+    vcode = vcode.reshape(len(fids), len(keys))
+    entries, e_size = _binary_values(sub["dict_lens"])
+    entry_lens = entries.view(np.int32)
+    # every dictionary entry -> a global code; local codes offset per row
+    d_entries = _binary_array(
+        _binary_values(sub["dict_blob"])[0], np.append(0, np.cumsum(entry_lens))
+    ).dictionary_encode()
+    row_of_feat = np.repeat(np.arange(len(e_size)), nfs[part])
+    first_entry = (np.cumsum(e_size) - e_size) // 4
+    codes = d_entries.indices.to_numpy()[vcode + first_entry[row_of_feat, None]]
+    msg_blob, msg_lens = _binary_values(d_entries.dictionary)
+    # canonical feature order: by tile, then feature id (rows arrive
+    # sorted by (z, x, y), so gids ascend)
+    p_gid = gid[part]
+    p_starts = run_starts(p_gid)
+    order = np.lexsort((fids, p_gid[row_of_feat]))
+    olen = glen[order]
+    ogeom = np.empty(len(geom), dtype=np.uint8)
+    faststream._ragged_copy(
+        ogeom, np.cumsum(olen) - olen, geom, (np.cumsum(glen) - glen)[order], olen
+    )
+    buf, tstarts, ttotal = faststream.frame_layers(
+        np.add.reduceat(nfs[part], p_starts),
+        fids[order], GEOM_POINT, ogeom, olen, codes[order], (msg_blob, msg_lens),
+        keys, layer_name, extent,
+    )
+    n_features = np.add.reduceat(nfs, starts)
+    if part.all():
+        mvt = _binary_array(buf, np.append(tstarts, len(buf)))
+        return _tile_batch(
+            gid[starts], mvt, n_features, ttotal,
+            n_layers=pa.array(np.ones(len(starts), np.int32)),
+        )
+    # some tile carries a finished mvt: splice per tile, framed layer last
+    blobs: dict[int, list[bytes]] = {}
+    done, d_len = _binary_values(cols["mvt"].filter(pa.array(~part)))
+    d_mem, d_off = done.tobytes(), np.append(0, np.cumsum(d_len)).tolist()
+    for g, s, e in zip(gid[~part].tolist(), d_off[:-1], d_off[1:]):
+        blobs.setdefault(g, []).append(d_mem[s:e])
+    mem = buf.tobytes()
+    for g, s, n in zip(p_gid[p_starts].tolist(), tstarts.tolist(), ttotal.tolist()):
+        blobs.setdefault(g, []).append(mem[s : s + n])
+    mvt, n_layers = [], []
+    for g in gid[starts].tolist():
+        layers: dict[str, list[bytes]] = {}
+        for blob in blobs[g]:
+            for nm, msg in tilemerge.split_tile_layers(blob):
+                layers.setdefault(nm, []).append(msg)
+        mvt.append(b"".join(
+            pbwire.len_delimited(
+                3, msgs[0] if len(msgs) == 1 else tilemerge._merge_layer(nm, msgs)
+            )
+            for nm, msgs in sorted(layers.items())
+        ))
+        n_layers.append(len(layers))
+    return _tile_batch(
+        gid[starts], pa.array(mvt, type=pa.binary()), n_features,
+        [len(d) for d in mvt], n_layers=pa.array(n_layers, type=pa.int32()),
     )
 
 
@@ -608,79 +701,17 @@ def merge_partial_tiles(
     extent: int = EXTENT,
 ) -> DataFrame:
     """B14 stage 2: ONE shuffle on (z,x,y) merges everything addressed to a
-    tile — point partial arrays re-frame into the canonical layer with
-    whole-array passes (engine.mvtcodec.fastmerge, zero per-feature
+    tile — each Arrow batch's point partials frame in one batched
+    faststream.frame_layers call (_merge_partials_batch, zero per-feature
     Python), pre-encoded tiles from other streams split into their layer
     messages and wire-splice in (same-name collisions fall back to the
     generic re-framer). Layers sort by name; bytes equal a single-pass
     multi-layer encode."""
     tag_cols = tuple(tag_cols)
-    t = len(tag_cols)
-    keys_blob = b"".join(
-        pbwire.len_delimited(3, c.encode("utf-8")) for c, _ in tag_cols
-    )
-    blob_cols = ("fids", "block", "feat_len", "glen", "vcode", "dict_blob",
-                 "dict_lens", "mvt")
-
-    def partial(row: dict, nf: int) -> dict:
-        """One partial's arrays as fastmerge takes them."""
-        as64 = lambda c: np.frombuffer(row[c], dtype=np.int32).astype(np.int64)
-        return {
-            "fids": np.frombuffer(row["fids"], dtype=np.int64),
-            "block": np.frombuffer(row["block"], dtype=np.uint8),
-            "feat_len": as64("feat_len"),
-            "glen": as64("glen"),
-            "vcode": as64("vcode").reshape(nf, t),
-            "dict_blob": np.frombuffer(row["dict_blob"], dtype=np.uint8),
-            "dict_lens": as64("dict_lens"),
-        }
-
-    def merge_batch(cols: dict):
-        import pyarrow as pa
-
-        gid = cols["gid"]
-        starts = run_starts(gid)
-        ends = np.append(starts[1:], len(gid))
-        blobs = {c: cols[c].to_pylist() for c in blob_cols}
-        nfs = cols["n_features"]
-        mvt, n_layers = [], []
-        for s, e in zip(starts, ends):
-            partials = []
-            spliced: dict[str, list[bytes]] = {}
-            for i in range(s, e):
-                if blobs["mvt"][i] is not None:
-                    for nm, msg in tilemerge.split_tile_layers(blobs["mvt"][i]):
-                        spliced.setdefault(nm, []).append(msg)
-                    continue
-                partials.append(
-                    partial({c: blobs[c][i] for c in blob_cols}, int(nfs[i]))
-                )
-            layers: dict[str, bytes] = {}
-            if partials:
-                layers[layer_name] = fastmerge.merge_point_partials(
-                    partials, layer_name, keys_blob, extent
-                )
-            for nm, msgs in spliced.items():
-                if nm in layers or len(msgs) > 1:
-                    msgs = msgs + ([layers[nm]] if nm in layers else [])
-                    layers[nm] = tilemerge._merge_layer(nm, msgs)
-                else:
-                    layers[nm] = msgs[0]
-            mvt.append(b"".join(
-                pbwire.len_delimited(3, layers[nm]) for nm in sorted(layers)
-            ))
-            n_layers.append(len(layers))
-        return _tile_batch(
-            gid[starts],
-            pa.array(mvt, type=pa.binary()),
-            np.add.reduceat(nfs, starts),
-            [len(d) for d in mvt],
-            n_layers=pa.array(n_layers, type=pa.int32()),
-        )
-
     return _encode_sorted_tiles(
-        parts, MAX_ZOOM, (), ("n_features", *blob_cols), merge_batch, blob_cols,
-        ENCODE_SCHEMA + ", n_layers int",
+        parts, MAX_ZOOM, (), ("n_features", *PARTIAL_BLOBS),
+        lambda cols: _merge_partials_batch(cols, layer_name, tag_cols, extent),
+        PARTIAL_BLOBS, ENCODE_SCHEMA + ", n_layers int",
     )
 
 

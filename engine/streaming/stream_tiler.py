@@ -19,8 +19,9 @@ so the streaming variants follow the standard shapes:
   per-site sessions split on a 30-minute event-time gap (same rule as the
   batch twin queries.q_event_sessions), with a monotonically increasing
   session counter carried in state; closed sessions emit immediately, the
-  open one flushes on the processing-time timeout. Event-time ordering is
-  assumed per site (no watermark reordering in this demo operator).
+  open one flushes on an event-time timeout once the warc_ts watermark
+  passes its last event + the gap. Event-time ordering is assumed per site
+  (no watermark reordering in this demo operator).
 
 All sources here are file streams (parquet dirs) so the same code path runs
 against cloud object stores; tests drive them with trigger(availableNow).
@@ -133,7 +134,8 @@ def _sessionize(key, pdfs, state: GroupState):
     for the OPEN session. A batch's rows (event-time sorted) extend it;
     every >30-minute event-time gap CLOSES the current session (emitted
     immediately, session ids increment monotonically) and opens the next;
-    the processing-time timeout flushes the final open session. Timestamps
+    the event-time timeout at last event + gap flushes the open session
+    once the watermark passes it. Timestamps
     travel as int64 micros inside the state tuple (tuple state schemas have
     no native timestamp type)."""
     import numpy as np
@@ -166,7 +168,7 @@ def _sessionize(key, pdfs, state: GroupState):
             n += len(seg)
             last_us = int(seg[-1])
     state.update((sid, n, first_us, last_us))
-    state.setTimeoutDuration(10_000)
+    state.setTimeoutTimestamp((last_us + SESSION_GAP_US) // 1000)
     if closed:
         yield pd.DataFrame(closed)
 
@@ -174,14 +176,22 @@ def _sessionize(key, pdfs, state: GroupState):
 def sessionize_pages(pages: DataFrame) -> DataFrame:
     """Custom stateful streaming operator: per-site page sessions.
 
+    The event-time timeout runs over a ``warc_ts`` watermark one session
+    gap behind the newest event: an ``availableNow`` query ends after the
+    no-data batch that flushes every session the final watermark passed
+    (a processing-time timeout would ask for another batch forever). Rows
+    older than the watermark are dropped as late.
+
     Session-id scope: ids increment monotonically only WITHIN one state
-    lifetime — the processing-time timeout flush removes the state, so the
+    lifetime — the timeout flush removes the state, so the
     next burst for the same site restarts at session_id 0 (unlike the batch
     twin q_event_sessions, whose numbering spans the whole table). Consumers
     needing a globally unique session key should key on
     (site, first_ts) — first_ts is unique per session by construction
     (a session starts strictly after the previous one's last event)."""
-    site = pages.withColumn("site", F.expr("split(url, '/')[2]"))
+    site = pages.withColumn("site", F.expr("split(url, '/')[2]")).withWatermark(
+        "warc_ts", f"{SESSION_GAP_US // 1_000_000} seconds"
+    )
     return (
         site.groupBy("site")
         .applyInPandasWithState(
@@ -189,6 +199,6 @@ def sessionize_pages(pages: DataFrame) -> DataFrame:
             SESSION_SCHEMA,
             _STATE_SCHEMA,
             "update",
-            GroupStateTimeout.ProcessingTimeTimeout,
+            GroupStateTimeout.EventTimeTimeout,
         )
     )

@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import numpy as np
+from hypothesis import given, settings, strategies as st
 
 from engine.mvtcodec import faststream, geomstream, pbwire, tile as tilemod
 
@@ -142,3 +143,75 @@ def test_no_tags_layers():
         ]
         want = tilemod.encode_layer("bare", {"extent": 4096, "features": feats})
         assert layers[ti] == want
+
+
+# tag values the property draws from: small pools, so values repeat within
+# and across tiles, and the string "1", int 1 and double 1.0 stay apart
+_TAG_VALUES = {
+    "s": ("string", st.sampled_from(["1", "a", "", "é"])),
+    "i": ("int", st.sampled_from([1, 0, -1, 2**40])),
+    "d": ("double", st.sampled_from([1.0, 0.5, -2.25])),
+}
+_DTYPES = {"string": object, "int": np.int64, "double": np.float64}
+_XY = st.tuples(st.integers(-64, 4160), st.integers(-64, 4160))
+_WORDS = {
+    geomstream.GEOM_POINT: _XY.map(geomstream.encode_point),
+    geomstream.GEOM_LINESTRING: st.lists(_XY, min_size=2, max_size=6).map(
+        geomstream.encode_linestring
+    ),
+    geomstream.GEOM_POLYGON: st.lists(_XY, min_size=3, max_size=6).map(
+        lambda ring: geomstream.encode_polygon([ring + ring[:1]])
+    ),
+}
+
+
+@st.composite
+def _layer_batch(draw):
+    """1-4 tiles of one geometry type, ids on every feature or none, and
+    0-3 tag columns (every feature carries each, in column order)."""
+    geom_type = draw(st.sampled_from(sorted(_WORDS)))
+    with_ids = draw(st.booleans())
+    keys = draw(st.permutations(list(_TAG_VALUES)))[: draw(st.integers(0, 3))]
+    tiles = []
+    for _ in range(draw(st.integers(1, 4))):
+        ids = draw(st.lists(st.integers(0, 2**62), min_size=1, max_size=12, unique=True))
+        tiles.append([
+            {
+                "id": fid if with_ids else None,
+                "geom_type": geom_type,
+                "geometry": draw(_WORDS[geom_type]),
+                "tags": [(k, (_TAG_VALUES[k][0], draw(_TAG_VALUES[k][1]))) for k in keys],
+            }
+            for fid in sorted(ids)
+        ])
+    return geom_type, keys, tiles
+
+
+@settings(max_examples=300, deadline=None)
+@given(_layer_batch())
+def test_frame_layers_equals_generic_encoder(case):
+    """Every tile frame_layers frames from one batch equals the generic
+    encoder's layer over that tile's features alone: per-tile dictionaries
+    stay isolated, and id-less features of every geometry type frame."""
+    geom_type, keys, tiles = case
+    feats = [f for tile in tiles for f in tile]
+    words = [f["geometry"] for f in feats]
+    tag_columns = {}
+    for k in keys:
+        vtype = _TAG_VALUES[k][0]
+        values = [dict(f["tags"])[k][1] for f in feats]
+        tag_columns[k] = (vtype, np.array(values, dtype=_DTYPES[vtype]))
+    codes, vmsgs = faststream._global_tag_codes(keys, tag_columns, len(feats))
+    buf, starts, total = faststream.frame_layers(
+        [len(tile) for tile in tiles],
+        None if feats[0]["id"] is None else np.array([f["id"] for f in feats]),
+        geom_type,
+        np.frombuffer(pbwire.varint_array(np.concatenate(words)), dtype=np.uint8),
+        [len(pbwire.varint_array(w)) for w in words],
+        codes, vmsgs, keys, "layer", 4096,
+    )
+    mem = buf.tobytes()
+    assert len(starts) == len(tiles) and starts[-1] + total[-1] == len(mem)
+    for tile, s, n in zip(tiles, starts.tolist(), total.tolist()):
+        want = tilemod.encode_layer("layer", {"extent": 4096, "features": tile})
+        assert mem[s : s + n] == pbwire.len_delimited(3, want)

@@ -4,9 +4,13 @@ sources — incremental results must match the equivalent batch computation
 
 from __future__ import annotations
 
+import os
+import time
+from glob import glob
+
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
+from pyspark.sql import Window, functions as F
 
 from engine.pipeline import fixtures
 from engine.streaming import stream_tiler
@@ -19,6 +23,20 @@ def pages_dir(spark, tmp_path_factory):
     """The sf0.001 pages fixture written as 4 parquet files (4 micro-batches)."""
     out = str(tmp_path_factory.mktemp("pages_stream"))
     fixtures.pages_df(spark, SF_DIR).repartition(4).write.mode("overwrite").parquet(out)
+    return out
+
+
+@pytest.fixture(scope="module")
+def ordered_pages_dir(spark, tmp_path_factory):
+    """The same pages as parquet files split by warc_ts range, modification
+    times in range order: the file source reads the oldest file first, so
+    every site's events arrive in event-time order and none is late."""
+    out = str(tmp_path_factory.mktemp("pages_ordered"))
+    pages = fixtures.pages_df(spark, SF_DIR).repartitionByRange(4, "warc_ts")
+    pages.write.mode("overwrite").parquet(out)
+    now = time.time()
+    for i, path in enumerate(sorted(glob(f"{out}/part-*.parquet"))):
+        os.utime(path, (now - 60 + i, now - 60 + i))
     return out
 
 
@@ -129,7 +147,7 @@ class _FakeState:
     def remove(self):
         self._v, self.removed = None, True
 
-    def setTimeoutDuration(self, ms):
+    def setTimeoutTimestamp(self, ms):
         pass
 
 
@@ -166,11 +184,13 @@ def test_sessionize_gap_split_and_counter():
     assert st2.get[0] == 0 and st2.get[1] == 1
 
 
-def test_sessionize_pages_state(spark, pages_dir, tmp_path):
-    """applyInPandasWithState sessionizer: runs incrementally and emits
-    closed sessions on timeout; with availableNow the state flushes at
-    stream end, so every site appears exactly once with its full count."""
-    stream = stream_tiler.read_pages_stream(spark, pages_dir)
+def test_sessionize_pages_state(spark, ordered_pages_dir, tmp_path):
+    """applyInPandasWithState sessionizer: the availableNow query ends by
+    itself, and the sessions it closed equal, row for row, the batch
+    30-minute gap rule over the same pages — every session followed by
+    another at its site, plus each site's last session if the final
+    watermark (newest event - gap) passed its last event + gap."""
+    stream = stream_tiler.read_pages_stream(spark, ordered_pages_dir)
     sessions = stream_tiler.sessionize_pages(stream)
     q = (
         sessions.writeStream.format("memory")
@@ -180,22 +200,36 @@ def test_sessionize_pages_state(spark, pages_dir, tmp_path):
         .trigger(availableNow=True)
         .start()
     )
-    q.awaitTermination(300)
-    got = spark.sql("SELECT * FROM sessions_stream").toPandas()
+    assert q.awaitTermination(300), "the availableNow query did not terminate"
+    key = ["site", "first_us", "last_us", "n_pages"]
+    got = spark.sql(
+        "SELECT site, unix_micros(first_ts) AS first_us, "
+        "unix_micros(last_ts) AS last_us, n_pages FROM sessions_stream"
+    ).toPandas()
+    gap = stream_tiler.SESSION_GAP_US
+    ev = spark.read.parquet(ordered_pages_dir).selectExpr(
+        "split(url, '/')[2] AS site", "unix_micros(warc_ts) AS us"
+    )
+    w = Window.partitionBy("site").orderBy("us")
+    brk = F.coalesce((F.col("us") - F.lag("us").over(w) > gap).cast("int"), F.lit(0))
+    batch = (
+        ev.withColumn("sid", F.sum(brk).over(w))
+        .groupBy("site", "sid")
+        .agg(
+            F.min("us").alias("first_us"), F.max("us").alias("last_us"),
+            F.count("*").alias("n_pages"),
+        )
+    )
+    final_wm = ev.agg(F.max("us")).first()[0] - gap
+    is_last = F.col("sid") == F.max("sid").over(Window.partitionBy("site"))
     want = (
-        spark.read.parquet(pages_dir)
-        .selectExpr("split(url, '/')[2] as site")
-        .groupBy("site")
-        .count()
+        batch.withColumn("is_last", is_last)
+        .filter(~F.col("is_last") | (F.col("last_us") + gap < final_wm))
         .toPandas()
     )
-    if len(got) == 0:
-        pytest.skip(
-            "availableNow ended before the processing-time timeout fired; "
-            "state flush not observable in this mode"
-        )
-    merged = got.groupby("site")["n_pages"].sum().sort_index()
-    expect = want.set_index("site")["count"].sort_index()
-    common = merged.index.intersection(expect.index)
-    assert len(common) > 0
-    assert (merged.loc[common] <= expect.loc[common]).all()
+    assert len(got) > 0
+    pd.testing.assert_frame_equal(
+        got[key].sort_values(key).reset_index(drop=True),
+        want[key].sort_values(key).reset_index(drop=True),
+        check_dtype=False,
+    )

@@ -1,14 +1,15 @@
 """The tile merge (tiler.merge_partial_tiles) and its layer helpers:
 wire-level layer splicing, same-name re-framing through tilemerge's
-generic re-framer, fastmerge's partial re-framing as a property against
-the reference encoder, and salted == unsalted byte identity."""
+generic re-framer, the batched partial merge as a property against the
+reference encoder, and salted == unsalted byte identity."""
 
 from __future__ import annotations
 
 import numpy as np
+import pyarrow as pa
 from hypothesis import given, settings, strategies as st
 
-from engine.mvtcodec import fastmerge, fastpoints, geomstream, tile as tilemod
+from engine.mvtcodec import geomstream, pbwire, tile as tilemod
 from engine.pipeline import fixtures, index, tilemerge, tiler
 
 from .conftest import SF_DIR
@@ -130,7 +131,7 @@ def test_combined_tiles_decode(spark):
 
 
 def test_idless_features_fall_back_to_legacy(spark):
-    """Features without ids are outside fastmerge's canon — the generic
+    """Features without ids are outside the partial merge's canon — the generic
     decode/re-encode merge must still handle them."""
     fa = {
         "id": None,
@@ -159,78 +160,81 @@ _DTYPES = {"string": object, "int": np.int64, "double": np.float64}
 
 @st.composite
 def _point_partials(draw):
-    """Random point features with unique ids, split into 1-4 non-empty
-    partials (each sorted by id, as the partial encode emits them) in
-    random order."""
+    """1-3 tiles of random point features with unique ids, each tile split
+    into 1-4 non-empty partials (each sorted by id, as the partial encode
+    emits them) in random order; tag values repeat within and across
+    tiles."""
     keys = draw(st.permutations(list(_TAG_VALUES)))[: draw(st.integers(0, 3))]
-    fids = draw(st.lists(st.integers(0, 2**62), min_size=1, max_size=40, unique=True))
     coord = st.integers(-64, 4160)
-    feats = [
-        {
-            "id": fid,
-            "xy": (draw(coord), draw(coord)),
-            "tags": [(k, (_TAG_VALUES[k][0], draw(_TAG_VALUES[k][1]))) for k in keys],
-        }
-        for fid in fids
-    ]
-    n_parts = draw(st.integers(1, 4))
-    owner = [draw(st.integers(0, n_parts - 1)) for _ in feats]
-    parts = [
-        sorted((f for f, o in zip(feats, owner) if o == p), key=lambda f: f["id"])
-        for p in range(n_parts)
-    ]
-    parts = draw(st.permutations([p for p in parts if p]))
-    return keys, feats, parts
+    tiles = []
+    for _ in range(draw(st.integers(1, 3))):
+        fids = draw(st.lists(st.integers(0, 2**62), min_size=1, max_size=40, unique=True))
+        feats = [
+            {
+                "id": fid,
+                "xy": (draw(coord), draw(coord)),
+                "tags": [(k, (_TAG_VALUES[k][0], draw(_TAG_VALUES[k][1]))) for k in keys],
+            }
+            for fid in fids
+        ]
+        n_parts = draw(st.integers(1, 4))
+        owner = [draw(st.integers(0, n_parts - 1)) for _ in feats]
+        parts = [
+            sorted((f for f, o in zip(feats, owner) if o == p), key=lambda f: f["id"])
+            for p in range(n_parts)
+        ]
+        tiles.append((feats, draw(st.permutations([p for p in parts if p]))))
+    return keys, tiles
 
 
-def _encode_partial(keys, feats):
-    """One partial as merge_partial_tiles hands it to fastmerge."""
-    fids = np.array([f["id"] for f in feats], dtype=np.int64)
+def _encode_partial(keys, feats, gid):
+    """One partial row of tile ``gid``, encoded by the partial stage."""
     xy = np.array([f["xy"] for f in feats], dtype=np.int64)
-    tag_columns = {}
+    cols = {
+        "gid": np.full(len(feats), gid, dtype=np.int64),
+        "feature_id": np.array([f["id"] for f in feats], dtype=np.int64),
+        "qx": xy[:, 0],
+        "qy": xy[:, 1],
+    }
     for k in keys:
         vtype = _TAG_VALUES[k][0]
         values = [dict(f["tags"])[k][1] for f in feats]
-        tag_columns[k] = (vtype, np.array(values, dtype=_DTYPES[vtype]))
-    fb = fastpoints.encode_point_features_sorted(
-        np.array([len(feats)]), fids, xy[:, 0], xy[:, 1], tag_columns
+        cols[k] = np.array(values, dtype=_DTYPES[vtype])
+    return tiler._encode_partials_group_arrow(
+        cols, tuple((k, _TAG_VALUES[k][0]) for k in keys)
     )
-    partial = {
-        "fids": fids,
-        "block": fb["block"],
-        "feat_len": fb["feat_len"],
-        "glen": fb["glen"],
-        "vcode": fb["vcode"],
-        "dict_blob": fb["vblob"],
-        "dict_lens": fb["entry_lens"],
-    }
-    return partial, fb["keys_blob"]
 
 
 @settings(max_examples=300, deadline=None)
 @given(_point_partials())
 def test_merge_point_partials_equals_reference_encode(case):
-    """Any split of a tile's features into partials, merged in any order,
-    is byte-identical to the reference encoder over the features sorted
-    by id."""
-    keys, feats, parts = case
-    encoded = [_encode_partial(keys, p) for p in parts]
-    merged = fastmerge.merge_point_partials(
-        [p for p, _ in encoded], "pages", encoded[0][1], 4096
-    )
-    want = tilemod.encode_layer(
-        "pages",
-        {
-            "extent": 4096,
-            "features": [
-                {
-                    "id": f["id"],
-                    "geom_type": geomstream.GEOM_POINT,
-                    "geometry": geomstream.encode_point(f["xy"]),
-                    "tags": f["tags"],
-                }
-                for f in sorted(feats, key=lambda f: f["id"])
-            ],
-        },
-    )
-    assert merged == want
+    """Any split of each tile's features into partials, merged in any order
+    and with several tiles in one batched merge call, is byte-identical per
+    tile to the reference encoder over the features sorted by id."""
+    keys, tiles = case
+    rows = pa.Table.from_batches(
+        [_encode_partial(keys, p, g) for g, (_, parts) in enumerate(tiles) for p in parts]
+    ).combine_chunks()
+    cols = {c: rows.column(c).chunk(0) for c in tiler.PARTIAL_BLOBS}
+    cols["gid"] = rows.column("y").to_numpy()  # z = x = 0: the gid is y
+    cols["n_features"] = rows.column("n_features").to_numpy()
+    tag_cols = tuple((k, _TAG_VALUES[k][0]) for k in keys)
+    merged = tiler._merge_partials_batch(cols, "pages", tag_cols, 4096)
+    assert merged.column("y").to_pylist() == list(range(len(tiles)))
+    for g, (feats, _) in enumerate(tiles):
+        want = tilemod.encode_layer(
+            "pages",
+            {
+                "extent": 4096,
+                "features": [
+                    {
+                        "id": f["id"],
+                        "geom_type": geomstream.GEOM_POINT,
+                        "geometry": geomstream.encode_point(f["xy"]),
+                        "tags": f["tags"],
+                    }
+                    for f in sorted(feats, key=lambda f: f["id"])
+                ],
+            },
+        )
+        assert merged.column("mvt")[g].as_py() == pbwire.len_delimited(3, want)
