@@ -42,15 +42,15 @@ SCALING_CASES = (
 # prefixes of the pyramid plan, so per-stage cost = successive differences
 STAGE_CASES = ("pyramid_scan_geotag", "pyramid_shuffled_sorted")
 
-# pip_join stage-isolation cases (explicit-only): cumulative prefixes of the
-# broadcast PIP plan, attributing its scaling floor (VERDICT r5 item 6) —
-# scan+geotag projection, + broadcast bbox-cell candidate join, full query
-PIP_STAGE_CASES = ("pip_scan_geotag", "pip_candidates")
-
 # cases whose computation happens eagerly at DataFrame-build time (iterative
-# loops with per-round checkpoints; the kNN cascade's residue count guard):
-# rebuilt inside each timed pass so the recorded time covers the whole job
-REBUILD_CASES = {"near_dup_clusters", "corpus_prep", "knn_3_50k_partitioned"}
+# loops with per-round checkpoints; the kNN cascade's residue count guard;
+# the broadcast PIP plan's edge-table collect and index build): rebuilt
+# inside each timed pass so the recorded time covers the whole job
+REBUILD_CASES = {
+    "near_dup_clusters", "corpus_prep", "knn_3_50k_partitioned",
+    "pip_join", "pip_join_maponly", "pip_join_50k_broadcast",
+    "pip_join_1m_broadcast",
+}
 
 
 def _cases():
@@ -61,7 +61,8 @@ def _cases():
         ("tile_counts_pyramid", Q.q_tile_counts),
         ("cell_index_z12", Q.q_cell_index),
         ("pip_join", Q.q_pip_join),
-        ("pip_join_maponly", Q.q_pip_join_numpy),
+        # the one broadcast PIP plan is map-only; the key stays for history
+        ("pip_join_maponly", Q.q_pip_join),
         ("knn_3", Q.q_knn),
         ("knn_3_maponly", Q.q_knn_numpy),
         ("mvt_pyramid_z0_14", lambda s, d: _mvt_pyramid(s, d, 0, 14)),
@@ -92,70 +93,7 @@ def _stage_cases():
     return [
         ("pyramid_scan_geotag", _pyramid_scan_geotag),
         ("pyramid_shuffled_sorted", _pyramid_shuffled_sorted),
-        ("pip_scan_geotag", _pip_scan_geotag),
-        ("pip_candidates", _pip_candidates),
     ]
-
-
-def _pip_scan_geotag(spark, sf_dir):
-    """PIP stage 1: parquet scan + sha256 geotag + grid-cell projection
-    reduced to one row — the map-side input cost with no join."""
-    from pyspark.sql import functions as F
-
-    from engine.pipeline import fixtures
-
-    geo = fixtures.geotag_df(fixtures.pages_df(spark, sf_dir))
-    w = 8.0
-    pages_c = geo.selectExpr(
-        "url", "lat", "lon",
-        f"cast(floor(lon / {w}) as bigint) as gx",
-        f"cast(floor(lat / {w}) as bigint) as gy",
-    )
-    return pages_c.agg(
-        F.sum("gx").alias("s1"), F.sum("gy").alias("s2"),
-        F.count("*").alias("n_hashed"),
-    )
-
-
-def _pip_candidates(spark, sf_dir):
-    """PIP stages 1-2: + the broadcast bbox-cell candidate join and bbox
-    filter, reduced to one row — everything except the edge join and the
-    crossing-parity aggregate. The broadcast BUILD jobs (bbox agg + cell
-    explode over the polygon table) are serial driver-coordinated work
-    included here, so a flat (core-invariant) delta between this and stage
-    1 pins the plan's scaling floor on fixed broadcast/plan costs."""
-    from pyspark.sql import functions as F
-
-    from engine.pipeline import fixtures, joins
-
-    geo = fixtures.geotag_df(fixtures.pages_df(spark, sf_dir))
-    edges = fixtures.polygon_edges_df(spark, sf_dir)
-    bbox = joins.poly_bbox(edges)
-    w = joins.PIP_GRID_DEG
-    bbox_cells = bbox.selectExpr(
-        "poly_id", "bx0", "bx1", "by0", "by1",
-        f"explode(sequence(cast(floor(bx0 / {w}) as bigint), cast(floor(bx1 / {w}) as bigint))) as gx",
-    ).selectExpr(
-        "poly_id", "bx0", "bx1", "by0", "by1", "gx",
-        f"explode(sequence(cast(floor(by0 / {w}) as bigint), cast(floor(by1 / {w}) as bigint))) as gy",
-    )
-    pages_c = geo.selectExpr(
-        "url", "lat", "lon",
-        f"cast(floor(lon / {w}) as bigint) as gx",
-        f"cast(floor(lat / {w}) as bigint) as gy",
-    )
-    candidates = (
-        pages_c.join(F.broadcast(bbox_cells), ["gx", "gy"])
-        .filter(
-            (F.col("lon") >= F.col("bx0"))
-            & (F.col("lon") <= F.col("bx1"))
-            & (F.col("lat") >= F.col("by0"))
-            & (F.col("lat") <= F.col("by1"))
-        )
-    )
-    return candidates.agg(
-        F.sum("poly_id").alias("s1"), F.count("*").alias("n_hashed")
-    )
 
 
 def _pyramid_scan_geotag(spark, sf_dir):
@@ -497,7 +435,7 @@ def scaling_report(pairs=((2, 8), (8, 32)), repeats: int = 3) -> None:
     headline tables — so the headline, the scaling evidence, and the
     driver's BENCH_r*.json config cannot drift apart."""
     counts = sorted({c for p in pairs for c in p})
-    cases = SCALING_CASES + STAGE_CASES + PIP_STAGE_CASES
+    cases = SCALING_CASES + STAGE_CASES
     prev = _harvest_prev_raws()
     runs: dict[int, list] = {c: [] for c in counts}
     for _ in range(repeats):
@@ -581,33 +519,6 @@ def scaling_report(pairs=((2, 8), (8, 32)), repeats: int = 3) -> None:
                     - b["queries"]["pyramid_scan_geotag"],
                     d2=b["queries"]["mvt_pyramid_z0_14"]
                     - b["queries"]["pyramid_shuffled_sorted"],
-                )
-            )(best[c])
-            for c in counts
-        ],
-        "",
-        "## Broadcast PIP per-stage breakdown (scaling-floor attribution)",
-        "",
-        "Cumulative-prefix timings of the pip_join plan: scan+geotag+grid",
-        "projection (map-side codegen), + broadcast bbox-cell candidate",
-        "join (INCLUDING the serial broadcast-build jobs over the polygon",
-        "table), full query (+ edge join + crossing-parity aggregate, the",
-        "plan's one exchange). A stage delta that stays flat across core",
-        "counts is fixed serial cost (broadcast builds, job scheduling),",
-        "not a mis-parallelized operator.",
-        "",
-        "| cores | scan+geotag s | +bbox candidates s | full s | candidate-stage s | parity-stage s |",
-        "|---|---|---|---|---|---|",
-        *[
-            (
-                lambda b: "| {c} | {s:.2f} | {m:.2f} | {f:.2f} | {d1:.2f} | {d2:.2f} |".format(
-                    c=c,
-                    s=b["queries"]["pip_scan_geotag"],
-                    m=b["queries"]["pip_candidates"],
-                    f=b["queries"]["pip_join"],
-                    d1=b["queries"]["pip_candidates"]
-                    - b["queries"]["pip_scan_geotag"],
-                    d2=b["queries"]["pip_join"] - b["queries"]["pip_candidates"],
                 )
             )(best[c])
             for c in counts
@@ -770,11 +681,9 @@ def calibration_report() -> None:
         auto = (
             "broadcast" if n_edges <= joins.BROADCAST_EDGE_LIMIT else "partitioned"
         )
-        # same crossover-margin rule as the kNN table; additionally, local
-        # mode understates the broadcast build (one shared in-JVM copy), so
-        # a within-margin broadcast "win" at 1M polys does not indict the
-        # partitioned routing that a real cluster's ~100 MB hash relation
-        # per executor requires.
+        # same crossover-margin rule as the kNN table. BROADCAST_EDGE_LIMIT
+        # is a memory bound (driver collect + per-worker index), so a
+        # broadcast win past it reads NO here until that bound is raised.
         ok = (auto == "broadcast" and bc <= part * margin) or (
             auto == "partitioned" and part <= bc * margin
         )
@@ -852,9 +761,11 @@ def plan_report() -> None:
         "the needed columns, sha2/codegen in one WholeStageCodegen span, no shuffle.",
         "tile_counts_pyramid": "explode + integer tile math stays in codegen; "
         "ONE hash-aggregate pair (partial_count map-side before the shuffle).",
-        "pip_join": "polygon side exploded to grid cells and BROADCAST twice "
-        "(bbox candidates, then edges); the page stream never shuffles until "
-        "the final partial_sum/count crossing-parity aggregate.",
+        "pip_join": "map-only: the edge table is collected once into a grid "
+        "cell index that ships in the task closure; one MapInArrow over the "
+        "(url, lat, lon) projection probes it — no exchange, join or "
+        "aggregate above the page input (the one Exchange below is the "
+        "page fixture's own repartition).",
         "knn_3_maponly": "zero-shuffle map-only plan: centers collected to a "
         "broadcast-sized python closure; a single mapInPandas over the scan.",
         "pip_join_1m_partitioned": "shuffle-both-sides plan for the 1M-polygon "

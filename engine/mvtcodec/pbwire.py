@@ -52,6 +52,10 @@ def varint(value: int) -> bytes:
             return bytes(out)
 
 
+# a varint grows one byte at each of these values (2^7k, k = 1..9)
+_VARINT_STEPS = np.array([1 << (7 * k) for k in range(1, 10)], dtype=np.uint64)
+
+
 def varint_array(values: np.ndarray) -> bytes:
     """Vectorized LEB128 encoding of a uint64 array into one byte string.
 
@@ -66,9 +70,7 @@ def varint_array(values: np.ndarray) -> bytes:
         return b"".join(map(varint, v.tolist()))
     if v.max() < 128:  # every varint is its one byte
         return v.astype(np.uint8).tobytes()
-    lens = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        lens += (v >= np.uint64(1 << (7 * k))).astype(np.int64)
+    lens = varint_array_lengths(v)
     ends = np.cumsum(lens)
     starts = ends - lens
     out = np.zeros(int(ends[-1]), dtype=np.uint8)
@@ -83,10 +85,7 @@ def varint_array(values: np.ndarray) -> bytes:
 def varint_array_lengths(values: np.ndarray) -> np.ndarray:
     """Byte length each value would occupy as a varint (vectorized)."""
     v = np.ascontiguousarray(values, dtype=np.uint64)
-    lens = np.ones(v.shape, dtype=np.int64)
-    for k in range(1, 10):
-        lens += (v >= np.uint64(1 << (7 * k))).astype(np.int64)
-    return lens
+    return np.searchsorted(_VARINT_STEPS, v, side="right") + 1
 
 
 def len_delimited(field: int, payload: bytes) -> bytes:

@@ -1,17 +1,14 @@
 """Spatial joins (SURVEY B8, B9): point-in-polygon and kNN.
 
-Both are expressed RELATIONALLY with broadcast dimension sides — the whole
-plan stays in JVM whole-stage codegen (no Python in the hot path), Catalyst
-picks broadcast-hash joins, and the exact same arithmetic runs in the
-DuckDB oracle (IEEE doubles: +,-,*,/ and comparisons are correctly rounded,
-so results match bit-for-bit).
+Every plan runs its DuckDB oracle's IEEE double arithmetic in the same
+order of operations, so results match bit-for-bit.
 
-PIP = even-odd ray casting, decomposed as:
-  1. bbox prefilter: broadcast range join pages x poly_bbox  (the "prepared"
-     bucket stage; at cluster scale the bbox table is tiny and broadcast)
-  2. edge join on poly_id (broadcast) + crossing-parity aggregation
-     (partial aggregation is map-side: Catalyst plans partial_sum before
-     the shuffle, so the z0-style skew never concentrates).
+PIP = even-odd ray casting (CROSSING_COND parity over all rings) after a
+closed bbox prefilter, in two plans:
+  - pip_join: map-only probe of a collected edge table's grid cell index;
+  - pip_join_partitioned: salted shuffle joins, for tables past broadcast
+    size;
+  - pip_join_auto picks one of the two by edge count.
 
 kNN = exact top-k in (dist2, poly_id) order (SURVEY B9) from one 3x3
 cell-neighbor level whose in-ball top-k is provable, plus an exact pass
@@ -27,22 +24,23 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.spatial.clipbatch import run_starts
+from engine.spatial import pip as pipmod
 
 CROSSING_COND = (
     "((y1 > lat) != (y2 > lat)) AND (lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1))"
 )
 
 
-PIP_GRID_DEG = 8.0  # bucket grid for the prepared-polygon stage
+PIP_GRID_DEG = 8.0  # PIP candidate-grid cell width (fixture-sized tables)
 
 
 def pip_grid_deg(n_edges: int) -> float:
     """Density-adaptive candidate-grid width: shrink cells as the polygon
-    table grows so per-cell polygon fanout (and with it the candidate-join
-    blowup) stays roughly constant. Anchored on the two measured calibration
+    table grows so per-cell polygon fanout (and with it the candidate
+    pairs) stays roughly constant. Anchored on the two measured calibration
     points (362k edges -> 2.0 deg, 6.2M edges -> 0.5 deg; bench cases
     pip_join_50k/_1m), i.e. w ~ n_edges^-1/2, clamped to the fixture
     default at the small end."""
@@ -51,96 +49,29 @@ def pip_grid_deg(n_edges: int) -> float:
     )
 
 
-def poly_bbox(edges: DataFrame) -> DataFrame:
-    return edges.groupBy("poly_id").agg(
-        F.least(F.min("x1"), F.min("x2")).alias("bx0"),
-        F.least(F.min("y1"), F.min("y2")).alias("by0"),
-        F.greatest(F.max("x1"), F.max("x2")).alias("bx1"),
-        F.greatest(F.max("y1"), F.max("y2")).alias("by1"),
-    )
-
-
 def pip_join(
     geotagged: DataFrame, edges: DataFrame, grid_deg: float | None = None
 ) -> DataFrame:
     """(url, poly_id) pairs where the page's point is inside the polygon
-    (even-odd over all rings, holes subtract).
+    (even-odd over all rings, holes subtract). The edge table is collected
+    once into a grid cell index (``grid_deg`` wide, pip_grid_deg for large
+    tables) that ships in the task closure; the plan is scan -> mapInArrow
+    probe, with no exchange, join or aggregate."""
+    cols = ("poly_id", "x1", "y1", "x2", "y2")
+    t = edges.select(*cols).toArrow()
+    ix = pipmod.build_cell_index(*(t[c].to_numpy() for c in cols), grid_deg or PIP_GRID_DEG)
 
-    Scale path ("prepared ray-casting over cell-bucketed broadcast
-    polygons"): each polygon bbox explodes into the grid cells it
-    intersects (broadcast, tiny); pages equi-join on their own cell — a
-    HASH join whose fanout is the local polygon density, instead of an
-    O(pages x polys) nested-loop range join. The bbox filter then the
-    crossing-parity aggregation keep semantics exact. ``grid_deg`` should
-    shrink as polygon density grows (default 8 deg fits the fixture set).
-    """
-    bbox = poly_bbox(edges)
-    w = grid_deg or PIP_GRID_DEG
-    bbox_cells = bbox.selectExpr(
-        "poly_id", "bx0", "bx1", "by0", "by1",
-        f"explode(sequence(cast(floor(bx0 / {w}) as bigint), cast(floor(bx1 / {w}) as bigint))) as gx",
-    ).selectExpr(
-        "poly_id", "bx0", "bx1", "by0", "by1", "gx",
-        f"explode(sequence(cast(floor(by0 / {w}) as bigint), cast(floor(by1 / {w}) as bigint))) as gy",
-    )
-    pages_c = geotagged.selectExpr(
-        "url", "lat", "lon",
-        f"cast(floor(lon / {w}) as bigint) as gx",
-        f"cast(floor(lat / {w}) as bigint) as gy",
-    )
-    candidates = (
-        pages_c.join(F.broadcast(bbox_cells), ["gx", "gy"])
-        .filter(
-            (F.col("lon") >= F.col("bx0"))
-            & (F.col("lon") <= F.col("bx1"))
-            & (F.col("lat") >= F.col("by0"))
-            & (F.col("lat") <= F.col("by1"))
-        )
-        .select("url", "lat", "lon", "poly_id")
-    )
-    # r7 restructure (guide §2.3/§2.4): the polygon's edges GROUP into one
-    # array row per poly_id; candidates join 1:1 and the crossing-parity
-    # count is a per-row array kernel (same IEEE CROSSING_COND per edge).
-    # The old plan materialized candidates x edges rows out of the second
-    # broadcast join and fed the survivors through a (url, poly_id) hash
-    # aggregate + exchange; the array form makes the whole query one
-    # map-only pipeline — scan -> bj(cells) -> bj(edge arrays) -> filter —
-    # with ZERO exchanges, measured ~25% faster at the 50k-poly (~360k-edge)
-    # calibration point. Past ~2M edges the collect_list groupBy feeding the
-    # broadcast build turns into ObjectHashAggregate heap churn and measured
-    # slightly SLOWER (the 1M-poly evidence arm), so the plan branches on
-    # the calibrated grid width: callers derive grid_deg from n_edges via
-    # pip_grid_deg (w ~ n_edges^-1/2), making w >= pip_grid_deg(2M edges)
-    # exactly the broadcastable-density regime where the array kernel wins.
-    if w >= pip_grid_deg(BROADCAST_EDGE_LIMIT):
-        return candidates.join(F.broadcast(_edges_arr(edges)), "poly_id").filter(
-            F.expr(f"{_ARR_PARITY} % 2 = 1")
-        ).select("url", "poly_id")
-    crossings = (
-        candidates.join(F.broadcast(edges.select("poly_id", "x1", "y1", "x2", "y2")), "poly_id")
-        # non-crossing pairs contribute 0 to the parity sum, so drop them
-        # BEFORE the aggregate: it sees ~#crossings rows, not cand x edges
-        .filter(F.expr(CROSSING_COND))
-        .groupBy("url", "poly_id")
-        .agg(F.count("*").alias("c"))
-    )
-    return crossings.filter(F.col("c") % 2 == 1).select("url", "poly_id")
+    def probe(batches):
+        for b in batches:
+            lon, lat = (b[c].to_numpy(zero_copy_only=False) for c in ("lon", "lat"))
+            rows, poly_id = pipmod.probe(ix, lon, lat)
+            yield pa.RecordBatch.from_arrays(
+                [b["url"].take(rows), pa.array(poly_id, pa.int64())],
+                ["url", "poly_id"],
+            )
 
-
-# per-edge crossing test over the grouped edge array — textually the same
-# arithmetic as CROSSING_COND with e.-qualified edge fields
-_ARR_PARITY = (
-    "size(filter(_edges, e -> ((e.y1 > lat) != (e.y2 > lat)) AND "
-    "(lon < e.x1 + (lat - e.y1) * (e.x2 - e.x1) / (e.y2 - e.y1))))"
-)
-
-
-def _edges_arr(edges: DataFrame) -> DataFrame:
-    """(poly_id, _edges array<struct<x1,y1,x2,y2>>) — one row per polygon.
-    collect_list order is nondeterministic, but the only consumer counts
-    matching elements (order-invariant)."""
-    return edges.groupBy("poly_id").agg(
-        F.collect_list(F.struct("x1", "y1", "x2", "y2")).alias("_edges")
+    return geotagged.select("url", "lat", "lon").mapInArrow(
+        probe, "url string, poly_id long"
     )
 
 
@@ -167,107 +98,13 @@ SELECT url, poly_id FROM crossings WHERE c % 2 = 1
 """
 
 
-def pip_join_numpy(
-    geotagged: DataFrame, polys: list[dict], grid_deg: float | None = None
-) -> DataFrame:
-    """PIP join, map-only path: the polygon table (small dim side) ships to
-    every task; each Arrow batch looks its pages up in a CELL-BUCKETED
-    polygon index (the in-memory twin of pip_join's grid), bbox-checks only
-    the local candidates, then vector-ray-casts per candidate polygon
-    (engine.spatial.pip — the SAME IEEE expression as CROSSING_COND, so
-    this shares pip_join's oracle). Zero shuffle; per-batch work is
-    O(candidate pairs) like the relational plan, NOT O(P) per batch — the
-    round-2 version looped every polygon per batch, fine at P=500, wrong
-    at P=10^5. Past the closure-shipping regime entirely (P beyond memory),
-    use pip_join_partitioned — pip_join_auto chooses.
-
-    ``polys``: fixtures.polygons_np output (rings per polygon).
-    """
-    from engine.spatial import pip as pipmod
-
-    w = grid_deg or PIP_GRID_DEG
-    rings_by_slot = [
-        [np.asarray(r, dtype=np.float64) for r in p["rings"]] for p in polys
-    ]
-    pids = np.array([int(p["poly_id"]) for p in polys], dtype=np.int64)
-    bbox = np.array([pipmod.bbox_of(p["rings"]) for p in polys], dtype=np.float64)
-    bx0, by0, bx1, by1 = bbox[:, 0], bbox[:, 1], bbox[:, 2], bbox[:, 3]
-    buckets: dict[tuple[int, int], list[int]] = {}
-    for i in range(len(polys)):
-        for gx in range(int(np.floor(bx0[i] / w)), int(np.floor(bx1[i] / w)) + 1):
-            for gy in range(int(np.floor(by0[i] / w)), int(np.floor(by1[i] / w)) + 1):
-                buckets.setdefault((gx, gy), []).append(i)
-    buckets_np = {k: np.asarray(v, dtype=np.int64) for k, v in buckets.items()}
-
-    def compute(batches):
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            urls = pdf["url"].to_numpy()
-            gx = np.floor(lon / w).astype(np.int64)
-            gy = np.floor(lat / w).astype(np.int64)
-            code = (gx + (1 << 20)) * (1 << 21) + (gy + (1 << 20))
-            order = np.argsort(code, kind="stable")
-            sc = code[order]
-            cell_starts = run_starts(sc)
-            cell_ends = np.append(cell_starts[1:], len(sc))
-            pair_page, pair_poly = [], []
-            for s, e in zip(cell_starts, cell_ends):
-                idx = order[s:e]
-                cand = buckets_np.get((int(gx[idx[0]]), int(gy[idx[0]])))
-                if cand is None:
-                    continue
-                sub_lon, sub_lat = lon[idx], lat[idx]
-                mask = (
-                    (sub_lon[:, None] >= bx0[cand])
-                    & (sub_lon[:, None] <= bx1[cand])
-                    & (sub_lat[:, None] >= by0[cand])
-                    & (sub_lat[:, None] <= by1[cand])
-                )
-                pi, pj = np.nonzero(mask)
-                if len(pi):
-                    pair_page.append(idx[pi])
-                    pair_poly.append(cand[pj])
-            out_urls, out_pids = [], []
-            if pair_page:
-                pages_c = np.concatenate(pair_page)
-                polys_c = np.concatenate(pair_poly)
-                po = np.argsort(polys_c, kind="stable")
-                pages_c, polys_c = pages_c[po], polys_c[po]
-                p_starts = run_starts(polys_c)
-                p_ends = np.append(p_starts[1:], len(polys_c))
-                for s, e in zip(p_starts, p_ends):
-                    slot = int(polys_c[s])
-                    cand_pages = pages_c[s:e]
-                    inside = pipmod.points_in_polygon(
-                        lon[cand_pages], lat[cand_pages], rings_by_slot[slot]
-                    )
-                    sel = cand_pages[inside]
-                    if len(sel):
-                        out_urls.append(urls[sel])
-                        out_pids.append(
-                            np.full(len(sel), pids[slot], dtype=np.int64)
-                        )
-            yield pd.DataFrame(
-                {
-                    "url": np.concatenate(out_urls) if out_urls else [],
-                    "poly_id": np.concatenate(out_pids) if out_pids else [],
-                }
-            )
-
-    return geotagged.select("url", "lat", "lon").mapInPandas(
-        compute, "url string, poly_id long"
-    )
-
-
-# Broadcast chooser thresholds. Edges: ~48 B/row -> ~100 MB at 2M edges,
-# the practical ceiling for a broadcast build side on real executors
-# (hash relation ~2-3x data size against executor memory); measured
-# in-sandbox the broadcast PIP plan also keeps winning through ~400k edges
-# (its second join stays map-side — candidates never hit an exchange) and
-# loses by 1M-polygon scale (bench pip_join_1m_*). Centers: the hybrid kNN
+# Broadcast chooser thresholds. Edges: the broadcast PIP plan collects the
+# edge table to the driver (five 8-byte columns, ~40 B/edge) and ships its
+# cell index in every task closure (~40 B/edge again: the four coordinates
+# plus per-polygon bbox, offsets and cells), ~80 MB each at 2M edges — a
+# memory bound for the driver and each Python worker, not a measured
+# crossover (BENCH/CALIBRATION.md times both plans at 50k and 1M
+# polygons). Centers: the hybrid kNN
 # collects the center table to the driver and matmuls the residue pages
 # against ALL of it, so it loses once the O(residue x n_centers) kernel
 # outgrows the partitioned path's density-bounded candidate join. The
@@ -329,14 +166,15 @@ def pip_join_partitioned(
     """PIP join, shuffle-both-sides path: for polygon tables too large to
     broadcast (a country-scale OSM table: 10^7 polygons x 10^2 vertices).
 
-    Same decomposition as pip_join — grid-cell candidate equi-join, bbox
-    filter, edge join, crossing-parity aggregate — but the joins are
-    SHUFFLE hash joins: the polygon side is pre-exploded to its grid cells
-    and SALTED (replicated N_SALT ways), pages pick one salt by url hash,
-    so a hot cell (urban polygon cluster under a page-dense area) spreads
-    over N_SALT reducers instead of one. Salting replicates the polygon
-    side's shuffle bytes x N_SALT, so the factor stays small; AQE
-    skew-join is the backstop for residual imbalance.
+    pip_join's steps as relational operators — a grid-cell equi-join, the
+    closed bbox filter, an edge join on poly_id and a (url, poly_id) parity
+    aggregate — planned as SHUFFLE hash joins: the polygon side is
+    pre-exploded to its grid cells and SALTED (replicated N_SALT ways),
+    pages pick one salt by url hash, so a hot cell (urban polygon cluster
+    under a page-dense area) spreads over N_SALT reducers instead of one.
+    Salting replicates the polygon side's shuffle bytes x N_SALT, so the
+    factor stays small; AQE skew-join is the backstop for residual
+    imbalance.
 
     The candidates-x-edges join on poly_id is skew-guarded too: a
     MEGA-polygon (10^4+ edges — a country polygon in OSM — under a
@@ -350,9 +188,13 @@ def pip_join_partitioned(
     job runs at DataFrame-construction time. Salting only changes routing
     — output is identical to pip_join, same oracle.
     """
-    bbox = poly_bbox(edges)
     w = grid_deg or PIP_GRID_DEG
-    bbox_cells = bbox.selectExpr(
+    bbox_cells = edges.groupBy("poly_id").agg(
+        F.least(F.min("x1"), F.min("x2")).alias("bx0"),
+        F.least(F.min("y1"), F.min("y2")).alias("by0"),
+        F.greatest(F.max("x1"), F.max("x2")).alias("bx1"),
+        F.greatest(F.max("y1"), F.max("y2")).alias("by1"),
+    ).selectExpr(
         "poly_id", "bx0", "bx1", "by0", "by1",
         f"explode(sequence(cast(floor(bx0 / {w}) as bigint), cast(floor(bx1 / {w}) as bigint))) as gx",
     ).selectExpr(
@@ -381,14 +223,8 @@ def pip_join_partitioned(
         )
         .select("url", "lat", "lon", "poly_id", "_salt")
     )
-    # NOTE (r7): the broadcast pip_join moved to the per-polygon edge-ARRAY
-    # parity kernel, but this partitioned path deliberately keeps the
-    # row-based edge join + (url, poly_id) parity aggregate: grouping a
-    # data-sized edge table with collect_list is an ObjectHashAggregate
-    # (per-group heap buffers, sort-based fallback past the group
-    # threshold) whose GC churn made the 50k/1m bench cases bimodal
-    # (measured 7s warm vs 23-34s under heap pressure), while the row plan
-    # below exchanges the same bytes once and aggregates in UnsafeRow land.
+    # edges stay rows: a collect_list of per-polygon edge arrays measured
+    # bimodal at 50k/1m polygons (ObjectHashAggregate GC churn)
     if max_edges_per_poly is None or max_edges_per_poly >= EDGE_SALT_EDGES_PER_POLY:
         # selective salting: the skewed-poly list is tiny by construction
         # (mega-polygons), so it broadcasts to tag both join sides
@@ -446,9 +282,11 @@ def pip_join_auto(
     max_edges_per_poly: int | None = None,
 ) -> DataFrame:
     """Size-based chooser between the broadcast and partitioned PIP plans.
-    BROADCAST_EDGE_LIMIT is calibrated by `python bench.py --calibration`
-    (BENCH/CALIBRATION.md) — regenerate after touching either plan.
-
+    The broadcast plan (pip_join) runs one eager collect of the dimension
+    table while the DataFrame is built; BROADCAST_EDGE_LIMIT bounds that
+    collect and the index it ships (`python bench.py --calibration` times
+    both plans into BENCH/CALIBRATION.md — regenerate after touching
+    either plan).
 
     ``n_edges`` / ``max_edges_per_poly`` are polygon-side stats — at real
     scale they come from table metadata (Iceberg snapshot stats + a

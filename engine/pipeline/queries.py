@@ -190,13 +190,6 @@ def q_pip_join_sql(sf_dir):
     return joins.pip_oracle_sql(_spatial_ctes(sf_dir, want_edges=True))
 
 
-def q_pip_join_numpy(spark, sf_dir):
-    """B8 alternate: map-only PIP (broadcast polygons, numpy batch
-    ray-cast, zero shuffle). Same oracle as pip_join."""
-    polys = fixtures.polygons_np(fixtures.poly_count_for(sf_dir))
-    return joins.pip_join_numpy(_geotagged(spark, sf_dir), polys)
-
-
 def q_pip_partitioned(spark, sf_dir):
     """B8 scale path: shuffle-both-sides PIP (salted cell equi-join, no
     broadcast) — the plan for polygon tables beyond broadcast size. Same
@@ -1056,19 +1049,18 @@ def _variants_sql(base_sql: str, variants: tuple[str, ...]) -> str:
     )
 
 
-PIP_VARIANTS = ("broadcast", "maponly", "partitioned", "auto")
+PIP_VARIANTS = ("broadcast", "partitioned", "auto")
 KNN_VARIANTS = ("broadcast", "maponly", "partitioned", "auto")
 
 
 def q_pip_variants(spark, sf_dir):
-    """B8, all four plans in ONE driver row: broadcast, map-only (numpy),
-    shuffle-partitioned, and the auto chooser each tagged and unioned —
-    the value-hash against oracle x4 verifies every PIP path agrees
-    exactly (salting/bucketing change routing, never results)."""
+    """B8, all three plans in ONE driver row: broadcast (map-only cell
+    index), shuffle-partitioned, and the auto chooser each tagged and
+    unioned — the value-hash against oracle x3 verifies every PIP path
+    agrees exactly (salting/bucketing change routing, never results)."""
     return _union_variants(
         [
             ("broadcast", q_pip_join),
-            ("maponly", q_pip_join_numpy),
             ("partitioned", q_pip_partitioned),
             ("auto", q_pip_auto),
         ],

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
+from hypothesis import given, settings, strategies as st
 
 from engine.spatial import cells, clip, hilbert, mercator, pip, raster
 
@@ -185,3 +186,91 @@ def test_raster_roundtrip():
     tx, ty, px, py = raster.raster_cell_to_tile(row, col, 16, 16, z=5)
     assert (tx >= 0).all() and (tx < 32).all() and (px >= 0).all() and (px < 4096).all()
     assert (ty >= 0).all() and (ty < 32).all() and (py >= 0).all() and (py < 4096).all()
+
+
+def _kgon(cx, cy, r, k, phase):
+    ang = phase + 2 * np.pi * np.arange(k) / k
+    return np.round(np.stack([cx + r * np.cos(ang), cy + r * np.sin(ang)], 1), 6)
+
+
+@st.composite
+def _pip_case(draw):
+    """Random convex k-gons (some with a convex hole), a grid width below
+    one polygon's span or above all of them, and probe points snapped onto
+    vertices, edge y-levels, bbox borders and cell borders."""
+
+    def f(lo, hi):
+        return draw(st.floats(lo, hi, allow_nan=False))
+
+    polys = []
+    for _ in range(draw(st.integers(1, 4))):
+        cx, cy, r, k = f(-60, 60), f(-60, 60), f(0.5, 20), draw(st.integers(3, 9))
+        rings = [_kgon(cx, cy, r, k, f(0, 7))]
+        if draw(st.booleans()):  # inside the exterior's inradius r cos(pi/k) >= r/2
+            hole = _kgon(cx, cy, r * f(0.05, 0.45), draw(st.integers(3, 9)), f(0, 7))
+            rings.append(hole[::-1])
+        polys.append(rings)
+    verts = np.concatenate([r for rings in polys for r in rings])
+    lo, hi = verts.min(0), verts.max(0)
+    ext = polys[0][0]
+    if draw(st.booleans()):
+        w = f(0.05, 0.95) * float((ext.max(0) - ext.min(0)).max())
+    else:
+        w = f(1.05, 4.0) * float((hi - lo).max() + np.abs(verts).max())
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+
+    def near(m):
+        return rng.uniform(lo - 1, hi + 1, (m, 2))
+
+    n = 64
+    borders = np.concatenate([[r[0].min(0), r[0].max(0)] for r in polys])
+    y_level, bbox_x, bbox_y, cell = near(len(verts)), near(n), near(n), near(n)
+    y_level[:, 1] = verts[:, 1]
+    bbox_x[:, 0] = rng.choice(borders[:, 0], n)
+    bbox_y[:, 1] = rng.choice(borders[:, 1], n)
+    grid = rng.integers(np.floor(lo / w) - 1, np.floor(hi / w) + 2, (n, 2))
+    cell[:, 0] = w * grid[:, 0]
+    cell[: n // 2, 1] = w * grid[: n // 2, 1]
+    xy = np.concatenate([near(n), verts, y_level, bbox_x, bbox_y, cell])
+    return polys, w, xy[:, 0], xy[:, 1]
+
+
+def _edge_table(polys):
+    rows = []
+    for pid, rings in enumerate(polys):
+        for ring in rings:
+            for (x1, y1), (x2, y2) in zip(ring, np.roll(ring, -1, axis=0)):
+                rows.append((pid, x1, y1, x2, y2))
+    return [np.array(c) for c in zip(*rows)]
+
+
+@settings(max_examples=200, deadline=None)
+@given(_pip_case())
+def test_pip_cell_index_matches_ring_reference(case):
+    """The join kernel (index + probe) equals the ring reference behind the
+    oracle's closed bbox prefilter, pair for pair, at any grid width and
+    any chunk budget."""
+    polys, w, px, py = case
+    pid, x1, y1, x2, y2 = _edge_table(polys)
+    want = set()
+    for i, rings in enumerate(polys):
+        b0, b1 = rings[0].min(0), rings[0].max(0)
+        in_box = (px >= b0[0]) & (px <= b1[0]) & (py >= b0[1]) & (py <= b1[1])
+        inside = in_box & pip.points_in_polygon(px, py, rings)
+        want |= {(int(r), i) for r in np.flatnonzero(inside)}
+    ix = pip.build_cell_index(pid, x1, y1, x2, y2, w)
+    rows, ids = pip.probe(ix, px, py)
+    got = list(zip(rows.tolist(), ids.tolist()))
+    assert got == sorted(want)
+    # the pair x edge expansion split below one polygon's edge count
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(pip, "PAIR_EDGE_CHUNK", 2)
+        rows2, ids2 = pip.probe(ix, px, py)
+    assert list(zip(rows2.tolist(), ids2.tolist())) == got
+    # edge order moves nothing but the order of a polygon's own edges
+    rev = pip.build_cell_index(*(c[::-1] for c in (pid, x1, y1, x2, y2)), w)
+    for name in ix._fields:
+        if name != "edges":
+            np.testing.assert_array_equal(getattr(ix, name), getattr(rev, name))
+    rows3, ids3 = pip.probe(rev, px, py)
+    assert list(zip(rows3.tolist(), ids3.tolist())) == got
