@@ -44,12 +44,12 @@ STAGE_CASES = ("pyramid_scan_geotag", "pyramid_shuffled_sorted")
 
 # cases whose computation happens eagerly at DataFrame-build time (iterative
 # loops with per-round checkpoints; the kNN cascade's residue count guard;
-# the broadcast PIP plan's edge-table collect and index build): rebuilt
-# inside each timed pass so the recorded time covers the whole job
+# the broadcast PIP and kNN plans' dimension-table collect and index build):
+# rebuilt inside each timed pass so the recorded time covers the whole job
 REBUILD_CASES = {
     "near_dup_clusters", "corpus_prep", "knn_3_50k_partitioned",
     "pip_join", "pip_join_maponly", "pip_join_50k_broadcast",
-    "pip_join_1m_broadcast",
+    "pip_join_1m_broadcast", "knn_3", "knn_3_maponly", "knn_3_50k_hybrid",
 }
 
 
@@ -64,7 +64,8 @@ def _cases():
         # the one broadcast PIP plan is map-only; the key stays for history
         ("pip_join_maponly", Q.q_pip_join),
         ("knn_3", Q.q_knn),
-        ("knn_3_maponly", Q.q_knn_numpy),
+        # the one broadcast kNN plan is map-only; the key stays for history
+        ("knn_3_maponly", Q.q_knn),
         ("mvt_pyramid_z0_14", lambda s, d: _mvt_pyramid(s, d, 0, 14)),
         ("geotag_hash_x40", _geotag_hash_x40),
         ("media_dims_x10", _media_dims_x10),
@@ -301,7 +302,7 @@ def _knn_50k(spark, sf_dir, partitioned: bool):
     geo = fixtures.geotag_df(fixtures.pages_df(spark, sf_dir))
     if partitioned:
         return joins.knn_join_partitioned(geo, centers, k=3, n_centers=BENCH_POLY_N)
-    return joins.knn_join(geo, centers, k=3, n_centers=BENCH_POLY_N)
+    return joins.knn_join(geo, centers, k=3)
 
 
 def _media_dims_x10(spark, sf_dir):
@@ -645,7 +646,7 @@ def calibration_report() -> None:
     knn_rows = []
     for n in (10_000, 50_000, 100_000, 200_000, 500_000):
         centers = fixtures.polygon_centers_table_bulk(spark, n)
-        hyb = best_of(lambda: joins.knn_join(geo, centers, k=3, n_centers=n))
+        hyb = best_of(lambda: joins.knn_join(geo, centers, k=3))
         part = best_of(
             lambda: joins.knn_join_partitioned(geo, centers, k=3, n_centers=n)
         )
@@ -705,12 +706,12 @@ def calibration_report() -> None:
         "|---|---|---|",
         f"| BROADCAST_EDGE_LIMIT | {joins.BROADCAST_EDGE_LIMIT} | pip_join_auto: broadcast vs partitioned |",
         f"| BROADCAST_CENTER_LIMIT_PER_CORE | {joins.BROADCAST_CENTER_LIMIT_PER_CORE} | knn_join_auto: hybrid vs partitioned, per core (x{CPUS} cores -> {joins.broadcast_center_limit(spark)} at this session) |",
-        f"| BROADCAST_CENTER_COLLECT_CAP | {joins.BROADCAST_CENTER_COLLECT_CAP} | hybrid's driver-collect/broadcast ceiling (~40 B/center) |",
+        f"| BROADCAST_CENTER_COLLECT_CAP | {joins.BROADCAST_CENTER_COLLECT_CAP} | broadcast kNN's driver-collect/task-closure ceiling (~24 + ~48 B/center) |",
         f"| PIP_GRID_DEG | {joins.PIP_GRID_DEG} | PIP candidate-grid ceiling (pip_grid_deg adapts by edge count) |",
         f"| KNN_CELL_DEG | {joins.KNN_CELL_DEG} | kNN cell-width ceiling (density formula adapts by center count) |",
         f"| EDGE_SALT_EDGES_PER_POLY | {joins.EDGE_SALT_EDGES_PER_POLY} | selective mega-polygon salting threshold |",
         "",
-        "## kNN: hybrid (broadcast + numpy residue) vs partitioned cascade",
+        "## kNN: hybrid (center-cell probe + in-worker residue) vs partitioned cascade",
         "",
         "Bulk center fixture (uniform over the +-60 lat band), sf0.1 pages.",
         "The auto chooser must route each row to the measured-faster plan.",
@@ -766,8 +767,13 @@ def plan_report() -> None:
         "(url, lat, lon) projection probes it — no exchange, join or "
         "aggregate above the page input (the one Exchange below is the "
         "page fixture's own repartition).",
-        "knn_3_maponly": "zero-shuffle map-only plan: centers collected to a "
-        "broadcast-sized python closure; a single mapInPandas over the scan.",
+        "knn_3_maponly": "map-only: the center table is collected once into a "
+        "grid cell index that ships in the task closure; one MapInArrow over "
+        "the (url, lat, lon) projection takes each page's candidates from its "
+        "3x3 neighbor cells and ranks the pages it cannot prove against every "
+        "center in the same worker — no exchange, join, window or cache above "
+        "the page input (the one Exchange below is the page fixture's own "
+        "repartition).",
         "pip_join_1m_partitioned": "shuffle-both-sides plan for the 1M-polygon "
         "dimension table: no broadcast HINT on the polygon side — the salted "
         "cell equi-join and the poly_id edge join are planned as shuffle "

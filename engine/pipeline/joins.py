@@ -12,22 +12,21 @@ closed bbox prefilter, in two plans:
 
 kNN = exact top-k in (dist2, poly_id) order (SURVEY B9) from one 3x3
 cell-neighbor level whose in-ball top-k is provable, plus an exact pass
-for the pages it cannot prove:
-  - knn_join broadcasts per-cell candidate arrays and sends the residue
-    to the map-only numpy kernel (knn_join_numpy);
-  - knn_join_partitioned shuffle-joins on (cell, salt) and sends the
-    residue to the cell-bound terminal (_knn_cell_bound_terminal);
+for the pages it cannot prove, in two plans:
+  - knn_join: map-only probe of a collected center table's grid cell
+    index; the pages it cannot prove are ranked against every center in
+    the same worker;
+  - knn_join_partitioned: shuffle joins on (cell, salt), with the residue
+    sent to the cell-bound terminal (_knn_cell_bound_terminal);
   - knn_join_auto picks one of the two by center count.
 """
 
 from __future__ import annotations
 
-import numpy as np
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
-from engine.spatial import pip as pipmod
+from engine.spatial import knn as knnmod, pip as pipmod
 
 CROSSING_COND = (
     "((y1 > lat) != (y2 > lat)) AND (lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1))"
@@ -46,6 +45,20 @@ def pip_grid_deg(n_edges: int) -> float:
     default at the small end."""
     return float(
         min(PIP_GRID_DEG, max(0.05, (1_450_000.0 / max(n_edges, 1)) ** 0.5))
+    )
+
+
+KNN_CELL_DEG = 22.5  # kNN candidate-grid cell width (fixture-sized tables)
+
+
+def knn_cell_deg(n_centers: int) -> float:
+    """Density-adaptive kNN cell width: w ~ n_centers^-1/2, so the mean
+    number of centers per cell stays constant as the table grows — about 3
+    over the fixtures' +-60 degree latitude band (129,900 / (360 x 120)),
+    27 candidates in a page's 3x3 neighbor cells. Clamped to KNN_CELL_DEG
+    at the small end and floored at 2 degrees (reached at 32,475 centers)."""
+    return float(
+        min(KNN_CELL_DEG, max(2.0, (129_900.0 / max(n_centers, 1)) ** 0.5))
     )
 
 
@@ -104,10 +117,14 @@ SELECT url, poly_id FROM crossings WHERE c % 2 = 1
 # plus per-polygon bbox, offsets and cells), ~80 MB each at 2M edges — a
 # memory bound for the driver and each Python worker, not a measured
 # crossover (BENCH/CALIBRATION.md times both plans at 50k and 1M
-# polygons). Centers: the hybrid kNN
-# collects the center table to the driver and matmuls the residue pages
-# against ALL of it, so it loses once the O(residue x n_centers) kernel
+# polygons). Centers: the broadcast kNN plan collects the center table to
+# the driver once (three 8-byte columns, 24 B/center) and ships its grid
+# index in every task closure (~48 B/center: the three columns plus cell
+# codes, offsets and slots). Its workers rank the residue pages against
+# ALL centers, so it loses once that O(residue x n_centers) kernel
 # outgrows the partitioned path's density-bounded candidate join. The
+# windows below were measured when the broadcast plan was a broadcast
+# join of per-cell candidate arrays with the same residue kernel. The
 # crossover is PARALLELISM-DEPENDENT: the hybrid's matmul wall-time is
 # ~ n_centers / cores (it parallelizes near-perfectly), while the
 # partitioned cascade is stage-count-bound and nearly flat in cores
@@ -118,8 +135,8 @@ SELECT url, poly_id FROM crossings WHERE c % 2 = 1
 # (hybrid clearly wins 50k, 6.3s vs 9.6s; 100k straddles run-to-run,
 # 10.1s vs 10.8s then 11.6s vs 9.9s; 200k clearly partitioned) and in
 # (10k, 50k] at local[8] (4.2s vs 6.9s at 10k, 10.0s vs 8.1s at 50k) —
-# 3k centers/core sits inside both windows. The cap bounds the hybrid's
-# driver collect + broadcast (~40 B/center -> ~80 MB at 2M), the real
+# 3k centers/core sits inside both windows. The cap bounds the one driver
+# collect and the task closure (~50 + ~100 MB at 2M centers), the real
 # ceiling once a cluster's core count stops being the binding
 # constraint.
 BROADCAST_EDGE_LIMIT = 2_000_000
@@ -128,8 +145,8 @@ BROADCAST_CENTER_COLLECT_CAP = 2_000_000
 
 
 def broadcast_center_limit(spark) -> int:
-    """Largest center-table size knn_join_auto routes to the broadcast-
-    hybrid plan at this session's parallelism: per-core crossover x
+    """Largest center-table size knn_join_auto routes to the broadcast
+    plan at this session's parallelism: per-core crossover x
     total cores, capped by the driver-collect ceiling (constants and
     evidence above; table in BENCH/CALIBRATION.md)."""
     try:
@@ -353,9 +370,6 @@ def asof_join(
     return u.filter(F.col("_kind") == 1).drop("_kind")
 
 
-KNN_CELL_DEG = 22.5  # default degree-grid cell width for candidate gen
-
-
 def _with_dist2(paired: DataFrame) -> DataFrame:
     return paired.withColumn(
         "dist2",
@@ -404,119 +418,45 @@ def knn_bruteforce(geotagged: DataFrame, centers: DataFrame, k: int = 3) -> Data
     return _topk(paired, k).select("url", "poly_id", "dist2", "rank")
 
 
-def _knn_topk_col(k: int, w2_expr: str):
-    """Map-side top-k column over a per-cell candidate ARRAY (guide
-    §2.3/§2.4: shuffle/sort candidate pairs -> per-row array kernel).
-
-    ``_cands`` is array<struct<poly_id, clon, clat>> (all centers whose 3x3
-    neighborhood covers the page's cell, or null when the cell is empty).
-    ``w2_expr`` bounds provability: only candidates with dist2 <= w2 count.
-    ``_topk`` holds the first k in-ball candidates sorted by
-    (dist2, poly_id) — the same total order the old per-url row_number
-    window produced, computed per ROW with no exchange and no partition
-    sort. Exactly ONE column comes back: HOF chains are interpreted (no
-    codegen CSE), so every derived value (the "k-th candidate within w"
-    verify gate = size(_topk) >= k, null array -> size null -> never >= k)
-    must be read off the materialized _topk, not recomputed from _cands.
-    dist2 is the same IEEE double expression as the oracle
-    ((lon-clon)^2 + (lat-clat)^2), evaluated once per candidate."""
-    d2 = (
-        "((lon - c.clon) * (lon - c.clon) + (lat - c.clat) * (lat - c.clat))"
-    )
-    inball = (
-        f"filter(transform(_cands, c -> struct({d2} as dist2, "
-        f"c.poly_id as poly_id)), s -> s.dist2 <= {w2_expr})"
-    )
-    return F.expr(f"slice(array_sort({inball}), 1, {k})").alias("_topk")
-
-
-def _explode_topk(split: DataFrame) -> DataFrame:
-    """(url, _topk array) -> (url, poly_id, dist2, rank): rank is the
-    1-based array position — positions are (dist2, poly_id)-sorted, so this
-    is exactly row_number() over that order."""
-    return split.select(
-        "url", F.posexplode("_topk").alias("_pos", "_s")
-    ).selectExpr(
-        "url",
-        "_s.poly_id as poly_id",
-        "_s.dist2 as dist2",
-        "cast(_pos + 1 as int) as rank",
-    )
-
-
 def knn_join(
     geotagged: DataFrame,
     centers: DataFrame,
     k: int = 3,
     cell_deg: float | None = None,
-    n_centers: int | None = None,
 ) -> DataFrame:
-    """Exact kNN, scale path (B9): cell-neighbor candidate expansion.
+    """Exact kNN (B9): (url, poly_id, dist2, rank) for each page's k
+    nearest centers in (dist2, poly_id) order. The center table is
+    collected once into a grid index (``cell_deg`` wide, knn_cell_deg of
+    the collected count by default) that ships in the task closure; the
+    plan is scan -> mapInArrow, with no exchange, join or aggregate.
 
-    Centers explode into their 3x3 neighborhood on a degree grid, GROUP
-    into one array row per cell, and broadcast; pages equi-join 1:1 on
-    their own cell and compute the provable top-k per row with array
-    kernels (r7 restructure, guide §2.4): the old plan exploded ~O(density)
-    candidate rows per page and paid a url-keyed EXCHANGE plus a window
-    sort over the whole candidate-pair volume (26M rows at the 50k-center
-    bench point); the array form keeps the candidate set inside the page's
-    row, so the plan is scan -> broadcast hash join -> project, with ZERO
-    exchange before the residue union. Any center OUTSIDE the 3x3
-    neighborhood is > one cell width away in some axis, so dist2 > w^2:
-    if a page has >= k in-ball candidates its top-k is provably exact.
+    Each batch takes its candidates from a page's 3x3 neighbor cells: a
+    center outside them is more than one cell width away, so when at least
+    k candidates lie within that width the top-k is provably exact. The
+    other pages (far from every center, e.g. polar pages) are ranked
+    against the whole table in the same worker (knn.topk_bruteforce)."""
+    cols = ("poly_id", "clon", "clat")
+    t = centers.select(*cols).toArrow()
+    w = knn_cell_deg(t.num_rows) if cell_deg is None else cell_deg
+    ix = knnmod.build_center_index(*(t[c].to_numpy() for c in cols), w)
 
-    Pages whose top-k is not provable (fewer than k in-ball candidates —
-    e.g. polar pages far from the center band) fall through; the residue
-    is resolved by the VECTORIZED brute-force kernel (knn_join_numpy:
-    broadcast centers, numpy distance matrix, zero shuffle). Exactness is
-    unchanged: both paths produce the oracle's (dist2, poly_id) order.
-    cell_deg defaults to a density-adaptive W targeting a high verify rate.
-    """
-    if cell_deg is None:
-        if n_centers is None:
-            n_centers = centers.count()  # dimension side: tiny, driver-known
-        cell_deg = min(KNN_CELL_DEG, max(2.0, (129900.0 / max(n_centers, 1)) ** 0.5))
-    w = cell_deg
-    cell = f"cast(floor(%s / {w}) as bigint)"
-    pages_c = (
-        geotagged.select("url", "lat", "lon")
-        .withColumn("cx", F.expr(cell % "lon"))
-        .withColumn("cy", F.expr(cell % "lat"))
+    def probe(batches):
+        for b in batches:
+            lon, lat = (b[c].to_numpy(zero_copy_only=False) for c in ("lon", "lat"))
+            rows, poly_id, dist2, rank = knnmod.topk(ix, lon, lat, k)
+            yield pa.RecordBatch.from_arrays(
+                [
+                    b["url"].take(rows),
+                    pa.array(poly_id, pa.int64()),
+                    pa.array(dist2, pa.float64()),
+                    pa.array(rank, pa.int32()),
+                ],
+                ["url", "poly_id", "dist2", "rank"],
+            )
+
+    return geotagged.select("url", "lat", "lon").mapInArrow(
+        probe, "url string, poly_id long, dist2 double, rank int"
     )
-    cell_arr = (
-        centers.withColumn("di", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .withColumn("dj", F.explode(F.sequence(F.lit(-1), F.lit(1))))
-        .selectExpr(
-            "poly_id",
-            "clon",
-            "clat",
-            f"{cell % 'clon'} + di as cx",
-            f"{cell % 'clat'} + dj as cy",
-        )
-        .groupBy("cx", "cy")
-        .agg(
-            F.collect_list(F.struct("poly_id", "clon", "clat")).alias("_cands")
-        )
-    )
-    # collect_list order is nondeterministic, but every consumer sorts
-    # (array_sort by (dist2, poly_id) — a total order, poly_id unique),
-    # so the output is order-invariant. LEFT join: a page over an empty
-    # cell keeps a null array -> _cnt 0 -> residue.
-    split = (
-        pages_c.join(F.broadcast(cell_arr), ["cx", "cy"], "left")
-        .select("url", "lat", "lon", _knn_topk_col(k, repr(w * w)))
-        # referenced twice (good + remaining); <= k structs/page. The
-        # caller frees via free_persisted after its terminal action.
-        # The verify gate reads size() off the PERSISTED array, so the
-        # HOF chain runs once per page during materialization.
-        .persist()
-    )
-    good = _explode_topk(split.filter(F.size("_topk") >= k))
-    remaining = split.filter(
-        F.coalesce(F.size("_topk"), F.lit(0)) < k
-    ).select("url", "lat", "lon")
-    out = knn_join_numpy(remaining, centers, k).unionByName(good)
-    return _attach_persists(out, [split])
 
 
 def knn_oracle_sql(with_ctes: str, k: int = 3) -> str:
@@ -532,83 +472,6 @@ ranked AS (
   FROM paired)
 SELECT url, poly_id, dist2, rank FROM ranked WHERE rank <= {k}
 """
-
-
-def knn_join_numpy(
-    geotagged: DataFrame, centers: DataFrame, k: int = 3
-) -> DataFrame:
-    """Exact kNN, map-only path: centers (small dim side) ship to every
-    task; each Arrow batch computes the full distance matrix in numpy and
-    takes top-k with deterministic (dist2, poly_id) tie-breaking.
-
-    No shuffle at all — at cluster scale this is a pure map over the pages
-    table, which beats any join/window formulation while the center count
-    fits in memory (chunked to bound the distance-matrix footprint).
-    Arithmetic is the same IEEE float64 expression as the SQL oracle.
-    """
-    rows = centers.select("poly_id", "clon", "clat").collect()
-    # sort by poly_id so the argmin first-minimum tie-break below is a
-    # property of the DATA, not of the center table's scan/file order
-    # (r7: the bulk fixture's multi-file layout no longer guarantees it)
-    rows.sort(key=lambda r: r.poly_id)
-    poly_ids = np.array([r.poly_id for r in rows], dtype=np.int64)
-    clon = np.array([r.clon for r in rows], dtype=np.float64)
-    clat = np.array([r.clat for r in rows], dtype=np.float64)
-
-    def compute(batches):
-        P = len(poly_ids)
-        for pdf in batches:
-            urls = pdf["url"].to_numpy()
-            lon = pdf["lon"].to_numpy(dtype=np.float64)
-            lat = pdf["lat"].to_numpy(dtype=np.float64)
-            out_url, out_pid, out_d2, out_rank = [], [], [], []
-            # ~16MB f64 working buffers: small enough that many concurrent
-            # tasks' buffers stay in cache/resident pages (128MB buffers
-            # measured 4x slower at 32 concurrent tasks on the lazy-fault
-            # sandbox VM and thrash LLC on real executors too)
-            chunk = max(1, (1 << 21) // max(P, 1))
-            buf = np.empty((min(chunk, len(lon)), P), dtype=np.float64)
-            tmp = np.empty_like(buf)
-            for s in range(0, len(lon), chunk):
-                e = min(s + chunk, len(lon))
-                m = e - s
-                d2 = buf[:m]
-                t = tmp[:m]
-                # exact oracle arithmetic, minimal memory traffic
-                np.subtract(lon[s:e, None], clon[None, :], out=d2)
-                np.multiply(d2, d2, out=d2)
-                np.subtract(lat[s:e, None], clat[None, :], out=t)
-                np.multiply(t, t, out=t)
-                np.add(d2, t, out=d2)
-                kk = min(k, P)
-                sel_pid = np.empty((m, kk), dtype=np.int64)
-                sel_d2 = np.empty((m, kk), dtype=np.float64)
-                rows = np.arange(m)
-                for j in range(kk):
-                    # argmin returns the FIRST minimum -> smallest poly_id
-                    # among ties, i.e. exactly the (dist2, poly_id) order
-                    idx = np.argmin(d2, axis=1)
-                    sel_pid[:, j] = poly_ids[idx]
-                    sel_d2[:, j] = d2[rows, idx]
-                    d2[rows, idx] = np.inf
-                out_url.append(np.repeat(urls[s:e], kk))
-                out_pid.append(sel_pid.reshape(-1))
-                out_d2.append(sel_d2.reshape(-1))
-                out_rank.append(
-                    np.tile(np.arange(1, kk + 1), m).astype(np.int32)
-                )
-            yield pd.DataFrame(
-                {
-                    "url": np.concatenate(out_url) if out_url else [],
-                    "poly_id": np.concatenate(out_pid) if out_pid else [],
-                    "dist2": np.concatenate(out_d2) if out_d2 else [],
-                    "rank": np.concatenate(out_rank) if out_rank else [],
-                }
-            )
-
-    return geotagged.select("url", "lat", "lon").mapInPandas(
-        compute, "url string, poly_id long, dist2 double, rank int"
-    )
 
 
 def _knn_cell_bound_terminal(
@@ -761,14 +624,13 @@ def _knn_cell_bound_terminal(
         .select("cx", "cy", "poly_id", "clon", "clat", F.col("r2pt").alias("r2"))
         .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
     )
-    # NOTE (r7): the broadcast knn_join moved to per-cell candidate ARRAYS,
-    # but this terminal (and the partitioned cell level) keeps the window form:
-    # the pairs are already co-partitioned by the shuffle-hash join, so the
-    # top-k is a codegen'd LOCAL sort with no exchange, and replacing it
-    # with interpreted array kernels measured ~25% SLOWER at the 50k-center
-    # bench point (ABBA-isolated 12.4s vs 9.6s) - the HOF interpreter costs
-    # more than the in-partition sort it removes when nothing crosses the
-    # wire either way.
+    # NOTE (r7): this terminal (and the partitioned cell level) keeps the
+    # window form: the pairs are already co-partitioned by the shuffle-hash
+    # join, so the top-k is a codegen'd LOCAL sort with no exchange, and
+    # replacing it with interpreted per-row array kernels measured ~25%
+    # SLOWER at the 50k-center bench point (ABBA-isolated 12.4s vs 9.6s) -
+    # the HOF interpreter costs more than the in-partition sort it removes
+    # when nothing crosses the wire either way.
     pag_s = pag.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
     cand = _with_dist2(pag_s.join(tight.hint("shuffle_hash"), ["cx", "cy", "_salt"]))
     # any candidate beyond sqrt(r2pt) is provably outside the top-k (>= k
@@ -790,9 +652,9 @@ def knn_join_partitioned(
     n_centers: int | None = None,
 ) -> DataFrame:
     """Exact kNN, shuffle-both-sides path: for center tables too large to
-    broadcast or collect (knn_join broadcasts the 3x3-neighbor table and
-    resolves the residue with a driver-collected numpy kernel — both assume
-    the dimension side fits one task's memory).
+    collect (knn_join collects the center table to the driver and ships its
+    grid index to every task, so it assumes the dimension side fits the
+    driver's and one task's memory).
 
     Same provably-exact cell-neighbor fast path as knn_join, but the
     candidate join is a SHUFFLE hash join on (cell, salt): centers explode
@@ -821,7 +683,7 @@ def knn_join_partitioned(
     if n_centers is None:
         n_centers = centers.count()  # table-stats surrogate (see pip_join_auto)
     if cell_deg is None:
-        cell_deg = min(KNN_CELL_DEG, max(2.0, (129900.0 / max(n_centers, 1)) ** 0.5))
+        cell_deg = knn_cell_deg(n_centers)
     w = cell_deg
     cell = f"cast(floor(%s / {w}) as bigint)"
     pages_c = (
@@ -852,7 +714,7 @@ def knn_join_partitioned(
         )
     )
     # LEFT OUTER join with the w-ball predicate INSIDE the join
-    # condition — same restructure as knn_join: every page emerges
+    # condition: every page emerges
     # with its in-ball candidates or one null row, so pass/fail
     # routing is a filter on the window output instead of a url-keyed
     # anti-join re-shuffling the whole page table. The
@@ -928,8 +790,10 @@ def knn_join_auto(
     k: int = 3,
     n_centers: int | None = None,
 ) -> DataFrame:
-    """Size-based chooser between the broadcast-hybrid and partitioned kNN
-    plans (same contract as pip_join_auto). The routing threshold is
+    """Size-based chooser between the broadcast and partitioned kNN plans
+    (same contract as pip_join_auto). The broadcast plan (knn_join) runs
+    one eager collect of the center table while the DataFrame is built.
+    The routing threshold is
     parallelism-aware (broadcast_center_limit: per-core crossover x
     cores, capped by the driver-collect ceiling), calibrated by `python
     bench.py --calibration` (BENCH/CALIBRATION.md: the hybrid/partitioned
@@ -938,5 +802,5 @@ def knn_join_auto(
     if n_centers is None:
         n_centers = centers.count()
     if n_centers <= broadcast_center_limit(centers.sparkSession):
-        return knn_join(geotagged, centers, k, n_centers=n_centers)
+        return knn_join(geotagged, centers, k)
     return knn_join_partitioned(geotagged, centers, k, n_centers=n_centers)

@@ -244,14 +244,6 @@ def q_knn_sql(sf_dir):
     return joins.knn_oracle_sql(_spatial_ctes(sf_dir, want_centers=True), k=3)
 
 
-def q_knn_numpy(spark, sf_dir):
-    """B9 alternate: map-only exact kNN (broadcast centers, numpy batch
-    distance matrix, zero shuffle). Same oracle as knn_3."""
-    return joins.knn_join_numpy(
-        _geotagged(spark, sf_dir), fixtures.polygon_centers_df(spark, sf_dir), k=3
-    )
-
-
 def q_knn_partitioned(spark, sf_dir):
     """B9 scale path: shuffle-both-sides kNN cell level + cell-bound
     terminal for the residue (no broadcast, no driver collect). Same
@@ -262,7 +254,7 @@ def q_knn_partitioned(spark, sf_dir):
 
 
 def q_knn_auto(spark, sf_dir):
-    """B9 chooser: broadcast-hybrid vs partitioned by center count
+    """B9 chooser: broadcast vs partitioned by center count
     (joins.knn_join_auto), fed from fixture table stats so the plan needs
     no count() job. Same oracle — the chooser only picks a plan."""
     return joins.knn_join_auto(
@@ -1050,7 +1042,7 @@ def _variants_sql(base_sql: str, variants: tuple[str, ...]) -> str:
 
 
 PIP_VARIANTS = ("broadcast", "partitioned", "auto")
-KNN_VARIANTS = ("broadcast", "maponly", "partitioned", "auto")
+KNN_VARIANTS = ("broadcast", "partitioned", "auto")
 
 
 def q_pip_variants(spark, sf_dir):
@@ -1074,11 +1066,12 @@ def q_pip_variants_sql(sf_dir):
 
 
 def q_knn_variants(spark, sf_dir):
-    """B9, all four exact-kNN plans in ONE driver row (see q_pip_variants)."""
+    """B9, all three exact-kNN plans in ONE driver row: broadcast (map-only
+    center-cell probe), shuffle-partitioned cascade and the auto chooser
+    (see q_pip_variants)."""
     return _union_variants(
         [
             ("broadcast", q_knn),
-            ("maponly", q_knn_numpy),
             ("partitioned", q_knn_partitioned),
             ("auto", q_knn_auto),
         ],

@@ -28,6 +28,17 @@ def run_starts(*keys: np.ndarray) -> np.ndarray:
     return np.flatnonzero(change)
 
 
+def pack_cells(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
+    """One int64 per grid cell, distinct while |gy| < 2^31."""
+    return gx * (1 << 32) + gy
+
+
+def concat_ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Concatenation of arange(starts[i], starts[i] + counts[i])."""
+    ends = np.cumsum(counts)
+    return np.repeat(starts - ends + counts, counts) + np.arange(ends[-1:].sum())
+
+
 def next_index(ring_id: np.ndarray, starts: np.ndarray | None = None) -> np.ndarray:
     """Index of each vertex's ring-cyclic successor."""
     n = len(ring_id)

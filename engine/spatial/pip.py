@@ -16,7 +16,7 @@ from typing import NamedTuple
 
 import numpy as np
 
-from engine.spatial.clipbatch import run_starts
+from engine.spatial.clipbatch import concat_ranges, pack_cells, run_starts
 
 # (point, polygon) x edge rows evaluated per step of ``probe``: the gathered
 # coordinates and indices of 2^18 rows stay near 16 MB, whatever the page
@@ -65,17 +65,6 @@ class CellIndex(NamedTuple):
     poly_id: np.ndarray  # per slot
 
 
-def _pack(gx: np.ndarray, gy: np.ndarray) -> np.ndarray:
-    """One int64 per cell, distinct while |gy| < 2^31."""
-    return gx * (1 << 32) + gy
-
-
-def _ranges(starts: np.ndarray, counts: np.ndarray) -> np.ndarray:
-    """Concatenation of arange(starts[i], starts[i] + counts[i])."""
-    ends = np.cumsum(counts)
-    return np.repeat(starts - ends + counts, counts) + np.arange(ends[-1:].sum())
-
-
 def build_cell_index(poly_id, x1, y1, x2, y2, w: float) -> CellIndex:
     """Index an edge table (one row per polygon edge, any ring) on a grid of
     width ``w``. Only the order of a polygon's own edges depends on the order
@@ -93,8 +82,8 @@ def build_cell_index(poly_id, x1, y1, x2, y2, w: float) -> CellIndex:
     ny = gy1 - gy0 + 1
     n_cells = (gx1 - gx0 + 1) * ny
     slot = np.repeat(np.arange(len(starts)), n_cells)
-    k = _ranges(np.zeros_like(n_cells), n_cells)
-    code = _pack(gx0[slot] + k // ny[slot], gy0[slot] + k % ny[slot])
+    k = concat_ranges(np.zeros_like(n_cells), n_cells)
+    code = pack_cells(gx0[slot] + k // ny[slot], gy0[slot] + k % ny[slot])
     by_code = np.argsort(code, kind="stable")
     code, slot = code[by_code], slot[by_code]
     first = run_starts(code)
@@ -112,13 +101,13 @@ def probe(ix: CellIndex, lon: np.ndarray, lat: np.ndarray):
     of IEEE operations. Pairs come out by row, then by poly_id."""
     if not len(ix.codes):
         return np.zeros(0, np.int64), np.zeros(0, np.int64)
-    code = _pack(*np.floor(np.stack([lon, lat]) / ix.w).astype(np.int64))
+    code = pack_cells(*np.floor(np.stack([lon, lat]) / ix.w).astype(np.int64))
     at = np.minimum(np.searchsorted(ix.codes, code), len(ix.codes) - 1)
     rows = np.flatnonzero(ix.codes[at] == code)
     at = at[rows]
     fan = ix.cell_off[at + 1] - ix.cell_off[at]
     page = np.repeat(rows, fan)
-    slot = ix.cell_slot[_ranges(ix.cell_off[at], fan)]
+    slot = ix.cell_slot[concat_ranges(ix.cell_off[at], fan)]
     x0, y0, x1, y1 = ix.bbox[:, slot]
     px, py = lon[page], lat[page]
     keep = (px >= x0) & (px <= x1) & (py >= y0) & (py <= y1)

@@ -110,6 +110,14 @@ def test_pip_grid_deg_calibration():
     assert joins.pip_grid_deg(10**12) == 0.05  # floor
 
 
+def test_knn_cell_deg_calibration():
+    assert joins.knn_cell_deg(5_000) == pytest.approx(5.097, rel=0.01)
+    assert joins.knn_cell_deg(32_475) == pytest.approx(2.0)
+    assert joins.knn_cell_deg(50_000) == 2.0  # floor
+    assert joins.knn_cell_deg(100) == joins.KNN_CELL_DEG  # small-end clamp
+    assert joins.knn_cell_deg(0) == joins.KNN_CELL_DEG
+
+
 def _polar_cluster(spark, n_pages: int = 400):
     """Dense page cluster at the pole, centers on the equator band — every
     page's k-th center is far, so no cell level proves the top-k and the
@@ -181,17 +189,22 @@ def _cached_rdd_ids(spark):
 
 @pytest.mark.parametrize("fn", [joins.knn_join, joins.knn_join_partitioned])
 def test_knn_free_persisted_cleans_storage(spark, fn):
-    """The cascades persist per-level split tables whose lifetime is the
-    query; free_persisted must drop every one of them after the caller's
-    terminal action, so repeated kNN calls in a long-lived session do not
-    accumulate block-manager storage. Proof style: getRDDStorageInfo
-    before/after, as in engine.textops.cluster's checkpoint discipline."""
+    """The partitioned cascade persists its split table, whose lifetime is
+    the query; free_persisted must drop it after the caller's terminal
+    action, so repeated kNN calls in a long-lived session do not
+    accumulate block-manager storage. The map-only broadcast plan caches
+    nothing, during the action or after it. Proof style:
+    getRDDStorageInfo before/after, as in engine.textops.cluster's
+    checkpoint discipline."""
     pages, centers = _polar_cluster(spark, n_pages=150)
     base = _cached_rdd_ids(spark)
     out = fn(pages, centers, k=3, cell_deg=2.0)
     out.write.format("noop").mode("overwrite").save()
     during = _cached_rdd_ids(spark) - base
-    assert during, "cascade should persist its per-level split tables"
+    if fn is joins.knn_join:
+        assert during == set(), "the map-only plan persists nothing"
+    else:
+        assert during, "cascade should persist its per-level split tables"
     joins.free_persisted(out, blocking=True)
     assert _cached_rdd_ids(spark) - base == set(), (
         "free_persisted must drop every cascade-persisted block"

@@ -6,7 +6,7 @@ import numpy as np
 import pytest
 from hypothesis import given, settings, strategies as st
 
-from engine.spatial import cells, clip, hilbert, mercator, pip, raster
+from engine.spatial import cells, clip, hilbert, knn, mercator, pip, raster
 
 rng = np.random.default_rng(42)
 
@@ -274,3 +274,66 @@ def test_pip_cell_index_matches_ring_reference(case):
             np.testing.assert_array_equal(getattr(ix, name), getattr(rev, name))
     rows3, ids3 = pip.probe(rev, px, py)
     assert list(zip(rows3.tolist(), ids3.tolist())) == got
+
+
+@st.composite
+def _knn_case(draw):
+    """Centers on a coarse lattice in random poly_id order, with repeated
+    coordinates and lattice-symmetric layouts so distances tie exactly, a
+    grid width below or above the centers' spread, and points drawn at
+    random, on the lattice and snapped onto cell borders."""
+    h = draw(st.sampled_from([0.25, 0.5, 1.0]))
+    n = draw(st.integers(0, 12))
+    pool = draw(st.lists(st.tuples(st.integers(-12, 12), st.integers(-12, 12)), min_size=1, max_size=8))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    xy = h * np.array(pool, np.float64)[rng.integers(0, len(pool), n)]
+    poly_id = rng.permutation(n).astype(np.int64) * 3 + 7
+    spread = h * 24.0
+    if draw(st.booleans()):
+        w = draw(st.floats(0.05, 0.95)) * spread
+    else:
+        w = draw(st.floats(1.05, 4.0)) * (spread + 12 * h)
+    m = 48
+    near = rng.uniform(-14 * h, 14 * h, (4 * m, 2))
+    lattice = h * rng.integers(-14, 15, (m, 2)).astype(np.float64)
+    grid = rng.integers(np.floor(-14 * h / w) - 1, np.floor(14 * h / w) + 2, (m, 2))
+    border = near[:m].copy()
+    border[:, 0] = w * grid[:, 0]
+    border[: m // 2, 1] = w * grid[: m // 2, 1]
+    pts = np.concatenate([near, lattice, border])
+    return poly_id, xy[:, 0], xy[:, 1], w, pts[:, 0], pts[:, 1], draw(st.integers(1, 5))
+
+
+def _knn_reference(poly_id, clon, clat, lon, lat, k):
+    """Every (point, center) distance in the oracle's IEEE order, ranked by
+    numpy lexsort((poly_id, dist2)) per point."""
+    dlon = lon[:, None] - clon[None, :]
+    dlat = lat[:, None] - clat[None, :]
+    d2 = dlon * dlon + dlat * dlat
+    order = np.lexsort((np.broadcast_to(poly_id, d2.shape), d2), axis=-1)
+    out = []
+    for i, o in enumerate(order):
+        for r, j in enumerate(o[:k]):
+            out.append((i, r + 1, int(poly_id[j]), float(d2[i, j])))
+    return out
+
+
+def _knn_rows(ix, lon, lat, k):
+    rows, pid, d2, rank = knn.topk(ix, lon, lat, k)
+    return sorted(zip(rows.tolist(), rank.tolist(), pid.tolist(), d2.tolist()))
+
+
+@settings(max_examples=300, deadline=None)
+@given(_knn_case())
+def test_knn_topk_matches_lexsort_reference(case):
+    """The join kernel (center index + top-k) equals ranking every center
+    by (dist2, poly_id), row for row, at any grid width, with ties, with k
+    above the center count and with no centers; center order changes
+    nothing."""
+    poly_id, clon, clat, w, lon, lat, k = case
+    want = _knn_reference(poly_id, clon, clat, lon, lat, k)
+    ix = knn.build_center_index(poly_id, clon, clat, w)
+    assert _knn_rows(ix, lon, lat, k) == want
+    rev = knn.build_center_index(poly_id[::-1], clon[::-1], clat[::-1], w)
+    for name in ix._fields:
+        np.testing.assert_array_equal(getattr(ix, name), getattr(rev, name))
