@@ -42,8 +42,8 @@ SCALING_CASES = (
 # prefixes of the pyramid plan, so per-stage cost = successive differences
 STAGE_CASES = ("pyramid_scan_geotag", "pyramid_shuffled_sorted")
 
-# cases whose computation happens eagerly at DataFrame-build time (iterative
-# loops with per-round checkpoints; the kNN cascade's residue count guard;
+# cases whose computation happens eagerly at DataFrame-build time (the
+# near-dup verified-pair collect; the kNN cascade's residue count guard;
 # the broadcast PIP and kNN plans' dimension-table collect and index build):
 # rebuilt inside each timed pass so the recorded time covers the whole job
 REBUILD_CASES = {
@@ -175,11 +175,10 @@ def run_once(case_filter=None) -> dict:
     for name, builder in cases:
         if case_filter and name not in case_filter:
             continue
-        # Iterative queries (components loop, corpus_prep) do their work
-        # EAGERLY while the DataFrame is built (per-round localCheckpoint +
-        # convergence probes), so for them each timed pass must rebuild —
-        # timing only the final write would report a near-zero scan of
-        # already-checkpointed results.
+        # REBUILD_CASES do work EAGERLY while the DataFrame is built (the
+        # components' verified-pair collect, the broadcast joins' dimension
+        # collect), so for them each timed pass must rebuild — timing only
+        # the final write would leave that driver work out of the leaf time.
         rebuild = name in REBUILD_CASES
         df = None if rebuild else builder(spark, SF_DIR)
         # noop sink: full materialization of every column (groupBy().count()

@@ -778,9 +778,10 @@ q_strat_sample, q_strat_sample_sql = _sql_template(analysis.stratified_sample_sq
 
 def q_near_dup_clusters(spark, sf_dir):
     """Near-dup cluster resolution: verified pairs -> connected components
-    (iterative hash-min label propagation) -> (doc_id, cluster_id,
-    is_keeper). The operator an LLM dedup pipeline actually executes;
-    oracle = DuckDB WITH RECURSIVE transitive closure."""
+    (one bounded pair collect labeled in the driver; the distributed
+    hash-min / star loop past cluster.PAIR_COLLECT_CAP) -> (doc_id,
+    cluster_id, is_keeper). The operator an LLM dedup pipeline actually
+    executes; oracle = DuckDB WITH RECURSIVE transitive closure."""
     spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
         "documents"
     )

@@ -18,6 +18,13 @@ import numpy as np
 
 from engine.spatial.clipbatch import concat_ranges, pack_cells, run_starts
 
+# (point, center) candidate rows gathered per step of ``topk``. A 16k-row
+# Arrow batch of sf0.1 pages gathers 0.3-0.5M rows (5k and 50k centers), so
+# it stays one step; a hot cell under many points is split into steps of at
+# most this many rows plus one point's 3x3 cells (~70 MB of working arrays
+# at 2^20 rows, whatever the batch size or the cell's center count).
+GATHER_CHUNK = 1 << 20
+
 
 class CenterIndex(NamedTuple):
     """Grid index over a center table; center slots are in poly_id order."""
@@ -61,14 +68,33 @@ def topk(ix: CenterIndex, lon: np.ndarray, lat: np.ndarray, k: int):
     column of three cells per binary-search range. A center outside them is
     more than one cell width away in some axis, so once at least k
     candidates lie within distance w their top-k is exact; every other point
-    is ranked against all centers by ``topk_bruteforce``."""
+    is ranked against all centers by ``topk_bruteforce``. Points are taken
+    in runs whose candidates sum to at most GATHER_CHUNK (one point at
+    least), so a hot cell under many points is gathered a run at a time."""
     if not len(ix.poly_id):
         return _empty()
-    n = len(lon)
     gx, gy = np.floor(np.stack([lon, lat]) / ix.w).astype(np.int64)
     col = gx + np.array([[-1], [0], [1]])
     lo = ix.cell_off[np.searchsorted(ix.codes, pack_cells(col, gy - 1))]
     fan = ix.cell_off[np.searchsorted(ix.codes, pack_cells(col, gy + 2))] - lo
+    ends = np.cumsum(fan.sum(axis=0))
+    parts = []
+    s = 0
+    while s < len(lon):
+        start = ends[s - 1] if s else 0
+        e = max(s + 1, int(np.searchsorted(ends, start + GATHER_CHUNK, side="right")))
+        row, pid, d2, rank = _topk_run(ix, lon[s:e], lat[s:e], lo[:, s:e], fan[:, s:e], k)
+        parts.append((row + s, pid, d2, rank))
+        s = e
+    if len(parts) < 2:
+        return parts[0] if parts else _empty()
+    return tuple(np.concatenate(c) for c in zip(*parts))
+
+
+def _topk_run(ix: CenterIndex, lon, lat, lo, fan, k: int):
+    """``topk`` over one run of points whose 3x3 candidate ranges are
+    (lo, fan), three columns of cells per point."""
+    n = len(lon)
     page = np.repeat(np.tile(np.arange(n), 3), fan.ravel())
     slot = ix.cell_slot[concat_ranges(lo.ravel(), fan.ravel())]
     dlon = lon[page] - ix.clon[slot]

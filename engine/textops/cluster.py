@@ -4,20 +4,25 @@ The LSH/Jaccard stage (engine.textops.sqlgen.near_dup_pairs_sql) emits
 verified PAIRS; a production dedup pipeline must answer "which docs do I
 drop", i.e. resolve pairs into clusters and pick one keeper per cluster.
 
-Spark side: iterative hash-min label propagation at DataFrame level —
-every node starts labeled with its own id; each round every node takes the
-min label over itself and its neighbors; fixpoint = connected components
-with cluster_id = min doc_id in the component. Rounds needed = graph
-diameter (near-dup clusters are shallow — a doc and its rewrites — so a
-handful); each round is one equi-join + one map-side-partial min
-aggregate, both hash-partitioned on doc_id, nothing driver-sized. The
-per-round convergence probe aggregates a single monotone checksum
-(sum of labels: strictly decreasing until fixpoint), so the driver action
-moves O(1) bytes. At 10^12 docs the same loop runs with the pair table
-disk-backed. For DEEP components (chained near-dups) where diameter-many
-rounds would hurt, connected_components_star implements the classic
-alternating large-star/small-star contraction (O(log^2 n) rounds, same
-output contract).
+The verified pair table is the small output of a similarity join (a doc
+and its rewrites), so resolve_components collects it once, at most
+PAIR_COLLECT_CAP rows, and labels every paired doc with the min doc_id it
+reaches in ``min_labels``, a numpy kernel. The labels come back as a local
+(doc_id, cluster_id) table; a doc in no pair is its own cluster. Building
+the result runs only the pair collect's jobs: no checkpoint, no probe.
+
+Only a pair table past the cap runs the distributed loop. Hash-min label
+propagation at DataFrame level: every node starts labeled with its own id;
+each round every node takes the min label over itself and its neighbors;
+fixpoint = connected components with cluster_id = min doc_id in the
+component. Rounds needed = graph diameter; each round is one equi-join +
+one map-side-partial min aggregate, hash-partitioned on doc_id, with a
+localCheckpoint and a convergence probe that aggregates a single monotone
+checksum (sum of labels: strictly decreasing until fixpoint). For DEEP
+components (chained near-dups) where diameter-many rounds would hurt,
+connected_components_star implements the classic alternating
+large-star/small-star contraction (O(log^2 n) rounds, same output
+contract).
 
 Keeper policy: keep the smallest doc_id per cluster (is_keeper), the
 deterministic stand-in for "keep the oldest / highest-quality copy".
@@ -28,9 +33,51 @@ labeling each node with the min reachable id — exact, engine-independent.
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from .sqlgen import docs_aug_cte, near_dup_pairs_sql
+
+# Most verified pairs resolve_components collects to the driver; a larger
+# pair table runs the distributed hash-min / star loop instead. At the cap
+# the driver holds 16 B/pair of Arrow, min_labels' numpy working set
+# (~120 B/pair peak: 108-116 B/pair under tracemalloc on 1M random and 1M
+# near-dup-shaped pairs, 0.5-0.7 s) and a label table of at most 2
+# rows/pair (32 B/pair of Arrow, ~80 B/pair as the JVM LocalRelation that
+# ships with the plan): ~250 MB in all at 1M pairs.
+PAIR_COLLECT_CAP = 1_000_000
+
+
+def min_labels(doc_a: np.ndarray, doc_b: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
+    """(doc_id, cluster_id) of every doc in the undirected pairs
+    (doc_a[i], doc_b[i]): cluster_id is the min doc_id the doc reaches, and
+    doc_ids come out sorted and distinct.
+
+    Min-label propagation with pointer jumping over dense ids (np.unique,
+    so a smaller dense id is a smaller doc_id): each round hooks every tree
+    root onto the smallest root across its edges, then jumps pointers until
+    every doc points at its root; an edge inside one tree stays inside it
+    and is dropped. Pointers only go down, so there is no cycle, and a round
+    that starts with an edge between two trees hooks at least one root, so
+    the loop ends."""
+    doc_id, dense = np.unique(
+        np.concatenate([doc_a, doc_b]).astype(np.int64, copy=False),
+        return_inverse=True,
+    )
+    u, v = dense[: len(doc_a)], dense[len(doc_a) :]
+    parent = np.arange(len(doc_id))
+    while True:
+        pu, pv = parent[u], parent[v]
+        cross = pu != pv
+        if not cross.any():
+            return doc_id, doc_id[parent]
+        u, v, pu, pv = u[cross], v[cross], pu[cross], pv[cross]
+        low = np.minimum(pu, pv)
+        np.minimum.at(parent, pu, low)
+        np.minimum.at(parent, pv, low)
+        while not np.array_equal(up := parent[parent], parent):
+            parent = up
 
 
 def _free_local_checkpoint(df: DataFrame) -> None:
@@ -60,7 +107,7 @@ def _hash_min_labels(
     reachable IF converged; un-converged labels are partial and must not
     be used. With ``keep_pairs=True`` the materialized pair-table
     checkpoint is returned instead of freed, so a caller that must fall
-    back to another algorithm (resolve_components' deep-graph path) can
+    back to another algorithm (_distributed_labels' deep-graph path) can
     reuse it rather than recompute the entire upstream pair pipeline
     (LSH + Jaccard verify — the dominant cost); the caller then owns
     freeing it via _free_local_checkpoint."""
@@ -246,21 +293,54 @@ def resolve_components(
     hashmin_budget: int = 8,
     star_rounds: int = 50,
 ) -> DataFrame:
-    """Depth-aware connected-components chooser — the PRODUCTION entry.
+    """Connected components of (doc_id) nodes over (doc_a, doc_b) undirected
+    pairs — the PRODUCTION entry: (doc_id, cluster_id, is_keeper) with
+    cluster_id = min reachable doc_id, one row per node.
 
-    Near-dup graphs are almost always shallow (a doc plus its rewrites:
-    diameter 1-3), where hash-min label propagation converges in a handful
-    of rounds and each round is cheaper than a star contraction round (one
+    The pairs are collected once (PAIR_COLLECT_CAP + 1 rows at most) and
+    resolved in the driver by ``min_labels``; a doc in no pair is its own
+    cluster, through a left join with the local label table. A pair table
+    past the cap takes the distributed path (``_distributed_labels``):
+    hash-min under ``hashmin_budget`` rounds, and if the graph turns out
+    DEEP (diameter > budget — chained near-dups A~B~C~...~Z) the
+    large/small-star contraction under ``star_rounds``, which finishes in
+    O(log^2 n) rounds regardless of diameter."""
+    return _with_clusters(
+        nodes, _component_labels(nodes, pairs, hashmin_budget, star_rounds)
+    )
+
+
+def _component_labels(
+    nodes: DataFrame, pairs: DataFrame, hashmin_budget: int = 8, star_rounds: int = 50
+) -> DataFrame:
+    """(doc_id, cluster_id) with cluster_id = min reachable doc_id, for at
+    least every doc in a pair; a doc missing from it is its own cluster.
+    A local table from one bounded collect, or past PAIR_COLLECT_CAP the
+    distributed labels of every node."""
+    t = pairs.select("doc_a", "doc_b").limit(PAIR_COLLECT_CAP + 1).toArrow()
+    if t.num_rows > PAIR_COLLECT_CAP:
+        return _distributed_labels(nodes, pairs, hashmin_budget, star_rounds)
+    doc_id, cluster_id = min_labels(t["doc_a"].to_numpy(), t["doc_b"].to_numpy())
+    ty = t.schema.field("doc_a").type
+    return nodes.sparkSession.createDataFrame(
+        pa.table(
+            {"doc_id": pa.array(doc_id, ty), "cluster_id": pa.array(cluster_id, ty)}
+        )
+    )
+
+
+def _distributed_labels(
+    nodes: DataFrame, pairs: DataFrame, hashmin_budget: int, star_rounds: int
+) -> DataFrame:
+    """Depth-aware distributed chooser for pair tables past the driver
+    bound. Near-dup graphs are almost always shallow (a doc plus its
+    rewrites: diameter 1-3), where hash-min converges in a handful of
+    rounds and each round is cheaper than a star contraction round (one
     join + one min-agg vs distinct-expansion + min-agg + join x2). So: run
-    hash-min under a fixed round budget; if the graph turns out DEEP
-    (diameter > budget — chained near-dups A~B~C~...~Z), discard the partial
-    labels and rerun with the large/small-star contraction, which finishes
-    in O(log^2 n) rounds regardless of diameter. The fallback costs the
-    budget's wasted rounds once, instead of the unbounded (or raising)
-    diameter-many rounds the hash-min-only path had.
-
-    Both variants share the exact output contract: (doc_id, cluster_id,
-    is_keeper) with cluster_id = min reachable doc_id."""
+    hash-min under a fixed round budget; if the graph is deeper, discard
+    the partial labels and rerun with the star contraction. The fallback
+    costs the budget's wasted rounds once, instead of the unbounded (or
+    raising) diameter-many rounds a hash-min-only path has."""
     # keep_pairs: the deep-graph fallback must NOT rebuild the upstream
     # pair pipeline (LSH + Jaccard verify — the dominant cost) a second
     # time; it reruns the components algorithm over the already-
@@ -270,30 +350,45 @@ def resolve_components(
     )
     if converged:
         _free_local_checkpoint(pairs_ck)
-        return labels.selectExpr(
-            "doc_id", "label as cluster_id", "doc_id = label as is_keeper"
-        )
+        return labels.selectExpr("doc_id", "label as cluster_id")
     # partial labels are wrong cluster ids — free them and switch algorithms
     _free_local_checkpoint(labels)
     out = connected_components_star(nodes, pairs_ck, max_rounds=star_rounds)
     # the star path eagerly checkpointed its own initial edge table from
     # pairs_ck before returning, so the pair blocks can be dropped now
     _free_local_checkpoint(pairs_ck)
-    return out
+    return out.select("doc_id", "cluster_id")
+
+
+def _with_clusters(df: DataFrame, labels: DataFrame) -> DataFrame:
+    """``df`` with cluster_id from ``labels`` (its own doc_id for a doc in
+    no pair) and is_keeper = the doc is its cluster's min."""
+    return (
+        df.join(labels, "doc_id", "left")
+        .withColumn("cluster_id", F.coalesce("cluster_id", "doc_id"))
+        .withColumn("is_keeper", F.col("doc_id") == F.col("cluster_id"))
+    )
+
+
+def _near_dup_graph(spark: SparkSession, threshold: float) -> tuple[DataFrame, DataFrame]:
+    """(nodes, pairs) of the docs_aug corpus: its doc_ids and its
+    LSH -> Jaccard-verified (doc_a, doc_b) pairs."""
+    nodes = spark.sql(
+        f"WITH {docs_aug_cte('spark')} SELECT doc_id FROM docs_aug"
+    )
+    pairs = spark.sql(near_dup_pairs_sql("spark", threshold)).select(
+        "doc_a", "doc_b"
+    )
+    return nodes, pairs
 
 
 def near_dup_clusters_df(spark: SparkSession, threshold: float = 0.5) -> DataFrame:
     """Full near-dup dedup resolution over the docs_aug corpus: LSH ->
-    Jaccard-verified pairs -> connected components (depth-aware chooser:
-    hash-min for shallow graphs, star contraction for deep chains) ->
-    keeper flag. Expects the ``documents`` temp view to be registered."""
-    pairs = spark.sql(near_dup_pairs_sql("spark", threshold)).select(
-        "doc_a", "doc_b"
-    )
-    nodes = spark.sql(
-        f"WITH {docs_aug_cte('spark')} SELECT doc_id FROM docs_aug"
-    )
-    return resolve_components(nodes, pairs)
+    Jaccard-verified pairs -> connected components (one bounded pair
+    collect resolved in the driver; past PAIR_COLLECT_CAP the distributed
+    hash-min / star chooser) -> keeper flag. Expects the ``documents``
+    temp view to be registered."""
+    return resolve_components(*_near_dup_graph(spark, threshold))
 
 
 def clusters_ctes(dialect: str = "duckdb", threshold: float = 0.5) -> str:
@@ -329,17 +424,18 @@ def corpus_prep_df(spark: SparkSession, threshold: float = 0.5) -> DataFrame:
     doc: (doc_id, lang, cluster_id, n_words, bucket).
 
     Scale shape: the signal projection is pure codegen over the corpus
-    scan; the cluster labels join is hash-partitioned on doc_id; the sample
-    is a hash filter — nothing driver-sized beyond the components loop's
-    O(1)-byte convergence probes."""
+    scan and joins the component label table directly — a local table
+    from the one bounded pair collect, or past PAIR_COLLECT_CAP the
+    distributed labels, hash-partitioned on doc_id; the sample is a hash
+    filter."""
     from .analysis import corpus_keep_sql
 
     sig = spark.sql(
         f"WITH {docs_aug_cte('spark')} {corpus_keep_sql('spark', 'docs_aug')}"
     )
-    clusters = near_dup_clusters_df(spark, threshold)
+    labels = _component_labels(*_near_dup_graph(spark, threshold))
     return (
-        sig.join(clusters, "doc_id")
+        _with_clusters(sig, labels)
         .filter(
             F.col("keep_rules")
             & F.col("is_keeper")

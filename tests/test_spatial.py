@@ -337,3 +337,32 @@ def test_knn_topk_matches_lexsort_reference(case):
     rev = knn.build_center_index(poly_id[::-1], clon[::-1], clat[::-1], w)
     for name in ix._fields:
         np.testing.assert_array_equal(getattr(ix, name), getattr(rev, name))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_knn_case())
+def test_knn_topk_gather_runs_match_bruteforce(case):
+    """Under the default gather budget a batch is one run; with the budget
+    patched to 2 candidates, every run gathers at most 2 or holds one
+    point, and the top-k still equals ranking every center with
+    topk_bruteforce."""
+    poly_id, clon, clat, w, lon, lat, k = case
+    ix = knn.build_center_index(poly_id, clon, clat, w)
+    rows, pid, d2, rank = knn.topk_bruteforce(lon, lat, ix.clon, ix.clat, ix.poly_id, k)
+    want = sorted(zip(rows.tolist(), rank.tolist(), pid.tolist(), d2.tolist()))
+    runs = []
+    run = knn._topk_run
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setattr(
+            knn,
+            "_topk_run",
+            lambda ix, lon, lat, lo, fan, k: runs.append((len(lon), int(fan.sum())))
+            or run(ix, lon, lat, lo, fan, k),
+        )
+        assert _knn_rows(ix, lon, lat, k) == want
+        assert [n for n, _ in runs] == ([len(lon)] if len(poly_id) else [])
+        runs.clear()
+        mp.setattr(knn, "GATHER_CHUNK", 2)
+        assert _knn_rows(ix, lon, lat, k) == want
+    assert sum(n for n, _ in runs) == (len(lon) if len(poly_id) else 0)
+    assert all(n == 1 or gathered <= 2 for n, gathered in runs)
