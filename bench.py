@@ -43,8 +43,9 @@ SCALING_CASES = (
 STAGE_CASES = ("pyramid_scan_geotag", "pyramid_shuffled_sorted")
 
 # cases whose computation happens eagerly at DataFrame-build time (the
-# near-dup verified-pair collect; the kNN cascade's residue count guard;
-# the broadcast PIP and kNN plans' dimension-table collect and index build):
+# near-dup verified-pair collect; the partitioned kNN plan's collect of
+# center counts per group cell; the broadcast PIP and kNN plans'
+# dimension-table collect and index build):
 # rebuilt inside each timed pass so the recorded time covers the whole job
 REBUILD_CASES = {
     "near_dup_clusters", "corpus_prep", "knn_3_50k_partitioned",
@@ -191,10 +192,9 @@ def run_once(case_filter=None) -> dict:
             if rebuild:
                 # drop pass 1's persist()/checkpoint blocks BEFORE pass 2
                 # builds: CacheManager plan-matches logically-identical
-                # DataFrames, so without this pass 2's persist() calls
-                # silently reuse pass 1's still-cached blocks and best-of-2
-                # records a warm cached scan instead of the end-to-end job
-                # (the round-4 0.14s-vs-1.5s knn_3_50k_partitioned defect)
+                # DataFrames, so a builder that persists would otherwise
+                # reuse pass 1's still-cached blocks and best-of-2 would
+                # record a warm cached scan instead of the end-to-end job
                 spark.catalog.clearCache()
             t0 = time.perf_counter()
             if rebuild:
@@ -208,9 +208,9 @@ def run_once(case_filter=None) -> dict:
         else:
             counters[f"{name}_rows"] = df.count()
         t_total += dt
-        # the kNN cascade / cluster loops persist() intermediates whose
-        # lifetime is the query; drop them so one case's cached blocks
-        # don't squeeze the heap of every case after it
+        # drop whatever a case cached (the distributed component path
+        # checkpoints) so one case's blocks don't squeeze the heap of
+        # every case after it
         spark.catalog.clearCache()
 
     if "mvt_pyramid_z0_14" in results:
@@ -639,7 +639,6 @@ def calibration_report() -> None:
             out = builder()
             out.write.format("noop").mode("overwrite").save()
             best = min(best, time.perf_counter() - t0)
-            joins.free_persisted(out)
         return best
 
     knn_rows = []
@@ -710,9 +709,12 @@ def calibration_report() -> None:
         f"| KNN_CELL_DEG | {joins.KNN_CELL_DEG} | kNN cell-width ceiling (density formula adapts by center count) |",
         f"| EDGE_SALT_EDGES_PER_POLY | {joins.EDGE_SALT_EDGES_PER_POLY} | selective mega-polygon salting threshold |",
         "",
-        "## kNN: hybrid (center-cell probe + in-worker residue) vs partitioned cascade",
+        "## kNN: hybrid (center-cell probe + in-worker residue) vs partitioned (cogrouped kernel)",
         "",
         "Bulk center fixture (uniform over the +-60 lat band), sf0.1 pages.",
+        "Both plans run the same kernel (knn.topk): the hybrid over the whole",
+        "collected center table, the partitioned plan per (group cell, salt)",
+        "over the centers its per-cell radius bound copies there.",
         "The auto chooser must route each row to the measured-faster plan.",
         "",
         "| centers | hybrid s | partitioned s | auto picks | auto correct? |",
@@ -726,14 +728,14 @@ def calibration_report() -> None:
         *pip_rows,
         "",
         "Notes: the kNN hybrid's cost is driver-collect + O(residue x",
-        "centers) matmul, which parallelizes near-perfectly, while the",
-        "partitioned cascade is stage-count-bound and nearly flat in",
-        "cores — so the crossover scales ~linearly with parallelism",
-        "(measured windows: (10k, 50k] at local[8], (50k, ~120k] at",
-        "local[32]; 3k centers/core sits inside both). knn_join_auto's",
-        "threshold is therefore per-core x defaultParallelism, capped by",
-        "the driver-collect ceiling; rerunning this report at a different",
-        "`SPARK_GRAFT_CPUS` re-validates the formula at that core count.",
+        "centers) matmul, so it grows with the center count; the",
+        "partitioned plan's cost is its two exchanges, the center copies",
+        "(a few tens per center) and the per-group kernel. knn_join_auto's",
+        "threshold is per-core x defaultParallelism, capped by the",
+        "driver-collect ceiling; its per-core constant was fitted at",
+        "local[8] and local[32] against the relational cascade this plan",
+        "replaced, so rerun this report at the target",
+        "`SPARK_GRAFT_CPUS` before retuning it.",
         "The PIP width formula's 2.0-degree floor was probed as a",
         "secondary effect (adaptive width helps only past ~500k centers",
         "and hurts at 200k, so the floor stands). A `NO` in the last",
@@ -773,6 +775,14 @@ def plan_report() -> None:
         "center in the same worker — no exchange, join, window or cache above "
         "the page input (the one Exchange below is the page fixture's own "
         "repartition).",
+        "knn_3_50k_partitioned": "partitioned kNN at 50k centers: building "
+        "it collects one small table, the center count per 6-degree group "
+        "cell, from which the driver bounds every grid cell's kNN radius in "
+        "numpy; one MapInArrow copies each center to the group cells that "
+        "need it (x N_SALT salts), pages project their group cell and url-"
+        "hash salt, one Exchange per side on (gx, gy, _salt) feeds "
+        "FlatMapCoGroupsInArrow, which runs the broadcast plan's kernel "
+        "(knn.topk) per group — no join, window or cache.",
         "pip_join_1m_partitioned": "shuffle-both-sides plan for the 1M-polygon "
         "dimension table: no broadcast HINT on the polygon side — the salted "
         "cell equi-join and the poly_id edge join are planned as shuffle "

@@ -10,23 +10,24 @@ closed bbox prefilter, in two plans:
     size;
   - pip_join_auto picks one of the two by edge count.
 
-kNN = exact top-k in (dist2, poly_id) order (SURVEY B9) from one 3x3
-cell-neighbor level whose in-ball top-k is provable, plus an exact pass
-for the pages it cannot prove, in two plans:
-  - knn_join: map-only probe of a collected center table's grid cell
-    index; the pages it cannot prove are ranked against every center in
-    the same worker;
-  - knn_join_partitioned: shuffle joins on (cell, salt), with the residue
-    sent to the cell-bound terminal (_knn_cell_bound_terminal);
+kNN = exact top-k in (dist2, poly_id) order (SURVEY B9) by one kernel,
+knn.topk over a center grid index (3x3 cell-neighbor candidates, the pages
+they cannot prove ranked against every indexed center), in two plans:
+  - knn_join: map-only probe of the whole collected center table's index;
+  - knn_join_partitioned: pages and centers cogrouped on (group cell,
+    salt), the kernel run per group over the centers that the per-cell
+    kNN-radius bound (knn.group_cells) routes there;
   - knn_join_auto picks one of the two by center count.
 """
 
 from __future__ import annotations
 
+import numpy as np
 import pyarrow as pa
 from pyspark.sql import DataFrame, Window, functions as F
 
 from engine.spatial import knn as knnmod, pip as pipmod
+from engine.spatial.clipbatch import concat_ranges, pack_cells, run_starts
 
 CROSSING_COND = (
     "((y1 > lat) != (y2 > lat)) AND (lon < x1 + (lat - y1) * (x2 - x1) / (y2 - y1))"
@@ -122,23 +123,17 @@ SELECT url, poly_id FROM crossings WHERE c % 2 = 1
 # index in every task closure (~48 B/center: the three columns plus cell
 # codes, offsets and slots). Its workers rank the residue pages against
 # ALL centers, so it loses once that O(residue x n_centers) kernel
-# outgrows the partitioned path's density-bounded candidate join. The
-# windows below were measured when the broadcast plan was a broadcast
-# join of per-cell candidate arrays with the same residue kernel. The
-# crossover is PARALLELISM-DEPENDENT: the hybrid's matmul wall-time is
-# ~ n_centers / cores (it parallelizes near-perfectly), while the
-# partitioned cascade is stage-count-bound and nearly flat in cores
-# (measured at 50k centers: 8.1s@local[8] vs 9.3s@local[32]) — so the
-# crossover moves ~linearly with cores. Measured windows under the
-# clearCache protocol (BENCH/CALIBRATION.md, `python bench.py
-# --calibration`, sf0.1): crossover in (50k, ~120k] at local[32]
-# (hybrid clearly wins 50k, 6.3s vs 9.6s; 100k straddles run-to-run,
-# 10.1s vs 10.8s then 11.6s vs 9.9s; 200k clearly partitioned) and in
-# (10k, 50k] at local[8] (4.2s vs 6.9s at 10k, 10.0s vs 8.1s at 50k) —
-# 3k centers/core sits inside both windows. The cap bounds the one driver
-# collect and the task closure (~50 + ~100 MB at 2M centers), the real
-# ceiling once a cluster's core count stops being the binding
-# constraint.
+# outgrows the partitioned plan's bounded per-group tables. The per-core
+# windows below were measured against the relational cascade that
+# knn_join_partitioned was before it ran the same kernel per cogroup:
+# that plan was stage-count-bound and nearly flat in cores, so the
+# crossover moved ~linearly with cores — in (50k, ~120k] at local[32]
+# and in (10k, 50k] at local[8] (BENCH/CALIBRATION.md, `python bench.py
+# --calibration`, sf0.1); 3k centers/core sat inside both. They are not
+# re-measured at those core counts for the cogrouped plan. The cap bounds
+# the one driver collect and the task closure (~50 + ~100 MB at 2M
+# centers), the real ceiling once a cluster's core count stops being the
+# binding constraint.
 BROADCAST_EDGE_LIMIT = 2_000_000
 BROADCAST_CENTER_LIMIT_PER_CORE = 3_000
 BROADCAST_CENTER_COLLECT_CAP = 2_000_000
@@ -387,29 +382,9 @@ def _topk(paired: DataFrame, k: int) -> DataFrame:
     )
 
 
-def _attach_persists(out: DataFrame, frames) -> DataFrame:
-    """Tag a cascade output with the intermediates it persisted so the
-    caller can free them (free_persisted) once its terminal action has
-    materialized the result. The persists are load-bearing WITHIN one
-    action (the cell level's split feeds both the resolved union branch
-    and the residue, and Spark does not dedup common subplans), but
-    their lifetime is the QUERY — in a long-lived session repeated kNN
-    calls would otherwise accumulate block-manager storage."""
-    out._graft_persists = list(frames)
-    return out
-
-
 def free_persisted(out: DataFrame, blocking: bool = False) -> None:
-    """Drop the block-manager storage a kNN cascade output persisted, once
-    the caller's terminal action has run. Never destructive: these are
-    cache-manager persists, not checkpoints — a later action on ``out``
-    recomputes them from lineage. Idempotent; no-op on untagged frames."""
-    for f in getattr(out, "_graft_persists", ()):
-        try:
-            f.unpersist(blocking)
-        except Exception:  # best-effort on teardown / Connect backends
-            pass
-    out._graft_persists = []
+    """No-op: neither kNN plan persists anything. Kept so that callers
+    which free a kNN output after its action keep working."""
 
 
 def knn_bruteforce(geotagged: DataFrame, centers: DataFrame, k: int = 3) -> DataFrame:
@@ -442,21 +417,24 @@ def knn_join(
 
     def probe(batches):
         for b in batches:
-            lon, lat = (b[c].to_numpy(zero_copy_only=False) for c in ("lon", "lat"))
-            rows, poly_id, dist2, rank = knnmod.topk(ix, lon, lat, k)
-            yield pa.RecordBatch.from_arrays(
-                [
-                    b["url"].take(rows),
-                    pa.array(poly_id, pa.int64()),
-                    pa.array(dist2, pa.float64()),
-                    pa.array(rank, pa.int32()),
-                ],
-                ["url", "poly_id", "dist2", "rank"],
-            )
+            yield pa.RecordBatch.from_pydict(_knn_arrays(ix, b, k))
 
     return geotagged.select("url", "lat", "lon").mapInArrow(
         probe, "url string, poly_id long, dist2 double, rank int"
     )
+
+
+def _knn_arrays(ix, pages, k: int) -> dict:
+    """The (url, poly_id, dist2, rank) columns of knn.topk over the pages of
+    an Arrow batch or table."""
+    lon, lat = (pages[c].to_numpy(zero_copy_only=False) for c in ("lon", "lat"))
+    rows, poly_id, dist2, rank = knnmod.topk(ix, lon, lat, k)
+    return {
+        "url": pages["url"].take(rows),
+        "poly_id": pa.array(poly_id, pa.int64()),
+        "dist2": pa.array(dist2, pa.float64()),
+        "rank": pa.array(rank, pa.int32()),
+    }
 
 
 def knn_oracle_sql(with_ctes: str, k: int = 3) -> str:
@@ -474,176 +452,6 @@ SELECT url, poly_id, dist2, rank FROM ranked WHERE rank <= {k}
 """
 
 
-def _knn_cell_bound_terminal(
-    remaining: DataFrame,
-    centers: DataFrame,
-    k: int,
-    c: float,
-) -> DataFrame:
-    """Exact kNN for the cascade's unresolved pages via per-cell distance
-    bounds — the classic grid-kNN pruning argument, fully relational:
-
-    1. For every occupied page cell P and center cell K, the cell-to-cell
-       bounds hold for EVERY page p in P and center q in K:
-         mind(P,K) = axis-wise max(|d|-1, 0) * c gap   <= |pq|
-         maxd(P,K) = axis-wise (|d|+1) * c             >= |pq|
-    2. Sort K by maxd, accumulate center counts: R2(P) = the smallest maxd2
-       whose running count reaches k. Every page in P therefore has >= k
-       centers within sqrt(R2(P)) — its true k-th neighbor distance is
-       bounded by R2(P), ADAPTIVELY per cell (pages near the center region
-       get a small ball; only genuinely isolated pages get a wide one).
-    3. Candidate centers for P = centers whose point-to-cell distance to P
-       is <= sqrt(R2(P)). Contains every possible top-k member by (2).
-    4. Per-CENTER refinement: r2pt(P) = k-th smallest point-to-cell MAX
-       distance over P's candidates — the same argument at center
-       granularity, so the page-cell diagonal is paid once instead of the
-       (|d|+1)-cell slack twice; candidates shrink to pmind2 <= r2pt.
-
-    The bound table is |page cells| x |center cells| rows (both DISTINCT
-    aggregates — thousands, never data-sized), so steps 1-2 cost nothing at
-    any scale; step 3's candidate volume is the sum of adaptive balls,
-    which is the information-theoretic floor for exact cell kNN (the fixed-
-    width w-ball the widening cascade used is the SAME ball with w forced
-    to the worst page's radius: measured 594M pairs vs ~60M adaptive on the
-    50k-center bench geometry). One shuffle-hash join keyed on the page
-    cell + salt; the per-url top-k windows reuse its partitioning, so the
-    candidate pairs never cross the wire (same argument as the cell level
-    of knn_join_partitioned).
-    Always resolves every page (no residue, no driver-side loop): when the
-    center table has < k rows, R2 is +inf and all centers rank.
-    """
-    cell = f"cast(floor(%s / {c}) as bigint)"
-    pag = remaining.withColumn("cx", F.expr(cell % "lon")).withColumn(
-        "cy", F.expr(cell % "lat")
-    )
-    pcells = pag.select("cx", "cy").distinct()
-    cc = centers.selectExpr(
-        "poly_id",
-        "clon",
-        "clat",
-        f"{cell % 'clon'} as kx",
-        f"{cell % 'clat'} as ky",
-    )
-    ccells = cc.groupBy("kx", "ky").agg(F.count("*").alias("_n"))
-    dmin = lambda a, b: f"(greatest(abs({a} - {b}) - 1L, 0L) * {c})"
-    dmax = lambda a, b: f"((abs({a} - {b}) + 1L) * {c})"
-    mind2_e = (
-        f"{dmin('cx','kx')} * {dmin('cx','kx')}"
-        f" + {dmin('cy','ky')} * {dmin('cy','ky')}"
-    )
-    maxd2_e = (
-        f"{dmax('cx','kx')} * {dmax('cx','kx')}"
-        f" + {dmax('cy','ky')} * {dmax('cy','ky')}"
-    )
-    # Metadata-cheap UPPER bound on r2 BEFORE the pair table exists: the
-    # nearest single center cell holding >= k centers bounds the k-th
-    # neighbor by its maxd2 (one min-agg over the cells-only cross — no
-    # window, map-side partial). Pushing `mind2 <= r2ub` INTO the pair
-    # join condition means the |pcells| x |ccells| cross (3.7M rows on the
-    # 50k-center residue geometry) is never materialized or exchanged —
-    # the nested-loop join emits only the ~1% of cell pairs that can
-    # matter, and every window below runs on that pruned set. (Measured:
-    # windowing the unpruned cross cost ~9-11s at local[32]; the whole
-    # terminal now runs in a fraction of that.) Exact: r2 <= r2ub, so a
-    # pair with mind2 > r2ub can neither define r2 (it sorts after it in
-    # the cum window: maxd2 >= mind2 > r2ub >= r2) nor be a candidate.
-    # one pass: the conditional min folds the ">= k centers" gate into the
-    # aggregate, so pcells is referenced (and its distinct computed) once,
-    # and page cells survive even when NO cell holds >= k centers
-    # (r2ub = inf -> the pair join below degrades to the full cross).
-    pbound = (
-        pcells.crossJoin(F.broadcast(ccells))
-        .withColumn("maxd2", F.expr(maxd2_e))
-        .groupBy("cx", "cy")
-        .agg(
-            F.coalesce(
-                F.min(F.when(F.col("_n") >= k, F.col("maxd2"))),
-                F.lit(float("inf")),
-            ).alias("r2ub")
-        )
-    )
-    pairs = (
-        pbound.join(F.broadcast(ccells), F.expr(f"{mind2_e} <= r2ub"))
-        .withColumn("mind2", F.expr(mind2_e))
-        .withColumn("maxd2", F.expr(maxd2_e))
-    )
-    # r2 and the candidate filter FUSE into one Window stage: the running
-    # count ordered by maxd2 and the per-cell min-over-threshold are both
-    # window functions over the SAME (cx, cy) partitioning, so Catalyst
-    # plans one exchange + one sorted pass — no groupBy/self-join round
-    # trip re-materializing the pair table.
-    wcell = Window.partitionBy("cx", "cy")
-    wp = wcell.orderBy("maxd2")
-    cand_cells = (
-        pairs.withColumn("_cum", F.sum("_n").over(wp))
-        .withColumn(
-            "r2",
-            F.coalesce(
-                F.min(F.when(F.col("_cum") >= k, F.col("maxd2"))).over(wcell),
-                F.lit(float("inf")),  # < k centers total: keep everything
-            ),
-        )
-        .filter(F.col("mind2") <= F.col("r2"))
-        .select("cx", "cy", "kx", "ky", "r2")
-    )
-    # tighten cell->cell to point(center)->cell: per candidate center q
-    # and page cell P compute the point-to-cell MIN distance (pmind2: 0 if
-    # q is over P) and MAX distance (pmaxd2: to P's farthest corner)
-    cellcand = (
-        cand_cells.join(cc, ["kx", "ky"])
-        .withColumn("_pdx", F.expr(f"greatest(cx * {c} - clon, clon - (cx + 1) * {c}, 0D)"))
-        .withColumn("_pdy", F.expr(f"greatest(cy * {c} - clat, clat - (cy + 1) * {c}, 0D)"))
-        .withColumn("pmind2", F.col("_pdx") * F.col("_pdx") + F.col("_pdy") * F.col("_pdy"))
-        .filter(F.col("pmind2") <= F.col("r2"))
-        .withColumn("_mx", F.expr(f"greatest(clon - cx * {c}, (cx + 1) * {c} - clon)"))
-        .withColumn("_my", F.expr(f"greatest(clat - cy * {c}, (cy + 1) * {c} - clat)"))
-        .withColumn("pmaxd2", F.col("_mx") * F.col("_mx") + F.col("_my") * F.col("_my"))
-    )
-    # SECOND, per-CENTER tightening (the r5 terminal's dominant-cost fix):
-    # r2pt(P) = k-th smallest pmaxd2 over P's candidate centers. At least
-    # k centers lie within sqrt(r2pt) of EVERY page in P (each of those
-    # k has pmaxd2 <= r2pt), so any center with pmind2 > r2pt can never
-    # enter a top-k — and r2pt <= r2 always (the k cell-bound centers have
-    # pmaxd2 <= r2), so this strictly shrinks the per-cell candidate set
-    # (measured 26.8M -> 8.1M candidate pairs on the 50k-center residue:
-    # the cell-level bound pays the full (|d|+1)-cell slack twice, the
-    # point-level bound only the page-cell diagonal once). Same fusion as
-    # r2: row_number + min-over-threshold in one Window stage, filter
-    # inline — the terminal stays fully lazy with ZERO persists.
-    wpt = wcell.orderBy("pmaxd2", "poly_id")
-    tight = (
-        cellcand.withColumn("_rn", F.row_number().over(wpt))
-        .withColumn(
-            "r2pt",
-            F.coalesce(
-                F.min(F.when(F.col("_rn") == k, F.col("pmaxd2"))).over(wcell),
-                F.lit(float("inf")),  # < k candidates total: keep all
-            ),
-        )
-        .filter(F.col("pmind2") <= F.col("r2pt"))
-        .select("cx", "cy", "poly_id", "clon", "clat", F.col("r2pt").alias("r2"))
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
-    )
-    # NOTE (r7): this terminal (and the partitioned cell level) keeps the
-    # window form: the pairs are already co-partitioned by the shuffle-hash
-    # join, so the top-k is a codegen'd LOCAL sort with no exchange, and
-    # replacing it with interpreted per-row array kernels measured ~25%
-    # SLOWER at the 50k-center bench point (ABBA-isolated 12.4s vs 9.6s) -
-    # the HOF interpreter costs more than the in-partition sort it removes
-    # when nothing crosses the wire either way.
-    pag_s = pag.withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
-    cand = _with_dist2(pag_s.join(tight.hint("shuffle_hash"), ["cx", "cy", "_salt"]))
-    # any candidate beyond sqrt(r2pt) is provably outside the top-k (>= k
-    # candidates sit within r2pt), so drop it before the sort
-    cand = cand.filter(F.col("dist2") <= F.col("r2"))
-    wk = Window.partitionBy("cx", "cy", "_salt", "url").orderBy("dist2", "poly_id")
-    return (
-        cand.withColumn("rank", F.row_number().over(wk))
-        .filter(F.col("rank") <= k)
-        .select("url", "poly_id", "dist2", "rank")
-    )
-
-
 def knn_join_partitioned(
     geotagged: DataFrame,
     centers: DataFrame,
@@ -652,136 +460,86 @@ def knn_join_partitioned(
     n_centers: int | None = None,
 ) -> DataFrame:
     """Exact kNN, shuffle-both-sides path: for center tables too large to
-    collect (knn_join collects the center table to the driver and ships its
-    grid index to every task, so it assumes the dimension side fits the
-    driver's and one task's memory).
+    collect (knn_join ships the whole center index to every task).
 
-    Same provably-exact cell-neighbor fast path as knn_join, but the
-    candidate join is a SHUFFLE hash join on (cell, salt): centers explode
-    into their 3x3 neighborhood AND N_SALT salt replicas, pages pick one
-    salt by url hash — a hot cell spreads over N_SALT reducers. Properties
-    that keep the candidate-pair volume (the dominant cost) bounded and
-    OFF the wire:
-
-    - pairs never shuffle: a url has exactly one (cell, salt) key, so the
-      shuffle hash join already co-locates each url's candidates and the
-      top-k windows run partitioned by the join keys + url — Catalyst
-      proves the child partitioning satisfies them, so the pairs are
-      sorted in place, never exchanged;
-    - provability pre-filter: only centers within w can appear in a
-      provable top-k, so dist2 <= w^2 drops the rest before the sort.
-
-    Everything the cell level cannot prove goes to the cell-bound
-    terminal (_knn_cell_bound_terminal): per-page-cell ADAPTIVE radii from
-    cell-to-cell distance bounds, so the terminal's candidate volume is
-    the sum of per-cell balls sized by the actual k-th-neighbor distance —
-    not a globally-widened w-ball, not a cartesian fallback. The terminal
-    always resolves (no residue, no driver-side widening loop, no counts:
-    the whole plan is lazy). Output equals exact kNN; shares knn_join's
-    oracle.
-    """
+    Pages and centers meet on a coarse group grid of width g. The driver
+    collects one small table, the center count per group cell, and
+    knn.group_cells turns it into the center cells every cell of the
+    lon [-180, 180] x lat [-90, 90] grid must see (a per-cell kNN-radius
+    bound). Each center is copied to the group cells that need it and to
+    N_SALT salt replicas; each page picks one salt by url hash, so a hot
+    cell spreads over N_SALT groups. One exchange per side brings each
+    (cell, salt) group together, and the group runs knn_join's kernel
+    (build_center_index + topk at ``cell_deg``) on its own centers. Every
+    center tied with or nearer than a page's k-th neighbor is in the page's
+    group, so the rows equal knn_join's. A page outside the grid (or NaN)
+    fails the job."""
     if n_centers is None:
         n_centers = centers.count()  # table-stats surrogate (see pip_join_auto)
-    if cell_deg is None:
-        cell_deg = knn_cell_deg(n_centers)
-    w = cell_deg
-    cell = f"cast(floor(%s / {w}) as bigint)"
-    pages_c = (
-        geotagged.select("url", "lat", "lon")
-        .withColumn("cx", F.expr(cell % "lon"))
-        .withColumn("cy", F.expr(cell % "lat"))
-        .withColumn("_salt", F.pmod(F.xxhash64("url"), F.lit(N_SALT)))
+    w = knn_cell_deg(n_centers) if cell_deg is None else cell_deg
+    # the group width tracks the k-th-neighbor scale of sparse pages,
+    # ~n^-1/2, anchored at 6 degrees for 50k centers, and stays a few
+    # kernel cells wide
+    g = max(2.0 * w, 4.0, min(6.0, (1_800_000.0 / max(n_centers, 1)) ** 0.5))
+    cell = f"cast(floor(%s / {g}) as bigint)"
+    cc = centers.selectExpr(
+        "poly_id", "clon", "clat", f"{cell % 'clon'} as kx", f"{cell % 'clat'} as ky"
     )
-    off = F.explode(
-        F.array(
-            *[
-                F.struct(F.lit(di).alias("di"), F.lit(dj).alias("dj"))
-                for di in (-1, 0, 1)
-                for dj in (-1, 0, 1)
-            ]
-        )
-    )
-    neigh = (
-        centers.withColumn("o", off)
-        .withColumn("_salt", F.explode(F.sequence(F.lit(0), F.lit(N_SALT - 1))))
-        .selectExpr(
-            "poly_id",
-            "clon",
-            "clat",
-            "_salt as nsalt",
-            f"{cell % 'clon'} + o.di as ncx",
-            f"{cell % 'clat'} + o.dj as ncy",
-        )
-    )
-    # LEFT OUTER join with the w-ball predicate INSIDE the join
-    # condition: every page emerges
-    # with its in-ball candidates or one null row, so pass/fail
-    # routing is a filter on the window output instead of a url-keyed
-    # anti-join re-shuffling the whole page table. The
-    # shuffle_hash hint pins the join whose output partitioning is
-    # HashPartitioning(cx, cy, _salt): the windows below reuse it, so
-    # the candidate pairs (the cascade's dominant data volume) never
-    # cross the wire — the top-k is a within-partition sort. (A
-    # broadcast of the page side would leave the stream partitioned
-    # by the center scan instead, forcing that exchange.) In-ball in
-    # the join condition is also the provability pre-filter: only
-    # centers within w can appear in a provable top-k.
-    dist2_e = (
-        "((lon - clon) * (lon - clon) + (lat - clat) * (lat - clat))"
-    )
-    cond = F.expr(
-        f"cx = ncx AND cy = ncy AND _salt = nsalt AND {dist2_e} <= {w * w!r}"
-    )
-    cand = pages_c.join(neigh.hint("shuffle_hash"), cond, "left")
-    cand = cand.withColumn("dist2", F.expr(dist2_e))  # null <=> no match
-    # a url carries exactly ONE (cx, cy, _salt) key; windowing by the
-    # join keys + url lets Catalyst prove the join's partitioning
-    # satisfies the clustered distribution -> no extra exchange.
-    wk = Window.partitionBy("cx", "cy", "_salt", "url").orderBy(
-        "dist2", "poly_id"
-    )
-    wu = Window.partitionBy("cx", "cy", "_salt", "url")
-    split = (
-        cand.withColumn("rank", F.row_number().over(wk))
-        .withColumn("_cnt", F.count("poly_id").over(wu))
-        .filter(F.col("rank") <= k)
-        .select("url", "lat", "lon", "poly_id", "dist2", "rank", "_cnt")
-        .persist()
-    )
-    good = split.filter(F.col("_cnt") >= k).select(
-        "url", "poly_id", "dist2", "rank"
-    )
-    remaining = split.filter(
-        (F.col("_cnt") < k) & (F.col("rank") == 1)
-    ).select("url", "lat", "lon")
+    t = cc.groupBy("kx", "ky").count().toArrow()
+    gx, gy, kx, ky = knnmod.group_cells(*(t[c].to_numpy() for c in ("kx", "ky", "count")), k, g)
+    # group cells per center cell, CSR over the sorted packed center cell
+    code = pack_cells(kx, ky)
+    order = np.argsort(code, kind="stable")
+    code, gx, gy = code[order], gx[order], gy[order]
+    first = run_starts(code)
+    codes, off = code[first], np.append(first, len(code))
 
-    # terminal: the cell-bound exact join resolves every unresolved page in
-    # one pass with per-cell adaptive radii — no residue count, no widening
-    # loop, no cartesian fallback, and the plan stays fully lazy. The bound
-    # grid is coarser than the cell level (its pcells x ccells bound table
-    # must stay metadata-sized even for plane-covering page sets).
-    #
-    # r7 width calibration (guide §1/§2): the residue is the SPARSE page
-    # set (pages far from any center), whose k-th-neighbor distance scales
-    # like n_centers^-1/2 — when the bound grid is much finer than that
-    # scale, the terminal pays extra bound-window cells and candidate
-    # replication for radii it cannot tighten. ABBA-alternated sweep at
-    # local[32] sf0.1 (min/med of 3, same session, order-balanced):
-    # 50k centers: c=4 8.68/8.84s, c=6 7.57/7.89s (c=2 35s, c=3 13s —
-    # finer explodes the bound table); 200k: c=4 12.75 vs c=6 13.72;
-    # 500k: c=4 19.1 vs c=6 23.5 — so the optimum tracks ~sqrt(1/n),
-    # anchored at the 50k point (6 deg), capped at 6 so the 10k
-    # calibration point keeps its measured 2*cell_deg width, and floored
-    # by the old max(2*cell_deg, 4): sqrt(1.8e6/n) drops below 4 past
-    # n = 112,500 centers, where cell_deg is already at its 2-degree
-    # floor, so 2*cell_deg = 4 there too.
-    term_c = max(
-        2.0 * cell_deg,
-        4.0,
-        min(6.0, (1_800_000.0 / max(n_centers, 1)) ** 0.5),
+    def copy(batches):
+        for b in batches:
+            c = pack_cells(*(b[f].to_numpy(zero_copy_only=False) for f in ("kx", "ky")))
+            at = np.minimum(np.searchsorted(codes, c), len(codes) - 1)
+            fan = np.where(codes[at] == c, off[at + 1] - off[at], 0) * N_SALT
+            slot = concat_ranges(off[at] * N_SALT, fan)
+            rows = pa.array(np.repeat(np.arange(b.num_rows), fan))
+            yield pa.RecordBatch.from_arrays(
+                [
+                    *(b[f].take(rows) for f in ("poly_id", "clon", "clat")),
+                    pa.array(gx[slot // N_SALT]),
+                    pa.array(gy[slot // N_SALT]),
+                    pa.array(slot % N_SALT),
+                ],
+                ["poly_id", "clon", "clat", "gx", "gy", "_salt"],
+            )
+
+    inside = "lon BETWEEN -180 AND 180 AND lat BETWEEN -90 AND 90"
+    pages = geotagged.selectExpr(
+        "url",
+        "lat",
+        "lon",
+        f"CASE WHEN {inside} THEN {cell % 'lon'} ELSE raise_error(format_string("
+        "'kNN page %s at (%s, %s) is outside lon [-180, 180] x lat [-90, 90]', "
+        "url, lon, lat)) END as gx",
+        f"{cell % 'lat'} as gy",
+        f"pmod(xxhash64(url), {N_SALT}) as _salt",
     )
-    out = _knn_cell_bound_terminal(remaining, centers, k, term_c)
-    return _attach_persists(out.unionByName(good), [split])
+    copies = cc.mapInArrow(
+        copy, "poly_id long, clon double, clat double, gx long, gy long, _salt long"
+    )
+
+    def kernel(pg, cand):
+        if not pg.num_rows:  # a group of centers only needs no index
+            cand = cand.slice(0, 0)
+        ix = knnmod.build_center_index(
+            *(cand[c].to_numpy() for c in ("poly_id", "clon", "clat")), w
+        )
+        return pa.Table.from_pydict(_knn_arrays(ix, pg, k))
+
+    key = ("gx", "gy", "_salt")
+    return (
+        pages.groupBy(*key)
+        .cogroup(copies.groupBy(*key))
+        .applyInArrow(kernel, "url string, poly_id long, dist2 double, rank int")
+    )
 
 
 def knn_join_auto(

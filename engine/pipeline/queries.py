@@ -136,8 +136,8 @@ FROM geotagged"""
 def q_cell_kring(spark, sf_dir):
     """B6 expansion op: each page's 1-ring of Morton cells at the bucketing
     zoom (x wraps the antimeridian, y clamps at the poles) — the relational
-    twin of engine.spatial.cells.k_ring, the candidate-generation primitive
-    the kNN cascade builds on."""
+    twin of engine.spatial.cells.k_ring, the 3x3 candidate neighborhood the
+    kNN kernel (engine.spatial.knn.topk) gathers on its own grid."""
     z = index.CELL_Z
     n = 1 << z
     df = index.with_unit(_geotagged(spark, sf_dir))
@@ -245,9 +245,9 @@ def q_knn_sql(sf_dir):
 
 
 def q_knn_partitioned(spark, sf_dir):
-    """B9 scale path: shuffle-both-sides kNN cell level + cell-bound
-    terminal for the residue (no broadcast, no driver collect). Same
-    oracle as knn_3."""
+    """B9 scale path: pages and centers cogrouped on (group cell, salt),
+    each group ranked by the same kernel as knn_3 (no center-table collect,
+    only its per-cell counts). Same oracle as knn_3."""
     return joins.knn_join_partitioned(
         _geotagged(spark, sf_dir), fixtures.polygon_centers_df(spark, sf_dir), k=3
     )
@@ -1068,8 +1068,8 @@ def q_pip_variants_sql(sf_dir):
 
 def q_knn_variants(spark, sf_dir):
     """B9, all three exact-kNN plans in ONE driver row: broadcast (map-only
-    center-cell probe), shuffle-partitioned cascade and the auto chooser
-    (see q_pip_variants)."""
+    center-cell probe), partitioned (the same kernel per cogrouped cell)
+    and the auto chooser (see q_pip_variants)."""
     return _union_variants(
         [
             ("broadcast", q_knn),

@@ -4,10 +4,11 @@ Distances are the SQL oracle's IEEE expression
 (lon - clon) * (lon - clon) + (lat - clat) * (lat - clat), evaluated in that
 order, and each page's centers rank by (dist2, poly_id).
 
-``build_center_index`` + ``topk`` are the batched kernel of joins.knn_join
-over a collected center table: a grid index proves most pages' top-k from
-their 3x3 neighbor cells, and ``topk_bruteforce`` ranks every center for the
-rest.
+``build_center_index`` + ``topk`` are the batched kernel of both kNN plans:
+a grid index proves most pages' top-k from their 3x3 neighbor cells, and
+``topk_bruteforce`` ranks every center for the rest. joins.knn_join runs it
+over the whole collected center table; joins.knn_join_partitioned runs it
+per group cell over the centers that ``group_cells`` routes there.
 """
 
 from __future__ import annotations
@@ -68,26 +69,30 @@ def topk(ix: CenterIndex, lon: np.ndarray, lat: np.ndarray, k: int):
     column of three cells per binary-search range. A center outside them is
     more than one cell width away in some axis, so once at least k
     candidates lie within distance w their top-k is exact; every other point
-    is ranked against all centers by ``topk_bruteforce``. Points are taken
-    in runs whose candidates sum to at most GATHER_CHUNK (one point at
-    least), so a hot cell under many points is gathered a run at a time."""
+    is ranked against all centers by ``topk_bruteforce``. So is a point
+    whose 3x3 cells hold every center (a hot cell), which the gather would
+    only make slower. The other points are taken in runs whose candidates
+    sum to at most GATHER_CHUNK (one point at least)."""
     if not len(ix.poly_id):
         return _empty()
     gx, gy = np.floor(np.stack([lon, lat]) / ix.w).astype(np.int64)
     col = gx + np.array([[-1], [0], [1]])
     lo = ix.cell_off[np.searchsorted(ix.codes, pack_cells(col, gy - 1))]
     fan = ix.cell_off[np.searchsorted(ix.codes, pack_cells(col, gy + 2))] - lo
-    ends = np.cumsum(fan.sum(axis=0))
-    parts = []
+    cand = fan.sum(axis=0)
+    hot = np.flatnonzero(cand >= len(ix.poly_id))
+    row, pid, d2, rank = topk_bruteforce(lon[hot], lat[hot], ix.clon, ix.clat, ix.poly_id, k)
+    parts = [(hot[row], pid, d2, rank)]
+    cold = np.flatnonzero(cand < len(ix.poly_id))
+    ends = np.cumsum(cand[cold])
     s = 0
-    while s < len(lon):
+    while s < len(cold):
         start = ends[s - 1] if s else 0
         e = max(s + 1, int(np.searchsorted(ends, start + GATHER_CHUNK, side="right")))
-        row, pid, d2, rank = _topk_run(ix, lon[s:e], lat[s:e], lo[:, s:e], fan[:, s:e], k)
-        parts.append((row + s, pid, d2, rank))
+        c = cold[s:e]
+        row, pid, d2, rank = _topk_run(ix, lon[c], lat[c], lo[:, c], fan[:, c], k)
+        parts.append((c[row], pid, d2, rank))
         s = e
-    if len(parts) < 2:
-        return parts[0] if parts else _empty()
     return tuple(np.concatenate(c) for c in zip(*parts))
 
 
@@ -163,3 +168,43 @@ def topk_bruteforce(lon, lat, clon, clat, poly_ids, k: int):
         out_d2.append(sel_d2.reshape(-1))
         out_rank.append(np.tile(np.arange(1, kk + 1), m).astype(np.int32))
     return tuple(np.concatenate(c) for c in (out_row, out_pid, out_d2, out_rank))
+
+
+def group_cells(kx, ky, count, k: int, g: float):
+    """(gx, gy, kx, ky) rows: for every cell (gx, gy) of the width-``g`` grid
+    over lon [-180, 180] x lat [-90, 90], each occupied center cell (kx, ky)
+    of the same grid (``count`` centers) that can hold one of the k nearest
+    centers of a point in it.
+
+    Between a point cell and a center cell (dx, dy) cells apart, every
+    (point, center) distance is at least g * |(max(|dx| - 1, 0), max(|dy| -
+    1, 0))| (mind) and at most g * |(|dx| + 1, |dy| + 1)| (maxd). R2, the
+    smallest maxd^2 at which the running center count reaches k, bounds the
+    k-th neighbor distance of every point in the cell, so the center cells
+    with mind^2 <= R2 hold every center tied with or nearer than it (all
+    cells when there are fewer than k centers). Both are compared in integer
+    units of g^2, which has no rounding."""
+    kx, ky, count = (np.asarray(a, np.int64) for a in (kx, ky, count))
+    gx, gy = (
+        a.ravel()
+        for a in np.meshgrid(
+            *(np.arange(np.floor(-h / g), np.floor(h / g) + 1, dtype=np.int64) for h in (180, 90)),
+            indexing="ij",
+        )
+    )
+    if not len(kx):
+        return (np.zeros(0, np.int64),) * 4
+    parts = []
+    step = max(1, GATHER_CHUNK // len(kx))
+    for s in range(0, len(gx), step):
+        px, py = gx[s : s + step, None], gy[s : s + step, None]
+        dx, dy = np.abs(px - kx), np.abs(py - ky)
+        maxd2 = (dx + 1) ** 2 + (dy + 1) ** 2
+        order = np.argsort(maxd2, axis=1)
+        reach = np.cumsum(count[order], axis=1) >= k
+        at = np.take_along_axis(order, reach.argmax(axis=1)[:, None], axis=1)
+        r2 = np.where(reach[:, -1:], np.take_along_axis(maxd2, at, axis=1), np.iinfo(np.int64).max)
+        mind2 = np.maximum(dx - 1, 0) ** 2 + np.maximum(dy - 1, 0) ** 2
+        p, c = np.nonzero(mind2 <= r2)
+        parts.append((px[p, 0], py[p, 0], kx[c], ky[c]))
+    return tuple(np.concatenate(c) for c in zip(*parts))

@@ -3,10 +3,11 @@
 - mega-polygon edge-join salting (pip_join_partitioned auto-salt): one
   polygon owning ~50% of all edges under page-dense area must neither
   change results nor require manual tuning;
-- kNN partitioned terminal: a dense page cluster far from ALL centers
-  (the geography no fine cell level can prove) resolves exactly through
-  the cell-bound terminal's per-cell adaptive radii — with no cartesian
-  fallback and no driver-side widening loop.
+- kNN partitioned plan: a dense page cluster far from ALL centers (the
+  geography no 3x3 cell neighborhood can prove) resolves exactly, because
+  the per-cell kNN-radius bound (knn.group_cells) routes every center it
+  may need into its group — with no cartesian product and no driver-side
+  widening loop.
 """
 
 from __future__ import annotations
@@ -189,23 +190,15 @@ def _cached_rdd_ids(spark):
 
 @pytest.mark.parametrize("fn", [joins.knn_join, joins.knn_join_partitioned])
 def test_knn_free_persisted_cleans_storage(spark, fn):
-    """The partitioned cascade persists its split table, whose lifetime is
-    the query; free_persisted must drop it after the caller's terminal
-    action, so repeated kNN calls in a long-lived session do not
-    accumulate block-manager storage. The map-only broadcast plan caches
-    nothing, during the action or after it. Proof style:
-    getRDDStorageInfo before/after, as in engine.textops.cluster's
-    checkpoint discipline."""
+    """Neither kNN plan caches anything, during the action or after it, so
+    repeated kNN calls in a long-lived session accumulate no block-manager
+    storage; free_persisted, kept for the callers that free a kNN output,
+    leaves it so. Proof style: getRDDStorageInfo before/after, as in
+    engine.textops.cluster's checkpoint discipline."""
     pages, centers = _polar_cluster(spark, n_pages=150)
     base = _cached_rdd_ids(spark)
     out = fn(pages, centers, k=3, cell_deg=2.0)
     out.write.format("noop").mode("overwrite").save()
-    during = _cached_rdd_ids(spark) - base
-    if fn is joins.knn_join:
-        assert during == set(), "the map-only plan persists nothing"
-    else:
-        assert during, "cascade should persist its per-level split tables"
+    assert _cached_rdd_ids(spark) - base == set(), "a kNN plan persists nothing"
     joins.free_persisted(out, blocking=True)
-    assert _cached_rdd_ids(spark) - base == set(), (
-        "free_persisted must drop every cascade-persisted block"
-    )
+    assert _cached_rdd_ids(spark) - base == set()

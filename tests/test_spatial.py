@@ -280,7 +280,8 @@ def test_pip_cell_index_matches_ring_reference(case):
 def _knn_case(draw):
     """Centers on a coarse lattice in random poly_id order, with repeated
     coordinates and lattice-symmetric layouts so distances tie exactly, a
-    grid width below or above the centers' spread, and points drawn at
+    grid width below or above the centers' spread or a one-cell hot spot
+    (every center in cell (0, 0) under a page cluster), and points drawn at
     random, on the lattice and snapped onto cell borders."""
     h = draw(st.sampled_from([0.25, 0.5, 1.0]))
     n = draw(st.integers(0, 12))
@@ -289,18 +290,23 @@ def _knn_case(draw):
     xy = h * np.array(pool, np.float64)[rng.integers(0, len(pool), n)]
     poly_id = rng.permutation(n).astype(np.int64) * 3 + 7
     spread = h * 24.0
+    m = 48
+    hot = np.zeros((0, 2))
     if draw(st.booleans()):
+        xy = np.abs(xy)
+        w = draw(st.floats(1.05, 2.0)) * 12 * h
+        hot = rng.uniform(0, w, (m, 2))
+    elif draw(st.booleans()):
         w = draw(st.floats(0.05, 0.95)) * spread
     else:
         w = draw(st.floats(1.05, 4.0)) * (spread + 12 * h)
-    m = 48
     near = rng.uniform(-14 * h, 14 * h, (4 * m, 2))
     lattice = h * rng.integers(-14, 15, (m, 2)).astype(np.float64)
     grid = rng.integers(np.floor(-14 * h / w) - 1, np.floor(14 * h / w) + 2, (m, 2))
     border = near[:m].copy()
     border[:, 0] = w * grid[:, 0]
     border[: m // 2, 1] = w * grid[: m // 2, 1]
-    pts = np.concatenate([near, lattice, border])
+    pts = np.concatenate([near, lattice, border, hot])
     return poly_id, xy[:, 0], xy[:, 1], w, pts[:, 0], pts[:, 1], draw(st.integers(1, 5))
 
 
@@ -339,30 +345,90 @@ def test_knn_topk_matches_lexsort_reference(case):
         np.testing.assert_array_equal(getattr(ix, name), getattr(rev, name))
 
 
+def _hot(clon, clat, w, lon, lat):
+    """Points whose 3x3 neighbor cells hold every center."""
+    c = np.floor(np.stack([clon, clat]) / w)
+    p = np.floor(np.stack([lon, lat]) / w)
+    near = (np.abs(p[:, :, None] - c[:, None, :]) <= 1).all(axis=0)
+    return near.all(axis=1) & (len(clon) > 0)
+
+
 @settings(max_examples=200, deadline=None)
 @given(_knn_case())
 def test_knn_topk_gather_runs_match_bruteforce(case):
-    """Under the default gather budget a batch is one run; with the budget
-    patched to 2 candidates, every run gathers at most 2 or holds one
-    point, and the top-k still equals ranking every center with
-    topk_bruteforce."""
+    """A point whose 3x3 cells hold every center (a hot cell) is ranked by
+    topk_bruteforce and never reaches _topk_run. Under the default gather
+    budget the other points of a batch are one run; with the budget patched
+    to 2 candidates, every run gathers at most 2 or holds one point, and
+    the top-k still equals ranking every center with topk_bruteforce."""
     poly_id, clon, clat, w, lon, lat, k = case
     ix = knn.build_center_index(poly_id, clon, clat, w)
     rows, pid, d2, rank = knn.topk_bruteforce(lon, lat, ix.clon, ix.clat, ix.poly_id, k)
     want = sorted(zip(rows.tolist(), rank.tolist(), pid.tolist(), d2.tolist()))
+    cold = int((~_hot(clon, clat, w, lon, lat)).sum()) if len(poly_id) else 0
     runs = []
     run = knn._topk_run
     with pytest.MonkeyPatch.context() as mp:
         mp.setattr(
             knn,
             "_topk_run",
-            lambda ix, lon, lat, lo, fan, k: runs.append((len(lon), int(fan.sum())))
+            lambda ix, lon, lat, lo, fan, k: runs.append(
+                (len(lon), int(fan.sum()), int(fan.sum(axis=0).max()))
+            )
             or run(ix, lon, lat, lo, fan, k),
         )
         assert _knn_rows(ix, lon, lat, k) == want
-        assert [n for n, _ in runs] == ([len(lon)] if len(poly_id) else [])
+        assert [n for n, _, _ in runs] == ([cold] if cold else [])
         runs.clear()
         mp.setattr(knn, "GATHER_CHUNK", 2)
         assert _knn_rows(ix, lon, lat, k) == want
-    assert sum(n for n, _ in runs) == (len(lon) if len(poly_id) else 0)
-    assert all(n == 1 or gathered <= 2 for n, gathered in runs)
+    assert sum(n for n, _, _ in runs) == cold
+    assert all(n == 1 or gathered <= 2 for n, gathered, _ in runs)
+    assert all(most < len(poly_id) for _, _, most in runs)
+
+
+@st.composite
+def _group_case(draw):
+    """Centers on a lattice whose spacing divides or equals the group width
+    (exact distance ties, centers on cell borders), in random poly_id order;
+    pages on the lattice, on cell borders, at the grid's corners and at
+    random; k from 1 to past the center count."""
+    g = draw(st.sampled_from([20.0, 30.0, 45.0, 60.0]))
+    h = g / draw(st.sampled_from([1, 2, 4]))
+    n = draw(st.integers(0, 12))
+    pool = draw(st.lists(st.tuples(st.integers(-6, 6), st.integers(-3, 3)), min_size=1, max_size=8))
+    rng = np.random.default_rng(draw(st.integers(0, 2**32 - 1)))
+    xy = h * np.array(pool, np.float64)[rng.integers(0, len(pool), n)]
+    poly_id = rng.permutation(n).astype(np.int64)
+    lim = np.array([180.0, 90.0])
+    lattice = np.clip(h * rng.integers(-8, 9, (32, 2)), -lim, lim)
+    border = np.clip(g * rng.integers(-9, 10, (32, 2)), -lim, lim)
+    corner = np.array([[sx * 180.0, sy * 90.0] for sx in (-1, 1) for sy in (-1, 1)])
+    pts = np.concatenate([lattice, border, corner, rng.uniform(-lim, lim, (32, 2))])
+    return poly_id, xy[:, 0], xy[:, 1], g, pts[:, 0], pts[:, 1], draw(st.integers(1, 6))
+
+
+@settings(max_examples=200, deadline=None)
+@given(_group_case())
+def test_knn_group_cells_hold_every_neighbor(case):
+    """Every cell of the group grid gets center cells once there are
+    centers, and a page's group cell holds every center whose dist2 is at
+    most its brute-force k-th dist2 (every center when k exceeds the count;
+    no rows without centers)."""
+    poly_id, clon, clat, g, lon, lat, k = case
+    cells, count = np.unique(np.floor(np.stack([clon, clat]) / g).astype(np.int64), axis=1, return_counts=True)
+    gx, gy, kx, ky = knn.group_cells(cells[0], cells[1], count, k, g)
+    n_grid = (np.floor(180 / g) - np.floor(-180 / g) + 1) * (np.floor(90 / g) - np.floor(-90 / g) + 1)
+    assert len({*zip(gx.tolist(), gy.tolist())}) == (n_grid if len(poly_id) else 0)
+    seen = {}
+    for a, b, c, d in zip(gx.tolist(), gy.tolist(), kx.tolist(), ky.tolist()):
+        seen.setdefault((a, b), set()).add((c, d))
+    for x, y in zip(lon, lat):
+        dlon, dlat = x - clon, y - clat
+        d2 = dlon * dlon + dlat * dlat
+        kth = np.sort(d2)[k - 1] if k <= len(d2) else np.inf
+        need = {
+            (int(np.floor(a / g)), int(np.floor(b / g)))
+            for a, b in zip(clon[d2 <= kth], clat[d2 <= kth])
+        }
+        assert need <= seen.get((int(np.floor(x / g)), int(np.floor(y / g))), set())
