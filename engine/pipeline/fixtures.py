@@ -92,11 +92,40 @@ def lon_expr(dialect: str, url: str = "url") -> str:
     return f"(CAST({raw} AS DOUBLE) / 1000.0 - 180.0)"
 
 
+# (application id, path, ((file, Hadoop mtime, length), ...)) -> schema
+_DOC_SCHEMAS: dict = {}
+
+
+def read_documents(spark, sf_dir: str):
+    """The ``documents`` table under sf_dir. Inferring a parquet schema runs
+    a Spark job (~0.08 s at local[4]), so the schema is inferred once per
+    Spark application and per (file, Hadoop modification time, length) of
+    every file under the path, and later reads pass it in. A rewritten
+    table is inferred again, so a dropped column still fails analysis
+    instead of reading as nulls."""
+    path = f"{sf_dir}/documents.parquet"
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return spark.read.parquet(path)  # the reader's own missing-path error
+    files, stamp = fs.listFiles(jpath, True), []
+    while files.hasNext():
+        st = files.next()
+        stamp.append((st.getPath().toString(), st.getModificationTime(), st.getLen()))
+    key = (spark.sparkContext.applicationId, path, tuple(stamp))
+    schema = _DOC_SCHEMAS.get(key)
+    if schema is None:
+        docs = spark.read.parquet(path)
+        _DOC_SCHEMAS[key] = docs.schema
+        return docs
+    return spark.read.schema(schema).parquet(path)
+
+
 def pages_df(spark, sf_dir: str):
     """pages(url, warc_ts, html, text, lang) from documents — built-ins only.
     ``text`` passes through byte-identical (the per-row invariant, B2)."""
     reps = replicas_for(sf_dir)
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = read_documents(spark, sf_dir)
     # The source parquet is a single row group -> one input partition.
     # Repartition the SMALL pre-explode table (docs, KBs of shuffle), then
     # explode x replicas inside each partition — the old order (explode

@@ -782,9 +782,7 @@ def q_near_dup_clusters(spark, sf_dir):
     hash-min / star loop past cluster.PAIR_COLLECT_CAP) -> (doc_id,
     cluster_id, is_keeper). The operator an LLM dedup pipeline actually
     executes; oracle = DuckDB WITH RECURSIVE transitive closure."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
+    fixtures.read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return cluster.near_dup_clusters_df(spark)
 
 
@@ -830,7 +828,7 @@ def q_dedup_exact(spark, sf_dir):
     driver corpus has all-distinct texts, so dedupe over documents plus an
     exact mirror at +200000 ids (same corpus-augmentation trick as the
     near-dup queries) — every text forms a duplicate group."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
+    docs = fixtures.read_documents(spark, sf_dir).select("doc_id", "text")
     corpus = docs.unionByName(
         docs.selectExpr("doc_id + 200000 as doc_id", "text")
     )
@@ -853,7 +851,7 @@ FROM corpus GROUP BY sha256(text) HAVING COUNT(*) > 1"""
 
 def q_text_stats(spark, sf_dir):
     """text quality metrics with built-ins only (identical arithmetic)."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fixtures.read_documents(spark, sf_dir)
     return docs.selectExpr(
         "doc_id",
         "length(text) as n_chars_computed",
@@ -880,7 +878,7 @@ def q_token_regex(spark, sf_dir):
     """BPE-ish regex token counting (the brief's second tokenizer): words,
     number runs, and single non-space symbols each count one token —
     regexp_extract_all stays JVM-side (codegen), no UDF."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    docs = fixtures.read_documents(spark, sf_dir)
     pat = _BPEISH.format(WS="\\\\s")  # spark SQL literal: \\s -> regex \s
     return docs.selectExpr(
         "doc_id",
@@ -907,9 +905,7 @@ def q_corpus_prep(spark, sf_dir):
     runs): rule filter -> near-dup cluster keepers -> stratified sample,
     one row per surviving doc. Single DuckDB oracle (recursive closure +
     identical signal SQL)."""
-    spark.read.parquet(f"{sf_dir}/documents.parquet").createOrReplaceTempView(
-        "documents"
-    )
+    fixtures.read_documents(spark, sf_dir).createOrReplaceTempView("documents")
     return cluster.corpus_prep_df(spark)
 
 
@@ -966,7 +962,7 @@ def q_mvt_raw_passthrough(spark, sf_dir):
     oracle — any word mutated anywhere in the encode/decode path moves
     the sum. Verification query: the per-feature Python loop is bounded
     by the doc count and never a production path."""
-    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").selectExpr(
+    docs = fixtures.read_documents(spark, sf_dir).selectExpr(
         "doc_id", "cast(doc_id % 16 as int) as tile"
     )
 

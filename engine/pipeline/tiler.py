@@ -413,9 +413,12 @@ def _keyed_rows(
     Only the key + feature_id + tags ride the shuffle; the partition/sort
     keys are expressions over it, and (gid, qx, qy) are rebuilt after the
     sort in the same codegen'd stage. The exchange is un-numbered, so AQE
-    sizes it from the shuffled bytes: each Python task costs a fixed ~50 ms
-    (local[4]), which a fixed max(4 x cores, 32) width paid dozens of times
-    over on small encodes. Rows with z outside [0, z_max] fail the job
+    sizes it from the shuffled bytes: each Python task pays a fixed setup
+    cost, which a fixed max(4 x cores, 32) width paid dozens of times over
+    on small encodes. At local[4] that setup's importlib.invalidate_caches()
+    took 0.23 s (median, 4 concurrent workers) before engine.zipcache and
+    takes 4 ms after it; a 1-task mapInArrow job went from ~0.4 s to ~0.2 s.
+    Rows with z outside [0, z_max] fail the job
     (raise_error) rather than spill into a neighbouring bit field.
 
     partition_mode: "hash" co-locates each tile with one shuffle pass;
