@@ -137,9 +137,9 @@ def pages_df(spark, sf_dir: str):
     rows = (
         docs.repartition(n_parts, "doc_id")
         .selectExpr(
-            f"explode(sequence(0, {reps - 1})) as rep", "doc_id", "text", "lang"
+            f"explode(sequence(doc_id, doc_id + {(reps - 1) * 100000}, 100000)) as row_id",
+            "text", "lang",
         )
-        .selectExpr("doc_id + rep * 100000 as row_id", "text", "lang")
     )
     return rows.selectExpr(
         f"{url_expr('spark')} as url",

@@ -66,9 +66,7 @@ def cell_expr(z: int, x: str, y: str, dialect: str) -> str:
 
 def with_unit(df: DataFrame) -> DataFrame:
     """Add WebMercator unit-square (u, v) columns (B4)."""
-    return df.withColumn("u", F.expr(unit_u_expr())).withColumn(
-        "v", F.expr(unit_v_expr())
-    )
+    return df.withColumns({"u": F.expr(unit_u_expr()), "v": F.expr(unit_v_expr())})
 
 
 def with_tiles(df: DataFrame, z_min: int = 0, z_max: int = 14) -> DataFrame:
@@ -78,15 +76,19 @@ def with_tiles(df: DataFrame, z_min: int = 0, z_max: int = 14) -> DataFrame:
     px/py are tile-local float pixels; quantization to the int grid happens
     in the encode UDF (truncation, matching the reference's int32 cast).
     """
-    df = df.withColumn(
-        "z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max)))
-    )
-    df = df.withColumn("x", F.expr(tile_expr("u", "z", shift_op=False)))
-    df = df.withColumn("y", F.expr(tile_expr("v", "z", shift_op=False)))
+    df = df.withColumn("z", F.explode(F.sequence(F.lit(z_min), F.lit(z_max))))
+    x = tile_expr("u", "z", shift_op=False)
+    y = tile_expr("v", "z", shift_op=False)
     scale = f"(cast(shiftleft(1, z) as double) * {EXTENT})"
-    df = df.withColumn("px", F.expr(f"u * {scale} - x * {EXTENT}"))
-    df = df.withColumn("py", F.expr(f"v * {scale} - y * {EXTENT}"))
-    return df
+    # one projection: px/py repeat the tile expressions instead of naming x/y
+    return df.withColumns(
+        {
+            "x": F.expr(x),
+            "y": F.expr(y),
+            "px": F.expr(f"u * {scale} - ({x}) * {EXTENT}"),
+            "py": F.expr(f"v * {scale} - ({y}) * {EXTENT}"),
+        }
+    )
 
 
 def with_cell(df: DataFrame, z: int = CELL_Z) -> DataFrame:

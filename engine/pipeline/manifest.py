@@ -19,10 +19,17 @@ Design (one encode pass: no cache, no second scan of the source):
   (``run_id=<id>/`` directories would make Spark's partition discovery hide
   files at the store's root.)
 - Resume = ``left_anti`` join of the feature stream against the completed
-  manifest on (z, x, y): only tiles with no ``done`` manifest row are
-  re-encoded. Because the encode path is byte-deterministic (tiler docstring),
-  crash + resume produces byte-identical tiles to a single clean run —
-  asserted in tests/test_manifest_resume.py.
+  manifest's ``done`` rows on (z, x, y): only tiles with no ``done`` row are
+  re-encoded. A tile may have several done rows (a ``resume=False`` rerun
+  appends them again); the anti join does not care, so the done side is not
+  deduplicated (no shuffle). Because the encode path is byte-deterministic
+  (tiler docstring), crash + resume produces byte-identical tiles to a
+  single clean run — asserted in tests/test_manifest_resume.py.
+- An encode that yields no tile (a resume with nothing pending, an empty
+  micro-batch) stores and commits nothing: the staged write is counted
+  (a ``pyspark.sql.Observation`` on the write itself, no extra job), and at
+  0 rows no file enters the store and no manifest job runs, so a no-op
+  resume leaves the directory's listing unchanged.
 
 At 100 TB the manifest stays tiny relative to the data (one row per tile,
 ~100s of MB for the full z0-z14 pyramid), so the anti-join broadcasts and
@@ -37,7 +44,7 @@ from __future__ import annotations
 import re
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 MANIFEST_SCHEMA = (
     "run_id string, stage string, partition_id int, z int, x bigint, y bigint, "
@@ -66,20 +73,25 @@ def _read_manifest(spark: SparkSession, manifest_path: str) -> DataFrame | None:
 
 
 def completed_tiles(spark: SparkSession, manifest_path: str) -> DataFrame | None:
-    """Distinct (z,x,y) already marked done; None if no manifest exists yet."""
+    """The (z,x,y) of every ``done`` manifest row; None if no manifest
+    exists yet. Not deduplicated: a tile committed by several runs appears
+    once per run, which the anti join of pending_features ignores."""
     m = _read_manifest(spark, manifest_path)
     if m is None:
         return None
-    return m.filter(F.col("status") == "done").select("z", "x", "y").distinct()
+    return m.filter(F.col("status") == "done").select("z", "x", "y")
 
 
 def pending_features(indexed: DataFrame, done: DataFrame | None) -> DataFrame:
     """Drop every feature row whose tile already has a done manifest row.
 
-    No explicit broadcast hint: the done set is one row per tile, which is
-    usually broadcast-sized, but a full z0-z14 pyramid runs to millions of
-    rows (100s of MB) — let AQE pick broadcast vs shuffled anti join from
-    the measured size instead of forcing driver memory pressure.
+    ``done`` may repeat a tile: a left_anti join's result does not depend on
+    duplicates on its right side, so the build side is the manifest scan
+    alone, with no aggregate or exchange. No explicit broadcast hint: the
+    done set is about one row per tile, which is usually broadcast-sized,
+    but a full z0-z14 pyramid runs to millions of rows (100s of MB) — let
+    AQE pick broadcast vs shuffled anti join from the measured size instead
+    of forcing driver memory pressure.
     """
     if done is None:
         return indexed
@@ -89,16 +101,21 @@ def pending_features(indexed: DataFrame, done: DataFrame | None) -> DataFrame:
 def publish_tiles(
     spark: SparkSession, tiles: DataFrame, tiles_dir: str, manifest_dir: str,
     run_id: str, manifest_mode: str = "append",
-) -> None:
+) -> int:
     """Write ``tiles`` (tiler.encode_point_tiles rows) once into the tile
-    store ``tiles_dir`` as run ``run_id``, then commit their manifest rows.
+    store ``tiles_dir`` as run ``run_id``, then commit their manifest rows;
+    returns the number of tiles committed.
 
     The store's ``<run_id>.part-*`` files that no commit names (a torn
     attempt's) are deleted, so a retry stores each tile once. ``manifest_mode``
     "append": ``manifest_dir`` accumulates runs, and the files of an earlier
     committed attempt of ``run_id`` stay (a resumed rerun adds only pending
     tiles). "overwrite": ``manifest_dir`` belongs to this run alone (one
-    streaming micro-batch), and a replay replaces the run."""
+    streaming micro-batch), and a replay replaces the run.
+
+    An empty ``tiles`` stores and commits nothing: the torn files are still
+    deleted, but no file is renamed into the store, no manifest job runs,
+    and 0 is returned."""
     if not re.fullmatch(r"[A-Za-z0-9][A-Za-z0-9_-]*", run_id):
         raise ValueError(f"run_id {run_id!r} must match [A-Za-z0-9][A-Za-z0-9_-]*")
     Path = spark._jvm.org.apache.hadoop.fs.Path
@@ -115,11 +132,18 @@ def publish_tiles(
         names = {r.file_name for r in torn.select("file_name").distinct().collect()}
         stale = [p for p in stale if p.getName() in names]
     staging = Path(store, f"_staging/{run_id}")
+    stored = Observation("stored")
     tiles.withColumns(
         {"partition_id": F.spark_partition_id(), "run_id": F.lit(run_id)}
-    ).write.mode("overwrite").parquet(staging.toString())
+    ).observe(stored, F.count(F.lit(1)).alias("n")).write.mode("overwrite").parquet(
+        staging.toString()
+    )
     for p in stale:
         fs.delete(p, False)
+    n = stored.get["n"]
+    if n == 0:  # nothing to commit: the store and the manifest stay as they are
+        fs.delete(staging, True)
+        return 0
     written = []
     for st in fs.listStatus(staging):
         name = st.getPath().getName()
@@ -135,6 +159,7 @@ def publish_tiles(
         "n_features as rows", "n_bytes as bytes", "mvt_sha256", "input_sig",
         "'done' as status", "current_timestamp() as ts",
     ).write.mode(manifest_mode).parquet(manifest_dir)
+    return n
 
 
 def run_tile_stage(
@@ -156,6 +181,8 @@ def run_tile_stage(
     resume re-encodes them, and a retry under the same run_id replaces
     them. Byte determinism makes the retried bytes identical, so crash +
     resume reads byte-identical to a clean run (tests/test_manifest_resume.py).
+    A resume with nothing pending runs the anti-join write alone and adds
+    no file (publish_tiles).
     """
     from . import tiler
 

@@ -320,7 +320,7 @@ def carry_group_iter(batches, encode_fn, arrow_cols: frozenset):
         yield encode_fn(concat_cols(pend))
 
 
-def _packed_exprs(z_max: int, extent: int, with_salt: bool):
+def _packed_exprs(z_max: int, extent: int, with_salt: bool, z: str = "z"):
     """SQL expression strings for the packed one-int64 shuffle key
     (guide §2.3): bit fields [salt(6) .] z(5) . uq(B+1) . vq(B+1) with
     B = z_max + 12, uq = clamp(floor(u * 2^B), 0, 2^B). Returns None when
@@ -336,7 +336,8 @@ def _packed_exprs(z_max: int, extent: int, with_salt: bool):
     because that double subtraction is exact (the difference's significant
     bits fit a double) and the value is >= 0 so trunc == floor. The clamps
     reproduce the unpacked key's least/greatest at u = 1.0. Valid only for
-    rows with z <= z_max: the caller guards that (_keyed_rows)."""
+    rows with z <= z_max: ``z`` is the zoom expression the key packs, which
+    _keyed_rows passes guarded (_z_guard)."""
     B = z_max + 12
     if extent != EXTENT or 5 + (6 if with_salt else 0) + 2 * (B + 1) > 64:
         return None
@@ -351,7 +352,7 @@ def _packed_exprs(z_max: int, extent: int, with_salt: bool):
         )
 
     packed = (
-        f"shiftleft(cast(z as bigint), {zshift}) + "
+        f"shiftleft(cast({z} as bigint), {zshift}) + "
         f"shiftleft({q_c('u')}, {B + 1}) + {q_c('v')}"
     )
     if with_salt:
@@ -377,7 +378,7 @@ def _packed_exprs(z_max: int, extent: int, with_salt: bool):
             "gid": gid, "salt": f"shiftright(packed, {zshift + 5})"}
 
 
-def _unpacked_exprs(with_salt: bool) -> dict:
+def _unpacked_exprs(with_salt: bool, z: str = "z") -> dict:
     """The (z, u, v [, _salt]) key, with the same roles as _packed_exprs.
     x/y are with_tiles' own expressions; qx/qy truncate with_tiles' px/py
     (scale = 2^(z+12) and x * 4096 are exact doubles, and cast(double as
@@ -390,7 +391,7 @@ def _unpacked_exprs(with_salt: bool) -> dict:
     if with_salt:
         gid = f"shiftleft(_salt, 57) + {gid}"
     return {
-        "select": ["z", "u", "v", "feature_id"] + (["_salt"] if with_salt else []),
+        "select": [f"{z} as z", "u", "v", "feature_id"] + (["_salt"] if with_salt else []),
         "z": "z", "x": x, "y": y, "salt": "_salt", "gid": gid,
         "qx": f"cast(u * {scale} - cast({x} as double) * 4096.0D as long)",
         "qy": f"cast(v * {scale} - cast({y} as double) * 4096.0D as long)",
@@ -429,15 +430,14 @@ def _keyed_rows(
     lineage — worth it when the input is a materialized table (the
     resumable job). Tile BYTES are identical in both modes
     (tests/test_manifest_resume.py). z_max past MAX_ZOOM raises
-    ValueError (_z_in_range)."""
+    ValueError (_z_guard)."""
     if partition_mode not in ("hash", "hilbert"):
         raise ValueError(f"partition_mode must be hash or hilbert, not {partition_mode!r}")
-    src = _z_in_range(df, z_max)
+    z_in_range = _z_guard(z_max)
     salted = salt is not None
-    e = _packed_exprs(z_max, extent, salted) or _unpacked_exprs(salted)
+    e = _packed_exprs(z_max, extent, salted, z_in_range) or _unpacked_exprs(salted, z_in_range)
     tags = [c for c, _ in tag_cols]
-    if salted:
-        src = src.withColumn("_salt", salt)
+    src = df.withColumn("_salt", salt) if salted else df
     keyed = src.selectExpr(*e["select"], *tags)
     z, x, y = F.expr(e["z"]), F.expr(e["x"]), F.expr(e["y"])
     salt_key = [F.expr(e["salt"])] if salted else []
@@ -468,20 +468,16 @@ def _keyed_rows(
     )
 
 
-def _z_in_range(df: DataFrame, z_max: int) -> DataFrame:
-    """``df`` with its z column guarded for the packed tile key: z_max past
-    MAX_ZOOM raises ValueError here, and a row with z outside [0, z_max]
-    fails the job (raise_error) rather than spill into a neighbouring bit
-    field."""
+def _z_guard(z_max: int) -> str:
+    """The z column guarded for the packed tile key: z_max past MAX_ZOOM
+    raises ValueError here, and a row with z outside [0, z_max] fails the
+    job (raise_error) rather than spill into a neighbouring bit field."""
     if not 0 <= z_max <= MAX_ZOOM:
         raise ValueError(f"gid packing supports z_max 0..{MAX_ZOOM}")
-    return df.withColumn(
-        "z",
-        F.expr(
-            f"CASE WHEN z BETWEEN 0 AND {z_max} THEN z ELSE raise_error(concat("
-            f"'zoom ', cast(z as string), ' is outside the tile key range "
-            f"0..{z_max}; raise z_max')) END"
-        ),
+    return (
+        f"(CASE WHEN z BETWEEN 0 AND {z_max} THEN z ELSE raise_error(concat("
+        f"'zoom ', cast(z as string), ' is outside the tile key range "
+        f"0..{z_max}; raise z_max')) END)"
     )
 
 
@@ -498,7 +494,7 @@ def _encode_sorted_tiles(
         " + cast(y as bigint)"
     )
     rows = (
-        _z_in_range(df, z_max)
+        df.withColumn("z", F.expr(_z_guard(z_max)))
         .repartition("z", "x", "y")
         .sortWithinPartitions("z", "x", "y", *order)
         .selectExpr(f"{gid} as gid", *cols)

@@ -95,9 +95,8 @@ def encode_pages_batch(
     batch_df: DataFrame, batch_id: int, out_dir: str, z_min: int, z_max: int
 ) -> None:
     """One micro-batch's encode + publish (module-level so tests can replay
-    a batch_id directly and assert idempotency)."""
-    if batch_df.isEmpty():
-        return
+    a batch_id directly and assert idempotency). An empty batch stores and
+    commits nothing (manifest.publish_tiles counts the write it stages)."""
     geo = index.with_feature_id(fixtures.geotag_df(batch_df))
     idx = index.with_tiles(index.with_unit(geo), z_min, z_max)
     manifest.publish_tiles(

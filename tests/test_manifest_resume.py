@@ -137,16 +137,98 @@ def test_partition_modes_byte_identical(spark, tmp_path):
     assert mean_jump("hilbert") < mean_jump("hash")
 
 
-def test_resume_noop_when_complete(spark, tmp_path):
+def _listing(out_dir) -> list[str]:
+    """Every file under ``out_dir``, relative to it."""
+    import os
+
+    return sorted(
+        os.path.relpath(os.path.join(d, f), out_dir)
+        for d, _, files in os.walk(out_dir)
+        for f in files
+    )
+
+
+@pytest.fixture
+def published(monkeypatch):
+    """The counts manifest.publish_tiles returns, in call order."""
+    counts = []
+    publish = manifest.publish_tiles
+
+    def record(*args, **kwargs):
+        counts.append(publish(*args, **kwargs))
+        return counts[-1]
+
+    monkeypatch.setattr(manifest, "publish_tiles", record)
+    return counts
+
+
+def test_resume_noop_when_complete(spark, tmp_path, published):
     indexed = _indexed(spark)
     out = str(tmp_path / "done")
     manifest.run_tile_stage(spark, indexed, out, run_id="first")
     before = _tiles(spark, out)
+    files = _listing(out)
     manifest.run_tile_stage(spark, indexed, out, run_id="second")
     after = _tiles(spark, out)
     pd.testing.assert_frame_equal(after, before)
     m = spark.read.parquet(f"{out}/manifest").toPandas()
     assert (m["run_id"] == "first").all()  # second run appended nothing
+    # nothing pending: no part file enters tiles/ or manifest/
+    assert _listing(out) == files
+    assert published == [len(m), 0]
+
+
+def test_noop_resume_still_deletes_torn_files_of_its_run_id(spark, tmp_path, published):
+    """A torn attempt of run "second" left files in the store; the retry
+    of "second" finds every tile done, and still deletes those files."""
+    import glob
+    import os
+
+    indexed = _indexed(spark)
+    out = str(tmp_path / "torn_noop")
+    manifest.run_tile_stage(spark, indexed, out, run_id="first")
+    want = _tiles(spark, out)
+    files = _listing(out)
+
+    torn = str(tmp_path / "torn_attempt")
+    tiler.encode_point_tiles(indexed).withColumns(
+        {"partition_id": F.spark_partition_id(), "run_id": F.lit("second")}
+    ).write.parquet(torn)
+    for f in glob.glob(f"{torn}/part-*"):
+        os.rename(f, f"{out}/tiles/second.{os.path.basename(f)}")
+    assert _listing(out) != files
+
+    manifest.run_tile_stage(spark, indexed, out, run_id="second")
+    assert published[-1] == 0
+    assert _listing(out) == files
+    pd.testing.assert_frame_equal(_tiles(spark, out), want)
+
+
+def test_resume_over_duplicate_done_rows(spark, tmp_path, published):
+    """A resume=False rerun appends a second done row for every tile; a
+    resume after it still finds nothing pending and adds no file, and the
+    done side of its anti join is the bare manifest scan (no aggregate)."""
+    indexed = _indexed(spark)
+    out = str(tmp_path / "dups")
+    manifest.run_tile_stage(spark, indexed, out, run_id="a")
+    manifest.run_tile_stage(spark, indexed, out, run_id="b", resume=False)
+    n_tiles = published[0]
+    assert published == [n_tiles, n_tiles]
+    m = spark.read.parquet(f"{out}/manifest")
+    assert m.count() == 2 * n_tiles
+    assert m.select("z", "x", "y").distinct().count() == n_tiles
+    files = _listing(out)
+
+    manifest.run_tile_stage(spark, indexed, out, run_id="c")
+    assert published[-1] == 0
+    assert _listing(out) == files
+
+    done = manifest.completed_tiles(spark, f"{out}/manifest")
+    assert done.count() == 2 * n_tiles
+    pending = manifest.pending_features(indexed, done)
+    assert pending.count() == 0
+    assert "Aggregate" not in str(indexed._jdf.queryExecution().optimizedPlan())
+    assert "Aggregate" not in str(pending._jdf.queryExecution().optimizedPlan())
 
 
 def test_null_string_tag_fails_without_commit(spark, tmp_path):

@@ -127,6 +127,46 @@ def test_stream_encode_replay_idempotent(spark, pages_dir, tmp_path):
     assert manifest_mod.read_tiles(spark, out).count() == len(first)
 
 
+def test_stream_encode_empty_batch_commits_nothing(spark, pages_dir, tmp_path):
+    """An empty micro-batch stores no part file and no manifest row, and a
+    replay of it, or of the batch before it, changes nothing."""
+    from engine.pipeline import manifest as manifest_mod
+
+    out = str(tmp_path / "empty_batch")
+    pages = spark.read.parquet(pages_dir)
+    stream_tiler.encode_pages_batch(pages.limit(300), 0, out, 0, 2)
+
+    def snapshot():
+        files = sorted(
+            os.path.relpath(os.path.join(d, f), out)
+            for d, _, names in os.walk(out)
+            for f in names
+        )
+        tiles = (
+            manifest_mod.read_tiles(spark, out)
+            .select("batch_id", "z", "x", "y", "mvt_sha256")
+            .toPandas()
+            .sort_values(["batch_id", "z", "x", "y"])
+            .reset_index(drop=True)
+        )
+        return files, tiles
+
+    files, tiles = snapshot()
+    assert len(tiles) > 0
+    for _ in range(2):  # the empty batch 1, then its replay
+        stream_tiler.encode_pages_batch(pages.limit(0), 1, out, 0, 2)
+        got_files, got_tiles = snapshot()
+        assert got_files == files
+        pd.testing.assert_frame_equal(got_tiles, tiles)
+    # a replay of batch 0 renames its files, and stores the same tiles
+    stream_tiler.encode_pages_batch(pages.limit(300), 0, out, 0, 2)
+    got_files, got_tiles = snapshot()
+    assert not any("batch_id=1" in f for f in got_files)
+    pd.testing.assert_frame_equal(got_tiles, tiles)
+    m = spark.read.parquet(f"{out}/manifest")
+    assert m.count() == len(tiles) and set(r.batch_id for r in m.collect()) == {0}
+
+
 class _FakeState:
     def __init__(self, value=None, timed_out=False):
         self._v = value
